@@ -185,8 +185,8 @@ def dedup_minhash_lsh_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-9 verdict item 3: every registered query carries a value
     oracle; xxhash64 has no DuckDB restatement). Same candidate
     generation as the registered dedup_minhash_lsh (pinned by
-    tests/test_round7.py twin test); bench.py times this one so
-    headline numbers stay comparable across rounds."""
+    tests/test_round7.py twin test); its plan shape is gated under
+    the ``dedup_minhash_lsh::bench_twin`` fingerprint key."""
     docs = read_table_spread(spark, sf_dir, "documents")
     pairs = D.minhash_dedup_pairs(docs, threshold=0.5)
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
@@ -261,8 +261,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     all under the driver's value-hash oracle. Registered DEFAULT since
     round 10 (verdict item 3: the old xxhash64 default could never be
     driver-greened); the cheaper xxhash64 production variant lives on
-    as the unregistered dedup_minhash_lsh_xxhash (bench-timed, twin
-    pin in tests/test_round7.py keeps their candidate generation
+    as the unregistered dedup_minhash_lsh_xxhash (plan-fingerprinted; the
+    twin pin in tests/test_round7.py keeps their candidate generation
     shared). Formerly registered as dedup_minhash_portable."""
     docs = read_table_spread(spark, sf_dir, "documents")
     pairs = D.minhash_dedup_pairs(docs, threshold=0.5, portable=True)
@@ -1509,10 +1509,9 @@ SRP_CAP_SPLIT_BITS = 4
 #: value-oracled primitive (see SRP_CAP_FACTOR below), and the
 #: lifecycle dials are ensure_srp_bucket_index(bits=, n_tables=,
 #: capped=True) + srp_capped_delta_pairs (probe-both-keys, no heavy-
-#: bucket metadata on the probe side). 32x candidate counts for all
-#: four (width x cap) configs: scripts/study_srp_cap_32x.py — the
-#: cap ALONE cuts 76.6M -> 19.8M (3.9x) at fixed width by clipping
-#: the 136 heavy buckets.
+#: bucket metadata on the probe side). Measured at 32x over all four
+#: (width x cap) configs, the cap ALONE cuts 76.6M -> 19.8M (3.9x) at
+#: fixed width by clipping the 136 heavy buckets.
 
 
 def _srp_signs(table: int, bit: int) -> list[int]:

@@ -21,7 +21,9 @@ recorded at sf0.001 (the pytest smoke scale) in
 ``tests/plan_fingerprints.json``. Regenerate DELIBERATELY with
 ``python scripts/update_plan_fingerprints.py`` in the same commit as
 any plan-affecting change — an unacknowledged diff fails
-``tests/test_plan_fingerprints.py``.
+``tests/test_plan_fingerprints.py``. The gated list is the key set of
+that file: registered query names, plus ``<name>::bench_twin`` keys for
+the production twins below.
 """
 
 from __future__ import annotations
@@ -29,6 +31,33 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+
+from gcd_etl_spark.plans import QUERIES
+from gcd_etl_spark.plans.dedup import dedup_minhash_lsh_xxhash
+from gcd_etl_spark.plans.similarity import bitext_mined_pairs
+
+#: Key suffix of a production twin's fingerprint.
+TWIN_SUFFIX = "::bench_twin"
+
+#: Registered name -> the unregistered plan production actually runs
+#: under it. The registered build carries the value oracle; a
+#: structural regression in the twin must not escape the gate just
+#: because of that. dedup_minhash_lsh runs on the cheaper xxhash64
+#: family; sim_bitext_margin_mined's production plan is the no-gate
+#: miner behind the sampled quality gate.
+PRODUCTION_TWINS = {
+    "dedup_minhash_lsh": dedup_minhash_lsh_xxhash,
+    "sim_bitext_margin_mined": bitext_mined_pairs,
+}
+
+
+def fingerprint_builder(name: str):
+    """Builder behind a fingerprint key, or None when the name is no
+    longer registered."""
+    if name.endswith(TWIN_SUFFIX):
+        return PRODUCTION_TWINS.get(name[: -len(TWIN_SUFFIX)])
+    q = QUERIES.get(name)
+    return q.build if q is not None else None
 
 
 def _formatted(df) -> str:

@@ -133,14 +133,19 @@ def _needs_spread(spark, sf_dir, name, df, target) -> bool:
     """Memoized split-count check (round 14): ``df.rdd`` costs a
     driver-side RDD translation (~20-40 ms of py4j) and is re-paid on
     every build of every spread-reading query — while the answer is a
-    pure function of the immutable file layout and the session
-    parallelism. Keyed on the file-listing signature so a re-staged
-    dir invalidates naturally; the decision (a bool), never data, is
-    cached."""
+    pure function of the immutable file layout, the session
+    parallelism and the two file-split settings. Keyed on the
+    file-listing signature so a re-staged dir invalidates naturally,
+    and on the split settings so a config change re-decides; the
+    decision (a bool), never data, is cached."""
     from gcd_etl_spark.functions.exprcache import cached
 
+    split_conf = tuple(
+        spark.conf.get(k)
+        for k in ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    )
     return cached(
-        ("needs_spread", sf_dir, name, target, _table_files_sig(sf_dir, name)),
+        ("needs_spread", sf_dir, name, target, split_conf, _table_files_sig(sf_dir, name)),
         lambda: df.rdd.getNumPartitions() < max(2, target // 2),
     )
 

@@ -77,13 +77,16 @@ def insert_table_name(line: str) -> str | None:
     return rest or None
 
 
-def _parse_tuple(text: str, i: int) -> tuple[list[str | None], int]:
+def _parse_tuple(text: str, i: int) -> tuple[list[str | None], int, bool]:
     """Parse one ``(...)`` tuple starting at ``text[i] == '('``.
 
-    Returns (fields, index-after-close-paren). Fields are raw strings
-    (escapes decoded) or None for NULL. Handles quoted strings with
-    backslash escapes and ``''`` doubling, bare numeric tokens, and
-    nested commas/parens inside quotes.
+    Returns (fields, index-after-close-paren, closed). Fields are raw
+    strings (escapes decoded) or None for NULL. Handles quoted strings
+    with backslash escapes and ``''`` doubling, bare numeric tokens,
+    and nested commas/parens inside quotes. ``closed`` is False when
+    the text ends before the tuple's ``)`` — a cut-off line, including
+    one cut inside a quoted string (a ``)`` inside quotes never closes
+    the tuple, so reaching ``)`` implies every quote was closed).
     """
     fields: list[str | None] = []
     n = len(text)
@@ -112,7 +115,7 @@ def _parse_tuple(text: str, i: int) -> tuple[list[str | None], int]:
                     i += 1
             fields.append("".join(buf))
         elif ch == ")":
-            return fields, i + 1
+            return fields, i + 1, True
         elif ch == ",":
             i += 1
         else:  # bare token: number, NULL, hex, etc.
@@ -122,7 +125,7 @@ def _parse_tuple(text: str, i: int) -> tuple[list[str | None], int]:
             tok = text[i:j].strip()
             fields.append(None if tok.upper() == "NULL" else tok)
             i = j
-    return fields, i
+    return fields, i, False
 
 
 def _values_start(line: str) -> int:
@@ -181,20 +184,30 @@ def _values_start(line: str) -> int:
     return -1
 
 
-def iter_insert_tuples(line: str) -> Iterator[list[str | None]]:
-    """Yield each VALUES tuple of one INSERT statement line."""
+def _iter_tuples(line: str) -> Iterator[tuple[list[str | None], bool]]:
+    """Yield (fields, closed) for each VALUES tuple of one INSERT line;
+    only the last tuple of a cut-off line can be unclosed."""
     v = _values_start(line)
     if v < 0:
         return
     i, n = v, len(line)
     while i < n:
         if line[i] == "(":
-            fields, i = _parse_tuple(line, i)
-            yield fields
+            fields, i, closed = _parse_tuple(line, i)
+            yield fields, closed
         elif line[i] == ";":
             return
         else:
             i += 1
+
+
+def iter_insert_tuples(line: str) -> Iterator[list[str | None]]:
+    """Yield each complete VALUES tuple of one INSERT statement line.
+    A truncated trailing tuple (the line ends before its ``)``) is
+    dropped, never yielded as a row."""
+    for fields, closed in _iter_tuples(line):
+        if closed:
+            yield fields
 
 
 def parse_insert_lines(
@@ -216,17 +229,21 @@ def parse_insert_lines(
     decides authoritatively per line. Nothing is dropped silently:
     pass ``metrics={}`` to receive Spark accumulators counting
     prefilter-survivor lines that belong to other tables
-    (``other_table_lines``) and tuples whose field count does not
-    match ``expect_arity`` (``arity_mismatch_tuples`` — quarantined,
-    never silently null-padded). Accumulator values are final after
-    any action on the result.
+    (``other_table_lines``), tuples whose field count does not match
+    ``expect_arity`` (``arity_mismatch_tuples`` — quarantined, never
+    silently null-padded) and tuples cut off before their closing
+    ``)`` (``truncated_tuples`` — quarantined even when the arity
+    happens to match). Accumulator values are final after any action
+    on the result.
     """
     sc = lines.sparkSession.sparkContext
     other_table = sc.accumulator(0)
     arity_mismatch = sc.accumulator(0)
+    truncated = sc.accumulator(0)
     if metrics is not None:
         metrics["other_table_lines"] = other_table
         metrics["arity_mismatch_tuples"] = arity_mismatch
+        metrics["truncated_tuples"] = truncated
 
     # Coarse JVM-side prefilter (codegen, pushed to the text scan):
     # tolerant of leading whitespace and lowercase INSERT, requires the
@@ -245,7 +262,10 @@ def parse_insert_lines(
                 if insert_table_name(ln) != table:
                     other_table.add(1)
                     continue
-                for tup in iter_insert_tuples(ln):
+                for tup, closed in _iter_tuples(ln):
+                    if not closed:
+                        truncated.add(1)
+                        continue
                     if expect_arity is not None and len(tup) != expect_arity:
                         arity_mismatch.add(1)
                         continue

@@ -20,25 +20,24 @@ suffix token, which leaves them near-duplicates across copies —
 deliberate: the dedup-clustering stress then includes components that
 SPAN copies (bigger components, the hard case for star contraction).
 
-gcd_snapshot_bucketed is audited separately by
-scripts/study_bucketed_sweep.py (BASELINE.md round 8: fixed bucket
-count is a parallelism cap; re-stage buckets as data grows).
+gcd_snapshot_bucketed is not audited here (BASELINE.md round 8: its
+fixed bucket count is a parallelism cap; re-stage buckets as data
+grows).
 
 Usage: python scripts/study_amplified_audit.py [sf_dir] [amps...]
            [--per-query] [--tier=lifecycle] [--json=PATH] [--runs=N]
 Writes a markdown table to stdout; paste into BASELINE.md.
 
-STANDING MODE (round-12 verdict item 5 — "make scale regressions as
-mechanical as the bench floors"): ``--tier=lifecycle --json=PATH``
-restricts the audit to the bench LIFECYCLE tier (bench.py's exact
-name list) and emits ONE machine-readable JSON artifact:
-per-query walls at each amp, the scaling exponent, plan-shape
-features at both ends, and a ``flagged`` list of queries whose
-exponent exceeds its recorded ceiling (EXP_CEILINGS — default 1.35 =
-linear + noise margin; documented workload-superlinear rows carry
-explicit higher ceilings with the reason inline). The round record
-commits the artifact as AMPLIFIED_r{N}.json; a non-empty ``flagged``
-is the audit failing, same semantics as the bench floor trigger.
+STANDING MODE (round-12 verdict item 5 — "make scale regressions
+mechanical"): ``--tier=lifecycle --json=PATH`` restricts the audit
+to the LIFECYCLE rows of TARGETS and emits ONE machine-readable JSON
+artifact: per-query walls at each amp, the scaling exponent,
+plan-shape features at both ends, and a ``flagged`` list of queries
+whose exponent exceeds its recorded ceiling (EXP_CEILINGS — default
+1.35 = linear + noise margin; documented workload-superlinear rows
+carry explicit higher ceilings with the reason inline). The round
+record commits the artifact as AMPLIFIED_r{N}.json; a non-empty
+``flagged`` is the audit failing and exits non-zero.
 ``--runs=N`` forces one UNTIMED warmup + min-of-N at EVERY amp
 (standing mode wants the steady-state probe at 8x too, not a first
 run that folds one-time index staging into the wall — or a second
@@ -79,8 +78,8 @@ TARGETS = {
     # ~n^2/2^bits by construction (the cap clips the heavy TAIL, the
     # width rule fixes the average) — an amplified wall audit would
     # re-measure the anchor's known exponent. Its scale evidence is
-    # candidate-count based instead: scripts/study_srp_cap_32x.py
-    # measures all four (width x cap) configs at 32x.
+    # candidate-count based instead: all four (width x cap) configs
+    # were measured at 32x (the "32x NOTE" in plans/dedup.py).
     "sim_ann_ivfsq8_recall": ["embeddings"],
     # since r10 this name is TRUE product quantization (trained coarse
     # cells + residual codebooks + ADC) — audit it separately from SQ8
@@ -147,9 +146,8 @@ TARGETS = {
     "stream_dsir_gate": ["documents"],
     # round 12: the CAPPED semantic lifecycle (the production default
     # — expect the delta probe to stay far under the uncapped
-    # anchor's exp-1.35 wall; the 32x candidate-count study is
-    # scripts/study_srp_cap_32x.py, this row adds the wall-clock view
-    # of the registered composition itself)
+    # anchor's exp-1.35 wall; this row adds the wall-clock view of
+    # the registered composition to the 32x candidate-count study)
     "dedup_semantic_delta_vs_corpus_capped": ["embeddings"],
     "stream_semantic_dedup_gate_capped": ["embeddings"],
     # round 12: the scale-runnable bitext gate (sampled anchor is
@@ -163,7 +161,7 @@ TARGETS = {
     # includes a real LZW bit-packing loop per row — still flat
     # per-row cost, the frames are <=384 px by construction)
     "mm_decode_real_headers_gif_webp": ["documents"],
-    # round 13 (standing lifecycle runner): the three bench-LIFECYCLE
+    # round 13 (standing lifecycle runner): the three lifecycle
     # rows the ad-hoc audits never covered — the MinHash-band delta
     # probe, the band-index APPEND cycle, and the PQ persisted probe
     # (same fixed-query-set denominator as the recall row, so the
@@ -173,23 +171,51 @@ TARGETS = {
     "sim_ann_ivfpq_persisted": ["embeddings"],
 }
 
+#: The standing audit's rows (``--tier=lifecycle``): the heaviest
+#: production operators — index lifecycles, persisted/append ANN,
+#: streaming gates, canonical dedup — whose exponents stay under the
+#: ceilings below. Rows that are superlinear by design (e.g.
+#: dedup_semantic_srp_scaled) stay out; every name must be a TARGETS
+#: key.
+LIFECYCLE = [
+    "dedup_keep_canonical",
+    "dedup_delta_vs_corpus",
+    "dedup_crossdoc_delta",
+    "dedup_gram_index_update_cycle",
+    "dedup_gram_index_merge",
+    "dedup_index_compaction",
+    "dedup_index_append_cycle",
+    "dedup_semantic_delta_vs_corpus_capped",
+    "quality_bigram_nll_delta",
+    "stream_quality_gate",
+    "stream_semantic_dedup_gate_capped",
+    "stream_dedup_against_corpus",
+    "stream_sessions_timeout",
+    "sim_ann_ivfpq_recall",
+    "sim_ann_ivfpq_persisted",
+    "sim_ann_ivfpq_index_append",
+    "sim_bitext_margin_mined",
+    "corpus_shuffle_shards_write",
+    "corpus_dsir_delta",
+]
+
 #: Mechanical exponent gate for the STANDING lifecycle audit: wall
 #: exponent (log(w_hi/w_lo)/log(hi/lo), min-of-N walls) above the
 #: ceiling -> the query lands in the JSON's ``flagged`` list. Default
-#: ceiling 1.35 = linear workload + measurement margin (the bench
-#: floor-trigger analog). Rows whose AMPLIFIED WORKLOAD is documented
-#: superlinear (suffix-token amplification makes document copies
-#: near-duplicates ACROSS copies, so cross-copy gram/band sharing
-#: grows with k — see the TARGETS comments) carry explicit ceilings:
+#: ceiling 1.35 = linear workload + measurement margin. Rows whose
+#: AMPLIFIED WORKLOAD is documented superlinear (suffix-token
+#: amplification makes document copies near-duplicates ACROSS copies,
+#: so cross-copy gram/band sharing grows with k — see the TARGETS
+#: comments) carry explicit ceilings:
 #: for them the gate still catches a plan-shape regression (their
 #: recorded exps sit well under these), it just doesn't re-litigate
 #: the fixture's geometry every round.
 EXP_CEILING_DEFAULT = 1.35
 #: Absolute slack on the gate: a row is flagged only when its high-amp
 #: wall exceeds w_lo * (hi/lo)^ceiling by MORE than this many seconds
-#: (bench FLOOR_MIN_BASE_SEC's analog — a 0.5 s probe "doubling" at 8x
-#: is scheduler/JVM noise, not a plan regression; real superlinearity
-#: on tier-sized rows clears 1 s immediately).
+#: (a 0.5 s probe "doubling" at 8x is scheduler/JVM noise, not a
+#: plan regression; real superlinearity on tier-sized rows clears 1 s
+#: immediately).
 EXP_EXCESS_SLACK_S = 1.0
 EXP_CEILINGS = {
     # cross-copy near-dup components span copies by construction
@@ -425,12 +451,8 @@ def main() -> None:
         print(f"unknown --tier={tier}; use all|lifecycle", file=sys.stderr)
         sys.exit(2)
     if tier == "lifecycle":
-        # the bench tier's exact name list: the standing audit and the
-        # bench floor gate cover the same surface by construction.
-        from bench import LIFECYCLE
-
         missing = [n for n in LIFECYCLE if n not in TARGETS]
-        if missing:  # fail loud: a tier addition must extend TARGETS
+        if missing:  # fail loud: a lifecycle row must have a target
             raise RuntimeError(f"LIFECYCLE rows without audit targets: {missing}")
         for k in [t for t in TARGETS if t not in LIFECYCLE]:
             del TARGETS[k]
@@ -487,9 +509,9 @@ def main() -> None:
                   f"failed={sorted(failed)}", file=sys.stderr, flush=True)
             if failed or merged["flagged"]:
                 # the gate FAILING must reach exit status — a consumer
-                # keying on rc (bench --tier=amplified, CI) must not
-                # see success for an audit that lost rows or flagged
-                # a superlinear query (round-13 review finding)
+                # keying on rc (CI) must not see success for an audit
+                # that lost rows or flagged a superlinear query
+                # (round-13 review finding)
                 sys.exit(1)
         return
     only = os.environ.get("GCD_AUDIT_ONLY")

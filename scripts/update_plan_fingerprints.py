@@ -7,7 +7,15 @@ change, and review the diff: it IS the structural-plan-change
 acknowledgment. Fingerprints are recorded at sf0.001 (the pytest
 smoke scale) so the gate runs in seconds.
 
-Usage: python scripts/update_plan_fingerprints.py [sf_dir]
+The gated list is the file's own key set: the script re-records
+exactly the recorded keys, plus any names given on the command line
+(a production twin as ``<name>::bench_twin``, see
+``gcd_etl_spark.plans.fingerprint.PRODUCTION_TWINS``). To stop gating
+a name, delete its key from the JSON and rerun. Streaming queries
+execute eagerly on build (their returned plan is a sink scan) and
+cannot be fingerprinted, same as tests/test_plan_audit.py.
+
+Usage: python scripts/update_plan_fingerprints.py [sf_dir [name ...]]
 """
 
 from __future__ import annotations
@@ -18,53 +26,39 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from gcd_etl_spark.plans import QUERIES  # noqa: E402
-from gcd_etl_spark.plans.fingerprint import plan_fingerprint  # noqa: E402
+from gcd_etl_spark.plans.fingerprint import (  # noqa: E402
+    fingerprint_builder,
+    plan_fingerprint,
+)
 from gcd_etl_spark.session import get_spark  # noqa: E402
 
-
-def fingerprinted_queries() -> dict:
-    """The gated set, name -> builder: the bench headline tier +
-    every scale-critical plan PLANS.md dumps + the non-stream
-    lifecycle tier — and, under ``<name>::bench_twin`` keys, every
-    bench twin builder that differs from the registered query (the
-    plans the bench ACTUALLY times: dedup_minhash_lsh_xxhash,
-    bitext_mined_pairs; round-12 review finding — a structural
-    regression in a benched production twin must not escape the gate
-    just because its registered sibling carries the oracle).
-    Streaming queries execute eagerly on build (their returned plan
-    is a sink scan) and are excluded, same as
-    tests/test_plan_audit.py."""
-    import bench
-    from scripts.dump_plans import DUMP
-
-    builders: dict = {}
-    for n in list(bench.HEADLINE) + list(bench.LIFECYCLE) + list(DUMP):
-        if n.startswith("stream_") or n in builders or n not in QUERIES:
-            continue
-        builders[n] = QUERIES[n].build
-    for n, twin in bench._bench_builders().items():
-        if n in QUERIES and twin is not QUERIES[n].build and not n.startswith("stream_"):
-            builders[f"{n}::bench_twin"] = twin
-    return builders
+PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tests",
+    "plan_fingerprints.json",
+)
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    with open(PATH) as f:
+        names = sorted(set(json.load(f)) | set(sys.argv[2:]))
+    builders = {n: fingerprint_builder(n) for n in names}
+    bad = [n for n, b in builders.items() if b is None or n.startswith("stream_")]
+    if bad:
+        sys.exit(
+            f"not fingerprintable (unregistered or streaming): {bad} — "
+            f"drop them from the command line or delete their keys from {PATH}"
+        )
     spark = get_spark("plan-fingerprints")
     out: dict[str, list[str]] = {}
-    for name, build in fingerprinted_queries().items():
+    for name, build in builders.items():
         out[name] = plan_fingerprint(build(spark, sf_dir))
         print(f"{name}: {len(out[name])} nodes")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tests",
-        "plan_fingerprints.json",
-    )
-    with open(path, "w") as f:
+    with open(PATH, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
         f.write("\n")
-    print(f"wrote {path} ({len(out)} fingerprints)")
+    print(f"wrote {PATH} ({len(out)} fingerprints)")
     spark.stop()
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import types as T
 
@@ -110,3 +111,85 @@ def test_tsv_staging(spark, tmp_path):
     )
     got = stage_tsv_table(spark, str(p), schema).collect()
     assert {(r.id, r.s) for r in got} == {(1, "a"), (2, None), (3, "c")}
+
+
+# ------------------------------------------------ truncated tuples
+
+#: Strings biased toward the characters the tokenizer must get right:
+#: quote, backslash, tuple/statement delimiters and newline.
+_field = st.one_of(
+    st.none(),
+    st.integers(-(10**12), 10**12),
+    st.text(
+        alphabet=st.one_of(st.sampled_from("'\\);,\n"), st.characters()),
+        max_size=12,
+    ),
+)
+_rows = st.lists(
+    st.lists(_field, min_size=1, max_size=4).map(tuple), min_size=1, max_size=6
+)
+
+
+def _as_parsed(row: tuple) -> list[str | None]:
+    return [None if v is None else str(v) for v in row]
+
+
+@settings(max_examples=200, deadline=None)
+@given(_rows)
+def test_insert_round_trip_is_lossless(rows):
+    lines = format_insert_statements("t", rows, rows_per_statement=4)
+    got = [tup for ln in lines for tup in iter_insert_tuples(ln)]
+    assert got == [_as_parsed(r) for r in rows]
+
+
+@settings(max_examples=200, deadline=None)
+@given(_rows)
+@example([(1, "ab"), (2, "cd")])
+@example([(1, "ab"), (2, 3)])
+def test_line_prefix_yields_only_complete_tuples(rows):
+    """A cut-off line (partial download) yields exactly the tuples
+    whose closing paren it still holds — a truncated tuple must not
+    stage as a row even when its arity happens to match."""
+    [line] = format_insert_statements("t", rows, rows_per_statement=len(rows))
+    texts = ["(" + ",".join(sql_literal(v) for v in r) + ")" for r in rows]
+    head = "INSERT INTO `t` VALUES "
+    assert line == head + ",".join(texts) + ";"
+    ends, pos = [], len(head)
+    for t in texts:
+        pos += len(t)
+        ends.append(pos)
+        pos += 1  # the ',' between tuples
+    want = [_as_parsed(r) for r in rows]
+    for k in range(len(line)):
+        got = list(iter_insert_tuples(line[:k]))
+        assert got == [w for w, e in zip(want, ends) if e <= k], line[:k]
+
+
+def test_truncated_tuples_quarantined_and_counted(spark):
+    lines = [
+        "INSERT INTO `t` VALUES (1,'ab'),(2,'cd",  # cut inside a string
+        "INSERT INTO `t` VALUES (3,'ef'),(4,5",  # cut after a bare token
+        "INSERT INTO `t` VALUES (6,'gh');",
+    ]
+    text = spark.createDataFrame([(ln,) for ln in lines], "value string")
+    metrics: dict = {}
+    got = parse_insert_lines(text, "t", expect_arity=2, metrics=metrics).collect()
+    assert sorted(r.fields for r in got) == [["1", "ab"], ["3", "ef"], ["6", "gh"]]
+    assert metrics["truncated_tuples"].value == 2
+    assert metrics["arity_mismatch_tuples"].value == 0
+
+
+def test_dump_datasource_drops_truncated_tuple(tmp_path):
+    """The Spark-4 DataSource shares the tokenizer, so a cut-off tuple
+    is not null-padded into a row there either."""
+    from gcd_etl_spark.sources.dump_datasource import DumpFilePartition, GcdDumpReader
+
+    p = tmp_path / "t.sql"
+    p.write_text("INSERT INTO `t` VALUES (1,'ab'),(2,'cd\n")
+    reader = GcdDumpReader(
+        T.StructType(
+            [T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]
+        ),
+        {"table": "t", "path": str(p)},
+    )
+    assert list(reader.read(DumpFilePartition(str(p)))) == [(1, "ab")]

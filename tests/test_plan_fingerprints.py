@@ -1,6 +1,7 @@
-"""Plan-shape regression gate (round-11 verdict item 3): every
-headline / lifecycle / PLANS.md-dumped query's normalized physical
-plan must match the committed fingerprint in plan_fingerprints.json.
+"""Plan-shape regression gate (round-11 verdict item 3): every query
+recorded in plan_fingerprints.json — the key set IS the gated list —
+must still be registered, and its normalized physical plan must match
+the committed fingerprint.
 
 A failure here means the operator TREE changed — join strategy,
 exchange placement or partitioning kind, scan pushdown/pruning, node
@@ -19,55 +20,20 @@ import os
 
 import pytest
 
-from gcd_etl_spark.plans import QUERIES
-from gcd_etl_spark.plans.fingerprint import plan_fingerprint
+from gcd_etl_spark.plans.fingerprint import fingerprint_builder, plan_fingerprint
 
 _PATH = os.path.join(os.path.dirname(__file__), "plan_fingerprints.json")
 with open(_PATH) as _f:
     RECORDED: dict[str, list[str]] = json.load(_f)
 
 
-def test_fingerprint_set_covers_bench_tiers():
-    """New bench-tier rows must be fingerprinted in the same commit
-    (the gate must not silently narrow as tiers grow) — INCLUDING the
-    bench twin builders, which are the plans the bench actually
-    times."""
-    import bench
-
-    expected = {
-        n
-        for n in list(bench.HEADLINE) + list(bench.LIFECYCLE)
-        if not n.startswith("stream_")
-    }
-    for n, twin in bench._bench_builders().items():
-        if n in QUERIES and twin is not QUERIES[n].build and not n.startswith(
-            "stream_"
-        ):
-            expected.add(f"{n}::bench_twin")
-    missing = expected - set(RECORDED)
-    assert not missing, (
-        f"bench-tier queries missing from plan_fingerprints.json: "
-        f"{sorted(missing)} — run scripts/update_plan_fingerprints.py"
-    )
-
-
-def _resolve_builder(name: str):
-    if name.endswith("::bench_twin"):
-        import bench
-
-        return bench._bench_builders()[name[: -len("::bench_twin")]]
-    if name not in QUERIES:
-        return None
-    return QUERIES[name].build
-
-
 @pytest.mark.parametrize("name", sorted(RECORDED), ids=str)
 def test_plan_fingerprint_unchanged(spark, sf_smoke, name):
-    build = _resolve_builder(name)
+    build = fingerprint_builder(name)
     if build is None:
         pytest.fail(
             f"{name} is fingerprinted but no longer registered — "
-            "regenerate plan_fingerprints.json"
+            "delete its key from plan_fingerprints.json"
         )
     got = plan_fingerprint(build(spark, sf_smoke))
     want = RECORDED[name]

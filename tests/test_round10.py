@@ -30,43 +30,6 @@ def test_quadratic_dedup_anchors_guarded(spark, sf_smoke, monkeypatch):
     QUERIES["dedup_clusters"].build(spark, sf_smoke)
 
 
-def test_bench_spill_detector_can_fire(spark):
-    """The bench's spill watchdog must measure the plan it timed.
-
-    Through round 9 _materialize ran the noop sink, whose writer
-    creates a NEW QueryExecution — the DataFrame's own executedPlan
-    (the one _spill_bytes walks) never ran, so every spill metric was
-    a zero accumulator and the SPILL warning could never fire
-    (round-10 ADVICE, medium). Now _materialize executes df's own
-    QueryExecution; this pins both directions: a deliberately
-    spill-forced window reports NONZERO bytes, and a tiny clean agg
-    reports exactly 0 (not -1/unknown)."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    from bench import _materialize, _spill_bytes
-
-    spark.conf.set("spark.sql.windowExec.buffer.spill.threshold", "4096")
-    spark.conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "4096")
-    try:
-        df = spark.range(0, 200_000).withColumn("g", F.col("id") % 3)
-        w = Window.partitionBy("g").orderBy("id")
-        out = (
-            df.withColumn("rn", F.row_number().over(w))
-            .groupBy("g")
-            .agg(F.max("rn").alias("m"))
-        )
-        _materialize(out)
-        assert _spill_bytes(out) > 0
-    finally:
-        spark.conf.unset("spark.sql.windowExec.buffer.spill.threshold")
-        spark.conf.unset("spark.sql.windowExec.buffer.in.memory.threshold")
-
-    clean = spark.range(0, 1000).groupBy((F.col("id") % 5).alias("k")).count()
-    _materialize(clean)
-    assert _spill_bytes(clean) == 0
-
-
 # ------------------------- trained-quantizer ANN (round-9 verdict 4)
 
 

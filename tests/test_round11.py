@@ -87,27 +87,6 @@ def test_zipf_fit_split_moments_match_oracle(spark, sf_correct):
     assert g["slope_ppm"] < 0  # Zipf: frequency falls with rank
 
 
-# ----------------------- lifecycle bench tier (verdict item 1)
-def test_bench_tiers_name_registered_queries():
-    """Every name in both bench tiers must be a registered query (a
-    rename must not silently drop a heavy operator out of the tracked
-    tier), the tiers must not overlap (double-counting), and the
-    lifecycle tier covers all three streaming gates and all three
-    index-lifecycle families."""
-    import bench
-
-    for name in bench.HEADLINE + bench.LIFECYCLE:
-        assert name in QUERIES, name
-    assert not set(bench.HEADLINE) & set(bench.LIFECYCLE)
-    lc = set(bench.LIFECYCLE)
-    # round 12 swapped the semantic gate row for its occupancy-capped
-    # production twin (tests/test_round12.py pins that swap)
-    assert {"stream_quality_gate", "stream_semantic_dedup_gate_capped",
-            "stream_dedup_against_corpus"} <= lc
-    assert {"dedup_gram_index_update_cycle", "dedup_index_append_cycle",
-            "sim_ann_ivfpq_index_append"} <= lc
-
-
 # ------------------ real container parsing (verdict item 5)
 def test_media_parser_roundtrip_and_edge_cases():
     """The parser must read back exactly what the synthesizer wrote

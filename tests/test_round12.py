@@ -287,90 +287,3 @@ def test_bitext_mined_gate_flag_and_sample_bound(spark, sf_smoke):
     )
     assert 0 < len(rows) <= BITEXT_GATE_SAMPLE
     assert all(r["recall_floor_ok"] == 1 for r in rows)
-
-
-def test_bitext_lifecycle_bench_times_production_miner():
-    """The lifecycle tier times bitext_mined_pairs under the
-    registered name; the quadratic-anchor rows are out of the tier
-    but stay registered."""
-    import bench
-    from gcd_etl_spark.plans.similarity import bitext_mined_pairs
-
-    assert "sim_bitext_margin_mined" in bench.LIFECYCLE
-    assert "sim_bitext_margin_shortlist" not in bench.LIFECYCLE
-    assert "sim_bitext_margin_persisted" not in bench.LIFECYCLE
-    assert bench._bench_builders()["sim_bitext_margin_mined"] is bitext_mined_pairs
-    assert "sim_bitext_margin_shortlist" in QUERIES
-    assert "sim_bitext_margin_persisted" in QUERIES
-
-
-# ------------------ mechanized bench floors (verdict r11 item 2)
-def test_floor_trigger_and_mover_pick():
-    """The floor pass arms only past the threshold, compares over the
-    name intersection (composition changes can't fake a regression),
-    ranks by relative increase, and excludes sub-noise-floor bases
-    from the ranking while still counting them in the total."""
-    import bench
-
-    base = {"a": 1.0, "b": 1.0, "c": 0.1}
-    # 'new' has no recorded base -> out of both trigger and ranking
-    movers, meta = bench._floor_movers(
-        {"a": 2.0, "b": 1.0, "c": 0.2, "new": 50.0}, base
-    )
-    assert meta == {
-        "recorded_total": 2.1,
-        "measured_total": 3.2,
-        "compared_queries": 3,
-    }
-    assert movers[0] == "a" and "c" not in movers
-    # inside the 15% band -> no floor pass
-    movers, meta = bench._floor_movers({"a": 1.05, "b": 1.0}, base)
-    assert movers == [] and meta["measured_total"] == 2.05
-    # failed queries (None) sit out everything
-    movers, _ = bench._floor_movers({"a": None, "b": 5.0, "c": 0.1}, base)
-    assert movers == ["b"]
-    # nothing shared -> fully disarmed
-    assert bench._floor_movers({"new": 9.9}, base) == ([], {})
-
-
-def test_refloor_subprocess_path_runs():
-    """The fresh-JVM floor child must actually spawn, run warm
-    min-of-2, and report parseable numbers (the trigger logic is
-    unit-tested separately; this pins the repair path itself, which
-    otherwise only executes on a >15% regression). One rep of the
-    cheapest headline query keeps it ~30 s."""
-    import bench
-
-    orig = bench.FLOOR_REPS
-    bench.FLOOR_REPS = 1
-    try:
-        floors = bench._refloor(["agg_rollup"], "/root/testdata/sf0.001")
-    finally:
-        bench.FLOOR_REPS = orig
-    assert len(floors["agg_rollup"]) == 1
-    assert floors["agg_rollup"][0] > 0
-
-
-def test_recorded_base_names_are_benched_queries():
-    """Every recorded base row must name a query the bench actually
-    times, or the intersection silently shrinks and the trigger goes
-    blind (the rotted-constant failure mode)."""
-    import bench
-
-    assert set(bench.RECORDED_BASE["headline"]) <= set(bench.HEADLINE)
-    assert set(bench.RECORDED_BASE["lifecycle"]) <= set(bench.LIFECYCLE)
-
-
-def test_lifecycle_bench_rows_are_capped():
-    """The lifecycle bench tier must time the production (capped)
-    semantic forms, with the fixed-width anchors registered but not
-    benched (round-11 verdict item 1's 'benched default' clause)."""
-    import bench
-
-    assert "dedup_semantic_delta_vs_corpus_capped" in bench.LIFECYCLE
-    assert "stream_semantic_dedup_gate_capped" in bench.LIFECYCLE
-    assert "dedup_semantic_delta_vs_corpus" not in bench.LIFECYCLE
-    assert "stream_semantic_dedup_gate" not in bench.LIFECYCLE
-    # ...and the anchors stay registered (ledger continuity)
-    assert "dedup_semantic_delta_vs_corpus" in QUERIES
-    assert "stream_semantic_dedup_gate" in QUERIES

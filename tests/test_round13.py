@@ -237,17 +237,6 @@ def test_time_ordered_halves_partition_and_order(spark, sf_smoke):
     assert hi == events.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
 
 
-# ------------------- bench bases refreshed (item 2)
-def test_recorded_base_covers_full_tiers():
-    """r12 refresh: every benched query now has a recorded base, so
-    the floor trigger's intersection is the whole tier (the three r12
-    composition rows were previously uncovered)."""
-    import bench
-
-    assert set(bench.RECORDED_BASE["headline"]) == set(bench.HEADLINE)
-    assert set(bench.RECORDED_BASE["lifecycle"]) == set(bench.LIFECYCLE)
-
-
 # ------------------- fingerprint hex anchor (round-12 ADVICE)
 def test_norm_name_hex_anchor():
     from gcd_etl_spark.plans.fingerprint import _norm_name
@@ -360,14 +349,13 @@ def test_acquisition_artifact_feeds_distributed_tokenizer(
 
 # ---------------- standing amplified-audit runner (r12 verdict #5)
 def test_amplified_audit_covers_lifecycle_tier():
-    """--tier=lifecycle restricts to bench's LIFECYCLE names and the
-    fail-loud invariant holds: every tier row has an audit target (a
-    tier addition without one raises at runner start, so the standing
-    audit can never silently narrow as the tier grows)."""
-    import bench
-    from scripts.study_amplified_audit import EXP_CEILINGS, TARGETS
+    """--tier=lifecycle restricts to the script's LIFECYCLE names and
+    the fail-loud invariant holds: every lifecycle row has an audit
+    target (a missing one raises at runner start, so the standing
+    audit can never silently narrow)."""
+    from scripts.study_amplified_audit import EXP_CEILINGS, LIFECYCLE, TARGETS
 
-    missing = [n for n in bench.LIFECYCLE if n not in TARGETS]
+    missing = [n for n in LIFECYCLE if n not in TARGETS]
     assert not missing, f"LIFECYCLE rows without audit targets: {missing}"
     # ceilings only name real targets (a typo'd override is dead code)
     assert set(EXP_CEILINGS) <= set(TARGETS)

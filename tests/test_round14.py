@@ -12,6 +12,8 @@ round-13 verdict/advice must hold.
   a legitimately-short sample from a small corpus does NOT re-collect.
 * advice r13 — the connected-components decimal-sum convergence probe
   fails loudly when the sum goes NULL on a non-empty frame.
+* advice r14 — the memoized spread decision re-decides when the
+  file-split settings change.
 """
 
 from __future__ import annotations
@@ -67,6 +69,28 @@ def test_exprcache_sweeps_dead_gateway_entries(spark):
     exprcache.cached(("round14-sweep", 2), lambda: "fresh")
     assert ("dead-gateway", "round14-sweep", 1) not in exprcache._CACHE
     exprcache._CACHE.clear()
+
+
+# ------------------------------------- spread decision vs split config
+def test_spread_decision_follows_split_config(spark, sf_smoke):
+    """One small file is one scan split under the default 128 MiB
+    maxPartitionBytes, so read_table_spread repartitions; at 1 KiB the
+    same file splits past the floor and must come back untouched — a
+    decision memoized under the old config must not be replayed."""
+    from gcd_etl_spark.sources.catalog import read_table_spread
+
+    def spread(df) -> bool:
+        return "Repartition" in df._jdf.queryExecution().logical().toString()
+
+    key = "spark.sql.files.maxPartitionBytes"
+    orig = spark.conf.get(key)
+    assert spread(read_table_spread(spark, sf_smoke, "documents"))
+    spark.conf.set(key, "1024")
+    try:
+        assert not spread(read_table_spread(spark, sf_smoke, "documents"))
+    finally:
+        spark.conf.set(key, orig)
+    assert spread(read_table_spread(spark, sf_smoke, "documents"))
 
 
 # ------------------------------------- staged-index rule-drift guard

@@ -157,29 +157,6 @@ def test_xxhash_twin_shares_candidate_generation(
             build(spark, sf_smoke)
 
 
-# ----------------------------- bench codegen-fallback detector
-
-
-def test_bench_fallback_marker_counting(tmp_path):
-    """Pure-function check of the bench's log scanner: counts marker
-    hits after an offset, tolerates a missing file."""
-    import bench
-
-    log = tmp_path / "jvm.log"
-    log.write_text("WARN x: ok line\n")
-    n, off = bench._fallbacks_since(str(log), 0)
-    assert n == 0
-    with open(log, "a") as f:
-        f.write("WARN CodeGenerator: Code of method grows beyond 64 KB\n")
-        f.write("WARN WholeStageCodegenExec: Whole-stage codegen disabled for plan\n")
-    n, off2 = bench._fallbacks_since(str(log), off)
-    assert n == 2 and off2 > off
-    n, _ = bench._fallbacks_since(str(log), off2)
-    assert n == 0
-    n, _ = bench._fallbacks_since(str(tmp_path / "missing.log"), 0)
-    assert n == 0
-
-
 def test_cdc_carry_is_partition_pruned(spark, sf_smoke):
     """The scale claim of the CDC incremental flagship is that the
     carry is a DIRECTORY-pruned scan — assert the physical plan

@@ -178,39 +178,6 @@ def test_update_sessions_orders_across_chunks():
     assert state.updated == (sess2[0], sess2[-1], 2)
 
 
-def test_bench_flush_barrier_is_order_safe(tmp_path):
-    """The barrier helper returns once its token is visible and the
-    subsequent offset read picks up everything logged before it."""
-    import bench
-
-    log = tmp_path / "jvm.log"
-    log.write_text("WARN x: Whole-stage codegen disabled for reasons\n")
-
-    class _Jvm:
-        class org:
-            class apache:
-                class logging:
-                    class log4j:
-                        class LogManager:
-                            @staticmethod
-                            def getLogger(name):
-                                class L:
-                                    @staticmethod
-                                    def warn(msg):
-                                        with open(log, "a") as f:
-                                            f.write(f"WARN b: {msg}\n")
-
-                                return L
-
-    class _Spark:
-        _jvm = _Jvm
-
-    bench._flush_barrier(_Spark, str(log), "t1", timeout_s=2.0)
-    n, off = bench._fallbacks_since(str(log), 0)
-    assert n == 1  # the marker, not the barrier token
-    assert "gcd-bench-flush-barrier-t1" in log.read_text()
-
-
 # ----------------- nightly dynamic-partition-overwrite composition
 
 
