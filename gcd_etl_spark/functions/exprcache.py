@@ -27,10 +27,18 @@ without eviction, and entries for dead gateways were never dropped
 other-gateway entries whenever the active gateway changes (a restarted
 JVM invalidates every old handle at once, so keeping them is pure
 leak).
+
+The cache is shared by every driver thread (streaming ``foreachBatch``
+threads build expressions concurrently), so every read-modify-write of
+``_CACHE`` — the gateway sweep, the hit refresh and the insert-and-evict
+— holds ``_LOCK``. ``builder()`` runs outside it: a builder may itself
+call ``cached``, and two threads racing on one miss both build the same
+pure expression, the first insert wins.
 """
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 
 _CACHE: OrderedDict = OrderedDict()
@@ -40,6 +48,7 @@ _CACHE: OrderedDict = OrderedDict()
 #: few hundred expression trees.
 _MAX_ENTRIES = 512
 _last_gateway: list = [None]
+_LOCK = threading.Lock()
 
 
 def cached(key: tuple, builder):
@@ -49,18 +58,21 @@ def cached(key: tuple, builder):
 
     sc = SparkContext._active_spark_context
     gw = id(sc._gateway) if sc is not None else None
-    if gw != _last_gateway[0]:
-        # gateway changed (JVM restart): every other-gateway handle is
-        # dead weight — drop them all in one sweep
-        for k in [k for k in _CACHE if k[0] != gw]:
-            del _CACHE[k]
-        _last_gateway[0] = gw
     full = (gw,) + key
-    if full in _CACHE:
-        _CACHE.move_to_end(full)
-        return _CACHE[full]
+    with _LOCK:
+        if gw != _last_gateway[0]:
+            # gateway changed (JVM restart): every other-gateway handle
+            # is dead weight — drop them all in one sweep
+            for k in [k for k in _CACHE if k[0] != gw]:
+                del _CACHE[k]
+            _last_gateway[0] = gw
+        if full in _CACHE:
+            _CACHE.move_to_end(full)
+            return _CACHE[full]
     val = builder()
-    _CACHE[full] = val
-    while len(_CACHE) > _MAX_ENTRIES:
-        _CACHE.popitem(last=False)
+    with _LOCK:
+        val = _CACHE.setdefault(full, val)
+        _CACHE.move_to_end(full)
+        while len(_CACHE) > _MAX_ENTRIES:
+            _CACHE.popitem(last=False)
     return val

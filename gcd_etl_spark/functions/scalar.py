@@ -108,11 +108,6 @@ def try_int(col: Column | str) -> Column:
     return c.try_cast("int")
 
 
-def try_long(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("long")
-
-
 def int_to_bool(col: Column | str) -> Column:
     """F8 — ``value == 1`` int flag -> boolean (null-propagating).
 

@@ -1,23 +1,15 @@
 """Vector math over ``array<float>`` embedding columns.
 
-Two tiers, both distributed:
-
-* **Expression tier** (default): dot/norm/cosine via ``F.zip_with`` +
-  ``F.aggregate`` — stays JVM-side, composes with joins and filters,
-  no Arrow hop. Right choice inside join conditions and projections.
-* **Pandas-UDF tier**: batch cosine against a fixed query vector via
-  NumPy — one Arrow transfer per batch, vectorized BLAS dot. Right
-  choice for scoring a whole table against one query (brute-force ANN
-  baseline) where the 10-100× NumPy advantage beats the Arrow cost.
+Everything here is a Column expression: dot/norm/cosine via
+``F.zip_with`` + ``F.aggregate`` (or unrolled for a known dimension)
+stay JVM-side and compose with joins, filters and projections — no
+Arrow hop.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -183,33 +175,6 @@ def cosine_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
         return F.when(denom > 0, d / denom).otherwise(F.lit(None))
 
     return _memo_fixed(("cosine_fixed", a, b, dim), build, a, b)
-
-
-def cosine_to_query(query_vec: list[float]):
-    """Pandas-UDF factory: cosine of each row's embedding vs a fixed
-    query vector (Arrow-batched, NumPy matmul per batch)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    @F.pandas_udf(T.DoubleType())
-    def _cos(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype="float64")
-        mat = np.asarray(embs.tolist(), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        denom = norms * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(denom > 0, mat @ q / denom, np.nan)
-        return pd.Series(sims)
-
-    return _cos
-
-
-def unit_normalize(a: Column | str) -> Column:
-    """L2-normalize an array<float>; null-norm rows pass through null."""
-    ca = F.col(a) if isinstance(a, str) else a
-    n = norm(ca)
-    return F.when(n > 0, F.transform(ca, lambda x: x / n)).otherwise(F.lit(None))
 
 
 def random_hyperplane_signs(a: Column | str, planes: list[list[float]]) -> Column:

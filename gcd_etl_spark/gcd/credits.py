@@ -60,12 +60,6 @@ CREDIT_TYPE_EXPANSION: dict[int, list[str]] = {
 }
 
 
-def expansion_df(spark: SparkSession) -> DataFrame:
-    """The F10 mapping as a 13-row broadcastable DataFrame."""
-    rows = [(tid, fields) for tid, fields in CREDIT_TYPE_EXPANSION.items()]
-    return spark.createDataFrame(rows, schema="credit_type_id int, atomic_fields array<string>")
-
-
 def aggregate_story_credits(
     spark: SparkSession,
     story_credit: DataFrame,

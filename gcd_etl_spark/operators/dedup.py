@@ -64,37 +64,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def minhash_signature(text_col: str, num_hashes: int = 32, k_shingle: int = 3) -> F.Column:
-    """array<long> minhash signature, fully JVM-side; NULL when the
-    document has no shingles (too short to near-dup by definition).
-
-    Each hash_i(s) = (a_i * xxhash64(s) + b_i) mod p; a_i/b_i are
-    deterministic constants derived from the permutation index, so
-    signatures are reproducible across runs and engines.
-
-    Single fold over the shingle array: acc_i = min(acc_i, h_i(s)).
-    (A per-permutation ``transform`` + ``array_min`` would duplicate
-    the whole shingle subtree ``num_hashes`` times in the expression
-    tree — measured ~60x slower at sf0.1.)
-    """
-    grams = shingles(text_col, k=k_shingle)
-    # 32-bit base hash so (a*h + b) never overflows a signed long.
-    base = F.transform(grams, lambda s: F.abs(F.xxhash64(s) % F.lit(1 << 32)))
-    coeff_a = F.array(*[F.lit(2 * i + 1).cast("long") for i in range(num_hashes)])
-    coeff_b = F.array(*[F.lit(1_000_003 * (i + 1)).cast("long") for i in range(num_hashes)])
-    init = F.array_repeat(F.lit(_MERSENNE_P).cast("long"), num_hashes)
-    sig = F.aggregate(
-        base,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.zip_with(coeff_a, coeff_b, lambda a, b: (a * h + b) % F.lit(_MERSENNE_P)),
-            lambda x, y: F.least(x, y),
-        ),
-    )
-    return F.when(F.size(grams) > 0, sig)
-
-
 def portable_hash64(col) -> F.Column:
     """Engine-portable 60-bit string hash: ``int(md5(s)[:15], 16)``.
 
@@ -121,7 +90,7 @@ def minhash_signature_table(
 
     The relational formulation of minhash: one row per (doc, shingle),
     then ``groupBy(doc).agg(min(h_i))`` for each permutation. Unlike
-    the array-fold expression (``minhash_signature``), every operator
+    an array-fold expression over the shingle array, every operator
     here is whole-stage-codegen'd with map-side partial aggregation —
     at 100 TB only (doc_id, 32 partial minima) rows shuffle, and the
     identical subplan is exchange-reusable on both sides of the

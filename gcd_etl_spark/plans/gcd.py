@@ -37,17 +37,10 @@ _FLAGSHIP_ORACLE = duckdb_array_replace(
     snapshot_oracle_sql(RUN_DATE, gcd_fixture_ctes()), _ARRAY_COLS
 )
 
-#: sf_dir -> collected dictionary maps; the dims are static fixture
-#: derivations, so repeated builds (bench loops) skip 4 driver jobs.
-_DICT_CACHE: dict[str, dict[str, dict[int, str]]] = {}
-
-
 def build_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw 89-col snapshot (arrays intact) — entry()/sink path."""
     tables = gcd_tables_from_fixtures(spark, sf_dir)
-    if sf_dir not in _DICT_CACHE:
-        _DICT_CACHE[sf_dir] = collect_dict_maps(tables)
-    return build_snapshot(spark, tables, RUN_DATE, dicts=_DICT_CACHE[sf_dir])
+    return build_snapshot(spark, tables, RUN_DATE)
 
 
 @query("gcd_snapshot", oracle=_FLAGSHIP_ORACLE)
@@ -78,11 +71,7 @@ def gcd_snapshot_from_dump(spark: SparkSession, sf_dir: str) -> DataFrame:
     dump -> MySQL -> single JDBC cursor loop (Main.java:128-132,
     245-247). Must hash-match the SAME oracle as gcd_snapshot: the
     staging layer is provably value-transparent."""
-    from gcd_etl_spark.sources.dump import (
-        cast_fields,
-        format_insert_statements,
-        parse_insert_lines,
-    )
+    from gcd_etl_spark.sources.dump import format_insert_statements, parse_insert_lines
 
     tables = gcd_tables_from_fixtures(spark, sf_dir)
     lines: list[str] = []
@@ -93,15 +82,8 @@ def gcd_snapshot_from_dump(spark: SparkSession, sf_dir: str) -> DataFrame:
         lines += format_insert_statements(t, rows, 50)
     text = spark.createDataFrame([(ln,) for ln in lines], "value string").repartition(4)
     for t in _DUMP_STAGED_TABLES:
-        tables[t] = cast_fields(
-            parse_insert_lines(text, t, expect_arity=len(schemas[t].fields)),
-            schemas[t],
-        )
-    if sf_dir not in _DICT_CACHE:
-        _DICT_CACHE[sf_dir] = collect_dict_maps(tables)
-    return serialize_array_cols(
-        build_snapshot(spark, tables, RUN_DATE, dicts=_DICT_CACHE[sf_dir])
-    )
+        tables[t] = parse_insert_lines(text, t, schemas[t])
+    return serialize_array_cols(build_snapshot(spark, tables, RUN_DATE))
 
 
 #: Issues with id % INCR_MOD < INCR_CHANGED are the "changed"
@@ -159,9 +141,7 @@ def gcd_snapshot_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/sinks.write_gcd_snapshot + partitionOverwriteMode=dynamic.
     """
     tables = gcd_tables_from_fixtures(spark, sf_dir)
-    if sf_dir not in _DICT_CACHE:
-        _DICT_CACHE[sf_dir] = collect_dict_maps(tables)
-    dicts = _DICT_CACHE[sf_dir]
+    dicts = collect_dict_maps(tables)
     from pyspark.sql import functions as F
 
     changed_pred = F.col("id") % INCR_MOD < INCR_CHANGED
@@ -231,13 +211,11 @@ def gcd_snapshot_incremental_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prior = _prior_snapshot_path(spark, sf_dir)
     tables = gcd_tables_from_fixtures(spark, sf_dir)
-    if sf_dir not in _DICT_CACHE:
-        _DICT_CACHE[sf_dir] = collect_dict_maps(tables)
     changed = _restrict_to_issues(
         tables,
         tables["gcd_issue"].where(F.col("id") % INCR_MOD < INCR_CHANGED),
     )
-    delta = build_snapshot(spark, changed, RUN_DATE, dicts=_DICT_CACHE[sf_dir])
+    delta = build_snapshot(spark, changed, RUN_DATE)
     carried = (
         spark.read.parquet(prior)
         .where(F.col("issue_bucket") >= INCR_CHANGED)  # partition-pruned
@@ -347,15 +325,13 @@ def gcd_snapshot_incremental_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prior = _prior_cdc_snapshot_path(spark, sf_dir)
     tables = gcd_tables_from_fixtures(spark, sf_dir)
-    if sf_dir not in _DICT_CACHE:
-        _DICT_CACHE[sf_dir] = collect_dict_maps(tables)
     issue = tables["gcd_issue"]
     bucket = _cdc_mod_bucket_from_ts(F.col("modified"))
     # watermark lookup: one-row aggregate, the control-plane read a
     # real run does against its run ledger
     watermark = issue.agg(F.max(bucket).alias("w")).collect()[0]["w"]
     changed = _restrict_to_issues(tables, issue.where(bucket == F.lit(watermark)))
-    delta = build_snapshot(spark, changed, RUN_DATE, dicts=_DICT_CACHE[sf_dir])
+    delta = build_snapshot(spark, changed, RUN_DATE)
     carried = (
         spark.read.parquet(prior)
         .where(F.col("mod_bucket") < F.lit(watermark))  # partition-pruned
@@ -448,16 +424,14 @@ def gcd_snapshot_nightly_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
 
     name = _nightly_prior_table(spark, sf_dir)
     tables = gcd_tables_from_fixtures(spark, sf_dir)
-    if sf_dir not in _DICT_CACHE:
-        _DICT_CACHE[sf_dir] = collect_dict_maps(tables)
     issue = tables["gcd_issue"]
     bucket = _cdc_mod_bucket_from_ts(F.col("modified"))
     watermark = issue.agg(F.max(bucket).alias("w")).collect()[0]["w"]
     if watermark is not None:
         changed = _restrict_to_issues(tables, issue.where(bucket == F.lit(watermark)))
-        delta = build_snapshot(
-            spark, changed, RUN_DATE, dicts=_DICT_CACHE[sf_dir]
-        ).withColumn("mod_bucket", _cdc_mod_bucket_from_int(F.col("modified")))
+        delta = build_snapshot(spark, changed, RUN_DATE).withColumn(
+            "mod_bucket", _cdc_mod_bucket_from_int(F.col("modified"))
+        )
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
@@ -514,11 +488,7 @@ def gcd_snapshot_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 tables[tbl], name, [key], n_buckets=16, sort_cols=[key]
             )
         tables[tbl] = spark.table(name)
-    if sf_dir not in _DICT_CACHE:
-        _DICT_CACHE[sf_dir] = collect_dict_maps(tables)
-    return serialize_array_cols(
-        build_snapshot(spark, tables, RUN_DATE, dicts=_DICT_CACHE[sf_dir])
-    )
+    return serialize_array_cols(build_snapshot(spark, tables, RUN_DATE))
 
 
 @query(

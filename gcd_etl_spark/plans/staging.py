@@ -7,6 +7,9 @@ hash-match plain SQL over the ORIGINAL parquet — i.e. the staged
 bytes are provably identical to the source of truth. This is the
 Spark-first replacement for the reference's dump -> MySQL -> JDBC
 loop (reference Main.java:128-132,245-247; download.py:76-100).
+``dump_datasource_roundtrip`` holds the on-disk form of the same
+round trip — one dump file per table in a directory, read through
+``stage_dump_table`` — to the same oracle.
 
 Scale note: the text scan is splittable and the tokenizer is
 executor-local per line; the only shuffle in this plan is the final
@@ -23,9 +26,9 @@ from pyspark.sql import types as T
 from gcd_etl_spark.plans.registry import query
 from gcd_etl_spark.sources.catalog import read_table
 from gcd_etl_spark.sources.dump import (
-    cast_fields,
     format_insert_statements,
     parse_insert_lines,
+    stage_dump_table,
 )
 
 _SUPPLIER_SCHEMA = T.StructType(
@@ -67,8 +70,12 @@ def dump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Mix both tables in one "file", as a real dump would be.
     text = spark.createDataFrame([(ln,) for ln in lines], "value string").repartition(4)
-    supplier = cast_fields(parse_insert_lines(text, "supplier"), _SUPPLIER_SCHEMA)
-    nation = cast_fields(parse_insert_lines(text, "nation"), _NATION_SCHEMA)
+    supplier = parse_insert_lines(text, "supplier", _SUPPLIER_SCHEMA)
+    nation = parse_insert_lines(text, "nation", _NATION_SCHEMA)
+    return _supplier_nation(supplier, nation)
+
+
+def _supplier_nation(supplier: DataFrame, nation: DataFrame) -> DataFrame:
     return (
         supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
         .select(
@@ -83,52 +90,25 @@ def dump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dump_datasource_roundtrip", oracle=_ROUNDTRIP_ORACLE)
 def dump_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same ingest round-trip as dump_roundtrip, but through the
-    Spark 4 Python DataSource surface (``format("gcddump")``,
-    sources/dump_datasource.py) instead of the text+mapInPandas
-    staging path: dump text written to real files, read back with
-    one input partition per file, tokenized executor-side by the
-    SAME tokenizer, joined, and held to the identical oracle — so
-    the two reader frontends are provably semantics-equal."""
+    """The same ingest round-trip as dump_roundtrip, from dump FILES:
+    one ``.sql`` file per table in a directory, as a per-table nightly
+    dump arrives, read back through ``stage_dump_table`` (one text
+    scan over the whole directory, tokenized executor-side), joined,
+    and held to the identical oracle."""
     import os
-    import shutil
+    import uuid
 
-    from gcd_etl_spark.sources.dump_datasource import GcdDumpDataSource
-
-    try:
-        spark.dataSource.register(GcdDumpDataSource)
-    except Exception:
-        pass  # already registered in this session
     sup_rows = [tuple(r) for r in read_table(spark, sf_dir, "supplier").collect()]
     nat_rows = [tuple(r) for r in read_table(spark, sf_dir, "nation").collect()]
+    # uuid-suffixed scratch: two concurrent runs over the same sf dir
+    # must not clobber each other's dump files.
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    dump_dir = f"/tmp/gcd_etl_dump_ds_{tag}"
-    shutil.rmtree(dump_dir, ignore_errors=True)
+    dump_dir = f"/tmp/gcd_etl_dump_ds_{tag}_{uuid.uuid4().hex[:8]}"
     os.makedirs(dump_dir)
-    # two files, as a real per-table dump directory would arrive
     with open(f"{dump_dir}/supplier.sql", "w", encoding="utf-8") as f:
         f.write("\n".join(format_insert_statements("supplier", sup_rows, 50)) + "\n")
     with open(f"{dump_dir}/nation.sql", "w", encoding="utf-8") as f:
         f.write("\n".join(format_insert_statements("nation", nat_rows, 50)) + "\n")
-
-    def load(table: str, schema: T.StructType) -> DataFrame:
-        return (
-            spark.read.format("gcddump")
-            .schema(schema)
-            .option("table", table)
-            .option("path", dump_dir)
-            .load()
-        )
-
-    supplier = load("supplier", _SUPPLIER_SCHEMA)
-    nation = load("nation", _NATION_SCHEMA)
-    return (
-        supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .select(
-            F.col("s_suppkey").alias("suppkey"),
-            F.col("s_name").alias("name"),
-            F.col("n_name").alias("nation"),
-            F.col("s_acctbal").alias("acctbal"),
-        )
-        .orderBy("suppkey")
-    )
+    supplier = stage_dump_table(spark, dump_dir, "supplier", _SUPPLIER_SCHEMA)
+    nation = stage_dump_table(spark, dump_dir, "nation", _NATION_SCHEMA)
+    return _supplier_nation(supplier, nation)

@@ -62,19 +62,65 @@ _ESCAPE = {
 }
 
 
-def insert_table_name(line: str) -> str | None:
-    """Table name of an ``INSERT INTO`` statement line, else None."""
-    s = line.lstrip()
-    if not s.upper().startswith("INSERT INTO"):
-        return None
-    rest = s[len("INSERT INTO") :].lstrip()
-    if rest.startswith("`"):
-        end = rest.find("`", 1)
-        return rest[1:end] if end > 0 else None
-    for i, ch in enumerate(rest):
-        if ch in " (\t":
-            return rest[:i]
-    return rest or None
+def _skip_ws(s: str, i: int) -> int:
+    while i < len(s) and s[i].isspace():
+        i += 1
+    return i
+
+
+def insert_header(line: str) -> tuple[str | None, int]:
+    """(table name, index just past VALUES) of an ``INSERT INTO`` line.
+
+    The name is None when the line is not an INSERT statement (or its
+    backticked name is unterminated). The offset is -1 when the header
+    has no VALUES keyword — a line cut inside its header.
+
+    The scan walks ``INSERT INTO``, the (possibly backticked) table
+    identifier and an optional ``--complete-insert`` column list BEFORE
+    looking for VALUES, so a table or column name that itself contains
+    "values" (``order_values``, a column named ```values```) is never
+    mistaken for the keyword. Backtick and paren
+    context is tracked through the column list.
+    """
+    n = len(line)
+    i = _skip_ws(line, 0)
+    if line[i : i + 11].upper() != "INSERT INTO":
+        return None, -1
+    i = _skip_ws(line, i + 11)
+    if line.startswith("`", i):  # backticked table identifier
+        j = line.find("`", i + 1)
+        if j < 0:
+            return None, -1
+        name, i = line[i + 1 : j], j + 1
+    else:  # bare identifier
+        j = i
+        while j < n and line[j] not in " \t(":
+            j += 1
+        if j == i:
+            return None, -1
+        name, i = line[i:j], j
+    i = _skip_ws(line, i)
+    if line.startswith("(", i):  # --complete-insert column list
+        depth, in_backtick = 0, False
+        while i < n:
+            c = line[i]
+            i += 1
+            if in_backtick:
+                in_backtick = c != "`"
+            elif c == "`":
+                in_backtick = True
+            elif c == "(":
+                depth += 1
+            elif c == ")":
+                depth -= 1
+                if depth == 0:
+                    break
+        else:
+            return name, -1
+    i = _skip_ws(line, i)
+    if line[i : i + 6].upper() != "VALUES":
+        return name, -1
+    return name, i + 6
 
 
 def _parse_tuple(text: str, i: int) -> tuple[list[str | None], int, bool]:
@@ -128,69 +174,11 @@ def _parse_tuple(text: str, i: int) -> tuple[list[str | None], int, bool]:
     return fields, i, False
 
 
-def _values_start(line: str) -> int:
-    """Index just past the statement's VALUES keyword, or -1.
-
-    Scans past ``INSERT INTO``, the (possibly backticked) table
-    identifier, and an optional ``--complete-insert`` column list
-    BEFORE looking for VALUES — so a table or column name that itself
-    contains the substring "values" (e.g. ``order_values``, a column
-    named ```values```) can never be mistaken for the keyword
-    (round-2 ADVICE). Backtick and paren context is tracked through
-    the column list.
-    """
-    s, n = line, len(line)
-    i = 0
-    while i < n and s[i] in " \t":
-        i += 1
-    if not s[i : i + 11].upper().startswith("INSERT INTO"):
-        return -1
-    i += 11
-    while i < n and s[i] in " \t":
-        i += 1
-    if i < n and s[i] == "`":  # backticked table identifier
-        j = s.find("`", i + 1)
-        if j < 0:
-            return -1
-        i = j + 1
-    else:  # bare identifier
-        while i < n and s[i] not in " \t(":
-            i += 1
-    while i < n and s[i] in " \t":
-        i += 1
-    if i < n and s[i] == "(":  # --complete-insert column list
-        depth, in_backtick = 0, False
-        while i < n:
-            c = s[i]
-            if in_backtick:
-                if c == "`":
-                    in_backtick = False
-            elif c == "`":
-                in_backtick = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    i += 1
-                    break
-            i += 1
-        else:
-            return -1
-    while i < n and s[i] in " \t":
-        i += 1
-    if s[i : i + 6].upper() == "VALUES":
-        return i + 6
-    return -1
-
-
-def _iter_tuples(line: str) -> Iterator[tuple[list[str | None], bool]]:
-    """Yield (fields, closed) for each VALUES tuple of one INSERT line;
-    only the last tuple of a cut-off line can be unclosed."""
-    v = _values_start(line)
-    if v < 0:
-        return
-    i, n = v, len(line)
+def _iter_tuples(line: str, i: int) -> Iterator[tuple[list[str | None], bool]]:
+    """Yield (fields, closed) for each VALUES tuple of one INSERT line,
+    from ``i`` = the offset ``insert_header`` returned; only the last
+    tuple of a cut-off line can be unclosed."""
+    n = len(line)
     while i < n:
         if line[i] == "(":
             fields, i, closed = _parse_tuple(line, i)
@@ -205,36 +193,40 @@ def iter_insert_tuples(line: str) -> Iterator[list[str | None]]:
     """Yield each complete VALUES tuple of one INSERT statement line.
     A truncated trailing tuple (the line ends before its ``)``) is
     dropped, never yielded as a row."""
-    for fields, closed in _iter_tuples(line):
-        if closed:
-            yield fields
+    _, v = insert_header(line)
+    if v >= 0:
+        for fields, closed in _iter_tuples(line, v):
+            if closed:
+                yield fields
 
 
 def parse_insert_lines(
     lines: DataFrame,
     table: str,
-    value_col: str = "value",
-    expect_arity: int | None = None,
+    schema: T.StructType,
     metrics: dict | None = None,
 ) -> DataFrame:
-    """Distributed tokenize: INSERT lines -> one row per VALUES tuple.
+    """Distributed tokenize + cast: INSERT lines (a ``value`` string
+    column) -> one typed row per VALUES tuple of ``table``.
 
-    Output schema: ``fields array<string>`` (NULL elements for SQL
-    NULL). Executor-local per line — no shuffle; parallelism is the
-    text-split count.
+    Executor-local per line — no shuffle; parallelism is the
+    text-split count. String->type casts follow the engine's try-cast
+    discipline (reference Main.java:253-258 silently nulls unparseable
+    ints): a malformed field becomes NULL, never a job abort.
 
     Line selection is ONE predicate, not two (round-2 ADVICE): a
     cheap, case/whitespace-tolerant JVM prefilter prunes the scan,
-    then ``insert_table_name`` — the same tokenizer used everywhere —
-    decides authoritatively per line. Nothing is dropped silently:
-    pass ``metrics={}`` to receive Spark accumulators counting
-    prefilter-survivor lines that belong to other tables
-    (``other_table_lines``), tuples whose field count does not match
-    ``expect_arity`` (``arity_mismatch_tuples`` — quarantined, never
-    silently null-padded) and tuples cut off before their closing
-    ``)`` (``truncated_tuples`` — quarantined even when the arity
-    happens to match). Accumulator values are final after any action
-    on the result.
+    then ``insert_header`` decides authoritatively per line. Nothing
+    is dropped silently — every line or tuple that is not staged
+    counts in one Spark accumulator (pass ``metrics={}`` to receive
+    them; values are final after any action on the result):
+
+    * ``other_table_lines`` — prefilter-survivor lines of other tables;
+    * ``arity_mismatch_tuples`` — tuples whose field count is not
+      ``len(schema.fields)``: quarantined, never null-padded;
+    * ``truncated_tuples`` — tuples cut off before their closing
+      ``)`` (quarantined even when the arity happens to match), and
+      lines of ``table`` cut inside their header, before VALUES.
     """
     sc = lines.sparkSession.sparkContext
     other_table = sc.accumulator(0)
@@ -244,59 +236,44 @@ def parse_insert_lines(
         metrics["other_table_lines"] = other_table
         metrics["arity_mismatch_tuples"] = arity_mismatch
         metrics["truncated_tuples"] = truncated
+    arity = len(schema.fields)
 
     # Coarse JVM-side prefilter (codegen, pushed to the text scan):
     # tolerant of leading whitespace and lowercase INSERT, requires the
     # table name somewhere on the line. May overmatch (another table's
     # line containing this name as data) — the tokenizer below settles
     # it with the shared predicate.
-    head = F.upper(F.ltrim(F.col(value_col)))
-    filtered = lines.where(
-        head.startswith("INSERT INTO") & F.col(value_col).contains(table)
-    )
+    head = F.upper(F.ltrim(F.col("value")))
+    filtered = lines.where(head.startswith("INSERT INTO") & F.col("value").contains(table))
 
     def _tok(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[list[str | None]] = []
-            for ln in pdf[value_col]:
-                if insert_table_name(ln) != table:
+            for ln in pdf["value"]:
+                name, v = insert_header(ln)
+                if name != table:
                     other_table.add(1)
                     continue
-                for tup, closed in _iter_tuples(ln):
+                if v < 0:
+                    truncated.add(1)
+                    continue
+                for tup, closed in _iter_tuples(ln, v):
                     if not closed:
                         truncated.add(1)
-                        continue
-                    if expect_arity is not None and len(tup) != expect_arity:
+                    elif len(tup) != arity:
                         arity_mismatch.add(1)
-                        continue
-                    out.append(list(tup))
+                    else:
+                        out.append(tup)
             if out:  # a batch may be all-skips; yield nothing then
                 yield pd.DataFrame({"fields": out})
 
-    return filtered.mapInPandas(_tok, schema="fields array<string>")
-
-
-def cast_fields(parsed: DataFrame, schema: T.StructType, strict: bool = True) -> DataFrame:
-    """Raw string tuples -> typed columns per the declared schema.
-
-    String->type casts follow the engine's try-cast discipline
-    (reference Main.java:253-258 silently nulls unparseable ints):
-    ``try_cast`` so a malformed field becomes NULL, never a job abort
-    — the P6 row-level error-containment semantic, column-level.
-
-    ``strict`` (default) additionally drops tuples whose field count
-    differs from the schema — a truncated tuple must not masquerade as
-    legitimate NULLs (round-2 ADVICE). The canonical ingest path
-    (``stage_dump_table``) already quarantines + counts these in the
-    tokenizer; this filter is the defense for direct callers.
-    """
-    if strict:
-        parsed = parsed.where(F.size("fields") == len(schema.fields))
-    cols = [
-        F.col("fields").getItem(i).try_cast(fld.dataType).alias(fld.name)
-        for i, fld in enumerate(schema.fields)
-    ]
-    return parsed.select(*cols)
+    parsed = filtered.mapInPandas(_tok, schema="fields array<string>")
+    return parsed.select(
+        *[
+            F.col("fields").getItem(i).try_cast(fld.dataType).alias(fld.name)
+            for i, fld in enumerate(schema.fields)
+        ]
+    )
 
 
 def stage_dump_table(
@@ -309,18 +286,16 @@ def stage_dump_table(
 ) -> DataFrame:
     """Parse one table out of a mysqldump file into a typed DataFrame.
 
-    ``dump`` is a path for ``spark.read.text`` (splittable; gz works
-    but is one split — prefer uncompressed/zstd-seekable at scale) or
-    an already-loaded single-column DataFrame. With ``out_path`` the
-    result is also written as snappy parquet staging. Pass
-    ``metrics={}`` to receive the tokenizer's dropped-line/tuple
-    accumulators (see ``parse_insert_lines``).
+    ``dump`` is a path for ``spark.read.text`` (a file or a directory
+    of dump files; splittable; gz works but is one split — prefer
+    uncompressed/zstd-seekable at scale) or an already-loaded
+    single-column DataFrame. With ``out_path`` the result is also
+    written as snappy parquet staging. Pass ``metrics={}`` to receive
+    the tokenizer's dropped-line/tuple accumulators (see
+    ``parse_insert_lines``).
     """
     lines = spark.read.text(dump) if isinstance(dump, str) else dump
-    parsed = parse_insert_lines(
-        lines, table, expect_arity=len(schema.fields), metrics=metrics
-    )
-    typed = cast_fields(parsed, schema)
+    typed = parse_insert_lines(lines, table, schema, metrics=metrics)
     if out_path:
         typed.write.mode("overwrite").parquet(out_path)
         return spark.read.parquet(out_path)

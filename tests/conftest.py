@@ -122,14 +122,14 @@ def _spark_kind(dt) -> str:
     return "other"
 
 
-def _assert_hash_kinds_compatible(spark_df, con, sql: str, name: str):
+def _assert_hash_kinds_compatible(spark_df, described, name: str):
     """Fail on the type-family drifts known to break the driver's
     value hash while passing a string-normalized compare: oracle-side
-    widening past 64-bit ints, and int-vs-float column mixes. Uses
-    DESCRIBE (plan-only, no execution)."""
+    widening past 64-bit ints, and int-vs-float column mixes.
+    ``described`` is the oracle's DESCRIBE rows."""
     s_kinds = {f.name: _spark_kind(f.dataType) for f in spark_df.schema.fields}
     bad = []
-    for col, typ, *_ in con.execute(f"DESCRIBE {sql}").fetchall():
+    for col, typ, *_ in described:
         dk = _duck_kind(str(typ))
         sk = s_kinds.get(col)
         if sk is None:
@@ -144,14 +144,34 @@ def _assert_hash_kinds_compatible(spark_df, con, sql: str, name: str):
     )
 
 
+def _run_oracle(con, sql: str):
+    """(DESCRIBE rows, column names, rows) of one oracle query.
+
+    The query runs ONCE, into a temp table: DESCRIBE of the table
+    reports the query's exact output types, and the rows are read back
+    from it. Binding alone takes ~30 s for the widest oracles, so
+    DESCRIBE-then-execute would pay it twice. A query a table cannot
+    hold (duplicate column names) falls back to the two-pass form."""
+    try:
+        con.execute(f"CREATE OR REPLACE TEMP TABLE __oracle_result AS {sql}")
+    except duckdb.Error:
+        described = con.execute(f"DESCRIBE {sql}").fetchall()
+        oracle = con.execute(sql)
+        return described, [d[0] for d in oracle.description], oracle.fetchall()
+    try:
+        described = con.execute("DESCRIBE __oracle_result").fetchall()
+        oracle = con.execute("SELECT * FROM __oracle_result")
+        return described, [d[0] for d in oracle.description], oracle.fetchall()
+    finally:
+        con.execute("DROP TABLE __oracle_result")
+
+
 def assert_df_matches_con(spark_df, con, sql: str, name: str = "query"):
     """Same differential check against an already-prepared DuckDB
     connection (used by the GCD golden test, whose views aren't the
     fixture tables)."""
-    _assert_hash_kinds_compatible(spark_df, con, sql, name)
-    oracle = con.execute(sql)
-    o_cols = [d[0] for d in oracle.description]
-    o_rows = oracle.fetchall()
+    described, o_cols, o_rows = _run_oracle(con, sql)
+    _assert_hash_kinds_compatible(spark_df, described, name)
 
     s_cols = spark_df.columns
     s_rows = [tuple(r) for r in spark_df.collect()]

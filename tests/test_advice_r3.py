@@ -39,9 +39,7 @@ def test_insert_predicate_tolerates_whitespace_and_case(spark):
         "INSERT INTO `nation` VALUES (3,'z');",  # canonical backticked
         "INSERT INTO nation(a,b) VALUES (4,'w');",  # paren right after name
     ]
-    got = D.cast_fields(
-        D.parse_insert_lines(_lines_df(spark, lines), "nation"), _SCHEMA2
-    ).collect()
+    got = D.parse_insert_lines(_lines_df(spark, lines), "nation", _SCHEMA2).collect()
     assert sorted((r["a"], r["b"]) for r in got) == [
         (1, "x"),
         (2, "y"),
@@ -58,7 +56,9 @@ def test_insert_predicate_counts_other_table_lines(spark):
         "INSERT INTO `nation_backup` VALUES (9,'q');",
     ]
     metrics: dict = {}
-    out = D.parse_insert_lines(_lines_df(spark, lines), "nation", metrics=metrics)
+    out = D.parse_insert_lines(
+        _lines_df(spark, lines), "nation", _SCHEMA2, metrics=metrics
+    )
     assert out.count() == 1
     assert metrics["other_table_lines"].value == 1
 
@@ -70,19 +70,19 @@ def test_values_keyword_in_identifier_not_mistaken(spark):
     lines = [
         "INSERT INTO `order_values` (`values`,`x`) VALUES (1,'a'),(2,'b');",
     ]
-    got = D.cast_fields(
-        D.parse_insert_lines(_lines_df(spark, lines), "order_values"), _SCHEMA2
+    got = D.parse_insert_lines(
+        _lines_df(spark, lines), "order_values", _SCHEMA2
     ).collect()
     assert sorted((r["a"], r["b"]) for r in got) == [(1, "a"), (2, "b")]
 
 
 def test_values_start_unit():
-    assert D._values_start("INSERT INTO `t` VALUES (1)") > 0
-    assert D._values_start("  insert into t (a,b) values (1,2)") > 0
-    v = D._values_start("INSERT INTO `order_values` (`values`) VALUES (9)")
+    assert D.insert_header("INSERT INTO `t` VALUES (1)")[1] > 0
+    assert D.insert_header("  insert into t (a,b) values (1,2)")[1] > 0
+    v = D.insert_header("INSERT INTO `order_values` (`values`) VALUES (9)")[1]
     assert v > 0 and "(`values`)" not in "INSERT INTO `order_values` (`values`) VALUES (9)"[v:]
-    assert D._values_start("SELECT 1") == -1
-    assert D._values_start("INSERT INTO t (a,b)") == -1  # no VALUES at all
+    assert D.insert_header("SELECT 1") == (None, -1)
+    assert D.insert_header("INSERT INTO t (a,b)") == ("t", -1)  # no VALUES at all
 
 
 def test_arity_mismatch_quarantined_and_counted(spark):
@@ -90,23 +90,11 @@ def test_arity_mismatch_quarantined_and_counted(spark):
         "INSERT INTO `t` VALUES (1,'ok'),(2),(3,'ok',99),(4,'ok');",
     ]
     metrics: dict = {}
-    parsed = D.parse_insert_lines(
-        _lines_df(spark, lines), "t", expect_arity=2, metrics=metrics
-    )
-    got = D.cast_fields(parsed, _SCHEMA2).collect()
+    got = D.parse_insert_lines(
+        _lines_df(spark, lines), "t", _SCHEMA2, metrics=metrics
+    ).collect()
     assert sorted((r["a"], r["b"]) for r in got) == [(1, "ok"), (4, "ok")]
     assert metrics["arity_mismatch_tuples"].value == 2
-
-
-def test_cast_fields_strict_filters_short_tuples(spark):
-    parsed = spark.createDataFrame(
-        [(["1", "x"],), (["2"],)], "fields array<string>"
-    )
-    assert [(r["a"], r["b"]) for r in D.cast_fields(parsed, _SCHEMA2).collect()] == [
-        (1, "x")
-    ]
-    # non-strict keeps the legacy null-padding behavior, explicitly
-    assert D.cast_fields(parsed, _SCHEMA2, strict=False).count() == 2
 
 
 def test_sql_literal_nonfinite_floats():

@@ -16,21 +16,21 @@ from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import types as T
 
 from gcd_etl_spark.sources.dump import (
-    cast_fields,
     format_insert_statements,
-    insert_table_name,
+    insert_header,
     iter_insert_tuples,
     parse_insert_lines,
     sql_literal,
+    stage_dump_table,
     stage_tsv_table,
 )
 
 
 def test_table_name_forms():
-    assert insert_table_name("INSERT INTO `gcd_issue` VALUES (1);") == "gcd_issue"
-    assert insert_table_name("INSERT INTO nation (a,b) VALUES (1,2);") == "nation"
-    assert insert_table_name("-- comment line") is None
-    assert insert_table_name("CREATE TABLE `x` (id int);") is None
+    assert insert_header("INSERT INTO `gcd_issue` VALUES (1);")[0] == "gcd_issue"
+    assert insert_header("INSERT INTO nation (a,b) VALUES (1,2);")[0] == "nation"
+    assert insert_header("-- comment line")[0] is None
+    assert insert_header("CREATE TABLE `x` (id int);")[0] is None
 
 
 def test_tuple_tokenizer_escapes():
@@ -82,7 +82,7 @@ def test_distributed_parse_and_cast(spark):
             T.StructField("ts", T.TimestampType()),
         ]
     )
-    out = cast_fields(parse_insert_lines(text, "docs"), schema)
+    out = parse_insert_lines(text, "docs", schema)
     pdf = out.toPandas().sort_values("id").reset_index(drop=True)
     assert len(pdf) == 500  # the `other` table's row is filtered out
     assert pdf["id"].tolist() == list(range(500))
@@ -98,7 +98,7 @@ def test_malformed_field_nulls_not_aborts(spark):
     schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("v", T.IntegerType())]
     )
-    got = cast_fields(parse_insert_lines(text, "t"), schema).collect()
+    got = parse_insert_lines(text, "t", schema).collect()
     by_id = {r.id: r.v for r in got}
     assert by_id == {1: None, 2: 77}
 
@@ -165,6 +165,11 @@ def test_line_prefix_yields_only_complete_tuples(rows):
         assert got == [w for w, e in zip(want, ends) if e <= k], line[:k]
 
 
+_AB = T.StructType(
+    [T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]
+)
+
+
 def test_truncated_tuples_quarantined_and_counted(spark):
     lines = [
         "INSERT INTO `t` VALUES (1,'ab'),(2,'cd",  # cut inside a string
@@ -173,23 +178,61 @@ def test_truncated_tuples_quarantined_and_counted(spark):
     ]
     text = spark.createDataFrame([(ln,) for ln in lines], "value string")
     metrics: dict = {}
-    got = parse_insert_lines(text, "t", expect_arity=2, metrics=metrics).collect()
-    assert sorted(r.fields for r in got) == [["1", "ab"], ["3", "ef"], ["6", "gh"]]
+    got = parse_insert_lines(text, "t", _AB, metrics=metrics).collect()
+    assert sorted((r.a, r.b) for r in got) == [(1, "ab"), (3, "ef"), (6, "gh")]
     assert metrics["truncated_tuples"].value == 2
     assert metrics["arity_mismatch_tuples"].value == 0
 
 
-def test_dump_datasource_drops_truncated_tuple(tmp_path):
-    """The Spark-4 DataSource shares the tokenizer, so a cut-off tuple
-    is not null-padded into a row there either."""
-    from gcd_etl_spark.sources.dump_datasource import DumpFilePartition, GcdDumpReader
+def test_header_cut_lines_counted(spark):
+    """A line of the table cut inside its INSERT header (before VALUES)
+    holds no tuple, but is counted — it is not another table's line."""
+    lines = [
+        "INSERT INTO `t` VAL",
+        "INSERT INTO `t` (`a`,`b",
+        "INSERT INTO `t`",
+        "INSERT INTO `t` VALUES (1,'ab');",
+    ]
+    text = spark.createDataFrame([(ln,) for ln in lines], "value string")
+    metrics: dict = {}
+    got = parse_insert_lines(text, "t", _AB, metrics=metrics).collect()
+    assert [(r.a, r.b) for r in got] == [(1, "ab")]
+    assert metrics["truncated_tuples"].value == 3
+    assert metrics["other_table_lines"].value == 0
 
-    p = tmp_path / "t.sql"
-    p.write_text("INSERT INTO `t` VALUES (1,'ab'),(2,'cd\n")
-    reader = GcdDumpReader(
-        T.StructType(
-            [T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]
-        ),
-        {"table": "t", "path": str(p)},
+
+def test_dump_dir_nulls_bad_values_and_counts_short_tuples(spark, tmp_path):
+    """A directory of dump files through stage_dump_table: strings that
+    are not booleans and an int out of range stage as NULL (never a
+    job abort), and a short tuple is quarantined and counted, never
+    null-padded into a row."""
+    (tmp_path / "bools.sql").write_text(
+        "INSERT INTO `t` VALUES (1,'2',0),(2,'1.5',0),(3,'1e3',0),(4,'-0',0),"
+        "(5,' 7 ',0),(6,'Infinity',0),(7,'0.0',0),(8,'1',0),(9,'0',0);\n"
     )
-    assert list(reader.read(DumpFilePartition(str(p)))) == [(1, "ab")]
+    (tmp_path / "ints.sql").write_text(
+        "INSERT INTO `t` VALUES (10,NULL,9999999999),(11,NULL,42),(100,1);\n"
+    )
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("flag", T.BooleanType()),
+            T.StructField("n", T.IntegerType()),
+        ]
+    )
+    metrics: dict = {}
+    got = {
+        r.id: (r.flag, r.n)
+        for r in stage_dump_table(
+            spark, str(tmp_path), "t", schema, metrics=metrics
+        ).collect()
+    }
+    assert got == {
+        **{i: (None, 0) for i in range(1, 8)},
+        8: (True, 0),
+        9: (False, 0),
+        10: (None, None),
+        11: (None, 42),
+    }
+    assert metrics["arity_mismatch_tuples"].value == 1
+    assert metrics["truncated_tuples"].value == 0

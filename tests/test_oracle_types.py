@@ -26,56 +26,59 @@ from tests.conftest import SF_SMOKE, oracle_con
 _FORBIDDEN = ("HUGEINT", "UHUGEINT", "UINT64", "UBIGINT")
 
 
-def _oracled():
-    return [(n, q.oracle) for n, q in QUERIES.items() if q.oracle is not None]
-
-
-def test_no_oracle_column_widens_past_bigint():
+@pytest.fixture(scope="module")
+def described() -> dict:
+    """name -> DESCRIBE rows of every registered oracle (or the
+    exception DESCRIBE raised), one pass shared by both checks."""
     con = oracle_con(SF_SMOKE)
     try:
-        bad = []
-        for name, sql in _oracled():
-            try:
-                desc = con.execute(f"DESCRIBE {sql}").fetchall()
-            except Exception as exc:  # pragma: no cover - surfaced below
-                bad.append((name, "<describe failed>", str(exc)[:120]))
+        out = {}
+        for name, q in QUERIES.items():
+            if q.oracle is None:
                 continue
-            for col, typ, *_ in desc:
-                t = str(typ).upper()
-                if any(f in t for f in _FORBIDDEN):
-                    bad.append((name, col, t))
-        assert not bad, (
-            "oracle columns widened past BIGINT (driver hash will diverge "
-            "from Spark even on equal values) — CAST(... AS BIGINT) them:\n"
-            + "\n".join(f"  {n}.{c}: {t}" for n, c, t in bad)
-        )
+            try:
+                out[name] = con.execute(f"DESCRIBE {q.oracle}").fetchall()
+            except Exception as exc:  # pragma: no cover - surfaced below
+                out[name] = exc
+        return out
     finally:
         con.close()
 
 
-def test_oracle_decimal_columns_are_bounded():
+def test_no_oracle_column_widens_past_bigint(described):
+    bad = []
+    for name, desc in described.items():
+        if isinstance(desc, Exception):
+            bad.append((name, "<describe failed>", str(desc)[:120]))
+            continue
+        for col, typ, *_ in desc:
+            t = str(typ).upper()
+            if any(f in t for f in _FORBIDDEN):
+                bad.append((name, col, t))
+    assert not bad, (
+        "oracle columns widened past BIGINT (driver hash will diverge "
+        "from Spark even on equal values) — CAST(... AS BIGINT) them:\n"
+        + "\n".join(f"  {n}.{c}: {t}" for n, c, t in bad)
+    )
+
+
+def test_oracle_decimal_columns_are_bounded(described):
     """DECIMAL(p>18) serializes as arbitrary-precision too; oracles
     should CAST aggregate decimals down to BIGINT cents / DOUBLE."""
-    con = oracle_con(SF_SMOKE)
-    try:
-        wide = []
-        for name, sql in _oracled():
-            try:
-                desc = con.execute(f"DESCRIBE {sql}").fetchall()
-            except Exception:
-                continue  # covered by the test above
-            for col, typ, *_ in desc:
-                t = str(typ).upper()
-                if t.startswith("DECIMAL"):
-                    prec = int(t.split("(")[1].split(",")[0])
-                    if prec > 18:
-                        wide.append((name, col, t))
-        assert not wide, (
-            "oracle DECIMAL columns exceed 18 digits of precision:\n"
-            + "\n".join(f"  {n}.{c}: {t}" for n, c, t in wide)
-        )
-    finally:
-        con.close()
+    wide = []
+    for name, desc in described.items():
+        if isinstance(desc, Exception):
+            continue  # covered by the test above
+        for col, typ, *_ in desc:
+            t = str(typ).upper()
+            if t.startswith("DECIMAL"):
+                prec = int(t.split("(")[1].split(",")[0])
+                if prec > 18:
+                    wide.append((name, col, t))
+    assert not wide, (
+        "oracle DECIMAL columns exceed 18 digits of precision:\n"
+        + "\n".join(f"  {n}.{c}: {t}" for n, c, t in wide)
+    )
 
 
 if __name__ == "__main__":  # manual sweep: python tests/test_oracle_types.py

@@ -114,10 +114,13 @@ def test_triangle_count_matches_bruteforce(spark, sf_smoke):
 
     row = QUERIES["graph_triangles"].build(spark, sf_smoke).collect()[0]
     li = read_table(spark, sf_smoke, "lineitem").select("l_orderkey", "l_partkey")
+    # one collect: an inner comprehension iterable is re-evaluated per
+    # outer element, which would launch one Spark job per lineitem
+    items = {(r[0], r[1]) for r in li.collect()}
     pairs = {
         (a, b)
-        for (o1, a) in {(r[0], r[1]) for r in li.collect()}
-        for (o2, b) in {(r[0], r[1]) for r in li.collect()}
+        for (o1, a) in items
+        for (o2, b) in items
         if o1 == o2 and a < b
     }
     nodes = sorted({x for p in pairs for x in p})

@@ -3,7 +3,8 @@ round-13 verdict/advice must hold.
 
 * verdict item 6 — the expression-construction memo is BOUNDED: a
   driver cycling run-dates/datasets must not grow it without eviction,
-  and a gateway change sweeps the dead entries.
+  and a gateway change sweeps the dead entries; concurrent driver
+  threads never corrupt it.
 * verdict item 7 — staged-index name resolution refuses RULE drift: a
   width-rule change over unchanged data re-stages instead of silently
   resolving to the stale staged width.
@@ -17,6 +18,9 @@ round-13 verdict/advice must hold.
 """
 
 from __future__ import annotations
+
+import sys
+import threading
 
 import numpy as np
 import pytest
@@ -69,6 +73,35 @@ def test_exprcache_sweeps_dead_gateway_entries(spark):
     exprcache.cached(("round14-sweep", 2), lambda: "fresh")
     assert ("dead-gateway", "round14-sweep", 1) not in exprcache._CACHE
     exprcache._CACHE.clear()
+
+
+def test_exprcache_is_thread_safe(monkeypatch):
+    """Streaming foreachBatch threads share the memo: concurrent hits,
+    misses and evictions on a 2-entry cache must never raise (an
+    unlocked hit refresh races an eviction into a KeyError)."""
+    monkeypatch.setattr(exprcache, "_MAX_ENTRIES", 2)
+    errors: list[BaseException] = []
+
+    def worker(t: int) -> None:
+        try:
+            for i in range(3000):
+                key = ("exprcache-stress", (t + i) % 5)
+                exprcache.cached(key, lambda: object())
+        except BaseException as e:  # noqa: BLE001 - collected, asserted below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+    finally:
+        sys.setswitchinterval(old)
+        exprcache._CACHE.clear()
+    assert errors == []
 
 
 # ------------------------------------- spread decision vs split config

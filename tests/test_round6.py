@@ -428,41 +428,3 @@ def test_tree_rollup_root_covers_all_parts(spark):
         )
         self_size = 1 if node in keys else 0
         assert r["subtree_size"] == child_sizes + self_size, node
-
-
-def test_dump_datasource_requires_schema_and_table(spark):
-    """The gcddump DataSource must refuse self-describing reads and
-    missing table options loudly."""
-    import pytest as _pytest
-
-    from gcd_etl_spark.sources.dump_datasource import GcdDumpDataSource, GcdDumpReader
-    from pyspark.sql import types as T
-
-    with _pytest.raises(ValueError, match="no self-describing schema"):
-        GcdDumpDataSource({}).schema()
-    with _pytest.raises(ValueError, match="option"):
-        GcdDumpReader(T.StructType([]), {"path": "/tmp/x"})
-
-
-def test_dump_datasource_try_cast_tolerance(tmp_path, spark):
-    """Unparseable numerics become typed nulls, and short tuples
-    null-pad — the staging path's row-tolerance contract (P6)."""
-    from gcd_etl_spark.sources.dump_datasource import GcdDumpDataSource
-
-    p = tmp_path / "t.sql"
-    p.write_text(
-        "INSERT INTO `t` VALUES (1,'ok',2.5),(NULL,'x','oops'),(3,'short');\n"
-    )
-    try:
-        spark.dataSource.register(GcdDumpDataSource)
-    except Exception:
-        pass
-    df = (
-        spark.read.format("gcddump")
-        .schema("a long, b string, c double")
-        .option("table", "t")
-        .option("path", str(p))
-        .load()
-    )
-    rows = sorted([tuple(r) for r in df.collect()], key=lambda r: (r[0] is None, r[0]))
-    assert rows == [(1, "ok", 2.5), (3, "short", None), (None, "x", None)]
