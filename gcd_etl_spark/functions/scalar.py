@@ -1,16 +1,16 @@
-"""Scalar column-expression library — the reference's per-row helpers
-as pure Catalyst expressions (SURVEY.md §2.8, F1-F13).
+"""Scalar expression library — the reference's per-row helpers as
+pure Catalyst expressions (SURVEY.md §2.8, F1-F13).
 
-Every function here returns a ``Column`` built from
-``pyspark.sql.functions`` only: JVM-side, whole-stage-codegen'd, no
-Python in the hot path. Reference citations give the exact semantics
-each preserves.
+Every helper takes Spark SQL expression TEXT (a column name is the
+simplest expression) and returns expression text: JVM-side,
+whole-stage-codegen'd, no Python in the hot path. A projection built
+from them reaches the JVM as SQL text in one ``selectExpr`` call (or
+one ``F.expr`` per Column), instead of about ten py4j round trips per
+``pyspark.sql.functions`` call. Reference citations give the exact
+semantics each preserves.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 #: Split pattern for multi-valued fields (reference Main.java:539:
 #: ``value.split("\\s*;\\s*")``).
@@ -21,11 +21,28 @@ MULTI_VALUE_PATTERN = r"\s*;\s*"
 INT_SENTINEL = -1
 
 
-def multi_split(col: Column | str) -> Column:
+def sql_str(s: str) -> str:
+    """Spark SQL string literal that reads back as exactly ``s``.
+
+    The Spark SQL lexer takes any character inside quotes; only the
+    backslash (escape lead) and the quote itself need escaping. The
+    mysqldump writer's ``sources.dump.sql_literal`` is a different
+    dialect: its ``\\0`` for NUL reads back in Spark as an octal
+    escape when two octal digits follow (``'\\x0012'`` becomes a
+    newline) — tests/test_properties.py pins both facts.
+    """
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _int_or_null(sentinel: int | None) -> str:
+    return f"CAST({'NULL' if sentinel is None else int(sentinel)} AS INT)"
+
+
+def multi_split(expr: str) -> str:
     """F2 — semicolon-delimited string -> array<string>.
 
-    Java ``split`` drops trailing empty strings; Spark ``F.split``
-    keeps them, so we trim the trailing run explicitly. Null input
+    Java ``split`` drops trailing empty strings; Spark ``split`` keeps
+    them, so we trim the trailing run explicitly. Null input
     propagates to a null array (reference Main.java:535-547: null ->
     consumer never called).
 
@@ -38,7 +55,6 @@ def multi_split(col: Column | str) -> Column:
     model — any Python-side model of this function must spell the
     ASCII class out (tests/test_properties.py).
     """
-    c = F.col(col) if isinstance(col, str) else col
     # ONE regex pass (the split), then drop Java's trailing empties on
     # the ARRAY side: a per-element index transform + array_max finds
     # the last non-empty slot, slice keeps [1 .. last+1]. The elements
@@ -51,16 +67,13 @@ def multi_split(col: Column | str) -> Column:
     # tail trims), all-separator input (";", " ; ") has no non-empty
     # slot -> last_idx -1 -> slice length 0 -> []; "\r" has no
     # separator at all -> single non-empty element kept.
-    arr = F.split(c, MULTI_VALUE_PATTERN)
-    last_idx = F.array_max(
-        F.transform(arr, lambda x, i: F.when(x != "", i).otherwise(-1))
-    )
-    trimmed = F.slice(arr, 1, last_idx + 1)
+    arr = f"split({expr}, {sql_str(MULTI_VALUE_PATTERN)})"
+    last_idx = f"array_max(transform({arr}, (x, i) -> CASE WHEN x != '' THEN i ELSE -1 END))"
     # Java `"".split(p)` returns [""], not [] — preserve that corner.
-    return F.when(c == "", F.array(F.lit(""))).otherwise(trimmed)
+    return f"CASE WHEN ({expr}) = '' THEN array('') ELSE slice({arr}, 1, {last_idx} + 1) END"
 
 
-def date_str_to_int(col: Column | str, sentinel: int | None = INT_SENTINEL) -> Column:
+def date_str_to_int(expr: str, sentinel: int | None = INT_SENTINEL) -> str:
     """F3 — ``YYYY-MM-DD``-shaped string -> yyyymmdd int.
 
     Full-string regex match ``(\\d{4})-(\\d\\d)-(\\d\\d)`` (reference
@@ -70,67 +83,59 @@ def date_str_to_int(col: Column | str, sentinel: int | None = INT_SENTINEL) -> C
     Non-match / null -> ``sentinel`` (-1 on the index path, None for
     nullable parquet semantics).
     """
-    c = F.col(col) if isinstance(col, str) else col
     # \A...\z, not ^...$: Java-regex $ matches BEFORE a final line
     # terminator, so "1987-03-01\n" would wrongly parse; the
     # reference's Matcher.matches() is whole-input. Same bug class as
     # multi_split's trailing-separator trim above.
-    matched = c.rlike(r"\A\d{4}-\d{2}-\d{2}\z")
-    as_int = F.regexp_replace(F.substring(c, 1, 10), "-", "").cast("int")
-    fallback = F.lit(sentinel).cast("int") if sentinel is not None else F.lit(None).cast("int")
-    return F.when(matched, as_int).otherwise(fallback)
+    pattern = sql_str(r"\A\d{4}-\d{2}-\d{2}\z")
+    as_int = f"CAST(regexp_replace(substring({expr}, 1, 10), '-', '') AS INT)"
+    return f"CASE WHEN ({expr}) RLIKE {pattern} THEN {as_int} ELSE {_int_or_null(sentinel)} END"
 
 
-def epoch_to_date_int(col: Column | str, sentinel: int | None = INT_SENTINEL) -> Column:
+def epoch_to_date_int(expr: str, sentinel: int | None = INT_SENTINEL) -> str:
     """F4 — epoch seconds -> comparable yyyymmdd int (UTC).
 
     Reference Main.java:48,637-650: epoch > 0 formats with
     ``SimpleDateFormat("yMMdd")`` in JVM-default TZ; we pin UTC
     (session TZ) and document the delta. <=0 / null -> sentinel.
     """
-    c = F.col(col) if isinstance(col, str) else col
     # Integer date math instead of date_format: no per-row string
     # round-trip (the flagship stamps 14 of these per output row).
-    ts = F.timestamp_seconds(c)
-    formatted = (F.year(ts) * 10000 + F.month(ts) * 100 + F.dayofmonth(ts)).cast("int")
-    fallback = F.lit(sentinel).cast("int") if sentinel is not None else F.lit(None).cast("int")
-    return F.when(c > 0, formatted).otherwise(fallback)
+    ts = f"timestamp_seconds({expr})"
+    formatted = f"CAST(year({ts}) * 10000 + month({ts}) * 100 + dayofmonth({ts}) AS INT)"
+    return f"CASE WHEN ({expr}) > 0 THEN {formatted} ELSE {_int_or_null(sentinel)} END"
 
 
-def try_int(col: Column | str) -> Column:
+def try_int(expr: str) -> str:
     """F7 — try-parse string -> int, null on failure.
 
     Reference Main.java:253-258: ``Integer.parseInt`` with the
     NumberFormatException swallowed. ``try_cast`` gives identical
     parse-or-null semantics without ANSI exceptions.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("int")
+    return f"try_cast({expr} AS INT)"
 
 
-def int_to_bool(col: Column | str) -> Column:
+def int_to_bool(expr: str) -> str:
     """F8 — ``value == 1`` int flag -> boolean (null-propagating).
 
     Reference Main.java:410,420,423-424,434,450 (parquet path only;
     the index path keeps raw ints — callers choose).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return c == 1
+    return f"({expr}) = 1"
 
 
-def int_with_default(col: Column | str, default: int = INT_SENTINEL) -> Column:
+def int_with_default(expr: str, default: int = INT_SENTINEL) -> str:
     """P5 — missing int -> sentinel fill (reference Main.java:589-601)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c.cast("int"), F.lit(default))
+    return f"coalesce(CAST({expr} AS INT), {int(default)})"
 
 
-def string_with_default(col: Column | str, default: str = "") -> Column:
+def string_with_default(expr: str, default: str = "") -> str:
     """P4 — Avro ``default:""`` strings (reference issue_data.avsc:8,11)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(default))
+    return f"coalesce({expr}, {sql_str(default)})"
 
 
-def dict_decode(col: Column | str, mapping: dict[int, str]) -> Column:
+def dict_decode(expr: str, mapping: dict[int, str | None]) -> str:
     """F9/J9 — tiny-dictionary decode as a literal map expression.
 
     Reference GcdMetadata loaded 4 dimension tables into RAM maps and
@@ -139,23 +144,20 @@ def dict_decode(col: Column | str, mapping: dict[int, str]) -> Column:
     fit in a literal (<~1000 entries) an inline ``map`` keeps the
     decode inside codegen; bigger dims should use ``broadcast_decode``.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    pairs: list[Column] = []
-    for k, v in mapping.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    if not pairs:
-        return F.lit(None).cast("string")
-    return F.element_at(F.create_map(*pairs), c)
+    if not mapping:
+        return "CAST(NULL AS STRING)"
+    pairs = ", ".join(
+        f"{int(k)}, {'NULL' if v is None else sql_str(v)}" for k, v in mapping.items()
+    )
+    return f"element_at(map({pairs}), {expr})"
 
 
-def date_int_from_date(col: Column | str, sentinel: int | None = None) -> Column:
+def date_int_from_date(expr: str, sentinel: int | None = None) -> str:
     """yyyymmdd int from a date/timestamp column (engine extension:
     same output domain as F3/F4 but for properly-typed inputs)."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.date_format(c, "yyyyMMdd").cast("int")
+    out = f"CAST(date_format({expr}, 'yyyyMMdd') AS INT)"
     if sentinel is not None:
-        out = F.coalesce(out, F.lit(sentinel))
+        out = f"coalesce({out}, {int(sentinel)})"
     return out
 
 

@@ -5,12 +5,18 @@ tokenization, token counts, quality heuristics, language ID, and
 document fingerprints run JVM-side at 100 TB. The reference has no
 text surface beyond semicolon splits (reference Main.java:535-547);
 these are the north-star extensions (BASELINE.json).
+
+``ws_tokens`` and ``shingles`` take and return Spark SQL expression
+text (one JVM call per projection, see functions/scalar.py); the rest
+take a column name and return a Column.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from gcd_etl_spark.functions.scalar import sql_str
 
 #: Whitespace tokenizer pattern.
 WS_PATTERN = r"\s+"
@@ -31,15 +37,14 @@ STOPWORDS = {
 }
 
 
-def ws_tokens(col: Column | str) -> Column:
+def ws_tokens(expr: str) -> str:
     """Whitespace tokens, empty-safe (no empty-string tokens)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.trim(c), WS_PATTERN), lambda t: t != "")
+    return f"filter(split(trim({expr}), {sql_str(WS_PATTERN)}), t -> t != '')"
 
 
-def token_count(col: Column | str) -> Column:
+def token_count(col: str) -> Column:
     """Whitespace token count."""
-    return F.size(ws_tokens(col))
+    return F.size(F.expr(ws_tokens(col)))
 
 
 def bpe_ish_token_count(col: Column | str) -> Column:
@@ -60,48 +65,48 @@ def punct_ratio(col: Column | str) -> Column:
     return F.when(F.length(c) > 0, punct / F.length(c)).otherwise(F.lit(None))
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
+def stopword_ratio(col: str, lang: str = "en") -> Column:
     """Fraction of whitespace tokens that are (lowercased) stopwords."""
-    toks = ws_tokens(col)
+    toks = F.expr(ws_tokens(col))
     stops = F.array(*[F.lit(s) for s in STOPWORDS[lang]])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stops, F.lower(t))))
     return F.when(F.size(toks) > 0, n_stop / F.size(toks)).otherwise(F.lit(None))
 
 
-def mean_word_length(col: Column | str) -> Column:
-    toks = ws_tokens(col)
+def mean_word_length(col: str) -> Column:
+    toks = F.expr(ws_tokens(col))
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
     return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(None))
 
 
-def quality_score(col: Column | str) -> Column:
+def quality_score(col: str) -> Column:
     """Composite [0,1] quality heuristic.
 
     Blend of length band, punctuation sanity, stopword presence, and
     mean-word-length band — the standard cheap pre-filter shape for
     LLM corpus curation (C4/Gopher-style rules), all codegen'd.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col(col)
     n = F.length(c)
     len_ok = F.when((n >= 50) & (n <= 20000), F.lit(1.0)).otherwise(
         F.when(n > 0, F.lit(0.3)).otherwise(F.lit(0.0))
     )
     pr = F.coalesce(punct_ratio(c), F.lit(1.0))
     punct_ok = F.when(pr <= 0.2, F.lit(1.0)).otherwise(F.greatest(F.lit(0.0), 1.0 - (pr - 0.2) * 2.5))
-    sr = F.coalesce(stopword_ratio(c), F.lit(0.0))
+    sr = F.coalesce(stopword_ratio(col), F.lit(0.0))
     stop_ok = F.when(sr >= 0.05, F.lit(1.0)).otherwise(sr / 0.05)
-    mwl = F.coalesce(mean_word_length(c), F.lit(0.0))
+    mwl = F.coalesce(mean_word_length(col), F.lit(0.0))
     mwl_ok = F.when((mwl >= 3.0) & (mwl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.4))
     return F.round((len_ok + punct_ok + stop_ok + mwl_ok) / 4.0, 4)
 
 
-def lang_id(col: Column | str, langs: tuple[str, ...] = ("en", "es", "fr", "de")) -> Column:
+def lang_id(col: str, langs: tuple[str, ...] = ("en", "es", "fr", "de")) -> Column:
     """Stopword-vote language guess; 'und' when no language scores.
 
     Deterministic tie-break: higher score wins, then earlier position
     in ``langs``.
     """
-    toks_lower = F.transform(ws_tokens(col), lambda t: F.lower(t))
+    toks_lower = F.transform(F.expr(ws_tokens(col)), lambda t: F.lower(t))
     best_lang = F.lit("und")
     best_score = F.lit(0)
     # Iterate in reverse so earlier langs win ties via strict >.
@@ -127,16 +132,19 @@ def fingerprint64(col: Column | str) -> Column:
     return F.xxhash64(normalized)
 
 
-def shingles(col: Column | str, k: int = 3) -> Column:
+def shingles(expr: str, k: int = 3) -> str:
     """Word k-shingles (n-grams joined by space), distinct.
 
     Building block for MinHash / Jaccard dedup. Pure expression:
     transform-over-index + slice + array_join + array_distinct.
     """
-    toks = ws_tokens(col)
-    n = F.size(toks)
-    # sequence(1, m) is DESCENDING when m < 1 — guard short docs.
-    idx = F.sequence(F.lit(1), n - (k - 1))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
-    empty = F.array().cast("array<string>")
-    return F.when(n >= k, F.array_distinct(grams)).otherwise(empty)
+    toks = ws_tokens(expr)
+    n = f"size({toks})"
+    # sequence(1, m) is DESCENDING when m < 1 — guard short docs. The
+    # lambda body embeds ``expr``, so its variable gets a name no
+    # caller's column is likely to carry.
+    grams = (
+        f"transform(sequence(1, {n} - {k - 1}), "
+        f"shingle_start -> array_join(slice({toks}, shingle_start, {k}), ' '))"
+    )
+    return f"CASE WHEN {n} >= {k} THEN array_distinct({grams}) ELSE CAST(array() AS ARRAY<STRING>) END"

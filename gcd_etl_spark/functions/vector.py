@@ -39,39 +39,27 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.when(denom > 0, d / denom).otherwise(F.lit(None))
 
 
-def _memo_fixed(key: tuple, builder, *operands):
-    """Memoize an unrolled fixed-dim expression tree when every
-    operand is a plain column NAME (hashable, name-bound — the form
-    every hot caller uses; a Column operand just builds directly).
-    Round 13: each 64-term unroll is ~300 py4j round trips, ~0.5-1.5 s
-    per DataFrame build, rebuilt on every bench rep. Expressions only
-    — see functions/exprcache.py."""
-    from gcd_etl_spark.functions.exprcache import cached
-
-    if all(isinstance(o, str) for o in operands):
-        return cached(key, builder)
-    return builder()
+def _dot_fixed_sql(a: str, b: str, dim: int) -> str:
+    terms = "".join(
+        f" + CAST(element_at({a}, {i}) AS DOUBLE) * CAST(element_at({b}, {i}) AS DOUBLE)"
+        for i in range(1, dim + 1)
+    )
+    return f"0.0D{terms}"
 
 
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
+def dot_fixed(a: str, b: str, dim: int) -> Column:
     """Dot product for a KNOWN dimension, unrolled to flat codegen'd
     arithmetic (no higher-order functions — Spark evaluates
     ``aggregate``/``zip_with`` lambdas interpreted, per element; the
     unrolled form is ~20x faster in pairwise joins). Left-to-right
-    addition order matches ``dot``'s sequential fold bit-for-bit."""
-    def build():
-        ca = F.col(a) if isinstance(a, str) else a
-        cb = F.col(b) if isinstance(b, str) else b
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + F.element_at(ca, i).cast("double") * F.element_at(cb, i).cast("double")
-        return acc
-
-    return _memo_fixed(("dot_fixed", a, b, dim), build, a, b)
+    addition order matches ``dot``'s sequential fold bit-for-bit.
+    Like every fixed-dim unroll here it reaches the JVM as ONE
+    ``F.expr`` of SQL text (``a``/``b`` are column names)."""
+    return F.expr(_dot_fixed_sql(a, b, dim))
 
 
-def _balanced_sum(terms: list[Column]) -> Column:
-    """Pairwise-balanced sum of integer Columns: depth log2(n) instead
+def _balanced_sum(terms: list[str]) -> str:
+    """Pairwise-balanced sum of integer SQL terms: depth log2(n) instead
     of the left-deep n-deep Add chain. Integer addition is associative
     so the VALUE is bit-identical to the sequential sum — only the
     expression tree shape changes. The shape matters: a 64-deep
@@ -82,17 +70,16 @@ def _balanced_sum(terms: list[Column]) -> Column:
     degrading the fused stage to interpreted evaluation — the exact
     round-6 failure class the bench fallback detector exists for."""
     if not terms:  # dim=0: keep the old accumulator contract (0L)
-        return F.lit(0).cast("long")
+        return "CAST(0 AS BIGINT)"
     while len(terms) > 1:
-        nxt = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
+        terms = [
+            f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
             for i in range(0, len(terms), 2)
         ]
-        terms = nxt
     return terms[0]
 
 
-def dot_fixed_long(a: Column | str, b: Column | str, dim: int) -> Column:
+def dot_fixed_long(a: str, b: str, dim: int) -> Column:
     """EXACT integer dot product for a KNOWN dimension, unrolled to
     flat codegen'd long arithmetic — for micro-scaled integer vectors
     whose oracles restate the same BIGINT sum (``dot_fixed`` would be
@@ -101,14 +88,11 @@ def dot_fixed_long(a: Column | str, b: Column | str, dim: int) -> Column:
     oracle's and free of float casts). Terms combine as a BALANCED
     tree (see _balanced_sum) so whole-stage codegen survives the
     64-term unroll."""
-    def build():
-        ca = F.col(a) if isinstance(a, str) else a
-        cb = F.col(b) if isinstance(b, str) else b
-        return _balanced_sum(
-            [F.element_at(ca, i) * F.element_at(cb, i) for i in range(1, dim + 1)]
+    return F.expr(
+        _balanced_sum(
+            [f"element_at({a}, {i}) * element_at({b}, {i})" for i in range(1, dim + 1)]
         )
-
-    return _memo_fixed(("dot_fixed_long", a, b, dim), build, a, b)
+    )
 
 
 def dot_hof_long(a: Column | str, b: Column | str) -> Column:
@@ -138,43 +122,29 @@ def dot_hof_long(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def dist2_fixed_long(a: Column | str, b: Column | str, dim: int) -> Column:
+def dist2_fixed_long(a: str, b: str, dim: int) -> Column:
     """EXACT integer squared L2 distance for a KNOWN dimension,
     unrolled with the balanced-tree combine (see ``dot_fixed_long``)."""
-    def build():
-        ca = F.col(a) if isinstance(a, str) else a
-        cb = F.col(b) if isinstance(b, str) else b
-
-        def term(i: int) -> Column:
-            d = F.element_at(ca, i) - F.element_at(cb, i)
-            return d * d
-
-        return _balanced_sum([term(i) for i in range(1, dim + 1)])
-
-    return _memo_fixed(("dist2_fixed_long", a, b, dim), build, a, b)
+    return F.expr(
+        _balanced_sum(
+            [
+                f"(element_at({a}, {i}) - element_at({b}, {i}))"
+                f" * (element_at({a}, {i}) - element_at({b}, {i}))"
+                for i in range(1, dim + 1)
+            ]
+        )
+    )
 
 
-def norm_fixed(a: Column | str, dim: int) -> Column:
+def norm_fixed(a: str, dim: int) -> Column:
     """L2 norm for a KNOWN dimension (unrolled; see ``dot_fixed``)."""
-    def build():
-        ca = F.col(a) if isinstance(a, str) else a
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            x = F.element_at(ca, i).cast("double")
-            acc = acc + x * x
-        return F.sqrt(acc)
-
-    return _memo_fixed(("norm_fixed", a, dim), build, a)
+    return F.expr(f"sqrt({_dot_fixed_sql(a, a, dim)})")
 
 
-def cosine_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
+def cosine_fixed(a: str, b: str, dim: int) -> Column:
     """Cosine for a KNOWN dimension (unrolled; see ``dot_fixed``)."""
-    def build():
-        d = dot_fixed(a, b, dim)
-        denom = norm_fixed(a, dim) * norm_fixed(b, dim)
-        return F.when(denom > 0, d / denom).otherwise(F.lit(None))
-
-    return _memo_fixed(("cosine_fixed", a, b, dim), build, a, b)
+    denom = f"sqrt({_dot_fixed_sql(a, a, dim)}) * sqrt({_dot_fixed_sql(b, b, dim)})"
+    return F.expr(f"CASE WHEN {denom} > 0 THEN ({_dot_fixed_sql(a, b, dim)}) / ({denom}) END")
 
 
 def random_hyperplane_signs(a: Column | str, planes: list[list[float]]) -> Column:

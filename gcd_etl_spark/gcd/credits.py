@@ -77,18 +77,14 @@ def aggregate_story_credits(
     """
     joined = (
         story_credit.alias("c")
-        .join(
-            F.broadcast(creator_name_detail.alias("n")),
-            F.col("c.creator_id") == F.col("n.id"),
-            "inner",
-        )
-        .join(F.broadcast(creator.alias("cr")), F.col("n.creator_id") == F.col("cr.id"), "inner")
-        .select(
-            F.col("c.story_id").alias("story_id"),
-            F.col("c.credit_type_id").alias("credit_type_id"),
-            F.col("c.id").alias("credit_row_id"),
-            F.col("cr.gcd_official_name").alias("creator_name"),
-            F.col("cr.id").alias("creator_id"),
+        .join(F.broadcast(creator_name_detail.alias("n")), F.expr("c.creator_id = n.id"), "inner")
+        .join(F.broadcast(creator.alias("cr")), F.expr("n.creator_id = cr.id"), "inner")
+        .selectExpr(
+            "c.story_id AS story_id",
+            "c.credit_type_id AS credit_type_id",
+            "c.id AS credit_row_id",
+            "cr.gcd_official_name AS creator_name",
+            "cr.id AS creator_id",
         )
     )
     # ONE collect_list of (rid, type, name, id) per story — no explode
@@ -103,59 +99,28 @@ def aggregate_story_credits(
     # same way the oracle's ORDER BY rid, nm, cid does — tid goes
     # LAST so it never outranks the name tie-break (credit_row_id is
     # only unique per source row, not per (row, type)).
-    # All three expression groups below are pure name-bound trees
-    # (constants from CREDIT_TYPE_EXPANSION only) — memoized per
-    # gateway (round 13, functions/exprcache): ~0.45 s of py4j HOF
-    # construction per flagship build otherwise.
-    from gcd_etl_spark.functions.exprcache import cached
-
-    agg_col = cached(
-        ("credit_structs_agg",),
-        lambda: F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("credit_row_id").alias("rid"),
-                    F.col("creator_name").alias("name"),
-                    F.col("creator_id").alias("cid"),
-                    F.col("credit_type_id").alias("tid"),
-                )
-            )
-        ).alias("_structs"),
+    # The three expression groups below reach the JVM as SQL text, one
+    # call per group (built Column by Column they cost ~0.45 s of py4j
+    # higher-order-function construction per flagship build).
+    agg = joined.groupBy("story_id").agg(
+        F.expr(
+            "array_sort(collect_list(struct(credit_row_id AS rid, creator_name AS name,"
+            " creator_id AS cid, credit_type_id AS tid))) AS _structs"
+        )
     )
-    agg = joined.groupBy("story_id").agg(agg_col)
-
-    def _filter_cols() -> list:
-        # field -> credit_type_ids whose expansion contains it (data
-        # from the same CREDIT_TYPE_EXPANSION table the explode used)
-        field_tids = {
-            field: sorted(
-                tid for tid, fields in CREDIT_TYPE_EXPANSION.items() if field in fields
-            )
-            for field in ATOMIC_FIELDS
-        }
-
-        # two-step select so each field's filter runs once, not once
-        # per unzip (higher-order exprs are not CSE'd by Catalyst).
-        # NB: the lambda must take exactly one positional arg (PySpark
-        # introspects the signature), hence the closure factory.
-        def _tid_match(tids: list[int]):
-            return lambda x: x["tid"].isin(*tids)
-
-        return [
-            F.filter(F.col("_structs"), _tid_match(field_tids[f])).alias(f"_f_{f}")
-            for f in ATOMIC_FIELDS
-        ]
-
-    filtered = agg.select("story_id", *cached(("credit_filters",), _filter_cols))
-
-    def _out_cols() -> list:
-        out = [F.col("story_id")]
-        for field in ATOMIC_FIELDS:
-            s = F.col(f"_f_{field}")
-            out.append(F.transform(s, lambda x: x["name"]).alias(f"credit_{field}"))
-            out.append(
-                F.transform(s, lambda x: x["cid"]).alias(f"credit_{field}_creator_id")
-            )
-        return out
-
-    return filtered.select(*cached(("credit_out_cols",), _out_cols))
+    # field -> credit_type_ids whose expansion contains it (data from
+    # the same CREDIT_TYPE_EXPANSION table the explode used). Two-step
+    # select so each field's filter runs once, not once per unzip
+    # (higher-order exprs are not CSE'd by Catalyst).
+    filters = []
+    for field in ATOMIC_FIELDS:
+        tids = ", ".join(
+            str(tid) for tid, fields in sorted(CREDIT_TYPE_EXPANSION.items()) if field in fields
+        )
+        filters.append(f"filter(_structs, x -> x.tid IN ({tids})) AS _f_{field}")
+    filtered = agg.selectExpr("story_id", *filters)
+    out = ["story_id"]
+    for field in ATOMIC_FIELDS:
+        out.append(f"transform(_f_{field}, x -> x.name) AS credit_{field}")
+        out.append(f"transform(_f_{field}, x -> x.cid) AS credit_{field}_creator_id")
+    return filtered.selectExpr(*out)

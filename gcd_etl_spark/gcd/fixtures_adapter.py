@@ -213,37 +213,16 @@ def derivation_sql(d: _Dialect, src: dict[str, str]) -> dict[str, str]:
 
 def gcd_tables_from_fixtures(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Spark side: each derivation as one spark.sql over the fixture
-    parquet (read directly — no temp-view global state).
-
-    The 13 frames are memoized per (session, sf_dir) — round 13: each
-    ``spark.sql`` is ~0.1 s of parse+analysis, ~1.25 s per flagship
-    BUILD, re-paid on every bench rep. The cached values are pure
-    PLAN definitions over the immutable fixture parquet under
-    ``sf_dir`` (never rewritten within a process); no data or results
-    are cached — every execution re-reads the parquet. Keyed on the
-    live SparkSession's JVM object so a stopped/recreated session can
-    never be served frames bound to a dead one.
-
-    Returns a fresh SHALLOW COPY per call: callers REPLACE entries in
-    the returned dict (gcd_snapshot_from_dump swaps in dump-parsed
-    frames, the bucketed variant swaps in staged tables), and a
-    shared mutable dict would leak those swaps into every later
-    flagship build — exactly the cross-query plan contamination the
-    plan-fingerprint gate caught on this memo's first full-suite run.
-    The DataFrames themselves are immutable plans."""
-    from gcd_etl_spark.functions.exprcache import cached
-
-    def build():
-        src = {
-            t: f"parquet.`{sf_dir}/{t}.parquet`"
-            for t in ("region", "nation", "customer", "supplier", "orders", "lineitem")
-        }
-        sqls = derivation_sql(SPARK, src)
-        return {name: spark.sql(sqls[name]) for name in GCD_INPUT_TABLES}
-
-    return dict(
-        cached(("gcd_fixture_frames", id(spark._jsparkSession), sf_dir), build)
-    )
+    parquet (read directly — no temp-view global state). Each call
+    builds fresh frames, so a caller may replace entries in the
+    returned dict (gcd_snapshot_from_dump swaps in dump-parsed frames,
+    the bucketed variant swaps in staged tables)."""
+    src = {
+        t: f"parquet.`{sf_dir}/{t}.parquet`"
+        for t in ("region", "nation", "customer", "supplier", "orders", "lineitem")
+    }
+    sqls = derivation_sql(SPARK, src)
+    return {name: spark.sql(sqls[name]) for name in GCD_INPUT_TABLES}
 
 
 def gcd_fixture_ctes() -> str:

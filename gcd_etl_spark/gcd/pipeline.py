@@ -8,7 +8,7 @@ DataFrame plan:
 
     issue ⋈ series ⋈ publisher ⟕ indicia ⟕ brand ⟕ story
           ⟕ credits_agg(story_id)           [no RAM ceiling]
-    -> 89-column select of pure Column expressions
+    -> 89-column select of SQL expressions (one selectExpr call)
     -> partitionBy(snapshot) parquet sink
 
 Semantics preserved bit-for-bit, including the reference's quirky
@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcd_etl_spark.functions import scalar
@@ -45,30 +45,30 @@ def run_epoch_seconds(run_date: str) -> int:
     return int(_dt.datetime(y, m, d, tzinfo=tz).timestamp())
 
 
-def _jdbc_int(col: Column) -> Column:
+def _jdbc_int(expr: str) -> str:
     """``ResultSet.getInt``: SQL NULL -> 0 (reference Main.java:602-607,
     no wasNull check)."""
-    return F.coalesce(col.cast("int"), F.lit(0))
+    return f"coalesce(CAST({expr} AS INT), 0)"
 
 
-def _jdbc_long(col: Column) -> Column:
+def _jdbc_long(expr: str) -> str:
     """``ResultSet.getLong``: SQL NULL -> 0 (reference Main.java:611-616)."""
-    return F.coalesce(col.cast("long"), F.lit(0).cast("long"))
+    return f"coalesce(CAST({expr} AS BIGINT), CAST(0 AS BIGINT))"
 
 
-def _jdbc_bool(col: Column) -> Column:
+def _jdbc_bool(expr: str) -> str:
     """``getInt(...) == 1`` with NULL -> 0 -> false (reference
     Main.java:410 etc.)."""
-    return _jdbc_int(col) == 1
+    return f"{_jdbc_int(expr)} = 1"
 
 
-def _epoch_date(col: Column) -> Column:
+def _epoch_date(expr: str) -> str:
     """Timestamp column -> epoch secs -> yyyymmdd int, -1 on null/<=0
     (F1 + F4: UNIX_TIMESTAMP in the query, Main.java:637-650 helper).
     Integer date math — no per-row string formatting (14 of these
     stamp every output row)."""
-    formatted = (F.year(col) * 10000 + F.month(col) * 100 + F.dayofmonth(col)).cast("int")
-    return F.when(F.unix_timestamp(col) > 0, formatted).otherwise(F.lit(-1))
+    formatted = f"CAST(year({expr}) * 10000 + month({expr}) * 100 + dayofmonth({expr}) AS INT)"
+    return f"CASE WHEN unix_timestamp({expr}) > 0 THEN {formatted} ELSE -1 END"
 
 
 #: Dictionary-dimension tables and their (key, value) columns
@@ -90,7 +90,11 @@ def collect_dict_maps(
     All four dimensions ride ONE tagged-union collect job (round 13:
     four separate collect jobs per build, each a scheduler round trip,
     for tables of a few dozen rows — guide §1.2); the per-table maps
-    are split back out driver-side, values unchanged."""
+    are split back out driver-side, values unchanged. A row whose key
+    is NULL (a malformed dump id try-casts to NULL) is skipped: the
+    reference's ``d.id = ...`` probe never matches NULL, and the
+    decode probes a NULL-coalesced key that a NULL entry could never
+    serve either."""
     out: dict[str, dict[int, str]] = {}
     parts: list[DataFrame] = []
     for name, (key_col, val_col) in _DICT_TABLES.items():
@@ -99,10 +103,10 @@ def collect_dict_maps(
             continue
         out[name] = {}
         parts.append(
-            tables[name].select(
-                F.lit(name).alias("_t"),
-                F.col(key_col).cast("long").alias("_k"),
-                F.col(val_col).cast("string").alias("_v"),
+            tables[name].selectExpr(
+                f"{scalar.sql_str(name)} AS _t",
+                f"CAST({key_col} AS BIGINT) AS _k",
+                f"CAST({val_col} AS STRING) AS _v",
             )
         )
     if parts:
@@ -110,7 +114,8 @@ def collect_dict_maps(
         for p in parts[1:]:
             union = union.unionByName(p)
         for r in union.collect():
-            out[r["_t"]][int(r["_k"])] = r["_v"]
+            if r["_k"] is not None:
+                out[r["_t"]][int(r["_k"])] = r["_v"]
     return out
 
 
@@ -159,45 +164,23 @@ def build_snapshot(
     # the removed exchange is the full denormalized width.
     story_side = story
     if credits is not None:
-        story_side = story.join(
-            credits, F.col("story.id") == F.col("credit.story_id"), "left"
-        )
+        story_side = story.join(credits, F.expr("story.id = credit.story_id"), "left")
 
+    # Join conditions go over as SQL text too (one call each).
     joined = (
-        issue.join(series, F.col("issue.series_id") == F.col("series.id"), "inner")
-        .join(F.broadcast(publisher), F.col("series.publisher_id") == F.col("publisher.id"), "inner")
-        .join(
-            F.broadcast(indicia),
-            F.col("issue.indicia_publisher_id") == F.col("indicia.id"),
-            "left",
-        )
-        .join(F.broadcast(brand), F.col("issue.brand_id") == F.col("brand.id"), "left")
-        .join(story_side, F.col("story.issue_id") == F.col("issue.id"), "left")
+        issue.join(series, F.expr("issue.series_id = series.id"), "inner")
+        .join(F.broadcast(publisher), F.expr("series.publisher_id = publisher.id"), "inner")
+        .join(F.broadcast(indicia), F.expr("issue.indicia_publisher_id = indicia.id"), "left")
+        .join(F.broadcast(brand), F.expr("issue.brand_id = brand.id"), "left")
+        .join(story_side, F.expr("story.issue_id = issue.id"), "left")
     )
 
-    # The 89-column projection below is a PURE expression-tree build —
-    # every reference is name-bound ("issue.", "credit.", ...) and the
-    # only non-constant inputs are run_date, the schema flags, and the
-    # four decode maps. Memoize it (round 13, functions/exprcache):
-    # constructing it is ~2 s of py4j round trips per build, paid on
-    # every bench rep. The decode-map CONTENTS are folded into the key,
-    # so the collects above still run per build and a changed
-    # dictionary can only ever produce its own expression — the cache
-    # replays construction, never data.
-    from gcd_etl_spark.functions.exprcache import cached
-
-    dicts_fp = tuple(
-        (name, tuple(sorted(dicts[name].items()))) for name in sorted(dicts)
-    )
-
-    def _build_cols() -> list[Column]:
-        return _snapshot_cols(unix_time, flags, dicts, credits is not None)
-
-    cols = cached(
-        ("gcd_snapshot_cols", unix_time, flags, dicts_fp), _build_cols
-    )
-
-    out = joined.select(*cols)
+    # The 89-column projection goes to the JVM as SQL text in ONE
+    # selectExpr call. Built Column by Column, this function cost
+    # ~10,500 py4j commands per call; tests/test_build_budget.py pins
+    # the SQL-text build's budget.
+    cols = _snapshot_cols(unix_time, flags, dicts, credits is not None)
+    out = joined.selectExpr(*cols)
     assert [f.name for f in out.schema.fields] == [f.name for f in GCD_SNAPSHOT_SCHEMA.fields]
     return out
 
@@ -207,156 +190,146 @@ def _snapshot_cols(
     flags: GcdSchemaFlags,
     dicts: dict[str, dict[int, str]],
     has_credits: bool,
-) -> list[Column]:
-    """The flagship's 89 output Column expressions (see
-    ``build_snapshot``, which memoizes this per (run date, flags,
-    decode-map contents))."""
+) -> list[str]:
+    """The flagship's 89 output expressions as ``<sql> AS <name>``
+    text (see ``build_snapshot``)."""
     country = dicts["stddata_country"]
     language = dicts["stddata_language"]
     pubtype = dicts["gcd_series_publication_type"] if flags.publication_type else {}
     storytype = dicts["gcd_story_type"]
 
-    story_present = F.col("story.id").isNotNull()
     credit_present = (
-        (F.col("credit.story_id").isNotNull() & story_present)
-        if has_credits
-        else F.lit(False)
+        "(credit.story_id IS NOT NULL AND story.id IS NOT NULL)" if has_credits else "false"
     )
 
-    def story_gate(col: Column) -> Column:
+    def story_gate(expr: str) -> str:
         """P3 — story_* fields only set on story rows (Main.java:459)."""
-        return F.when(story_present, col)
+        return f"CASE WHEN story.id IS NOT NULL THEN {expr} END"
 
-    def credit_cols() -> list[Column]:
+    def credit_cols() -> list[str]:
         """F12 — curated credits win; legacy semicolon fields are the
         fallback for 6 of 8 types (painting/ids have no legacy source,
         reference Main.java:467-493)."""
-        out: list[Column] = []
+        out: list[str] = []
         legacy_fields = {"script", "pencils", "inks", "colors", "letters", "editing"}
+        no_ids = "CAST(NULL AS ARRAY<BIGINT>)"
         for field in ATOMIC_FIELDS:
             if has_credits:
-                curated_names = F.col(f"credit.credit_{field}")
-                curated_ids = F.col(f"credit.credit_{field}_creator_id")
+                curated_names = f"credit.credit_{field}"
+                curated_ids = f"credit.credit_{field}_creator_id"
             else:
-                curated_names = F.lit(None).cast("array<string>")
-                curated_ids = F.lit(None).cast("array<long>")
+                curated_names = "CAST(NULL AS ARRAY<STRING>)"
+                curated_ids = no_ids
             legacy_names = (
-                scalar.multi_split(F.col(f"story.{field}"))
+                scalar.multi_split(f"story.{field}")
                 if field in legacy_fields
-                else F.lit(None).cast("array<string>")
+                else "CAST(NULL AS ARRAY<STRING>)"
             )
-            names = F.when(credit_present, curated_names).otherwise(story_gate(legacy_names))
-            ids = F.when(credit_present, curated_ids).otherwise(F.lit(None).cast("array<long>"))
-            out.append(names.alias(f"story_{field}"))
-            out.append(ids.alias(f"story_{field}_creator_id"))
+            out.append(
+                f"CASE WHEN {credit_present} THEN {curated_names} "
+                f"ELSE {story_gate(legacy_names)} END AS story_{field}"
+            )
+            out.append(
+                f"CASE WHEN {credit_present} THEN {curated_ids} "
+                f"ELSE {no_ids} END AS story_{field}_creator_id"
+            )
         return out
 
-    cols: list[Column] = [
-        F.lit(unix_time).cast("long").alias("unix_time"),  # F13
-        _jdbc_long(F.col("issue.id")).alias("issue_id"),
-        scalar.string_with_default(F.col("issue.number")).alias("issue_number_raw"),
-        scalar.try_int(F.col("issue.number")).alias("issue_number"),  # F7
-        scalar.date_str_to_int(F.col("issue.key_date")).alias("publication_date"),  # F3
-        scalar.string_with_default(F.col("issue.price")).alias("price_raw"),
-        scalar.multi_split(F.col("issue.price")).alias("price"),  # F2
-        _jdbc_int(F.col("issue.page_count")).alias("page_count"),
-        F.col("issue.indicia_frequency").alias("indicia_frequency"),
-        F.col("issue.isbn").alias("isbn"),
-        F.col("issue.variant_name").alias("variant_name"),
-        _jdbc_long(F.col("issue.variant_of_id")).alias("variant_of_issue_id"),
-        F.col("issue.barcode").alias("barcode"),
-        F.col("issue.title").alias("title"),
-        scalar.date_str_to_int(F.col("issue.on_sale_date")).alias("on_sale_date"),
-        F.col("issue.rating").alias("rating"),
-        (
-            _jdbc_bool(F.col("issue.volume_not_printed"))
-            if flags.volume_not_printed
-            else F.lit(None).cast("boolean")
-        ).alias("volume_not_printed"),
-        scalar.multi_split(F.col("issue.editing")).alias("editing"),
-        F.col("issue.notes").alias("notes"),
-        _epoch_date(F.col("issue.created")).alias("created"),
-        _epoch_date(F.col("issue.modified")).alias("modified"),
-        _jdbc_long(F.col("series.id")).alias("series_id"),
-        F.col("series.name").alias("series_name"),
-        _jdbc_int(F.col("series.year_began")).alias("series_year_began"),
-        _jdbc_int(F.col("series.year_ended")).alias("series_year_ended"),
-        _jdbc_bool(F.col("series.is_current")).alias("series_is_current"),
-        scalar.dict_decode(_jdbc_int(F.col("series.country_id")), country).alias(
-            "series_country_code"
-        ),  # F9
-        scalar.dict_decode(_jdbc_int(F.col("series.language_id")), language).alias(
-            "series_language_code"
-        ),
-        _jdbc_bool(F.col("series.has_gallery")).alias("series_has_gallery"),
-        _jdbc_bool(F.col("series.is_comics_publication")).alias("series_is_comics_publication"),
-        F.col("series.color").alias("series_color"),
-        F.col("series.dimensions").alias("series_dimensions"),
-        F.col("series.paper_stock").alias("series_paper_stock"),
-        scalar.multi_split(F.col("series.binding")).alias("series_binding"),
-        F.col("series.publishing_format").alias("series_publishing_format"),
-        (
-            scalar.dict_decode(_jdbc_int(F.col("series.publication_type_id")), pubtype)
-            if flags.publication_type
-            else F.lit(None).cast("string")
-        ).alias("series_publishing_type"),
-        (
-            _jdbc_bool(F.col("series.is_singleton"))
-            if flags.series_is_singleton
-            else F.lit(None).cast("boolean")
-        ).alias("series_is_singleton"),
-        _epoch_date(F.col("series.created")).alias("series_created"),
-        _epoch_date(F.col("series.modified")).alias("series_modified"),
-        _jdbc_long(F.col("publisher.id")).alias("publisher_id"),
-        F.col("publisher.name").alias("publisher_name"),
-        scalar.dict_decode(_jdbc_int(F.col("publisher.country_id")), country).alias(
-            "publisher_country_code"
-        ),
-        _epoch_date(F.col("publisher.created")).alias("publisher_created"),
-        _epoch_date(F.col("publisher.modified")).alias("publisher_modified"),
-        F.col("publisher.url").alias("publisher_url"),
-        _jdbc_long(F.col("indicia.id")).alias("indicia_publisher_id"),
-        F.col("indicia.name").alias("indicia_publisher_name"),
-        scalar.dict_decode(_jdbc_int(F.col("indicia.country_id")), country).alias(
-            "indicia_publisher_country_code"
-        ),
-        _jdbc_long(F.col("indicia.parent_id")).alias("indicia_publisher_parent_id"),
-        _jdbc_int(F.col("indicia.year_began")).alias("indicia_publisher_year_began"),
-        _jdbc_int(F.col("indicia.year_ended")).alias("indicia_publisher_year_ended"),
-        _jdbc_bool(F.col("indicia.is_surrogate")).alias("indicia_publisher_is_surrogate"),
-        F.col("indicia.url").alias("indicia_publisher_url"),
-        _epoch_date(F.col("indicia.created")).alias("indicia_publisher_created"),
-        _epoch_date(F.col("indicia.modified")).alias("indicia_publisher_modified"),
-        _jdbc_long(F.col("brand.id")).alias("brand_id"),
-        F.col("brand.name").alias("brand_name"),
-        F.col("brand.url").alias("brand_url"),
-        _epoch_date(F.col("brand.created")).alias("brand_created"),
-        _epoch_date(F.col("brand.modified")).alias("brand_modified"),
-        F.col("story.id").alias("story_id"),
-        story_gate(F.col("story.title")).alias("story_title"),
-        story_gate(F.col("story.feature")).alias("story_feature"),
-        story_gate(_jdbc_int(F.col("story.sequence_number"))).alias("story_sequence_number"),
-        story_gate(_jdbc_int(F.col("story.page_count"))).alias("story_page_count"),
+    def flagged(on: bool, expr: str, null_type: str) -> str:
+        """A schema-flagged column, typed NULL when the flag is off."""
+        return expr if on else f"CAST(NULL AS {null_type})"
+
+    legacy_source = story_gate("'gcd_story'")
+
+    cols: list[str] = [
+        f"CAST({unix_time} AS BIGINT) AS unix_time",  # F13
+        f"{_jdbc_long('issue.id')} AS issue_id",
+        f"{scalar.string_with_default('issue.number')} AS issue_number_raw",
+        f"{scalar.try_int('issue.number')} AS issue_number",  # F7
+        f"{scalar.date_str_to_int('issue.key_date')} AS publication_date",  # F3
+        f"{scalar.string_with_default('issue.price')} AS price_raw",
+        f"{scalar.multi_split('issue.price')} AS price",  # F2
+        f"{_jdbc_int('issue.page_count')} AS page_count",
+        "issue.indicia_frequency AS indicia_frequency",
+        "issue.isbn AS isbn",
+        "issue.variant_name AS variant_name",
+        f"{_jdbc_long('issue.variant_of_id')} AS variant_of_issue_id",
+        "issue.barcode AS barcode",
+        "issue.title AS title",
+        f"{scalar.date_str_to_int('issue.on_sale_date')} AS on_sale_date",
+        "issue.rating AS rating",
+        f"{flagged(flags.volume_not_printed, _jdbc_bool('issue.volume_not_printed'), 'BOOLEAN')}"
+        " AS volume_not_printed",
+        f"{scalar.multi_split('issue.editing')} AS editing",
+        "issue.notes AS notes",
+        f"{_epoch_date('issue.created')} AS created",
+        f"{_epoch_date('issue.modified')} AS modified",
+        f"{_jdbc_long('series.id')} AS series_id",
+        "series.name AS series_name",
+        f"{_jdbc_int('series.year_began')} AS series_year_began",
+        f"{_jdbc_int('series.year_ended')} AS series_year_ended",
+        f"{_jdbc_bool('series.is_current')} AS series_is_current",
+        f"{scalar.dict_decode(_jdbc_int('series.country_id'), country)}"
+        " AS series_country_code",  # F9
+        f"{scalar.dict_decode(_jdbc_int('series.language_id'), language)}"
+        " AS series_language_code",
+        f"{_jdbc_bool('series.has_gallery')} AS series_has_gallery",
+        f"{_jdbc_bool('series.is_comics_publication')} AS series_is_comics_publication",
+        "series.color AS series_color",
+        "series.dimensions AS series_dimensions",
+        "series.paper_stock AS series_paper_stock",
+        f"{scalar.multi_split('series.binding')} AS series_binding",
+        "series.publishing_format AS series_publishing_format",
+        f"""{flagged(
+            flags.publication_type,
+            scalar.dict_decode(_jdbc_int('series.publication_type_id'), pubtype),
+            'STRING',
+        )} AS series_publishing_type""",
+        f"{flagged(flags.series_is_singleton, _jdbc_bool('series.is_singleton'), 'BOOLEAN')}"
+        " AS series_is_singleton",
+        f"{_epoch_date('series.created')} AS series_created",
+        f"{_epoch_date('series.modified')} AS series_modified",
+        f"{_jdbc_long('publisher.id')} AS publisher_id",
+        "publisher.name AS publisher_name",
+        f"{scalar.dict_decode(_jdbc_int('publisher.country_id'), country)}"
+        " AS publisher_country_code",
+        f"{_epoch_date('publisher.created')} AS publisher_created",
+        f"{_epoch_date('publisher.modified')} AS publisher_modified",
+        "publisher.url AS publisher_url",
+        f"{_jdbc_long('indicia.id')} AS indicia_publisher_id",
+        "indicia.name AS indicia_publisher_name",
+        f"{scalar.dict_decode(_jdbc_int('indicia.country_id'), country)}"
+        " AS indicia_publisher_country_code",
+        f"{_jdbc_long('indicia.parent_id')} AS indicia_publisher_parent_id",
+        f"{_jdbc_int('indicia.year_began')} AS indicia_publisher_year_began",
+        f"{_jdbc_int('indicia.year_ended')} AS indicia_publisher_year_ended",
+        f"{_jdbc_bool('indicia.is_surrogate')} AS indicia_publisher_is_surrogate",
+        "indicia.url AS indicia_publisher_url",
+        f"{_epoch_date('indicia.created')} AS indicia_publisher_created",
+        f"{_epoch_date('indicia.modified')} AS indicia_publisher_modified",
+        f"{_jdbc_long('brand.id')} AS brand_id",
+        "brand.name AS brand_name",
+        "brand.url AS brand_url",
+        f"{_epoch_date('brand.created')} AS brand_created",
+        f"{_epoch_date('brand.modified')} AS brand_modified",
+        "story.id AS story_id",
+        f"{story_gate('story.title')} AS story_title",
+        f"{story_gate('story.feature')} AS story_feature",
+        f"{story_gate(_jdbc_int('story.sequence_number'))} AS story_sequence_number",
+        f"{story_gate(_jdbc_int('story.page_count'))} AS story_page_count",
         *credit_cols(),
-        F.when(credit_present, F.lit("gcd_story_credit"))
-        .otherwise(story_gate(F.lit("gcd_story")))
-        .alias("story_credit_source"),
-        story_gate(scalar.multi_split(F.col("story.genre"))).alias("story_genre"),
-        story_gate(scalar.multi_split(F.col("story.characters"))).alias("story_characters"),
-        story_gate(scalar.dict_decode(_jdbc_int(F.col("story.type_id")), storytype)).alias(
-            "story_type"
-        ),
-        story_gate(F.col("story.job_number")).alias("story_job_number"),
-        (
-            story_gate(F.col("story.first_line"))
-            if flags.story_first_line
-            else F.lit(None).cast("string")
-        ).alias("story_first_line"),
-        story_gate(_epoch_date(F.col("story.created"))).alias("story_created"),
-        story_gate(_epoch_date(F.col("story.modified"))).alias("story_modified"),
+        f"CASE WHEN {credit_present} THEN 'gcd_story_credit' "
+        f"ELSE {legacy_source} END AS story_credit_source",
+        f"{story_gate(scalar.multi_split('story.genre'))} AS story_genre",
+        f"{story_gate(scalar.multi_split('story.characters'))} AS story_characters",
+        f"{story_gate(scalar.dict_decode(_jdbc_int('story.type_id'), storytype))} AS story_type",
+        f"{story_gate('story.job_number')} AS story_job_number",
+        f"{flagged(flags.story_first_line, story_gate('story.first_line'), 'STRING')}"
+        " AS story_first_line",
+        f"{story_gate(_epoch_date('story.created'))} AS story_created",
+        f"{story_gate(_epoch_date('story.modified'))} AS story_modified",
     ]
     return cols
-
 
 def write_gcd_snapshot(
     spark: SparkSession,

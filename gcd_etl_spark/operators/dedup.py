@@ -32,14 +32,6 @@ from gcd_etl_spark.functions.text import shingles, ws_tokens
 #: (standard (a*x + b) mod p construction; see Broder '97).
 _MERSENNE_P = (1 << 61) - 1
 
-# Memo for CONSTRUCTED Column expression trees (round 13): building
-# the 32 minhash permutation aggregates + 8 band hashes costs ~0.5 s
-# of driver-side py4j round trips PER CALL — paid once per micro-batch
-# by the streaming gates and once per build by every bench rep.
-# Expressions only, never data/results; see functions/exprcache.py
-# (the shared engine-wide memo this family's cache grew into).
-from gcd_etl_spark.functions.exprcache import cached as _cached_exprs  # noqa: E402
-
 
 def normalized(col) -> F.Column:
     """Dedup-canonical text: trimmed, lowercased, whitespace-collapsed."""
@@ -78,6 +70,12 @@ def portable_hash64(col) -> F.Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def _portable_hash64_sql(expr: str) -> str:
+    """``portable_hash64`` as SQL text, for the minhash projections
+    (the DuckDB-oracled minhash queries pin the two to each other)."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def minhash_signature_table(
     df: DataFrame,
     text_col: str = "text",
@@ -98,23 +96,16 @@ def minhash_signature_table(
     cannot near-dup; keeping a degenerate signature would funnel every
     short doc into one LSH bucket -> quadratic pair explosion).
     """
-    def build_aggs():
-        base = portable_hash64("_g") if portable else F.abs(F.xxhash64("_g"))
-        h = base % F.lit(1 << 32)
-        aggs = [
-            F.min(
-                (F.lit(2 * i + 1) * h + F.lit(1_000_003 * (i + 1))) % F.lit(_MERSENNE_P)
-            ).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-        sig = F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("sig")
-        return aggs, sig
-
-    grams = shingles(text_col, k=k_shingle)
-    exploded = df.select(F.col(id_col).alias("_id"), F.explode(grams).alias("_g"))
-    aggs, sig = _cached_exprs(("minhash_aggs", num_hashes, portable), build_aggs)
+    base = _portable_hash64_sql("_g") if portable else "abs(xxhash64(_g))"
+    h = f"({base} % {1 << 32})"
+    aggs = [
+        F.expr(f"min(({2 * i + 1} * {h} + {1_000_003 * (i + 1)}) % {_MERSENNE_P}) AS _m{i}")
+        for i in range(num_hashes)
+    ]
+    exploded = df.selectExpr(f"{id_col} AS _id", f"explode({shingles(text_col, k_shingle)}) AS _g")
     mins = exploded.groupBy("_id").agg(*aggs)
-    return mins.select("_id", sig)
+    sig = ", ".join(f"_m{i}" for i in range(num_hashes))
+    return mins.selectExpr("_id", f"array({sig}) AS sig")
 
 
 def minhash_band_table(
@@ -134,33 +125,20 @@ def minhash_band_table(
     (plans/dedup.dedup_delta_vs_corpus) share one definition."""
     rows_per_band = num_hashes // bands
 
-    def band_hash(b: int) -> F.Column:
-        sl = F.slice("sig", b * rows_per_band + 1, rows_per_band)
+    def band_hash(b: int) -> str:
+        sl = f"slice(sig, {b * rows_per_band + 1}, {rows_per_band})"
         if portable:
             # md5 of the comma-joined decimal minima — same string
             # DuckDB's array_to_string produces
-            joined = F.array_join(F.transform(sl, lambda x: x.cast("string")), ",")
-            return F.md5(joined)
-        return F.xxhash64(sl.cast("string")).cast("string")
+            return f"md5(array_join(transform({sl}, x -> CAST(x AS STRING)), ','))"
+        return f"CAST(xxhash64(CAST({sl} AS STRING)) AS STRING)"
 
-    def build_band_explode():
-        return F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        band_hash(b).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band")
-
-    sig = minhash_signature_table(df, text_col, id_col, num_hashes, k_shingle, portable)
-    band = _cached_exprs(
-        ("minhash_bands", num_hashes, bands, portable), build_band_explode
+    structs = ", ".join(
+        f"struct({b} AS band_idx, {band_hash(b)} AS band_hash)" for b in range(bands)
     )
-    return sig.select("_id", band).select("_id", "band.band_idx", "band.band_hash")
+    sig = minhash_signature_table(df, text_col, id_col, num_hashes, k_shingle, portable)
+    band = f"explode(array({structs})) AS band"
+    return sig.selectExpr("_id", band).select("_id", "band.band_idx", "band.band_hash")
 
 
 def minhash_lsh_candidates(
@@ -212,15 +190,7 @@ def shingle_sets(
     every id_a is a delta id) or a pre-materialized one (the
     streaming gates checkpoint the corpus side once per run instead
     of re-shingling the whole corpus inside every micro-batch)."""
-    build = lambda: shingles(text_col, k=k_shingle).alias("_shingles")
-    # A Column text_col is unhashable as a dict key (__eq__ returns a
-    # Column) — memoize only the plain-string form every caller uses.
-    sh = (
-        _cached_exprs(("shingle_sets", text_col, k_shingle), build)
-        if isinstance(text_col, str)
-        else build()
-    )
-    return df.select(F.col(id_col).alias("_sid"), sh)
+    return df.selectExpr(f"{id_col} AS _sid", f"{shingles(text_col, k_shingle)} AS _shingles")
 
 
 def jaccard_pairs(
@@ -291,7 +261,7 @@ def simhash64(text_col: str) -> F.Column:
     documents differ in few bits (small hamming distance). Pure
     expression: aggregate over a 64-slot int array.
     """
-    toks = ws_tokens(text_col)
+    toks = F.expr(ws_tokens(text_col))
     zero64 = F.array_repeat(F.lit(0), 64)
 
     def token_bits(t):
@@ -547,7 +517,7 @@ def simhash_table(
     exactly — 60 vote bits instead of 64, no sign bit.
     """
     nbits = 60 if portable else 64
-    exploded = df.select(F.col(id_col).alias("_id"), F.explode(ws_tokens(text_col)).alias("_t"))
+    exploded = df.select(F.col(id_col).alias("_id"), F.explode(F.expr(ws_tokens(text_col))).alias("_t"))
     h = portable_hash64("_t") if portable else F.xxhash64("_t")
     aggs = [
         F.sum(

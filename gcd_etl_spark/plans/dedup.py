@@ -111,7 +111,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     _guard_quadratic_anchor(docs, "dedup_ngram_jaccard")
     from gcd_etl_spark.functions.text import shingles
 
-    s = docs.select(F.col("doc_id").alias("_sid"), shingles("text", 3).alias("sh"))
+    s = docs.select(F.col("doc_id").alias("_sid"), F.expr(shingles("text", 3)).alias("sh"))
     a, b = s.alias("a"), s.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
     union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
@@ -166,7 +166,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     _guard_quadratic_anchor(docs, "dedup_clusters")
     from gcd_etl_spark.functions.text import shingles
 
-    s = docs.select(F.col("doc_id").alias("_sid"), shingles("text", 3).alias("sh"))
+    s = docs.select(F.col("doc_id").alias("_sid"), F.expr(shingles("text", 3)).alias("sh"))
     a, b = s.alias("a"), s.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
     union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
@@ -574,32 +574,15 @@ def _crossdoc_gram_table(docs: DataFrame) -> DataFrame:
     with >= k tokens — the shared gram derivation for the full
     recompute (dedup_crossdoc_spans), the persisted gram-DF index
     build, and the nightly delta scorer, so the three can never
-    tokenize differently.
-
-    The two HOF expression trees are memoized (round 14 — the C10
-    pattern): the gram-family cycle queries build this frame 3-4x per
-    run (corpus + per-night deltas), at ~0.12 s of py4j round trips
-    per construction; the Columns are pure unresolved trees reusable
-    across frames."""
+    tokenize differently. Both higher-order projections reach the JVM
+    as SQL text, one call each."""
     k = _CROSSDOC_K
-
-    def build():
-        toks = F.filter(
-            F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != ""
-        ).alias("toks")
-        gram = F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - (k - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at("toks", i + j) for j in range(k)]
-                ),
-            )
-        ).alias("gram")
-        return toks, gram
-
-    toks, gram = D._cached_exprs(("crossdoc_gram", k), build)
-    d = docs.select("doc_id", toks)
-    return d.where(F.size("toks") >= k).select("doc_id", gram)
+    window = ", ".join(f"element_at(toks, i + {j})" for j in range(k))
+    d = docs.selectExpr("doc_id", "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks")
+    return d.where(F.size("toks") >= k).selectExpr(
+        "doc_id",
+        f"explode(transform(sequence(1, size(toks) - {k - 1}), i -> concat_ws(' ', {window}))) AS gram",
+    )
 
 
 @query("dedup_crossdoc_spans", oracle=_CROSSDOC_ORACLE)
@@ -1814,28 +1797,24 @@ def _srp_verify_delta(
         ),
         "corpus_id",
     )
-    def build():
-        dd = F.col("dot").cast("double")
-        accept = (F.col("dot") > 0) & (
-            dd * dd
-            >= F.lit(SRP_COS2)
-            * F.col("na").cast("double")
-            * F.col("nb").cast("double")
+    dd = F.col("dot").cast("double")
+    accept = (F.col("dot") > 0) & (
+        dd * dd
+        >= F.lit(SRP_COS2)
+        * F.col("na").cast("double")
+        * F.col("nb").cast("double")
+    )
+    cos_ppm = (
+        F.floor(
+            F.col("dot").cast("double")
+            / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double"))
+            * 1_000_000
+            + 0.5
         )
-        cos_ppm = (
-            F.floor(
-                F.col("dot").cast("double")
-                / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double"))
-                * 1_000_000
-                + 0.5
-            )
-            .cast("long")
-            .alias("cos_ppm")
-        )
-        return dot_hof_long("qa", "qb").alias("dot"), accept, cos_ppm
-
-    dot, accept, cos_ppm = D._cached_exprs(("srp_verify",), build)
-    v = pairs.select("delta_id", "corpus_id", dot, "na", "nb")
+        .cast("long")
+        .alias("cos_ppm")
+    )
+    v = pairs.select("delta_id", "corpus_id", dot_hof_long("qa", "qb").alias("dot"), "na", "nb")
     return v.where(accept).select("delta_id", "corpus_id", "dot", cos_ppm)
 
 
@@ -1878,6 +1857,66 @@ def dedup_semantic_delta_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+def _srp_capped_ctes(corpus: str) -> str:
+    """The CTE head both capped oracles share, in integer-exact list
+    form: ``b`` quantizes (qv, nrm); ``sg`` holds each (table, bit)
+    hyperplane as a +-1 list computed by the same md5 rule as
+    _srp_signs; ``w`` is every row's wide (bits + split) bucket ``wb`` and
+    anchor bucket ``bk`` per table; ``k`` keys the ``corpus`` rows
+    (a predicate on vec_id) as ensure_srp_bucket_index(capped=True)
+    does — per-(t, bk) occupancy over the corpus, heavy buckets
+    re-keyed to wb + 2^bits. The list form runs in under a second at
+    sf0.01; the unrolled literal form (_srp_bucket_sql per table)
+    took 27-40 s per oracle just to bind."""
+    wide = SRP_BITS + SRP_CAP_SPLIT_BITS
+    base = 1 << SRP_BITS
+    sign = (
+        "CASE WHEN ('0x' || substr(md5('srp:' || t || ':' || j || ':' || i), 1, 15))"
+        "::BIGINT % 2 = 0 THEN 1 ELSE -1 END"
+    )
+    return f"""
+e AS (
+  SELECT vec_id,
+         list_transform(CAST(embedding AS DOUBLE[]),
+                        v -> CAST(floor(v * 1000000 + 0.5) AS BIGINT)) AS qv
+  FROM embeddings
+),
+b AS (
+  SELECT vec_id, qv, CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT) AS nrm
+  FROM e
+),
+sg AS (
+  SELECT t, j, list_transform(range({_SRP_DIM}), i -> {sign}) AS s
+  FROM range({SRP_TABLES}) tt(t), range({wide}) jj(j)
+),
+w AS (
+  SELECT vec_id, t, wb, wb % {base} AS bk
+  FROM (
+    SELECT b.vec_id, sg.t,
+           SUM(CASE WHEN list_sum(list_transform(range(1, {_SRP_DIM + 1}),
+                                                 i -> b.qv[i] * sg.s[i])) >= 0
+                    THEN 1 << sg.j ELSE 0 END) AS wb
+    FROM b CROSS JOIN sg
+    GROUP BY b.vec_id, sg.t
+  )
+),
+u AS (SELECT vec_id, t, wb, bk FROM w WHERE {corpus}),
+c AS (SELECT COUNT(*) AS n FROM b WHERE {corpus}),
+occ AS (SELECT t, bk, COUNT(*) AS oc FROM u GROUP BY t, bk),
+k AS (
+  SELECT u.vec_id, u.t,
+         CASE WHEN o.oc > {SRP_CAP_FACTOR} * ((c.n + {base - 1}) // {base})
+              THEN u.wb + {base} ELSE u.bk END AS key
+  FROM u JOIN occ o ON u.t = o.t AND u.bk = o.bk CROSS JOIN c
+)"""
+
+
+#: Exact int64 pair dot of the verify CTEs (list form, no float cast).
+_SRP_PAIR_DOT = (
+    f"CAST(list_sum(list_transform(range(1, {_SRP_DIM + 1}), i -> p.qa[i] * p.qb[i])) AS BIGINT)"
+)
+
+
 def _srp_capped_delta_oracle() -> str:
     """Delta-vs-corpus SRP dedup against the occupancy-CAPPED corpus
     index, restated in DuckDB: corpus rows (vec_id % DELTA_MOD <> 0)
@@ -1889,43 +1928,10 @@ def _srp_capped_delta_oracle() -> str:
     light and heavy key per table (the probe-both-keys contract of
     _srp_capped_probe_cands). Verify/accept/emit identical to
     _srp_delta_oracle."""
-    wide = SRP_BITS + SRP_CAP_SPLIT_BITS
     base = 1 << SRP_BITS
-    pair_dot = " + ".join(f"p.qa[{i}] * p.qb[{i}]" for i in range(1, _SRP_DIM + 1))
-    buckets = ", ".join(
-        f"{_srp_bucket_sql(t, True, wide)} AS wb{t}" for t in range(SRP_TABLES)
-    )
-    corpus_unions = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, wb{t} AS wb, wb{t} % {base} AS bk FROM b "
-        f"WHERE vec_id % {DELTA_MOD} <> 0"
-        for t in range(SRP_TABLES)
-    )
-    delta_unions = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, wb{t} AS wb, wb{t} % {base} AS bk FROM b "
-        f"WHERE vec_id % {DELTA_MOD} = 0"
-        for t in range(SRP_TABLES)
-    )
     return f"""
-WITH e AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        v -> CAST(floor(v * 1000000 + 0.5) AS BIGINT)) AS qv
-  FROM embeddings
-),
-b AS (
-  SELECT vec_id, qv, CAST({_srp_self_dot(True)} AS BIGINT) AS nrm, {buckets}
-  FROM e
-),
-u AS ({corpus_unions}),
-c AS (SELECT COUNT(*) AS n FROM b WHERE vec_id % {DELTA_MOD} <> 0),
-occ AS (SELECT t, bk, COUNT(*) AS oc FROM u GROUP BY t, bk),
-k AS (
-  SELECT u.vec_id, u.t,
-         CASE WHEN o.oc > {SRP_CAP_FACTOR} * ((c.n + {base - 1}) // {base})
-              THEN u.wb + {base} ELSE u.bk END AS key
-  FROM u JOIN occ o ON u.t = o.t AND u.bk = o.bk CROSS JOIN c
-),
-du AS ({delta_unions}),
+WITH {_srp_capped_ctes(f"vec_id % {DELTA_MOD} <> 0")},
+du AS (SELECT vec_id, t, wb, bk FROM w WHERE vec_id % {DELTA_MOD} = 0),
 dp AS (
   SELECT vec_id, t, bk AS key FROM du
   UNION ALL
@@ -1943,7 +1949,7 @@ p AS (
   JOIN b bb ON bb.vec_id = np.corpus_id
 ),
 v AS (
-  SELECT delta_id, corpus_id, CAST({pair_dot} AS BIGINT) AS dot, na, nb
+  SELECT delta_id, corpus_id, {_SRP_PAIR_DOT} AS dot, na, nb
   FROM p
 )
 SELECT delta_id, corpus_id, dot,
@@ -2041,21 +2047,12 @@ def _srp_quant_frame(emb: DataFrame) -> DataFrame:
     """(vec_id, qv, nrm): the exact integer-quantized vector (1e6
     fixed point, the SRP family's only float->int step) and its
     int64 self-dot — the verify-side attachment every SRP pipeline
-    stage shares. Both projection Columns are memoized expression
-    trees (operators.dedup._cached_exprs): the streaming gates call
-    this once per MICRO-BATCH, and rebuilding the 64-term self-dot
-    plus the quantize transform is pure driver-side py4j overhead."""
-
-    def build():
-        qv = F.transform(
-            "embedding",
-            lambda v: F.floor(v.cast("double") * 1_000_000 + 0.5).cast("long"),
-        ).alias("qv")
-        nrm = F.expr(f"CAST({_srp_self_dot(False)} AS BIGINT)").alias("nrm")
-        return qv, nrm
-
-    qv, nrm = D._cached_exprs(("srp_quant",), build)
-    return emb.select("vec_id", qv).select("vec_id", "qv", nrm)
+    stage shares. Both projections reach the JVM as SQL text (the
+    streaming gates call this once per MICRO-BATCH)."""
+    qv = "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000 + 0.5D) AS BIGINT)) AS qv"
+    return emb.selectExpr("vec_id", qv).selectExpr(
+        "vec_id", "qv", f"CAST({_srp_self_dot(False)} AS BIGINT) AS nrm"
+    )
 
 
 def _srp_bucket_frame(emb: DataFrame, bits: int, n_tables: int) -> DataFrame:
@@ -2065,34 +2062,26 @@ def _srp_bucket_frame(emb: DataFrame, bits: int, n_tables: int) -> DataFrame:
     literal SQL). Shared by the self-join anchor, the delta-vs-corpus
     path, the persisted bucket index build, and the streaming gate —
     the four can never bucket differently."""
-    def build():
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
 
-        signs = np.asarray(
-            [[_srp_signs(t, j) for j in range(bits)] for t in range(n_tables)],
-            dtype=np.int64,
-        ).reshape(n_tables * bits, _SRP_DIM)
-        weights = 1 << np.arange(bits, dtype=np.int64)
+    signs = np.asarray(
+        [[_srp_signs(t, j) for j in range(bits)] for t in range(n_tables)],
+        dtype=np.int64,
+    ).reshape(n_tables * bits, _SRP_DIM)
+    weights = 1 << np.arange(bits, dtype=np.int64)
 
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def _buckets(qv):
-            if len(qv) == 0:
-                return pd.Series([], dtype=object)
-            m = np.asarray(qv.tolist(), dtype=np.int64)
-            hits = (m @ signs.T) >= 0
-            packed = hits.reshape(len(m), n_tables, bits) @ weights
-            return pd.Series(list(packed))
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def _buckets(qv):
+        if len(qv) == 0:
+            return pd.Series([], dtype=object)
+        m = np.asarray(qv.tolist(), dtype=np.int64)
+        hits = (m @ signs.T) >= 0
+        packed = hits.reshape(len(m), n_tables, bits) @ weights
+        return pd.Series(list(packed))
 
-        return _buckets("qv").alias("bks")
-
-    # Memoized per (bits, n_tables): recomputing the 8x16x64 md5 sign
-    # matrix and re-wrapping the pandas UDF is identical every call,
-    # and the gates pay it once per micro-batch (expression tree only
-    # — the matmul itself still runs per batch on the batch's rows).
-    bks = D._cached_exprs(("srp_buckets", bits, n_tables), build)
-    return _srp_quant_frame(emb).select("vec_id", "qv", "nrm", bks)
+    return _srp_quant_frame(emb).select("vec_id", "qv", "nrm", _buckets("qv").alias("bks"))
 
 
 def _srp_accepted(
@@ -2354,36 +2343,8 @@ def _srp_capped_oracle() -> str:
     per-(t, bk) occupancy counted, heavy buckets re-keyed to
     wb + 64 (disjoint from every light key since light keys < 64),
     and candidate pairs grouped to carry n_key_hits."""
-    wide = SRP_BITS + SRP_CAP_SPLIT_BITS
-    base = 1 << SRP_BITS
-    pair_dot = " + ".join(f"p.qa[{i}] * p.qb[{i}]" for i in range(1, _SRP_DIM + 1))
-    buckets = ", ".join(
-        f"{_srp_bucket_sql(t, True, wide)} AS wb{t}" for t in range(SRP_TABLES)
-    )
-    unions = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, wb{t} AS wb, wb{t} % {base} AS bk FROM b"
-        for t in range(SRP_TABLES)
-    )
     return f"""
-WITH e AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        v -> CAST(floor(v * 1000000 + 0.5) AS BIGINT)) AS qv
-  FROM embeddings
-),
-b AS (
-  SELECT vec_id, qv, CAST({_srp_self_dot(True)} AS BIGINT) AS nrm, {buckets}
-  FROM e
-),
-u AS ({unions}),
-c AS (SELECT COUNT(*) AS n FROM b),
-occ AS (SELECT t, bk, COUNT(*) AS oc FROM u GROUP BY t, bk),
-k AS (
-  SELECT u.vec_id, u.t,
-         CASE WHEN o.oc > {SRP_CAP_FACTOR} * ((c.n + {base - 1}) // {base})
-              THEN u.wb + {base} ELSE u.bk END AS key
-  FROM u JOIN occ o ON u.t = o.t AND u.bk = o.bk CROSS JOIN c
-),
+WITH {_srp_capped_ctes("true")},
 np AS (
   SELECT a.vec_id AS id_a, x.vec_id AS id_b, COUNT(*) AS n_key_hits
   FROM k a JOIN k x ON a.t = x.t AND a.key = x.key AND a.vec_id < x.vec_id
@@ -2398,7 +2359,7 @@ p AS (
 ),
 v AS (
   SELECT id_a, id_b, n_key_hits,
-         CAST({pair_dot} AS BIGINT) AS dot, na, nb
+         {_SRP_PAIR_DOT} AS dot, na, nb
   FROM p
 )
 SELECT id_a, id_b, dot,
@@ -2548,7 +2509,7 @@ def sketch_minhash_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _MERGE_P
     docs = read_table_spread(spark, sf_dir, "documents")
     ex = docs.select(
-        "doc_id", F.explode(shingles("text", k=3)).alias("g")
+        "doc_id", F.explode(F.expr(shingles("text", k=3))).alias("g")
     ).select(
         "doc_id",
         (portable_hash64("g") % F.lit(1 << 32)).alias("h32"),

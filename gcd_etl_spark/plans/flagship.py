@@ -53,8 +53,8 @@ def build_snapshot_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("o_orderkey"),
             F.col("l_linenumber").alias("line_no"),
-            scalar.date_int_from_date("o_orderdate").alias("order_date_int"),
-            scalar.try_int(F.split(F.col("o_orderpriority"), "-").getItem(0)).alias("priority_code"),
+            F.expr(scalar.date_int_from_date("o_orderdate")).alias("order_date_int"),
+            F.expr(scalar.try_int("split(o_orderpriority, '-')[0]")).alias("priority_code"),
             (F.col("o_orderstatus") == "O").alias("is_open"),
             F.col("c_name").alias("customer_name"),
             F.col("n_name").alias("nation_name"),

@@ -107,7 +107,7 @@ def setjoin_prefix_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     n*(|x|+|y|); jac_ppm is integer floor division. No doubles
     anywhere -> full cross-engine value hash."""
     docs = read_table_spread(spark, sf_dir, "documents")
-    s = docs.select("doc_id", shingles("text", 3).alias("sh"))
+    s = docs.select("doc_id", F.expr(shingles("text", 3)).alias("sh"))
     e = s.select("doc_id", F.explode("sh").alias("gram"))
     sz = s.where(F.size("sh") > 0).select("doc_id", F.size("sh").alias("sz"))
     df = e.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
@@ -311,7 +311,7 @@ def index_postings_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is unchanged."""
     docs = read_table_spread(spark, sf_dir, "documents")
     p = docs.select(
-        "doc_id", F.posexplode(ws_tokens("text")).alias("pos0", "term")
+        "doc_id", F.posexplode(F.expr(ws_tokens("text"))).alias("pos0", "term")
     ).select("doc_id", "term", (F.col("pos0") + 1).alias("pos"))
     per_doc = p.groupBy("term", "doc_id").agg(
         F.array_sort(F.collect_list("pos")).alias("ps")

@@ -291,7 +291,7 @@ def setjoin_containment_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gcd_etl_spark.functions.text import shingles
 
     docs = read_table_spread(spark, sf_dir, "documents")
-    s = docs.select("doc_id", shingles("text", 3).alias("sh"))
+    s = docs.select("doc_id", F.expr(shingles("text", 3)).alias("sh"))
     e = s.select("doc_id", F.explode("sh").alias("gram"))
     sz = s.where(F.size("sh") > 0).select("doc_id", F.size("sh").alias("sz"))
     dfreq = e.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))

@@ -39,21 +39,14 @@ def serialize_array_cols(df: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from gcd_etl_spark.functions.exprcache import cached
+    from gcd_etl_spark.functions.scalar import sql_str
 
     def _ser(name: str):
-        # Pure name-keyed expression tree — memoized (round 13): the
-        # flagship's 19 serialized array columns alone cost ~0.9 s of
-        # py4j HOF construction per build.
-        def build():
-            c = F.col(name)
-            return F.concat(
-                F.size(c).cast("string"),
-                F.lit(":"),
-                F.array_join(F.transform(c, lambda x: x.cast("string")), _SEP),
-            ).alias(name)
-
-        return cached(("ser_arr", name), build)
+        c = "`" + name.replace("`", "``") + "`"
+        return F.expr(
+            f"concat(CAST(size({c}) AS STRING), ':', "
+            f"array_join(transform({c}, x -> CAST(x AS STRING)), {sql_str(_SEP)})) AS {c}"
+        )
 
     cols = [
         _ser(f.name) if isinstance(f.dataType, T.ArrayType) else F.col(f.name)

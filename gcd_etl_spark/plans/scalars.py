@@ -39,12 +39,13 @@ def scalar_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference Main.java:152-153,637-650), pinned to UTC.
     """
     orders = read_table(spark, sf_dir, "orders")
-    epoch = F.unix_timestamp("o_orderdate")
     return orders.select(
         "o_orderkey",
-        scalar.date_int_from_date("o_orderdate").alias("order_date_int"),
-        scalar.epoch_to_date_int(epoch).alias("epoch_date_int"),
-        scalar.date_str_to_int(F.date_format("o_orderdate", "yyyy-MM-dd")).alias("parsed_date_int"),
+        F.expr(scalar.date_int_from_date("o_orderdate")).alias("order_date_int"),
+        F.expr(scalar.epoch_to_date_int("unix_timestamp(o_orderdate)")).alias("epoch_date_int"),
+        F.expr(scalar.date_str_to_int("date_format(o_orderdate, 'yyyy-MM-dd')")).alias(
+            "parsed_date_int"
+        ),
     )
 
 
@@ -64,8 +65,8 @@ def scalar_try_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
-        scalar.try_int(F.split(F.col("o_orderpriority"), "-").getItem(0)).alias("priority_code"),
-        scalar.try_int("o_orderstatus").alias("bogus_int"),
+        F.expr(scalar.try_int("split(o_orderpriority, '-')[0]")).alias("priority_code"),
+        F.expr(scalar.try_int("o_orderstatus")).alias("bogus_int"),
         (F.col("o_orderstatus") == "O").alias("is_open"),
     )
 
@@ -88,8 +89,7 @@ def scalar_multi_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reduce ``"A ; B;"`` to exactly ``[A, B]``.
     """
     li = read_table(spark, sf_dir, "lineitem")
-    messy = F.concat(F.col("l_returnflag"), F.lit(" ; "), F.col("l_linestatus"), F.lit(";"))
-    arr = scalar.multi_split(messy)
+    arr = F.expr(scalar.multi_split("concat(l_returnflag, ' ; ', l_linestatus, ';')"))
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -114,8 +114,8 @@ def scalar_dict_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = read_table(spark, sf_dir, "nation")
     return nation.select(
         "n_nationkey",
-        scalar.dict_decode("n_regionkey", REGION_DICT).alias("region_name"),
-        scalar.dict_decode(F.col("n_nationkey") + 100, REGION_DICT).alias("miss_decodes_null"),
+        F.expr(scalar.dict_decode("n_regionkey", REGION_DICT)).alias("region_name"),
+        F.expr(scalar.dict_decode("n_nationkey + 100", REGION_DICT)).alias("miss_decodes_null"),
     )
 
 
@@ -157,9 +157,9 @@ def scalar_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = read_table(spark, sf_dir, "customer")
     return customer.select(
         "c_custkey",
-        scalar.int_with_default(scalar.try_int("c_mktsegment")).alias("seg_int_sentinel"),
-        scalar.string_with_default("c_name").alias("name_defaulted"),
-        scalar.int_with_default((F.col("c_acctbal") < 0).cast("int")).alias("neg_flag_int"),
+        F.expr(scalar.int_with_default(scalar.try_int("c_mktsegment"))).alias("seg_int_sentinel"),
+        F.expr(scalar.string_with_default("c_name")).alias("name_defaulted"),
+        F.expr(scalar.int_with_default("CAST(c_acctbal < 0 AS INT)")).alias("neg_flag_int"),
     )
 
 

@@ -36,7 +36,7 @@ def term_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     fields pass through, the token array explodes — multi-valued terms
     exactly like ``addStringTerms`` (reference Main.java:344-352)."""
     docs = read_table_spread(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", ws_tokens("text").alias("tokens")
+        "doc_id", "lang", "source", F.expr(ws_tokens("text")).alias("tokens")
     )
     return to_term_table(
         docs, "doc_id", {"lang": "lang", "source": "source", "token": "tokens"}

@@ -35,7 +35,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char/token counts (whitespace + BPE-ish regex) and mean word
     length — all codegen'd expressions, no UDFs."""
     docs = read_table_spread(spark, sf_dir, "documents")
-    toks = TX.ws_tokens("text")
+    toks = F.expr(TX.ws_tokens("text"))
     total_len = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
     return docs.select(
         "doc_id",
@@ -155,7 +155,7 @@ def text_shingle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-3-shingle count per document (the MinHash input
     cardinality)."""
     docs = read_table_spread(spark, sf_dir, "documents")
-    return docs.select("doc_id", F.size(TX.shingles("text", k=3)).alias("n_shingles"))
+    return docs.select("doc_id", F.size(F.expr(TX.shingles("text", k=3))).alias("n_shingles"))
 
 
 @query(

@@ -103,51 +103,9 @@ def read_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     df = read_table(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
-    if _needs_spread(spark, sf_dir, name, df, target):
+    if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
-
-
-def _table_files_sig(sf_dir: str, name: str) -> tuple:
-    """(relative path, size) signature of a table's data files — the
-    spread decision's cache key component (layout-derived, so a
-    rewritten staging dir can never serve a stale decision)."""
-    import os as _os
-
-    path = _os.path.join(sf_dir, f"{name}.parquet")
-    if _os.path.isdir(path):
-        out = []
-        for root, _dirs, files in _os.walk(path):
-            for fn in sorted(files):
-                if not fn.startswith(("_", ".")):
-                    p = _os.path.join(root, fn)
-                    out.append((_os.path.relpath(p, path), _os.path.getsize(p)))
-        return tuple(out)
-    try:
-        return ((name, _os.path.getsize(path)),)
-    except OSError:
-        return ()
-
-
-def _needs_spread(spark, sf_dir, name, df, target) -> bool:
-    """Memoized split-count check (round 14): ``df.rdd`` costs a
-    driver-side RDD translation (~20-40 ms of py4j) and is re-paid on
-    every build of every spread-reading query — while the answer is a
-    pure function of the immutable file layout, the session
-    parallelism and the two file-split settings. Keyed on the
-    file-listing signature so a re-staged dir invalidates naturally,
-    and on the split settings so a config change re-decides; the
-    decision (a bool), never data, is cached."""
-    from gcd_etl_spark.functions.exprcache import cached
-
-    split_conf = tuple(
-        spark.conf.get(k)
-        for k in ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    )
-    return cached(
-        ("needs_spread", sf_dir, name, target, split_conf, _table_files_sig(sf_dir, name)),
-        lambda: df.rdd.getNumPartitions() < max(2, target // 2),
-    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

@@ -78,5 +78,5 @@ def test_date_str_to_int_rejects_trailing_newline(spark):
     df = spark.createDataFrame(
         [("1987-03-01",), ("1987-03-01\n",), ("1987-03-01\r",)], "v string"
     )
-    got = [r[0] for r in df.select(date_str_to_int("v", sentinel=-1)).collect()]
+    got = [r[0] for r in df.select(F.expr(date_str_to_int("v", sentinel=-1))).collect()]
     assert got == [19870301, -1, -1]

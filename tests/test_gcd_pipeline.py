@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from gcd_etl_spark.gcd.credits import ATOMIC_FIELDS, CREDIT_TYPE_EXPANSION
 from gcd_etl_spark.gcd.microdump import write_microdump
 from gcd_etl_spark.gcd.oracle import snapshot_oracle_sql
-from gcd_etl_spark.gcd.pipeline import build_snapshot, write_gcd_snapshot
+from gcd_etl_spark.gcd.pipeline import build_snapshot, collect_dict_maps, write_gcd_snapshot
 from gcd_etl_spark.gcd.schema import GCD_SNAPSHOT_SCHEMA, GcdSchemaFlags
 from tests.conftest import assert_df_matches_con
 
@@ -53,6 +53,19 @@ def test_snapshot_matches_duckdb(spark, gcd_tables, duck_gcd):
     restatement — the end-to-end ETL golden test."""
     df = build_snapshot(spark, gcd_tables, RUN_DATE)
     assert_df_matches_con(df, duck_gcd, snapshot_oracle_sql(RUN_DATE), "gcd_snapshot")
+
+
+def test_collect_dict_maps_skips_null_keys(spark, gcd_tables):
+    """A malformed dump id try-casts to NULL; that dictionary row must
+    be skipped (the reference's ``d.id = ...`` never matches NULL),
+    not abort the nightly with a TypeError."""
+    country = gcd_tables["stddata_country"]
+    id_type = country.schema["id"].dataType.simpleString()
+    bad = country.limit(1).withColumn("id", F.lit(None).cast(id_type))
+    tables = dict(gcd_tables, stddata_country=country.unionByName(bad))
+    got = collect_dict_maps(tables)
+    assert got == collect_dict_maps(gcd_tables)
+    assert None not in got["stddata_country"]
 
 
 def test_output_schema_exact(spark, gcd_tables):

@@ -15,8 +15,15 @@ import re
 from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from gcd_etl_spark.functions.scalar import date_str_to_int, multi_split, try_int
+from gcd_etl_spark.functions.scalar import (
+    date_str_to_int,
+    dict_decode,
+    multi_split,
+    sql_str,
+    try_int,
+)
 from gcd_etl_spark.gcd.credits import ATOMIC_FIELDS, CREDIT_TYPE_EXPANSION
+from gcd_etl_spark.sources.dump import sql_literal
 
 
 # Java's \s without UNICODE_CHARACTER_CLASS is ASCII-only
@@ -64,7 +71,7 @@ _texts = st.text(
 @example([";\x85", "\xa0;\xa0", "a\x85;b"])
 def test_multi_split_matches_java_semantics(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    got = [r[0] for r in df.select(multi_split("v")).collect()]
+    got = [r[0] for r in df.select(F.expr(multi_split("v"))).collect()]
     want = [_java_split(v) for v in values]
     assert got == want
 
@@ -88,7 +95,7 @@ def test_multi_split_matches_java_semantics(spark, values):
 )
 def test_date_str_to_int_matches_java_semantics(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    got = [r[0] for r in df.select(date_str_to_int("v", sentinel=-1)).collect()]
+    got = [r[0] for r in df.select(F.expr(date_str_to_int("v", sentinel=-1))).collect()]
     want = [_java_date_int(v) for v in values]
     assert got == want
 
@@ -110,9 +117,48 @@ def test_try_int_matches_java_semantics(spark, values):
         return n if -(2**31) <= n < 2**31 else None
 
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    got = [r[0] for r in df.select(try_int("v")).collect()]
+    got = [r[0] for r in df.select(F.expr(try_int("v"))).collect()]
     want = [engine_parse(v) for v in values]
     assert got == want
+
+
+# Text built to stress a SQL string literal: quotes, backslashes,
+# \u-like and octal-like escapes, LIKE wildcards, NUL, CR/LF and
+# non-BMP characters, mixed with arbitrary non-surrogate characters.
+_literal_texts = st.lists(
+    st.one_of(
+        st.sampled_from(
+            ["'", '"', "\\", "\\u", "u0041", "%", "_", "\x00", "\r", "\n", "0", "12", "\U0001f600"]
+        ),
+        st.characters(blacklist_categories=("Cs",)),
+    ),
+    max_size=12,
+).map("".join)
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.lists(_literal_texts, min_size=1, max_size=20))
+@example(["\x0012", "\\u0041", "\\012", "it's", "100%_", "a\r\nb", "\U0001f600", "\\", ""])
+def test_sql_str_reads_back_and_decodes_exactly(spark, values):
+    """``sql_str`` is the one Spark-SQL string quoting function: every
+    value reads back through Spark SQL unchanged, and ``dict_decode``
+    over such values decodes each key to exactly its value (a miss
+    stays NULL)."""
+    exprs = ", ".join(f"{sql_str(v)} AS c{i}" for i, v in enumerate(values))
+    assert list(spark.sql(f"SELECT {exprs}").first()) == values
+    decode = dict_decode("CAST(id AS INT)", dict(enumerate(values)))
+    got = [r[0] for r in spark.range(len(values) + 1).selectExpr(decode).collect()]
+    assert got == values + [None]
+
+
+def test_dump_literal_is_not_a_spark_sql_literal(spark):
+    """The mysqldump writer's ``sql_literal`` escapes NUL as ``\\0``;
+    Spark SQL reads ``\\0`` plus two octal digits as ONE octal escape,
+    so NUL followed by "12" comes back as a newline. That is why the
+    Spark-side quoting function is ``sql_str``, not ``sql_literal``."""
+    value = "\x0012"
+    assert spark.sql(f"SELECT {sql_literal(value)}").first()[0] == "\n"
+    assert spark.sql(f"SELECT {sql_str(value)}").first()[0] == value
 
 
 def test_credit_expansion_composites_are_atomic_unions():

@@ -1,10 +1,6 @@
 """Round-14 pins (optimization round 2): the hardening items from the
 round-13 verdict/advice must hold.
 
-* verdict item 6 — the expression-construction memo is BOUNDED: a
-  driver cycling run-dates/datasets must not grow it without eviction,
-  and a gateway change sweeps the dead entries; concurrent driver
-  threads never corrupt it.
 * verdict item 7 — staged-index name resolution refuses RULE drift: a
   width-rule change over unchanged data re-stages instead of silently
   resolving to the stale staged width.
@@ -13,19 +9,15 @@ round-13 verdict/advice must hold.
   a legitimately-short sample from a small corpus does NOT re-collect.
 * advice r13 — the connected-components decimal-sum convergence probe
   fails loudly when the sum goes NULL on a non-empty frame.
-* advice r14 — the memoized spread decision re-decides when the
-  file-split settings change.
+* advice r14 — the spread decision re-decides when the file-split
+  settings change.
 """
 
 from __future__ import annotations
 
-import sys
-import threading
-
 import numpy as np
 import pytest
 
-from gcd_etl_spark.functions import exprcache
 from gcd_etl_spark.operators.similarity import (
     PQ_TRAIN_SAMPLE,
     TrainSample,
@@ -42,74 +34,12 @@ def _emb_frame(spark, n=40, dim=8, seed=7):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-# ---------------------------------------------------- exprcache bound
-def test_exprcache_is_lru_bounded(spark):
-    exprcache._CACHE.clear()
-    calls = []
-    for i in range(exprcache._MAX_ENTRIES + 100):
-        exprcache.cached(("round14-bound-test", i), lambda i=i: calls.append(i))
-    assert len(exprcache._CACHE) <= exprcache._MAX_ENTRIES
-    # LRU: the newest keys survive, the oldest were evicted
-    gw_keys = {k[1:] for k in exprcache._CACHE}
-    assert ("round14-bound-test", exprcache._MAX_ENTRIES + 99) in gw_keys
-    assert ("round14-bound-test", 0) not in gw_keys
-    exprcache._CACHE.clear()
-
-
-def test_exprcache_hit_returns_memo_and_refreshes(spark):
-    exprcache._CACHE.clear()
-    a = exprcache.cached(("round14-hit", 1), lambda: object())
-    b = exprcache.cached(("round14-hit", 1), lambda: object())
-    assert a is b
-    exprcache._CACHE.clear()
-
-
-def test_exprcache_sweeps_dead_gateway_entries(spark):
-    exprcache._CACHE.clear()
-    # forge an entry under a dead gateway id, then force a "gateway
-    # changed" sweep by faking the last-seen gateway
-    exprcache._CACHE[("dead-gateway", "round14-sweep", 1)] = "stale"
-    exprcache._last_gateway[0] = "dead-gateway"
-    exprcache.cached(("round14-sweep", 2), lambda: "fresh")
-    assert ("dead-gateway", "round14-sweep", 1) not in exprcache._CACHE
-    exprcache._CACHE.clear()
-
-
-def test_exprcache_is_thread_safe(monkeypatch):
-    """Streaming foreachBatch threads share the memo: concurrent hits,
-    misses and evictions on a 2-entry cache must never raise (an
-    unlocked hit refresh races an eviction into a KeyError)."""
-    monkeypatch.setattr(exprcache, "_MAX_ENTRIES", 2)
-    errors: list[BaseException] = []
-
-    def worker(t: int) -> None:
-        try:
-            for i in range(3000):
-                key = ("exprcache-stress", (t + i) % 5)
-                exprcache.cached(key, lambda: object())
-        except BaseException as e:  # noqa: BLE001 - collected, asserted below
-            errors.append(e)
-
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join()
-    finally:
-        sys.setswitchinterval(old)
-        exprcache._CACHE.clear()
-    assert errors == []
-
-
 # ------------------------------------- spread decision vs split config
 def test_spread_decision_follows_split_config(spark, sf_smoke):
     """One small file is one scan split under the default 128 MiB
     maxPartitionBytes, so read_table_spread repartitions; at 1 KiB the
     same file splits past the floor and must come back untouched — a
-    decision memoized under the old config must not be replayed."""
+    decision taken under the old config must not be replayed."""
     from gcd_etl_spark.sources.catalog import read_table_spread
 
     def spread(df) -> bool:
