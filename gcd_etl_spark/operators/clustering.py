@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gcd_etl_spark.session import drop_zip_importers
+
 #: Quantization applied to per-component contributions before the
 #: exact-decimal centroid sum (9 dp ~ float32's own precision).
 _COMP_SCALE = 9
@@ -63,6 +65,7 @@ def _assign_batches(centroids: np.ndarray, id_col: str, vec_col: str):
                     "sqdist": d2[np.arange(len(pdf)), cluster],
                 }
             )
+        drop_zip_importers()
 
     return fn
 

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gcd_etl_spark.session import drop_zip_importers
+
 try:  # real codecs are not in this image; gate behind import-try
     import PIL.Image  # type: ignore  # noqa: F401
 
@@ -103,6 +105,7 @@ def decode_media_meta(df: DataFrame, payload_col: str = "payload", id_col: str =
                 for mid, payload in zip(pdf[id_col], pdf[payload_col])
             ]
             yield pd.DataFrame(rows)
+        drop_zip_importers()
 
     return df.mapInPandas(_decode, schema=MEDIA_META_SCHEMA)
 
@@ -512,6 +515,7 @@ def synthesize_media_files(
                     "payload": [synth(int(m)) for m in pdf[id_col]],
                 }
             )
+        drop_zip_importers()
 
     return df.mapInPandas(
         _synth, schema="media_id long, payload binary"
@@ -534,6 +538,7 @@ def parse_media_headers(
                 r["n_bytes"] = len(payload or b"")
                 rows.append(r)
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_PARSE_SCHEMA])
+        drop_zip_importers()
 
     return df.mapInPandas(_parse, schema=MEDIA_PARSE_SCHEMA)
 
@@ -569,5 +574,6 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10, payload_col: str = "payl
                         }
                     )
             yield pd.DataFrame(out, columns=["media_id", "frame_idx", "frame_sha"])
+        drop_zip_importers()
 
     return df.mapInPandas(_sample, schema=out_schema)

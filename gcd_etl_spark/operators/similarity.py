@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gcd_etl_spark.functions.vector import cosine, cosine_fixed, random_hyperplane_signs
+from gcd_etl_spark.session import drop_zip_importers
 
 
 def _cos(a: str, b: str, dim: int | None):
@@ -395,6 +396,7 @@ def neardup_pairs_blas(
                         "cosine": np.round(S[hit_r, hit_c], 6),
                     }
                 )
+        drop_zip_importers()
 
     return corpus.select(id_col, vec_col).mapInPandas(score_blocks, out_schema)
 
@@ -625,6 +627,7 @@ def pq_encode(
                     "codes": list(codes),
                 }
             )
+        drop_zip_importers()
 
     return corpus.select(id_col, vec_col).mapInPandas(
         encode, schema="neighbor_id long, cell int, codes array<int>"
@@ -712,6 +715,7 @@ def pq_adc_topk(
                     "cosine": np.round(cos, 6),
                 }
             )
+        drop_zip_importers()
 
     scored = cand.mapInPandas(
         score, schema="query_id long, neighbor_id long, cosine double"

@@ -24,7 +24,7 @@ pairs, identical-vector cap limits, etc.).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from gcd_etl_spark.operators import dedup as D
@@ -1090,6 +1090,39 @@ WHERE doc_id % {DELTA_MOD} <> 0 OR doc_id % {2 * DELTA_MOD} = 0
 """
 
 
+def compaction_probe(orig: DataFrame, comp: DataFrame) -> Row:
+    """Equivalence evidence for a band-table rewrite, in ONE job:
+    ``n_rows`` and ``n_bands`` (distinct ``band_hash`` values) of the
+    compacted table ``comp``, and ``mism`` = 1 when the two tables'
+    (corpus_id, band_idx, band_hash) multisets differ.
+
+    One aggregation over a src-tagged union (round 14, guide §1.2)
+    replaces four eager jobs (two exceptAll emptiness probes, a count,
+    a distinct count), each re-shuffling the band tables. Per-(row
+    value) counts from both sides compare groupwise: all-equal <=>
+    multiset equality, the exact check exceptAll gave. A NULL
+    ``band_hash`` counts as one distinct value, as
+    ``distinct().count()`` did: ``count(DISTINCT x)`` skips NULL, but a
+    struct that holds a NULL is itself not NULL."""
+    cols = ["corpus_id", "band_idx", "band_hash"]
+    tagged = orig.select(*cols, F.lit(1).alias("_src")).unionByName(
+        comp.select(*cols, F.lit(2).alias("_src"))
+    )
+    per = tagged.groupBy(*cols).agg(
+        F.count(F.when(F.col("_src") == 1, 1)).alias("_co"),
+        F.count(F.when(F.col("_src") == 2, 1)).alias("_cc"),
+    )
+    return per.agg(
+        F.sum("_cc").alias("n_rows"),
+        F.count_distinct(
+            F.when(F.col("_cc") > 0, F.struct("band_hash"))
+        ).alias("n_bands"),
+        F.max(F.when(F.col("_co") != F.col("_cc"), 1).otherwise(0)).alias(
+            "mism"
+        ),
+    ).collect()[0]
+
+
 @query("dedup_index_compaction", oracle=_index_compaction_oracle())
 def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index MAINTENANCE — the file-count half of the append
@@ -1154,30 +1187,7 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     files_after = count_table_data_files(spark, dest)
 
     orig, comp = spark.table(name), spark.table(dest)
-    # ONE fused equivalence-probe job (round 14, guide §1.2): multiset
-    # equality + both compacted-table counts ride a single aggregation
-    # over a src-tagged union — previously FOUR eager jobs (two
-    # exceptAll emptiness probes, a count, a distinct count), each
-    # re-shuffling the band tables. Per-(row value) counts from both
-    # sides compare groupwise: all-equal <=> multiset equality, the
-    # exact check exceptAll gave.
-    cols = ["corpus_id", "band_idx", "band_hash"]
-    tagged = orig.select(*cols, F.lit(1).alias("_src")).unionByName(
-        comp.select(*cols, F.lit(2).alias("_src"))
-    )
-    per = tagged.groupBy(*cols).agg(
-        F.count(F.when(F.col("_src") == 1, 1)).alias("_co"),
-        F.count(F.when(F.col("_src") == 2, 1)).alias("_cc"),
-    )
-    probe = per.agg(
-        F.sum("_cc").alias("n_rows"),
-        F.count_distinct(
-            F.when(F.col("_cc") > 0, F.col("band_hash"))
-        ).alias("n_bands"),
-        F.max(F.when(F.col("_co") != F.col("_cc"), 1).otherwise(0)).alias(
-            "mism"
-        ),
-    ).collect()[0]
+    probe = compaction_probe(orig, comp)
     rows_match = (probe["mism"] or 0) == 0
     agg_plan = (
         comp.groupBy("band_hash")

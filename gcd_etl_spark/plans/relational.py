@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from gcd_etl_spark.functions.numeric import as_money, exact_avg, exact_sum
 from gcd_etl_spark.plans.registry import query
+from gcd_etl_spark.session import drop_zip_importers
 from gcd_etl_spark.sources.catalog import read_table
 
 
@@ -875,6 +876,7 @@ def pandas_grouped_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def stats(pdf: pd.DataFrame) -> pd.DataFrame:
         v = pdf["value"]
+        drop_zip_importers()
         return pd.DataFrame(
             {
                 "user_id": [pdf["user_id"].iloc[0]],

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcd_etl_spark.plans.registry import query
+from gcd_etl_spark.session import drop_zip_importers
 from gcd_etl_spark.sources.catalog import read_table, read_table_spread
 
 _TOKEN_RUNS_ORACLE = """
@@ -144,6 +145,7 @@ def arrow_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
                 names=["vec_id", "argmax_pos", "n_positive", "dim"],
             )
+        drop_zip_importers()
 
     emb = read_table_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return emb.mapInArrow(
@@ -244,6 +246,7 @@ def cogroup_pandas_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         key = left["key"].iloc[0] if len(left) else right["key"].iloc[0]
+        drop_zip_importers()
         return pd.DataFrame(
             {
                 "key": [int(key)],

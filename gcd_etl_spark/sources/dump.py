@@ -12,6 +12,7 @@ parquet, no database in the path:
       -> mapInPandas tuple tokenizer # Arrow-batched, per-slice local
       -> cast to declared schema     # try_cast semantics, typed nulls
       -> write partitioned parquet   # all analytics run off staging
+      -> read back, declared schema  # no schema-inference job
 
 Why line-splitting is safe: ``mysqldump`` emits one (extended) INSERT
 statement per line and escapes newlines inside string literals as
@@ -20,6 +21,18 @@ line boundaries — each executor tokenizes its own lines with no
 cross-partition state. The tokenizer is Python, but it is the ingest
 path (run once per dump, Arrow-batched); every downstream query runs
 on the staged parquet.
+
+At fixture scale a staged table costs its fixed overhead, not its
+tokenizing: the whole 13-table benchmark dump tokenizes in ~0.15 s of
+pure Python, while each ``stage_dump_table`` call pays a text scan, a
+Python task per split and a parquet write. So a call runs ONE Spark
+job (the read-back takes the declared schema instead of inferring it),
+builds its casts as one SQL-text projection, and its tokenizer tasks
+end with ``session.drop_zip_importers()``. Without that, each Python
+task in the worker would start by re-reading the directories of
+``pyspark.zip``, the py4j zip and the spark-core jar: ~220 ms of worker
+CPU per task, where a benchmark-scale tokenizer task's own work is a
+few tens of ms.
 
 ``mysqldump --tab`` TSV exports need none of this: read them with
 ``spark.read.csv(sep="\t", nullValue="\\N")`` (`stage_tsv_table`).
@@ -35,6 +48,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from gcd_etl_spark.session import drop_zip_importers
 
 # MySQL string-literal escapes (mysqldump output set).
 _UNESCAPE = {
@@ -266,11 +281,15 @@ def parse_insert_lines(
                         out.append(tup)
             if out:  # a batch may be all-skips; yield nothing then
                 yield pd.DataFrame({"fields": out})
+        drop_zip_importers()
 
     parsed = filtered.mapInPandas(_tok, schema="fields array<string>")
-    return parsed.select(
+    # One SQL-text projection: Column-by-Column casts cost ~60 gateway
+    # round trips per field to build.
+    return parsed.selectExpr(
         *[
-            F.col("fields").getItem(i).try_cast(fld.dataType).alias(fld.name)
+            f"try_cast(fields[{i}] AS {fld.dataType.simpleString()})"
+            f" AS `{fld.name.replace('`', '``')}`"
             for i, fld in enumerate(schema.fields)
         ]
     )
@@ -290,26 +309,30 @@ def stage_dump_table(
     of dump files; splittable; gz works but is one split — prefer
     uncompressed/zstd-seekable at scale) or an already-loaded
     single-column DataFrame. With ``out_path`` the result is also
-    written as snappy parquet staging. Pass ``metrics={}`` to receive
-    the tokenizer's dropped-line/tuple accumulators (see
+    written as snappy parquet staging and read back with the typed
+    schema (every column nullable, as parquet inference would give),
+    so the call runs one Spark job: the write. Pass ``metrics={}`` to
+    receive the tokenizer's dropped-line/tuple accumulators (see
     ``parse_insert_lines``).
     """
     lines = spark.read.text(dump) if isinstance(dump, str) else dump
     typed = parse_insert_lines(lines, table, schema, metrics=metrics)
     if out_path:
         typed.write.mode("overwrite").parquet(out_path)
-        return spark.read.parquet(out_path)
+        return spark.read.schema(typed.schema).parquet(out_path)
     return typed
 
 
 def stage_tsv_table(
     spark: SparkSession, path: str, schema: T.StructType, out_path: str | None = None
 ) -> DataFrame:
-    """``mysqldump --tab`` TSV export -> typed DataFrame (S1 fast path)."""
+    """``mysqldump --tab`` TSV export -> typed DataFrame (S1 fast path).
+    With ``out_path`` the staged parquet reads back with the declared
+    schema, like ``stage_dump_table``: no schema-inference job."""
     df = spark.read.csv(path, sep="\t", nullValue="\\N", schema=schema)
     if out_path:
         df.write.mode("overwrite").parquet(out_path)
-        return spark.read.parquet(out_path)
+        return spark.read.schema(df.schema).parquet(out_path)
     return df
 
 

@@ -4,6 +4,8 @@ correctness gate (row-count + schema + order-insensitive values)."""
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import math
 import os
 import sys
@@ -47,6 +49,26 @@ def duck():
             )
     yield con
     con.close()
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs started inside the block, by job group;
+    yields a one-element list that holds the count after the block."""
+    sc = spark.sparkContext
+    group = f"test-job-count-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group, False)
+    count = [0]
+    try:
+        yield count
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        count[0] = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def oracle_con(sf_dir: str):

@@ -9,6 +9,12 @@ negative/float bare tokens, parens and commas inside strings.
 
 from __future__ import annotations
 
+import datetime
+import json
+import os
+import subprocess
+import sys
+
 import pandas as pd
 import pytest
 from hypothesis import example, given, settings, strategies as st
@@ -24,6 +30,7 @@ from gcd_etl_spark.sources.dump import (
     stage_dump_table,
     stage_tsv_table,
 )
+from tests.conftest import spark_jobs
 
 
 def test_table_name_forms():
@@ -111,6 +118,118 @@ def test_tsv_staging(spark, tmp_path):
     )
     got = stage_tsv_table(spark, str(p), schema).collect()
     assert {(r.id, r.s) for r in got} == {(1, "a"), (2, None), (3, "c")}
+
+
+def _nullable(schema: T.StructType) -> T.StructType:
+    return T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields])
+
+
+def test_tsv_staging_reads_back_without_a_job(spark, tmp_path):
+    """With ``out_path`` the staged parquet reads back with the declared
+    schema: the write is the call's only Spark job (no schema-inference
+    job on read-back)."""
+    p = tmp_path / "t.tsv"
+    p.write_text("1\ta\n2\t\\N\n")
+    schema = T.StructType(
+        [T.StructField("id", T.LongType(), False), T.StructField("s", T.StringType())]
+    )
+    out = str(tmp_path / "staged")
+    with spark_jobs(spark) as jobs:
+        df = stage_tsv_table(spark, str(p), schema, out_path=out)
+    assert jobs[0] == 1
+    assert df.schema == spark.read.parquet(out).schema == _nullable(schema)
+    assert {(r.id, r.s) for r in df.collect()} == {(1, "a"), (2, None)}
+
+
+#: A microdump of one table with awkward column names: a malformed int
+#: and timestamp, a short tuple, a truncated tuple and another table's
+#: line. Only rows 1, 2 and 4 stage.
+_ODD_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType(), False),
+        T.StructField("select", T.StringType()),
+        T.StructField("we`ird name", T.IntegerType()),
+        T.StructField("ts", T.TimestampType()),
+    ]
+)
+_ODD_DUMP = (
+    "-- dump\n"
+    "INSERT INTO `t` VALUES (1,'a','5','2020-01-02 03:04:05'),(2,NULL,'x',NULL),(3,'c');\n"
+    "INSERT INTO `t2` VALUES (9,'t','9',NULL);\n"
+    "INSERT INTO `t` VALUES (4,'d,(e)',7,'not-a-time'),(5,'cut\n"
+)
+
+
+def test_staged_frame_schema_and_rows(spark, tmp_path):
+    """``stage_dump_table(out_path=...)`` returns exactly the declared
+    schema as nullable (the schema parquet inference gives back, names
+    that need quoting included) and the typed rows, and its only Spark
+    job is the write."""
+    (tmp_path / "dump.sql").write_text(_ODD_DUMP)
+    out = str(tmp_path / "staged")
+    metrics: dict = {}
+    with spark_jobs(spark) as jobs:
+        df = stage_dump_table(
+            spark, str(tmp_path / "dump.sql"), "t", _ODD_SCHEMA, out_path=out, metrics=metrics
+        )
+    assert jobs[0] == 1
+    assert df.schema == spark.read.parquet(out).schema == _nullable(_ODD_SCHEMA)
+    assert sorted(map(tuple, df.collect())) == [
+        (1, "a", 5, datetime.datetime(2020, 1, 2, 3, 4, 5)),
+        (2, None, None, None),
+        (4, "d,(e)", 7, None),
+    ]
+    assert metrics["arity_mismatch_tuples"].value == 1
+    assert metrics["truncated_tuples"].value == 1
+    assert metrics["other_table_lines"].value == 1  # `t2` passes the prefilter
+
+
+_ZIP_PROBE = """
+import json, sys
+from pyspark.sql import types as T
+from gcd_etl_spark.session import get_spark
+from gcd_etl_spark.sources.dump import stage_dump_table
+
+spark = get_spark("zip-probe", master="local[1]")
+
+def zip_importers(batches):
+    import sys, zipimport
+    n = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+    for b in batches:
+        yield b.assign(n=n)
+
+probe = spark.range(1).mapInPandas(zip_importers, "id long, n int")
+before = probe.first().n
+lines = spark.createDataFrame([("INSERT INTO `t` VALUES (1),(2);",)], "value string")
+schema = T.StructType([T.StructField("id", T.LongType())])
+staged = stage_dump_table(spark, lines, "t", schema).count()
+print(json.dumps([before, staged, probe.first().n]))
+spark.stop()
+"""
+
+
+def test_tokenizer_task_leaves_no_zip_importers():
+    """A tokenizer task ends with no ``zipimporter`` left in the worker's
+    ``sys.path_importer_cache``, so the next task in that worker does
+    not re-read any zip archive's directory when PySpark invalidates the
+    import caches. ``local[1]`` in a child process keeps every task on
+    one reused worker; the first probe shows the entries were there."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    res = subprocess.run(
+        [sys.executable, "-c", _ZIP_PROBE],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    before, staged, after = json.loads(res.stdout.strip().splitlines()[-1])
+    if before == 0:
+        pytest.skip("no zip archive on the Python workers' path")
+    assert staged == 2
+    assert after == 0
 
 
 # ------------------------------------------------ truncated tuples

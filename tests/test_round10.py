@@ -322,6 +322,22 @@ def test_index_compaction_one_file_per_bucket(spark, sf_smoke):
     assert count_table_data_files(spark, f"{name}_compact") == nb
 
 
+def test_compaction_probe_counts_null_band_hash(spark):
+    """The fused probe counts a NULL ``band_hash`` as one distinct band,
+    as ``distinct().count()`` does, and flags a multiset mismatch."""
+    from gcd_etl_spark.plans.dedup import compaction_probe
+
+    schema = "corpus_id long, band_idx int, band_hash long"
+    rows = [(1, 0, None), (2, 0, 5), (3, 0, 5), (4, 1, None)]
+    orig = spark.createDataFrame(rows, schema)
+    comp = spark.createDataFrame(rows[::-1], schema)
+    probe = compaction_probe(orig, comp)
+    assert probe["n_bands"] == comp.select("band_hash").distinct().count() == 2
+    assert probe["n_rows"] == 4
+    assert probe["mism"] == 0
+    assert compaction_probe(orig, comp.limit(3))["mism"] == 1
+
+
 # ------------------- gram-DF index update cycle (span-dedup lifecycle)
 
 
