@@ -9,6 +9,15 @@ these are the north-star extensions (BASELINE.json).
 ``ws_tokens`` and ``shingles`` take and return Spark SQL expression
 text (one JVM call per projection, see functions/scalar.py); the rest
 take a column name and return a Column.
+
+Bind once: a lambda body re-evaluates every outer expression it
+references once per ELEMENT, not once per row, and the optimizer
+inlines a projected column into the lambda that reads it. So a
+per-row array that a lambda indexes (the token array a shingle
+lambda slices) is bound once, as the variable of a one-element
+``transform(array(<per-row value>), v -> <body over v>)[0]``; a
+tokenizer written inside the per-shingle lambda would regex-split the
+whole document once per shingle.
 """
 
 from __future__ import annotations
@@ -136,15 +145,18 @@ def shingles(expr: str, k: int = 3) -> str:
     """Word k-shingles (n-grams joined by space), distinct.
 
     Building block for MinHash / Jaccard dedup. Pure expression:
-    transform-over-index + slice + array_join + array_distinct.
+    transform-over-index + slice + array_join + array_distinct. The
+    token array is bound once per row as the variable of a
+    one-element ``transform`` (see the module docstring). NULL text
+    gives ``[]``, like a document shorter than k.
     """
-    toks = ws_tokens(expr)
-    n = f"size({toks})"
-    # sequence(1, m) is DESCENDING when m < 1 — guard short docs. The
-    # lambda body embeds ``expr``, so its variable gets a name no
-    # caller's column is likely to carry.
+    # sequence(1, m) is DESCENDING when m < 1 — guard short docs.
     grams = (
-        f"transform(sequence(1, {n} - {k - 1}), "
-        f"shingle_start -> array_join(slice({toks}, shingle_start, {k}), ' '))"
+        f"transform(sequence(1, size(shingle_toks) - {k - 1}), "
+        f"shingle_start -> array_join(slice(shingle_toks, shingle_start, {k}), ' '))"
     )
-    return f"CASE WHEN {n} >= {k} THEN array_distinct({grams}) ELSE CAST(array() AS ARRAY<STRING>) END"
+    per_row = (
+        f"CASE WHEN size(shingle_toks) >= {k} THEN array_distinct({grams}) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+    return f"transform(array({ws_tokens(expr)}), shingle_toks -> {per_row})[0]"

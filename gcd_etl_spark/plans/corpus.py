@@ -46,16 +46,19 @@ def _safe_bigrams(toks, sep: str):
     engine parity on <= 1-token documents: zero bigrams, unigrams
     (when concatenated) untouched. Shared by every adjacent-pair site
     in this module — the bigram twins can never tokenize-pair
-    differently."""
-    return F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat(
-                F.element_at(toks, i), F.lit(sep), F.element_at(toks, i + 1)
+    differently. ``toks`` is bound once per row (functions/text.py,
+    "Bind once"): read inside the per-bigram lambda, it would be
+    re-tokenized twice per bigram."""
+    return F.transform(
+        F.array(toks),
+        lambda t: F.when(
+            F.size(t) >= 2,
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - 1),
+                lambda i: F.concat(F.element_at(t, i), F.lit(sep), F.element_at(t, i + 1)),
             ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+        ).otherwise(F.array().cast("array<string>")),
+    )[0]
 
 
 _DUCK_TOKS = (

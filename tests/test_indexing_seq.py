@@ -62,9 +62,12 @@ def test_cdc_chunks_partition_document(spark, sf_smoke):
         .withColumn("bs", bs)
         .withColumn(
             "rebuilt",
+            # bs is bound once as ``b``: indexed inside the per-chunk
+            # lambda, the inlined bs would redo the O(len) md5 cut
+            # scan once per chunk.
             F.expr(
-                "array_join(transform(sequence(1, size(bs) - 1),"
-                " j -> substr(text, bs[j - 1] + 1, bs[j] - bs[j - 1])), '')"
+                "transform(array(bs), b -> array_join(transform(sequence(1, size(b) - 1),"
+                " j -> substr(text, b[j - 1] + 1, b[j] - b[j - 1])), ''))[0]"
             ),
         )
     )

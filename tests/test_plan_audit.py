@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -108,15 +109,88 @@ def _formatted_plan(df) -> str:
     return buf.getvalue()
 
 
-@pytest.mark.parametrize(
-    "name", sorted(n for n in QUERIES if n not in _SKIP), ids=str
-)
-def test_no_accidental_nested_loop(spark, sf_smoke, name):
-    plan = _formatted_plan(QUERIES[name].build(spark, sf_smoke))
+_AUDITED = sorted(n for n in QUERIES if n not in _SKIP)
+
+
+@pytest.fixture(scope="module")
+def built() -> dict:
+    """Builds handed from the nested-loop audit to the lambda audit, so
+    the suite builds each query once; the lambda audit pops its entry."""
+    return {}
+
+
+@pytest.mark.parametrize("name", _AUDITED, ids=str)
+def test_no_accidental_nested_loop(spark, sf_smoke, built, name):
+    df = built[name] = QUERIES[name].build(spark, sf_smoke)
+    plan = _formatted_plan(df)
     quadratic = "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan
     if name in QUADRATIC_ANCHORS or name in SCALAR_BROADCASTS:
         return  # quadratic by design, or a 1-row broadcast (O(n))
     assert not quadratic, f"{name} plans a nested-loop/cartesian join:\n{plan}"
+
+
+# ------------------- row-invariant work inside a lambda
+# A lambda body re-evaluates every outer expression it references once
+# per ELEMENT, and the optimizer inlines a projected column into the
+# lambda that reads it. A tokenizer that a per-shingle lambda slices
+# re-split each document once per shingle (~42x per benchmark
+# document); the fix is to bind the per-row value once
+# (functions/text.py, "Bind once"). This audit fails any costly
+# subexpression in a lambda body that uses none of that lambda's
+# variables, read from the optimized plan's
+# ``lambdafunction(<body>, lambda <v>#<id>, ..., <hidden>)``.
+
+_CALL = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\(")
+#: Regex, split and hash functions; any call taking a lambda (a
+#: higher-order function) counts as costly too.
+_COSTLY = re.compile(
+    r"regexp\w*|rlike|split|md5|sha1|sha2|xxhash64|hash|crc32", re.IGNORECASE
+)
+_LAMBDA_TAIL = re.compile(r"((?:, lambda [^\s,()]+#\d+\w*)+), (?:true|false)$")
+
+
+def _close(s: str, i: int) -> int:
+    """Index of the parenthesis closing the one at ``s[i]``."""
+    depth = 0
+    for j in range(i, len(s)):
+        depth += {"(": 1, ")": -1}.get(s[j], 0)
+        if depth == 0:
+            return j
+    raise ValueError(f"unbalanced parentheses after {s[i:i + 80]!r}")
+
+
+def _row_invariant_lambda_work(plan: str) -> set[str]:
+    """Costly calls inside a lambda body that read none of its variables."""
+    found = set()
+    for m in re.finditer(r"lambdafunction\(", plan):
+        inner = plan[m.end() : _close(plan, m.end() - 1)]
+        tail = _LAMBDA_TAIL.search(inner)
+        assert tail, f"unparsed lambda: ...{inner[-200:]}"
+        body = inner[: tail.start()]
+        own = [re.escape(v) for v in re.findall(r"lambda (\S+)", tail.group(1))]
+        uses_own = re.compile(rf"lambda (?:{'|'.join(own)})\b")
+        for c in _CALL.finditer(body):
+            call = body[c.start() : _close(body, c.end() - 1) + 1]
+            costly = _COSTLY.fullmatch(c.group(1)) or (
+                c.group(1) != "lambdafunction" and "lambdafunction(" in call
+            )
+            if costly and not uses_own.search(call):
+                found.add(call)
+    return found
+
+
+@pytest.mark.parametrize("name", _AUDITED, ids=str)
+def test_no_row_invariant_work_in_lambda(spark, sf_smoke, built, name):
+    df = built.pop(name, None)
+    if df is None:
+        df = QUERIES[name].build(spark, sf_smoke)
+    # Unbounded field count: the default truncates projections past 25.
+    plan = df._jdf.queryExecution().optimizedPlan().treeString(True, False, 10**6, False, False)
+    found = _row_invariant_lambda_work(plan)
+    assert not found, (
+        f"{name} re-evaluates row-invariant work per lambda element; bind it "
+        "once outside the lambda:\n" + "\n".join(sorted(found)[:5])
+    )
 
 
 # ------------------- streaming STAGING subplans (round-13 item 3)

@@ -22,6 +22,7 @@ from gcd_etl_spark.functions.scalar import (
     sql_str,
     try_int,
 )
+from gcd_etl_spark.functions.text import shingles
 from gcd_etl_spark.gcd.credits import ATOMIC_FIELDS, CREDIT_TYPE_EXPANSION
 from gcd_etl_spark.sources.dump import sql_literal
 
@@ -119,6 +120,42 @@ def test_try_int_matches_java_semantics(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "v string")
     got = [r[0] for r in df.select(F.expr(try_int("v"))).collect()]
     want = [engine_parse(v) for v in values]
+    assert got == want
+
+
+def _shingles_model(value: str | None, k: int) -> list[str]:
+    """Spark ``trim`` (spaces only), split on Java's ASCII ``\\s+``,
+    drop empties; distinct k-grams in first-occurrence order; NULL ->
+    []."""
+    if value is None:
+        return []
+    toks = [t for t in re.split(f"{_JAVA_WS}+", value.strip(" ")) if t]
+    grams = (" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1))
+    return list(dict.fromkeys(grams))
+
+
+_SHINGLE_KS = (1, 2, 3, 5)
+
+# Few distinct words so grams repeat (array_distinct is exercised),
+# joined by runs of every Java-\s character plus look-alikes it must
+# NOT split on (NBSP, NEL).
+_shingle_texts = st.lists(
+    st.one_of(
+        st.sampled_from(["a", "b", "cd", "\xa0", "\x85"]),
+        st.text(alphabet=" \t\n\x0b\f\r", min_size=1, max_size=3),
+    ),
+    max_size=16,
+).map("".join)
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.one_of(st.none(), _shingle_texts, _texts), min_size=1, max_size=30))
+@example([None, "", "   ", "\ta b c", "a a a a a a", "a b a b a b"])
+def test_shingles_match_python_model(spark, values):
+    df = spark.createDataFrame([(v,) for v in values], "v string")
+    rows = df.select(*[F.expr(shingles("v", k)) for k in _SHINGLE_KS]).collect()
+    got = [list(r) for r in rows]
+    want = [[_shingles_model(v, k) for k in _SHINGLE_KS] for v in values]
     assert got == want
 
 

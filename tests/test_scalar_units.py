@@ -75,6 +75,13 @@ def test_shingles_and_tokens(spark):
     assert sh[0] == ["a b c", "b c d"]
     assert sh[1] == []  # shorter than k
     assert sh[2] == []
+    assert sh[3] == []  # NULL text
+
+
+def test_shingles_tokenize_once():
+    """The tokenizer is bound once per row, outside the per-shingle
+    lambda: written inside it, every shingle re-splits the document."""
+    assert shingles("v", 3).count("split(") == 1
 
 
 def test_snapshot_int():
