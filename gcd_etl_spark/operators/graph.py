@@ -1,7 +1,7 @@
 """Graph operators: fixed-budget PageRank over an edge DataFrame.
 
 Complements the connected-components operator (operators/dedup.py's
-min-label propagation): components give duplicate CLUSTERS, PageRank
+hook-and-jump rounds): components give duplicate CLUSTERS, PageRank
 gives node IMPORTANCE — the standard centrality signal a curation
 pipeline uses to weight sources/documents linked by citation,
 co-occurrence, or transaction edges.

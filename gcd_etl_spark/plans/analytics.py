@@ -360,11 +360,12 @@ def resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------ entity-cluster resolution
-#: Contraction rounds unrolled into the oracle SQL. Each round halves
-#: the remaining pointer depth (propagate-then-compress doubles the
-#: reach), so 20 rounds cover any component diameter up to ~2^20 —
-#: six orders of magnitude past the fixture's. The oracle FAILS LOUD
-#: if that ever stops being enough (poison row below).
+#: Rounds unrolled into the oracle SQL. Propagate-then-compress
+#: without a parent hook has no logarithmic round bound: a long chain
+#: with permuted ids can need far more rounds than log2 of its
+#: length. What the oracle guarantees is that it never blesses a
+#: half-propagated labeling: if 20 rounds are not enough, the poison
+#: row below fails the comparison loudly.
 _ENTITY_CC_ROUNDS = 20
 
 
@@ -389,7 +390,7 @@ def _entity_cluster_oracle() -> str:
     converged labeling is constant across every edge (the propagate
     step forces p(v) <= p(u) both ways) and idempotent (p(p(v)) =
     p(v) via the compression join), hence = the component's min id —
-    exactly what both Spark operators emit. Convergence is CHECKED,
+    exactly what the Spark operator emits. Convergence is CHECKED,
     not assumed: if the last two rounds differ anywhere, a poison row
     (-1, -1) is appended and the driver's row-count/hash compare
     fails loudly instead of silently blessing a half-propagated
@@ -457,18 +458,10 @@ WHERE EXISTS (SELECT 1 FROM p{last} a JOIN p{last - 1} b ON a.v = b.v
 _ENTITY_CLUSTER_ORACLE = _entity_cluster_oracle()
 
 
-@query("entity_clusters", oracle=_ENTITY_CLUSTER_ORACLE)
-def entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity RESOLUTION, not just matching: SymSpell fuzzy pairs
-    over the dirty customer names (operators/fuzzy.py) feed the
-    connected-components operator (operators/dedup.py), grouping
-    every record within transitive edit-distance-1 chains under one
-    canonical id — the dedup_clusters composition applied to the
-    entity-matching domain. The oracle restates the same components
-    as unrolled min-label pointer doubling over the same blocked pair
-    set (see _entity_cluster_oracle: O(edges) per round, so it is
-    checkable at sf0.1 where the r9-r10 transitive-closure CTE blew a
-    35-minute budget)."""
+def _entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SymSpell fuzzy pairs over the dirty customer names fed to the
+    connected-components operator: the one builder behind both entity
+    cluster queries."""
     from gcd_etl_spark.operators.dedup import connected_components
     from gcd_etl_spark.operators.fuzzy import symspell_join
 
@@ -487,36 +480,28 @@ def entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(pairs, r.select(F.col("id").alias("c_custkey")), id_col="c_custkey")
 
 
+@query("entity_clusters", oracle=_ENTITY_CLUSTER_ORACLE)
+def entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Entity RESOLUTION, not just matching: SymSpell fuzzy pairs
+    over the dirty customer names (operators/fuzzy.py) feed the
+    connected-components operator (operators/dedup.py), grouping
+    every record within transitive edit-distance-1 chains under one
+    canonical id — the dedup_clusters composition applied to the
+    entity-matching domain. The oracle restates the same components
+    as unrolled min-label pointer doubling over the same blocked pair
+    set (see _entity_cluster_oracle: O(edges) per round, so it is
+    checkable at sf0.1 where the r9-r10 transitive-closure CTE blew a
+    35-minute budget)."""
+    return _entity_clusters(spark, sf_dir)
+
+
 @query("entity_clusters_star", oracle=_ENTITY_CLUSTER_ORACLE)
 def entity_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """entity_clusters on the PRODUCTION components operator:
-    alternating large-star/small-star contraction
-    (operators/dedup.py::connected_components_star) instead of
-    min-label propagation. Propagation costs one shuffle round per
-    unit of component diameter — fine for shallow dup clusters, fatal
-    for the long chains real entity graphs grow at 100 TB; star
-    contraction converges in O(log n) rounds regardless of diameter
-    (round-5 verdict item 4). Same fuzzy pair derivation, same
-    pointer-doubling oracle, so the driver holds the fast operator to
-    the exact same cluster assignment."""
-    from gcd_etl_spark.operators.dedup import connected_components_star
-    from gcd_etl_spark.operators.fuzzy import symspell_join
-
-    cust = read_table(spark, sf_dir, "customer")
-    dirty_expr = F.concat(
-        F.expr("substr(c_name, 1, (10 + c_custkey % 9) - 1)"),
-        F.expr("substr(c_name, (10 + c_custkey % 9) + 1)"),
-    )
-    r = cust.select(
-        F.col("c_custkey").alias("id"),
-        F.when(F.col("c_custkey") % 3 == 0, F.col("c_name")).otherwise(dirty_expr).alias("s"),
-    )
-    pairs = symspell_join(r, r).where(F.col("l_id") < F.col("r_id")).select(
-        F.col("l_id").alias("id_a"), F.col("r_id").alias("id_b")
-    )
-    return connected_components_star(
-        pairs, r.select(F.col("id").alias("c_custkey")), id_col="c_custkey"
-    )
+    """entity_clusters under its second registered name: the engine
+    has one connected-components operator (hook-and-jump rounds,
+    operators/dedup.connected_components), so both names run the same
+    builder and answer to the same oracle."""
+    return _entity_clusters(spark, sf_dir)
 
 
 # --------------------------------------------- last-touch attribution

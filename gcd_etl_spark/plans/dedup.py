@@ -155,7 +155,7 @@ SELECT id AS doc_id, min(label) AS cluster_id FROM reach GROUP BY id
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS: connected components over the >=0.5-Jaccard
-    near-dup graph (min-label propagation; the oracle states the same
+    near-dup graph (hook-and-jump rounds; the oracle states the same
     components via a recursive CTE). The step after pair finding in a
     real corpus-curation pipeline — keep one doc per cluster_id.
     Size-guarded like its pair-finding sibling: this is the exact
@@ -450,9 +450,10 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: candidate generation shuffles only on band-bucket
     keys (never document pairs), the verify joins only the candidate
-    fraction of n^2, and component propagation is the driver-loop
-    min-label operator (operators/dedup.connected_components) whose
-    O(log n)-round star-contraction twin is the 100 TB path. Unlike
+    fraction of n^2, and the components come from the one driver-loop
+    operator (operators/dedup.connected_components), whose
+    hook-and-jump rounds track log n rather than the component
+    diameter and touch only edge endpoints. Unlike
     dedup_clusters (exact all-pairs anchor, broadcast quadratic),
     THIS plan's every stage is sub-quadratic — it is the production
     composition, and the full pipeline (banding, verify, closure,

@@ -514,36 +514,7 @@ def stream_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------- streaming dedup against the persisted corpus
-#: Corpus-bytes threshold past which the ingest gates SEMI-JOIN PRUNE
-#: the verify's corpus side to the batch's candidate ids BEFORE the
-#: per-batch feature projection (shingles / SRP quantization) — guide
-#: §3.2, round-14 verdict item 1. Below it the prune is a measured
-#: LOSS: the candidate checkpoint + extra broadcast build are fixed
-#: per-micro-batch job costs that exceed the fixture-scale feature
-#: compute they save (r13 measured +0.4–0.9 s/gate; r14 re-measured
-#: 6.59 -> 7.41 s fresh-JVM min-of-2 with the prune forced on at
-#: sf0.1's 584 KB corpus). Above it the prune is the 100 TB-correct
-#: shape: per-batch corpus-side work becomes O(candidates) compute
-#: over one pruned scan instead of O(corpus) feature compute — the
-#: threshold is an ABSOLUTE corpus size because the saved compute
-#: grows with the corpus while the prune's overhead is fixed per
-#: batch. 64 MiB ~= the point where the corpus-side projection
-#: (~0.5 s/GB/core measured) clearly dominates the ~0.1-0.2 s fixed
-#: cost.
-GATE_PRUNE_MIN_CORPUS_BYTES = 64 * 1024 * 1024
-
-
-def _gate_prune_corpus(sf_dir: str, table: str) -> bool:
-    """True when the gate verifies should candidate-prune the corpus
-    side (source bytes past GATE_PRUNE_MIN_CORPUS_BYTES)."""
-    from gcd_etl_spark.sources.sinks import source_table_bytes
-
-    return source_table_bytes(sf_dir, table) >= GATE_PRUNE_MIN_CORPUS_BYTES
-
-
-def delta_dedup_batch_fn(
-    docs: DataFrame, idx: DataFrame, out_root: str, prune: bool = False
-):
+def delta_dedup_batch_fn(docs: DataFrame, idx: DataFrame, out_root: str):
     """The foreachBatch worker for the streaming ingest gate, shared
     by the registered stream plan and the kill-and-restart test
     (tests/test_round10.py) so the replay semantics under test are
@@ -554,25 +525,16 @@ def delta_dedup_batch_fn(
     at-least-once redelivery (a replayed batch lands on the same path
     instead of appending duplicate verdict rows).
 
-    Round 13: the verify's delta side shingles only the BATCH instead
-    of the whole docs table (every id_a is a batch id). The corpus
-    side keeps the default corpus-wide shingle projection: it is
-    computed inside the broadcast build, i.e. parallel across cores
-    and ~0.3 s warm at sf0.1 — a once-per-run checkpointed corpus
-    frame was measured SLOWER (6.0 -> 7.0 s fresh-JVM min-of-2:
-    checkpoint setup + RDD-scan reads beat by the columnar
-    scan-project broadcast; OPTIMIZATION_r13.md).
-
-    Round 14 (verdict item 1): ``prune`` — on large corpora
-    (GATE_PRUNE_MIN_CORPUS_BYTES) the batch's candidate pairs are
+    The verify's delta side shingles only the BATCH instead of the
+    whole docs table (every id_a is a batch id). The corpus side is
+    pruned: the batch's candidate pairs are
     materialized ONCE (tiny localCheckpoint; also dedupes the
     candidate subtree between its two consumers) and the corpus side
     is LEFT-SEMI pruned to the candidate ids BEFORE the shingle
     projection, so per-batch corpus-side work is O(candidates), not
-    O(corpus) feature compute. Value-identical: the verify equi-join
-    on id_b already discards every non-candidate corpus row; the semi
-    join removes them earlier (guide §3.2). Off at fixture scale —
-    see the threshold note above."""
+    O(corpus) feature compute, at every corpus size. Value-identical:
+    the verify equi-join on id_b already discards every non-candidate
+    corpus row; the semi join removes them earlier (guide §3.2)."""
     from pyspark.sql import functions as F
 
     from gcd_etl_spark.operators import dedup as D
@@ -588,19 +550,15 @@ def delta_dedup_batch_fn(
                 F.col("delta_id").alias("id_a"), F.col("corpus_id").alias("id_b")
             )
             .distinct()
+            .localCheckpoint(eager=True)
         )
-        sets_b = None
-        if prune:
-            cand = cand.localCheckpoint(eager=True)
-            sets_b = D.shingle_sets(
-                docs.join(
-                    F.broadcast(
-                        cand.select(F.col("id_b").alias("doc_id")).distinct()
-                    ),
-                    "doc_id",
-                    "left_semi",
-                )
+        sets_b = D.shingle_sets(
+            docs.join(
+                F.broadcast(cand.select(F.col("id_b").alias("doc_id")).distinct()),
+                "doc_id",
+                "left_semi",
             )
+        )
         verified = D.jaccard_pairs(
             docs,
             cand,
@@ -683,9 +641,7 @@ def stream_dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty = _empty_seed(spark, "delta_id long, corpus_id long, jaccard double")
     empty.write.parquet(f"{out_root}/batch_id=-1")
 
-    dedup_batch = delta_dedup_batch_fn(
-        docs, idx, out_root, prune=_gate_prune_corpus(sf_dir, "documents")
-    )
+    dedup_batch = delta_dedup_batch_fn(docs, idx, out_root)
 
     stream = (
         spark.readStream.format("parquet")
@@ -725,9 +681,7 @@ def _srp_pruned_corpus_quant(spark, sf_dir: str, cand: DataFrame):
     return cand, q_b
 
 
-def semantic_gate_batch_fn(
-    spark, sf_dir: str, idx: DataFrame, out_root: str, prune: bool = False
-):
+def semantic_gate_batch_fn(spark, sf_dir: str, idx: DataFrame, out_root: str):
     """foreachBatch worker for the semantic ingest gate, shared with
     tests: SRP-bucket the batch's embeddings (one Arrow matmul over
     O(batch) rows), broadcast its (t, bk) rows against the persisted
@@ -735,14 +689,8 @@ def semantic_gate_batch_fn(
     batch's own batch_id-keyed partition dir (idempotent under
     at-least-once redelivery — the dedup gate's sink pattern).
 
-    Round 13: the verify's delta side quantizes only the BATCH
-    instead of the whole embeddings table (every delta_id is a batch
-    id); the corpus side keeps the default corpus-wide quant frame —
-    it is computed inside the broadcast/join build in parallel, and a
-    once-per-run checkpointed corpus frame measured slightly SLOWER
-    (see delta_dedup_batch_fn's note).
-
-    Round 14: ``prune`` — above GATE_PRUNE_MIN_CORPUS_BYTES the
+    The verify's delta side quantizes only the BATCH instead of the
+    whole embeddings table (every delta_id is a batch id), and the
     corpus-side quant frame is semi-join pruned to the batch's
     candidate ids (see delta_dedup_batch_fn / _srp_pruned_corpus_quant)."""
     from pyspark.sql import functions as F
@@ -764,9 +712,7 @@ def semantic_gate_batch_fn(
             .select("delta_id", "corpus_id")
             .dropDuplicates(["delta_id", "corpus_id"])
         )
-        q_b = None
-        if prune:
-            cand, q_b = _srp_pruned_corpus_quant(spark, sf_dir, cand)
+        cand, q_b = _srp_pruned_corpus_quant(spark, sf_dir, cand)
         _srp_verify_delta(
             spark, sf_dir, cand, q_a=_srp_quant_frame(batch), q_b=q_b
         ).write.mode("overwrite").parquet(f"{out_root}/batch_id={batch_id}")
@@ -824,10 +770,7 @@ def stream_semantic_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "delta_id long, corpus_id long, dot long, cos_ppm long"
     ).write.parquet(f"{out_root}/batch_id=-1")
 
-    gate = semantic_gate_batch_fn(
-        spark, sf_dir, idx, out_root,
-        prune=_gate_prune_corpus(sf_dir, "embeddings"),
-    )
+    gate = semantic_gate_batch_fn(spark, sf_dir, idx, out_root)
     stream = (
         spark.readStream.format("parquet")
         .schema(delta.schema)
@@ -841,18 +784,15 @@ def stream_semantic_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def semantic_gate_batch_fn_capped(
-    spark, sf_dir: str, idx: DataFrame, out_root: str, prune: bool = False
-):
+def semantic_gate_batch_fn_capped(spark, sf_dir: str, idx: DataFrame, out_root: str):
     """foreachBatch worker for the CAPPED semantic ingest gate: same
     sink pattern as semantic_gate_batch_fn, but candidates come from
     the probe-both-keys step shared with the nightly capped delta
     query (dedup._srp_capped_probe_cands), so the gate and the
     nightly boundary can never probe the capped index differently.
 
-    Round 13: the verify's delta side quantizes only the batch
-    (see semantic_gate_batch_fn's note). Round 14: ``prune`` — see
-    semantic_gate_batch_fn."""
+    The verify's delta side quantizes only the batch and its corpus
+    side is pruned to the candidate ids, as in semantic_gate_batch_fn."""
     from gcd_etl_spark.plans.dedup import (
         _srp_capped_probe_cands,
         _srp_quant_frame,
@@ -860,10 +800,9 @@ def semantic_gate_batch_fn_capped(
     )
 
     def gate_batch(batch: DataFrame, batch_id: int) -> None:
-        cand = _srp_capped_probe_cands(idx, batch)
-        q_b = None
-        if prune:
-            cand, q_b = _srp_pruned_corpus_quant(spark, sf_dir, cand)
+        cand, q_b = _srp_pruned_corpus_quant(
+            spark, sf_dir, _srp_capped_probe_cands(idx, batch)
+        )
         _srp_verify_delta(
             spark, sf_dir, cand, q_a=_srp_quant_frame(batch), q_b=q_b
         ).write.mode("overwrite").parquet(f"{out_root}/batch_id={batch_id}")
@@ -920,10 +859,7 @@ def stream_semantic_dedup_gate_capped(spark: SparkSession, sf_dir: str) -> DataF
         spark, "delta_id long, corpus_id long, dot long, cos_ppm long"
     ).write.parquet(f"{out_root}/batch_id=-1")
 
-    gate = semantic_gate_batch_fn_capped(
-        spark, sf_dir, idx, out_root,
-        prune=_gate_prune_corpus(sf_dir, "embeddings"),
-    )
+    gate = semantic_gate_batch_fn_capped(spark, sf_dir, idx, out_root)
     stream = (
         spark.readStream.format("parquet")
         .schema(delta.schema)

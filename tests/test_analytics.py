@@ -123,11 +123,6 @@ def test_grouped_split_has_no_leakage(spark, sf_smoke):
     assert multi == 0
 
 
-def test_entity_clusters_matches_oracle(spark, sf_smoke):
-    q = QUERIES["entity_clusters"]
-    assert_matches_oracle(q.build(spark, sf_smoke), q.oracle, sf_smoke, name=q.name)
-
-
 def test_entity_clusters_are_consistent(spark, sf_smoke):
     """Every record belongs to exactly one cluster; cluster ids are
     member ids (the minimum one)."""

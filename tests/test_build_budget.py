@@ -1,6 +1,6 @@
 """Driver-side build budgets: how many py4j gateway commands it takes
 to BUILD (not run) the benchmark-path plans, and how many Spark jobs a
-staged dump table costs.
+staged dump table and a connected-components call cost.
 
 Each ``pyspark.sql.functions`` call is about ten gateway round trips,
 so a wide projection built Column by Column costs thousands of them
@@ -33,6 +33,11 @@ BAND_TABLE_BUDGET = 250
 #: Gateway commands for one ``stage_dump_table`` of the 21-column
 #: ``gcd_issue`` with ``out_path``: build, write and read-back.
 STAGE_BUDGET = 400
+#: Spark jobs for one ``connected_components`` call and the collect
+#: of its result, on three stars plus a 5-node chain: the edge
+#: checkpoint, two rounds (the round's stage jobs and its one end-test
+#: action) and the final aggregate.
+CC_JOBS = 16
 
 
 #: py4j's "delete this object" command: Python-side garbage collection
@@ -98,3 +103,20 @@ def test_stage_dump_table_one_job_and_gateway_budget(spark, staged_tables, tmp_p
         stage_dump_table(spark, str(dump), "gcd_issue", issue.schema, out_path=out)
     assert jobs[0] == 1
     assert count[0] <= STAGE_BUDGET, count[0]
+
+
+def test_connected_components_job_budget(spark):
+    """Each round runs ONE action, its end test: a second action per
+    round, or a round more than hook-and-jump needs, lands above the
+    budget."""
+    stars = [(1, i) for i in range(2, 6)] + [(10, i) for i in range(11, 15)]
+    stars += [(20, i) for i in range(21, 24)]
+    chain = [(i, i + 1) for i in range(30, 34)]
+    pairs = spark.createDataFrame(stars + chain, "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in range(1, 40)], "doc_id long")
+    D.connected_components(pairs, nodes).collect()  # warm
+    with spark_jobs(spark) as jobs:
+        out = dict(map(tuple, D.connected_components(pairs, nodes).collect()))
+    assert out[5] == 1 and out[14] == 10 and out[23] == 20 and out[34] == 30
+    assert out[39] == 39
+    assert jobs[0] <= CC_JOBS, jobs[0]

@@ -33,11 +33,6 @@ def test_connected_components_long_chain(spark):
     assert set(out.values()) == {1}
 
 
-def test_dedup_clusters_oracle(spark):
-    q = QUERIES["dedup_clusters"]
-    assert_matches_oracle(q.build(spark, SF_SMOKE), q.oracle, SF_SMOKE, q.name)
-
-
 def test_cluster_ids_are_members(spark):
     out = QUERIES["dedup_clusters"].build(spark, SF_SMOKE)
     bad = out.where(F.col("cluster_id") > F.col("doc_id")).count()

@@ -1,94 +1,34 @@
-"""Round-6 additions: star-contraction connected components, the
-hub-capped link-prediction production path, and regression pins for
-the round-5 HUGEINT oracle fixes."""
+"""Round-6 additions: connected components in logarithmic rounds,
+and regression pins for the round-5 HUGEINT oracle fixes.
+
+The components tests began as pins of a large-star/small-star
+operator; they now hold the one ``connected_components`` operator
+(hook-and-jump rounds) to the same contract and to a union-find model.
+"""
 
 from __future__ import annotations
 
 import random
 
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from gcd_etl_spark.operators.dedup import (
-    connected_components,
-    connected_components_star,
-)
+from gcd_etl_spark.operators.dedup import connected_components
 from gcd_etl_spark.plans import QUERIES
 from tests.conftest import assert_matches_oracle
 
 
-# ------------------------------------------------------ star CC
+# ------------------------------------------------ connected components
 
 
 def _pairs_df(spark, pairs):
-    return spark.createDataFrame(
-        [(a, b) for a, b in pairs if a != b], "id_a long, id_b long"
-    )
+    return spark.createDataFrame(list(pairs), "id_a long, id_b long")
 
 
-def test_star_cc_matches_propagation_on_long_chain(spark):
-    """Diameter-60 chain: propagation needs ~60 rounds, star
-    contraction a handful — both must land identical labels."""
-    pairs = [(i, i + 1) for i in range(1, 61)]
-    nodes = spark.range(1, 100).select(F.col("id").alias("doc_id"))
-    pdf = _pairs_df(spark, pairs)
-    a = connected_components(pdf, nodes, id_col="doc_id", max_iter=70)
-    b = connected_components_star(pdf, nodes, id_col="doc_id")
-    diffs = (
-        a.alias("a")
-        .join(b.alias("b"), "doc_id")
-        .where(F.col("a.cluster_id") != F.col("b.cluster_id"))
-        .count()
-    )
-    assert diffs == 0
-    # chain members 1..61 all label 1; singletons 62..99 keep own id
-    got = {r["doc_id"]: r["cluster_id"] for r in b.collect()}
-    assert all(got[i] == 1 for i in range(1, 62))
-    assert all(got[i] == i for i in range(62, 100))
-
-
-def test_star_cc_matches_propagation_on_random_graph(spark):
-    random.seed(11)
-    pairs = [
-        (random.randint(1, 120), random.randint(1, 120)) for _ in range(150)
-    ]
-    nodes = spark.range(1, 151).select(F.col("id").alias("doc_id"))
-    pdf = _pairs_df(spark, pairs)
-    a = connected_components(pdf, nodes, id_col="doc_id", max_iter=60)
-    b = connected_components_star(pdf, nodes, id_col="doc_id")
-    assert (
-        a.alias("a")
-        .join(b.alias("b"), "doc_id")
-        .where(F.col("a.cluster_id") != F.col("b.cluster_id"))
-        .count()
-        == 0
-    )
-
-
-def test_star_cc_empty_edge_set(spark):
-    nodes = spark.range(1, 6).select(F.col("id").alias("doc_id"))
-    pdf = _pairs_df(spark, [])
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components_star(pdf, nodes, id_col="doc_id").collect()
-    }
-    assert got == {i: i for i in range(1, 6)}
-
-
-def test_star_cc_round_count_beats_diameter(spark, monkeypatch):
-    """A diameter-40 chain must converge in far fewer than 40
-    contraction rounds — the whole point of the operator. max_iter=8
-    would make propagation fail; star contraction sails through."""
-    pairs = [(i, i + 1) for i in range(1, 41)]
-    nodes = spark.range(1, 42).select(F.col("id").alias("doc_id"))
-    pdf = _pairs_df(spark, pairs)
-    out = connected_components_star(pdf, nodes, id_col="doc_id", max_iter=8)
-    assert out.where(F.col("cluster_id") != 1).count() == 0
-
-
-def _union_find_labels(n_nodes, pairs):
+def _union_find_labels(ids, pairs):
     """Pure-Python ground truth: min-member label per component."""
-    parent = list(range(n_nodes + 1))
+    parent = {i: i for i in ids}
 
     def find(x):
         while parent[x] != x:
@@ -100,13 +40,45 @@ def _union_find_labels(n_nodes, pairs):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    return {i: find(i) for i in range(1, n_nodes + 1)}
+    return {i: find(i) for i in ids}
+
+
+def _labels(spark, pairs, ids, **kw):
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    rows = connected_components(_pairs_df(spark, pairs), nodes, id_col="doc_id", **kw).collect()
+    got = {r["doc_id"]: r["cluster_id"] for r in rows}
+    assert len(got) == len(rows), "one row per distinct id"
+    return got
+
+
+def test_star_cc_empty_edge_set(spark):
+    got = _labels(spark, [], range(1, 6))
+    assert got == {i: i for i in range(1, 6)}
+
+
+def test_star_cc_round_count_beats_diameter(spark):
+    """A diameter-40 chain must converge in far fewer than 40 rounds.
+    max_iter=8 makes one-hop-per-round propagation fail."""
+    got = _labels(spark, [(i, i + 1) for i in range(1, 41)], range(1, 42), max_iter=8)
+    assert set(got.values()) == {1}
+
+
+def test_cc_permuted_chain_converges_in_log_rounds(spark):
+    """A 10,000-node chain with randomly permuted ids converges within
+    2 * ceil(log2 n) = 28 rounds. Propagation without a parent hook
+    needs one round per unit of diameter (or, with pointer jumping
+    alone, still far more than 28 rounds on permuted ids)."""
+    n = 10_000
+    ids = list(range(1, n + 1))
+    random.Random(7).shuffle(ids)
+    got = _labels(spark, zip(ids, ids[1:]), ids, max_iter=28)
+    assert len(got) == n and set(got.values()) == {1}
 
 
 def test_star_cc_matches_union_find_on_many_random_graphs(spark):
-    """Property sweep against an independent union-find model (not
-    just the propagation operator): one Spark run per topology class —
-    dense blob, two chains, bipartite-ish stripes, self-loop-heavy."""
+    """Property sweep against an independent union-find model: one
+    Spark run per topology class — dense blob, two chains,
+    bipartite-ish stripes, self-loop-heavy."""
     random.seed(23)
     topologies = {
         "blob": [(random.randint(1, 40), random.randint(1, 40)) for _ in range(120)],
@@ -116,28 +88,35 @@ def test_star_cc_matches_union_find_on_many_random_graphs(spark):
         "loopy": [(i, i) for i in range(1, 20)]
         + [(random.randint(1, 30), random.randint(1, 30)) for _ in range(25)],
     }
+    ids = range(1, 91)
     for name, pairs in topologies.items():
-        n = 90
-        want = _union_find_labels(n, [(a, b) for a, b in pairs if a != b])
-        nodes = spark.range(1, n + 1).select(F.col("id").alias("doc_id"))
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in connected_components_star(
-                _pairs_df(spark, pairs), nodes, id_col="doc_id"
-            ).collect()
-        }
-        assert got == want, f"topology {name}"
+        assert _labels(spark, pairs, ids) == _union_find_labels(ids, pairs), name
 
 
-# -------------------------------------- registered query parity
+@st.composite
+def _graphs(draw):
+    """(node ids with repeats, pairs over those ids): isolated nodes,
+    self-pairs and duplicate pairs all occur; ids are unsorted and
+    sparse, so the component minimum sits anywhere on a path."""
+    ids = draw(st.lists(st.integers(-(10**12), 10**12), min_size=1, max_size=40, unique=True))
+    node = st.sampled_from(ids)
+    pairs = draw(st.lists(st.tuples(node, node), max_size=60))
+    repeats = draw(st.lists(node, max_size=5))
+    return ids + repeats, pairs
 
 
-@pytest.mark.parametrize(
-    "name", ["entity_clusters_star", "graph_link_prediction_capped"]
-)
-def test_round6_queries_match_oracle(spark, sf_smoke, name):
-    q = QUERIES[name]
-    assert_matches_oracle(q.build(spark, sf_smoke), q.oracle, sf_smoke, name=name)
+#: A 40-node path over permuted ids (17 is a unit mod 41): diameter
+#: 39, past the default max_iter of 25 for one-hop-per-round labels.
+_PERMUTED_PATH = [i * 17 % 41 for i in range(1, 41)]
+
+
+@settings(max_examples=5, deadline=None)
+@given(_graphs())
+@example(([1, 2, 3, 4, 5, 2, 2], [(1, 1), (2, 3), (3, 2), (2, 3), (5, 4)]))
+@example((_PERMUTED_PATH, list(zip(_PERMUTED_PATH, _PERMUTED_PATH[1:]))))
+def test_cc_matches_union_find_property(spark, graph):
+    ids, pairs = graph
+    assert _labels(spark, pairs, ids) == _union_find_labels(set(ids), pairs)
 
 
 # --------------------------- HUGEINT oracle regression pins (r5)

@@ -4,10 +4,11 @@ value-transparent.
 C11 — the fused training sample (ONE bounded collect feeding the
 Lloyd init, the PQ codebook sample, and the emptiness probe) must
 produce BIT-identical centroids/codebooks to the separate-jobs path.
-C13 — connected_components' sum-probe convergence must keep the exact
-semantics (values, singleton handling) and the loud non-convergence
-contract (covered in test_advice_r2.py; here: a fixpoint reached in
-round 1 must still converge under the probe).
+C13 — connected_components' one-action-per-round end test must keep
+the exact semantics (values, singleton handling) and the loud
+non-convergence contract (covered in test_advice_r2.py; here: a
+labeling that is already final must end the loop, and a chain must
+not end it early).
 C14 — the tagged-union dictionary collect must equal the per-table
 collects map-for-map, including the flag-elided table.
 """
@@ -67,10 +68,10 @@ def test_fused_sample_empty_corpus(spark):
     assert train_coarse_centroids(empty, n_cells=4, dim=8).shape == (0, 8)
 
 
-def test_cc_sum_probe_converges_at_fixpoint(spark):
-    """An already-labeled star (all edges to node 0) reaches the
-    fixpoint in one round; the sum probe must detect it and the
-    labels must equal the transitive closure."""
+def test_cc_end_test_converges_at_fixpoint(spark):
+    """An already-labeled star (all edges to node 0) is final after
+    its start labels; the end test must detect it and the labels must
+    equal the transitive closure."""
     pairs = spark.createDataFrame(
         [(0, i) for i in range(1, 5)], "id_a long, id_b long"
     )
@@ -82,10 +83,10 @@ def test_cc_sum_probe_converges_at_fixpoint(spark):
     assert out == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 5}
 
 
-def test_cc_sum_probe_chain_semantics(spark):
-    """A 5-node chain (diameter 4) needs several propagation rounds;
-    the sum probe must not declare convergence early (every node must
-    reach label 10)."""
+def test_cc_end_test_chain_semantics(spark):
+    """A 5-node chain (diameter 4) needs more than one round; the end
+    test must not declare convergence early (every node must reach
+    label 10)."""
     ids = [10, 11, 12, 13, 14]
     pairs = spark.createDataFrame(
         [(a, b) for a, b in zip(ids, ids[1:])], "id_a long, id_b long"

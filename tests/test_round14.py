@@ -7,8 +7,6 @@ round-13 verdict/advice must hold.
 * advice r13 — an undersized caller-supplied training sample falls
   back to a fresh collect instead of silently training on fewer rows;
   a legitimately-short sample from a small corpus does NOT re-collect.
-* advice r13 — the connected-components decimal-sum convergence probe
-  fails loudly when the sum goes NULL on a non-empty frame.
 * advice r14 — the spread decision re-decides when the file-split
   settings change.
 """
@@ -16,7 +14,6 @@ round-13 verdict/advice must hold.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from gcd_etl_spark.operators.similarity import (
     PQ_TRAIN_SAMPLE,
@@ -157,41 +154,18 @@ def test_sample_covers_semantics():
     assert not _sample_covers([1, 2, 3], 4)  # untagged short list
 
 
-# --------------------------------- CC overflow loud-failure contract
-def test_cc_null_sum_on_nonempty_raises(spark, monkeypatch):
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.operators import dedup as D
-
-    nodes = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    # simulate a decimal-overflow NULL sum by poisoning the round's
-    # label union to all-NULL labels (Spark 4: patch the CONCRETE
-    # DataFrame class — the pyspark.sql.DataFrame base is abstract)
-    cls = type(nodes)
-    real_union = cls.unionByName
-
-    def poison(self, other, *a, **k):
-        out = real_union(self, other, *a, **k)
-        if "_nid" not in out.columns:
-            return out
-        return out.select("_nid", F.lit(None).cast("long").alias("label"))
-
-    monkeypatch.setattr(cls, "unionByName", poison)
-    with pytest.raises(RuntimeError, match="overflow"):
-        D.connected_components(pairs, nodes)
-
-
 # --------------------- gate semi-join prune (round-14 verdict item 1)
 def test_gate_prune_value_identical_and_plan_pruned(spark, sf_smoke, tmp_path):
-    """The thresholded candidate-id semi-join prune on the gate
-    verify's corpus side (guide §3.2): with prune FORCED ON the
-    production batch worker must emit byte-identical verdicts to the
-    unpruned worker, and the pruned verify plan must show the corpus
-    shingle projection ABOVE a LeftSemi join on the candidate ids
-    (the O(corpus) per-batch feature compute becomes O(candidates))."""
+    """The candidate-id semi-join prune on the gate verify's corpus
+    side (guide §3.2): the production batch worker, fed the whole
+    delta as one batch, must emit exactly the rows of the unpruned
+    nightly query (dedup_delta_vs_corpus), and the pruned verify plan
+    must show the corpus shingle projection ABOVE a LeftSemi join on
+    the candidate ids (the O(corpus) per-batch feature compute becomes
+    O(candidates))."""
     import pyspark.sql.functions as F
 
+    from gcd_etl_spark.plans import QUERIES
     from gcd_etl_spark.plans.dedup import DELTA_MOD, ensure_corpus_band_index
     from gcd_etl_spark.plans.streaming_plans import delta_dedup_batch_fn
     from gcd_etl_spark.sources.catalog import read_table_spread
@@ -201,16 +175,12 @@ def test_gate_prune_value_identical_and_plan_pruned(spark, sf_smoke, tmp_path):
     idx = ensure_corpus_band_index(spark, sf_smoke, docs.where(~is_delta))
     batch = docs.where(is_delta)
 
-    out_plain = str(tmp_path / "plain")
-    out_pruned = str(tmp_path / "pruned")
-    delta_dedup_batch_fn(docs, idx, out_plain)(batch, 0)
-    delta_dedup_batch_fn(docs, idx, out_pruned, prune=True)(batch, 0)
-
-    rows = lambda p: sorted(  # noqa: E731
-        map(tuple, spark.read.parquet(f"{p}/batch_id=0").collect())
-    )
-    assert rows(out_plain) == rows(out_pruned)
-    assert rows(out_plain), "vacuous: the smoke fixture found no dups"
+    out = str(tmp_path / "gate")
+    delta_dedup_batch_fn(docs, idx, out)(batch, 0)
+    gate = sorted(map(tuple, spark.read.parquet(f"{out}/batch_id=0").collect()))
+    nightly = QUERIES["dedup_delta_vs_corpus"].build(spark, sf_smoke)
+    assert gate == sorted(map(tuple, nightly.collect()))
+    assert gate, "vacuous: the smoke fixture found no dups"
 
     # plan evidence: the pruned corpus side carries a LeftSemi join
     from gcd_etl_spark.operators import dedup as D
@@ -231,10 +201,12 @@ def test_gate_prune_value_identical_and_plan_pruned(spark, sf_smoke, tmp_path):
 
 
 def test_semantic_gate_prune_value_identical(spark, sf_smoke, tmp_path):
-    """Same prune pin for the CAPPED semantic gate worker: forced-on
-    prune emits byte-identical verdicts."""
+    """Same pin for the CAPPED semantic gate worker: with its corpus
+    side pruned it emits exactly the rows of the unpruned nightly
+    capped query."""
     import pyspark.sql.functions as F
 
+    from gcd_etl_spark.plans import QUERIES
     from gcd_etl_spark.plans.dedup import DELTA_MOD, ensure_srp_bucket_index
     from gcd_etl_spark.plans.streaming_plans import semantic_gate_batch_fn_capped
     from gcd_etl_spark.sources.catalog import read_table_spread
@@ -244,23 +216,11 @@ def test_semantic_gate_prune_value_identical(spark, sf_smoke, tmp_path):
     idx = ensure_srp_bucket_index(spark, sf_smoke, emb.where(~is_delta), capped=True)
     batch = emb.where(is_delta)
 
-    out_plain = str(tmp_path / "plain")
-    out_pruned = str(tmp_path / "pruned")
-    semantic_gate_batch_fn_capped(spark, sf_smoke, idx, out_plain)(batch, 0)
-    semantic_gate_batch_fn_capped(spark, sf_smoke, idx, out_pruned, prune=True)(
-        batch, 0
+    out = str(tmp_path / "gate")
+    semantic_gate_batch_fn_capped(spark, sf_smoke, idx, out)(batch, 0)
+    gate = spark.read.parquet(f"{out}/batch_id=0")
+    nightly = QUERIES["dedup_semantic_delta_vs_corpus_capped"].build(spark, sf_smoke)
+    rows = lambda df: sorted(  # noqa: E731
+        map(tuple, df.select("delta_id", "corpus_id", "dot", "cos_ppm").collect())
     )
-    rows = lambda p: sorted(  # noqa: E731
-        map(tuple, spark.read.parquet(f"{p}/batch_id=0").collect())
-    )
-    assert rows(out_plain) == rows(out_pruned)
-
-
-def test_gate_prune_threshold_off_at_fixture_scale():
-    """The prune must NOT fire at fixture scale (it is a measured loss
-    there — the threshold exists exactly so the bench's gate plans
-    stay the measured optimum)."""
-    from gcd_etl_spark.plans.streaming_plans import _gate_prune_corpus
-
-    assert not _gate_prune_corpus("/root/testdata/sf0.1", "documents")
-    assert not _gate_prune_corpus("/root/testdata/sf0.1", "embeddings")
+    assert rows(gate) == rows(nightly)

@@ -1,7 +1,6 @@
 """Round-7 additions: the link-prediction recall gate (moved out of
 the registered plan — round-6 verdict item 2), the capped production
-query and the CDC incremental flagship against their oracles, and the
-star-contraction convergence hardening."""
+query and the CDC incremental flagship against their oracles."""
 
 from __future__ import annotations
 
@@ -76,28 +75,6 @@ def test_cdc_incremental_carries_and_rebuilds(spark, sf_smoke):
         F.col("mod_bucket") < F.lit(max(buckets))
     )
     assert carried.limit(1).count() == 1, "carried partition is empty"
-
-
-# --------------------- star contraction: convergence confirmation
-
-
-def test_star_contraction_survives_colliding_signature(spark, monkeypatch):
-    """A signature collision between two DIFFERENT consecutive edge
-    sets must not terminate contraction early with wrong labels
-    (round-6 verdict item 7). Force the worst case — every round's
-    signature identical — and require the exact fixed-point
-    confirmation to keep iterating until the true answer."""
-    import gcd_etl_spark.operators.dedup as od
-
-    monkeypatch.setattr(od, "_edge_signature", lambda edges: (0, 0))
-    # a 60-node chain: diameter is high, so propagation-style logic
-    # that stopped at the first "matching" signature would mislabel
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 60)], "id_a long, id_b long"
-    )
-    nodes = spark.range(1, 61).select(F.col("id").alias("doc_id"))
-    out = od.connected_components_star(pairs, nodes, id_col="doc_id").collect()
-    assert all(r["cluster_id"] == 1 for r in out)
 
 
 # ------------- xxhash rows-only queries pinned to their md5 twins
