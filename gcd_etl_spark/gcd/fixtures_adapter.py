@@ -211,16 +211,17 @@ def derivation_sql(d: _Dialect, src: dict[str, str]) -> dict[str, str]:
     }
 
 
+#: The fixture tables the GCD derivations read.
+FIXTURE_TABLES = ("region", "nation", "customer", "supplier", "orders", "lineitem")
+
+
 def gcd_tables_from_fixtures(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Spark side: each derivation as one spark.sql over the fixture
     parquet (read directly — no temp-view global state). Each call
     builds fresh frames, so a caller may replace entries in the
     returned dict (gcd_snapshot_from_dump swaps in dump-parsed frames,
     the bucketed variant swaps in staged tables)."""
-    src = {
-        t: f"parquet.`{sf_dir}/{t}.parquet`"
-        for t in ("region", "nation", "customer", "supplier", "orders", "lineitem")
-    }
+    src = {t: f"parquet.`{sf_dir}/{t}.parquet`" for t in FIXTURE_TABLES}
     sqls = derivation_sql(SPARK, src)
     return {name: spark.sql(sqls[name]) for name in GCD_INPUT_TABLES}
 
@@ -228,6 +229,6 @@ def gcd_tables_from_fixtures(spark: SparkSession, sf_dir: str) -> dict[str, Data
 def gcd_fixture_ctes() -> str:
     """DuckDB side: the same derivations as a CTE block (the driver
     pre-registers fixture views under their plain names)."""
-    src = {t: t for t in ("region", "nation", "customer", "supplier", "orders", "lineitem")}
+    src = {t: t for t in FIXTURE_TABLES}
     sqls = derivation_sql(DUCK, src)
     return ",\n".join(f"{name} AS ({sql})" for name, sql in sqls.items()) + ",\n"

@@ -1427,11 +1427,10 @@ _SHUFFLE_WRITE_RUN_ID = __import__("uuid").uuid4().hex[:8]
 
 def shuffle_shards_staging_path(sf_dir: str) -> str:
     """The run-unique staging directory for the materialized epoch
-    shuffle: /tmp/gcd_etl_shards_<sf-basename>_<per-process-uuid>."""
-    import os as _os
+    shuffle: /tmp/gcd_etl_shards_<sf-tag>_<per-process-uuid>."""
+    from gcd_etl_spark.sources.catalog import sf_tag
 
-    tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return f"/tmp/gcd_etl_shards_{tag}_{_SHUFFLE_WRITE_RUN_ID}"
+    return f"/tmp/gcd_etl_shards_{sf_tag(sf_dir)}_{_SHUFFLE_WRITE_RUN_ID}"
 
 
 @query("corpus_shuffle_shards_write", oracle=_SHUFFLE_ORACLE)
@@ -1489,25 +1488,13 @@ def ensure_bigram_lm_index(
     UNSEEN continuation, -ln(1/(c(p·)+V)) — plus one sentinel row
     (p = '') carrying the unknown-context cost ln(V). Both bucketed
     on their probe key."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    fp = table_fingerprint(sf_dir, "documents")
-    costs_name = f"bigram_lm_costs_{tag}_{fp}"
-    ctx_name = f"bigram_lm_ctx_{tag}_{fp}"
-    if not (
-        spark.catalog.tableExists(costs_name)
-        and spark.catalog.tableExists(ctx_name)
-    ):
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for n in (costs_name, ctx_name):
-            _shutil.rmtree(_os.path.join(warehouse, n.lower()), ignore_errors=True)
+    costs_name = staged_name("bigram_lm_costs", sf_dir, "documents")
+    ctx_name = staged_name("bigram_lm_ctx", sf_dir, "documents")
+
+    def stage() -> None:
         toks = F.filter(F.split(F.lower("text"), _TOKEN_SPLIT), lambda x: x != "")
         sep = "\x1f"
         bigrams = _safe_bigrams(toks, sep)
@@ -1559,6 +1546,8 @@ def ensure_bigram_lm_index(
         write_bucketed_table(
             ctx.unionByName(sentinel), ctx_name, ["p"], n_buckets=nb, sort_cols=["p"]
         )
+
+    ensure_staged(spark, [costs_name, ctx_name], stage)
     return spark.table(costs_name), spark.table(ctx_name)
 
 
@@ -1965,17 +1954,12 @@ def ensure_dsir_model(
     computing it means a full corpus_docs pass on EVERY probe run
     just to resolve the table name — at 100 TB that is a nightly
     corpus scan purchasing nothing the explicit tag doesn't."""
-    import os as _os
     import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
 
     from gcd_etl_spark.operators.dedup import portable_hash64
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    fp = table_fingerprint(sf_dir, "documents")
     if not filter_tag:
         raise ValueError(
             "ensure_dsir_model requires an explicit filter_tag naming the "
@@ -1983,10 +1967,9 @@ def ensure_dsir_model(
             "for the standing-corpus convention)"
         )
     ftag = f"_{_re.sub(r'[^A-Za-z0-9_]', '_', filter_tag)}"
-    name = f"dsir_model_{tag}{ftag}_{fp}"
-    if not spark.catalog.tableExists(name):
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
+    name = staged_name("dsir_model", sf_dir, "documents") + ftag
+
+    def stage() -> None:
         toks = F.filter(F.split(F.lower("text"), _TOKEN_SPLIT), lambda x: x != "")
         sep = "\x1f"
         bigrams = _safe_bigrams(toks, sep)
@@ -2047,6 +2030,8 @@ def ensure_dsir_model(
             n_buckets=16,
             sort_cols=["bucket"],
         )
+
+    ensure_staged(spark, [name], stage)
     return spark.table(name)
 
 

@@ -300,33 +300,21 @@ WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
 def ensure_corpus_band_index(
     spark: SparkSession, sf_dir: str, corpus_docs: DataFrame
 ) -> DataFrame:
-    """The persisted corpus LSH band index, staged once per sf dir as
-    a band_hash-bucketed table (ingest-side cost, idempotent) and read
-    back on every use. Shared by the nightly delta path
-    (dedup_delta_vs_corpus) and its streaming form
+    """The persisted corpus LSH band index, staged once per input
+    fingerprint as a band_hash-bucketed table (ingest-side cost,
+    idempotent) and read back on every use. Shared by the nightly
+    delta path (dedup_delta_vs_corpus) and its streaming form
     (stream_dedup_against_corpus) so the two can never index
     differently."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import (
         suggest_bucket_count_for,
         write_bucketed_table,
     )
 
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    name = staged_name("corpus_band_idx", sf_dir, "documents")
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    # Staleness key (round-10 ADVICE): the staged name carries a
-    # fingerprint of the documents table's data files, so a changed
-    # corpus under the same sf_dir — or a different sf_dir sharing a
-    # basename — can never be served a stale index.
-    name = f"corpus_band_idx_{tag}_{table_fingerprint(sf_dir, 'documents')}"
-    if not spark.catalog.tableExists(name):
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
+    def stage() -> None:
         corpus_bands = D.minhash_band_table(corpus_docs, portable=True).select(
             F.col("_id").alias("corpus_id"), "band_idx", "band_hash"
         )
@@ -339,6 +327,8 @@ def ensure_corpus_band_index(
             n_buckets=suggest_bucket_count_for(sf_dir, "documents"),
             sort_cols=["band_hash"],
         )
+
+    ensure_staged(spark, [name], stage)
     return spark.table(name)
 
 
@@ -643,22 +633,15 @@ def ensure_gram_df_index(
     Lee-et-al exact-substring scorer). Staged once per (sf dir, data
     fingerprint), idempotent; df = number of distinct corpus docs
     containing the gram."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import (
         suggest_bucket_count_for,
         write_bucketed_table,
     )
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    name = f"gram_df_idx_{tag}_{table_fingerprint(sf_dir, 'documents')}"
-    if not spark.catalog.tableExists(name):
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
+    name = staged_name("gram_df_idx", sf_dir, "documents")
+
+    def stage() -> None:
         gdf = (
             _crossdoc_gram_table(corpus_docs)
             .groupBy("gram")
@@ -671,6 +654,8 @@ def ensure_gram_df_index(
             n_buckets=suggest_bucket_count_for(sf_dir, "documents"),
             sort_cols=["gram"],
         )
+
+    ensure_staged(spark, [name], stage)
     return spark.table(name)
 
 
@@ -782,11 +767,7 @@ def dedup_gram_index_update_cycle(spark: SparkSession, sf_dir: str) -> DataFrame
     materialized BEFORE the append. Cycle table rebuilt per run BY
     DESIGN (the subject is the update; the amortized staged-once
     contract is dedup_crossdoc_delta's pin)."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
+    from gcd_etl_spark.sources.catalog import drop_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
     docs = read_table_spread(spark, sf_dir, "documents")
@@ -795,11 +776,8 @@ def dedup_gram_index_update_cycle(spark: SparkSession, sf_dir: str) -> DataFrame
     is_n1 = F.col("doc_id") % m2 == 0
     is_n2 = is_delta & ~is_n1
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    name = f"gram_df_idx_cycle_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
+    name = staged_name("gram_df_idx_cycle", sf_dir)
+    drop_staged(spark, name)
     corpus_gdf = (
         _crossdoc_gram_table(docs.where(~is_delta))
         .groupBy("gram")
@@ -1004,11 +982,7 @@ def dedup_index_append_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY DESIGN — the amortized staged-once contract is
     dedup_delta_vs_corpus's pin; this query's subject is the append
     itself."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
+    from gcd_etl_spark.sources.catalog import drop_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
     docs = read_table_spread(spark, sf_dir, "documents")
@@ -1017,11 +991,8 @@ def dedup_index_append_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_n1 = F.col("doc_id") % m2 == 0
     is_n2 = is_delta & ~is_n1
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    name = f"corpus_band_idx_cycle_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
+    name = staged_name("corpus_band_idx_cycle", sf_dir)
+    drop_staged(spark, name)
     corpus_bands = D.minhash_band_table(docs.where(~is_delta), portable=True).select(
         F.col("_id").alias("corpus_id"), "band_idx", "band_hash"
     )
@@ -1141,11 +1112,7 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag, and a zero-exchange co-location probe on the compacted
     table. Rebuilt per run BY DESIGN (the subject is the rewrite);
     assumes a non-empty corpus like the rest of the cycle family."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
+    from gcd_etl_spark.sources.catalog import drop_staged, staged_name
     from gcd_etl_spark.sources.sinks import (
         compact_bucketed_table,
         count_table_data_files,
@@ -1157,11 +1124,8 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_delta = F.col("doc_id") % DELTA_MOD == 0
     is_n1 = F.col("doc_id") % m2 == 0
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    name = f"corpus_band_idx_cmpct_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
+    name = staged_name("corpus_band_idx_cmpct", sf_dir)
+    drop_staged(spark, name)
     corpus_bands = D.minhash_band_table(docs.where(~is_delta), portable=True).select(
         F.col("_id").alias("corpus_id"), "band_idx", "band_hash"
     )
@@ -1254,11 +1218,7 @@ def dedup_gram_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-doc frequencies recomputed from raw documents — proving
     build + append + merge together lose and invent nothing. Cycle
     tables rebuilt per run BY DESIGN."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
+    from gcd_etl_spark.sources.catalog import drop_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
     docs = read_table_spread(spark, sf_dir, "documents")
@@ -1266,13 +1226,9 @@ def dedup_gram_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_delta = F.col("doc_id") % DELTA_MOD == 0
     is_n1 = F.col("doc_id") % m2 == 0
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    name = f"gram_df_idx_merge_{tag}"
+    name = staged_name("gram_df_idx_merge", sf_dir)
     merged_name = f"{name}_merged"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for n in (name, merged_name):
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
-        _shutil.rmtree(_os.path.join(warehouse, n.lower()), ignore_errors=True)
+    drop_staged(spark, name, merged_name)
 
     def gdf(population: DataFrame) -> DataFrame:
         return (
@@ -1645,26 +1601,17 @@ def ensure_srp_bucket_index(
     import-time oracle strings restate that exact family; non-default
     configs get a config-suffixed table name so they never collide
     with (or silently shadow) the anchor staging."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
     cfg = (
         ""
         if (bits, n_tables, capped) == (SRP_BITS, SRP_TABLES, False)
         else f"_b{bits}t{n_tables}{'c' if capped else ''}"
     )
-    name = (
-        f"srp_bucket_idx_{tag}{cfg}_{table_fingerprint(sf_dir, 'embeddings')}"
-    )
-    if not spark.catalog.tableExists(name):
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
+    name = staged_name("srp_bucket_idx", sf_dir, "embeddings") + cfg
+
+    def stage() -> None:
         if capped:
             wide = _srp_bucket_frame(
                 corpus_emb, bits + SRP_CAP_SPLIT_BITS, n_tables
@@ -1686,6 +1633,8 @@ def ensure_srp_bucket_index(
             n_buckets=suggest_bucket_count_for(sf_dir, "embeddings"),
             sort_cols=["bk"],
         )
+
+    ensure_staged(spark, [name], stage)
     return spark.table(name)
 
 

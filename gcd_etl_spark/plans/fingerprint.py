@@ -70,7 +70,7 @@ def _formatted(df) -> str:
 def _norm_name(base: str) -> str:
     """Normalize a relation basename: run-unique hex / fingerprint
     suffixes and sf tags out, layout-bearing config suffixes kept
-    (``srp_bucket_idx_sf0_001_b6t8c_<fp>`` -> ``srp_bucket_idx_<sf>_b6t8c``).
+    (``srp_bucket_idx_sf0_001_<fp>_b6t8c`` -> ``srp_bucket_idx_<sf>_b6t8c``).
     The hex strip is anchored to EXACTLY the 8 chars
     ``sources.catalog.table_fingerprint`` emits (round-12 ADVICE: an
     8-or-more pattern would silently erase a legitimate hex-alphabet

@@ -14,10 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from gcd_etl_spark.gcd.credits import ATOMIC_FIELDS
-from gcd_etl_spark.gcd.fixtures_adapter import gcd_fixture_ctes, gcd_tables_from_fixtures
+from gcd_etl_spark.gcd.fixtures_adapter import (
+    FIXTURE_TABLES,
+    gcd_fixture_ctes,
+    gcd_tables_from_fixtures,
+)
 from gcd_etl_spark.gcd.oracle import snapshot_oracle_sql
 from gcd_etl_spark.gcd.pipeline import build_snapshot, collect_dict_maps
 from gcd_etl_spark.plans.registry import duckdb_array_replace, query, serialize_array_cols
+from gcd_etl_spark.sources.catalog import ensure_staged, staged_dir, staged_name
 
 #: Fixed run date -> deterministic unix_time/snapshot on both sides.
 RUN_DATE = "2024-01-15"
@@ -152,45 +157,36 @@ def gcd_snapshot_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return serialize_array_cols(delta.unionByName(prev))
 
 
-#: sf_dir -> path of the materialized "prior nightly" snapshot
-#: parquet, written once per process (the first call of a fresh
-#: process stands in for last night's run having happened).
-_PRIOR_SNAPSHOT: dict[str, str] = {}
-
-
-def _warehouse_dir() -> str:
-    """Scratch parquet root, anchored at the REPO (not the process
-    CWD — the driver may import this package from anywhere)."""
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
+def _stage_partitioned(
+    spark: SparkSession, prefix: str, sf_dir: str, part_col: str, part_expr
+) -> str:
+    """The prior-snapshot staging rule: the flagship build partitioned
+    on ``part_col = part_expr``, saved as a catalog table named for
+    the fixture files it was built from (staged once per input
+    fingerprint — the first call stands in for last night's run having
+    happened). Returns the table name."""
+    name = staged_name(prefix, sf_dir, *FIXTURE_TABLES)
+    ensure_staged(
+        spark,
+        [name],
+        lambda: build_flagship(spark, sf_dir)
+        .withColumn(part_col, part_expr)
+        .write.option("compression", "snappy")
+        .partitionBy(part_col)
+        .saveAsTable(name),
     )
+    return name
 
 
-def _prior_snapshot_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the prior snapshot parquet, hive-partitioned by
+def _prior_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
+    """The prior snapshot, hive-partitioned by
     ``issue_bucket = issue_id % INCR_MOD`` so the carried partitions
     are a directory-pruned scan, never a recompute."""
-    import os
-
-    if sf_dir in _PRIOR_SNAPSHOT:
-        return _PRIOR_SNAPSHOT[sf_dir]
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    path = os.path.join(_warehouse_dir(), f"gcd_incr_prior_sf{tag}")
     from pyspark.sql import functions as F
 
-    (
-        build_flagship(spark, sf_dir)
-        .withColumn("issue_bucket", F.col("issue_id") % INCR_MOD)
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .partitionBy("issue_bucket")
-        .parquet(path)
+    return _stage_partitioned(
+        spark, "gcd_incr_prior", sf_dir, "issue_bucket", F.col("issue_id") % INCR_MOD
     )
-    _PRIOR_SNAPSHOT[sf_dir] = path
-    return path
 
 
 @query("gcd_snapshot_incremental_fs", oracle=_FLAGSHIP_ORACLE)
@@ -199,7 +195,7 @@ def gcd_snapshot_incremental_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gcd_snapshot_incremental proves the denormalization partitions on
     the issue key by rebuilding both halves; this variant actually
     READS the carried partition back from the prior snapshot's
-    parquet — write prior once (hive-partitioned on
+    table — stage prior once (hive-partitioned on
     ``issue_bucket = issue_id % {INCR_MOD}``), then a run costs
     (changed-partition rebuild) + (directory-pruned scan of carried
     buckets), NOT 2x a full build. Held to the SAME full-build oracle
@@ -209,7 +205,7 @@ def gcd_snapshot_incremental_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets rebuild, everything else is a metadata-only carry."""
     from pyspark.sql import functions as F
 
-    prior = _prior_snapshot_path(spark, sf_dir)
+    prior = _prior_snapshot_table(spark, sf_dir)
     tables = gcd_tables_from_fixtures(spark, sf_dir)
     changed = _restrict_to_issues(
         tables,
@@ -217,7 +213,7 @@ def gcd_snapshot_incremental_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta = build_snapshot(spark, changed, RUN_DATE)
     carried = (
-        spark.read.parquet(prior)
+        spark.table(prior)
         .where(F.col("issue_bucket") >= INCR_CHANGED)  # partition-pruned
         .drop("issue_bucket")
     )
@@ -277,29 +273,17 @@ def _cdc_mod_bucket_from_int(col):
     return F.coalesce(raw, F.lit(_CDC_INVALID_BUCKET))
 
 
-#: sf_dir -> path of the modified-bucket-partitioned prior snapshot.
-_PRIOR_CDC_SNAPSHOT: dict[str, str] = {}
-
-
-def _prior_cdc_snapshot_path(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    if sf_dir in _PRIOR_CDC_SNAPSHOT:
-        return _PRIOR_CDC_SNAPSHOT[sf_dir]
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    path = os.path.join(_warehouse_dir(), f"gcd_incr_cdc_prior_sf{tag}")
+def _prior_cdc_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
+    """The prior snapshot partitioned on the CDC ``mod_bucket``."""
     from pyspark.sql import functions as F
 
-    (
-        build_flagship(spark, sf_dir)
-        .withColumn("mod_bucket", _cdc_mod_bucket_from_int(F.col("modified")))
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .partitionBy("mod_bucket")
-        .parquet(path)
+    return _stage_partitioned(
+        spark,
+        "gcd_incr_cdc_prior",
+        sf_dir,
+        "mod_bucket",
+        _cdc_mod_bucket_from_int(F.col("modified")),
     )
-    _PRIOR_CDC_SNAPSHOT[sf_dir] = path
-    return path
 
 
 @query("gcd_snapshot_incremental_cdc", oracle=_FLAGSHIP_ORACLE)
@@ -323,7 +307,7 @@ def gcd_snapshot_incremental_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     is metadata-only."""
     from pyspark.sql import functions as F
 
-    prior = _prior_cdc_snapshot_path(spark, sf_dir)
+    prior = _prior_cdc_snapshot_table(spark, sf_dir)
     tables = gcd_tables_from_fixtures(spark, sf_dir)
     issue = tables["gcd_issue"]
     bucket = _cdc_mod_bucket_from_ts(F.col("modified"))
@@ -333,63 +317,45 @@ def gcd_snapshot_incremental_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed = _restrict_to_issues(tables, issue.where(bucket == F.lit(watermark)))
     delta = build_snapshot(spark, changed, RUN_DATE)
     carried = (
-        spark.read.parquet(prior)
+        spark.table(prior)
         .where(F.col("mod_bucket") < F.lit(watermark))  # partition-pruned
         .drop("mod_bucket")
     )
     return serialize_array_cols(delta.unionByName(carried))
 
 
-#: sf_dir -> registered "last night" snapshot table name. The prior
-#: state is written ONCE per process with its watermark bucket
-#: deliberately STALE (odd-issue rows absent — they "were modified
-#: after last night's run"), so the nightly overwrite below has real
-#: work to do and an append or a no-op would fail the full-build
-#: oracle.
-_NIGHTLY_TABLE: dict[str, str] = {}
-
-
 def _nightly_prior_table(spark: SparkSession, sf_dir: str) -> str:
     """Materialize and REGISTER last night's snapshot table,
-    hive-partitioned on ``mod_bucket`` (the CDC last-modified grain),
-    with the current watermark bucket stale. saveAsTable with an
-    explicit path = the reference's Athena external table with a
+    hive-partitioned on ``mod_bucket`` (the CDC last-modified grain).
+    It is staged once per input fingerprint with its watermark bucket
+    deliberately STALE (odd-issue rows absent — they "were modified
+    after last night's run"), so the nightly overwrite has real work
+    to do and an append or a no-op would fail the full-build oracle.
+    A catalog table = the reference's Athena external table with a
     declared schema (gcdissuesnapshot.sql:1-95) — explicit schema in
     the catalog means an empty nightly table still reads cleanly
     (schema inference over zero files cannot)."""
-    import os
-    import shutil
-
-    if sf_dir in _NIGHTLY_TABLE:
-        return _NIGHTLY_TABLE[sf_dir]
-    import re
-
     from pyspark.sql import functions as F
 
-    # table names must stay identifier-safe for ANY sf_dir (the
-    # empty-input pin passes a tempdir with no "sf" substring)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_dir.rstrip("/")))
-    name = f"gcd_nightly_{tag}"
-    path = os.path.join(_warehouse_dir(), name)
-    full = build_flagship(spark, sf_dir).withColumn(
-        "mod_bucket", _cdc_mod_bucket_from_int(F.col("modified"))
-    )
-    w = full.agg(F.max("mod_bucket").alias("w")).collect()[0]["w"]
-    stale = full
-    if w is not None:
-        stale = full.where(
-            ~((F.col("mod_bucket") == F.lit(w)) & (F.col("issue_id") % 2 == 1))
+    name = staged_name("gcd_nightly", sf_dir, *FIXTURE_TABLES)
+
+    def stage() -> None:
+        full = build_flagship(spark, sf_dir).withColumn(
+            "mod_bucket", _cdc_mod_bucket_from_int(F.col("modified"))
         )
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(path, ignore_errors=True)
-    (
-        stale.write.mode("overwrite")
-        .option("compression", "snappy")
-        .option("path", path)
-        .partitionBy("mod_bucket")
-        .saveAsTable(name)
-    )
-    _NIGHTLY_TABLE[sf_dir] = name
+        w = full.agg(F.max("mod_bucket").alias("w")).collect()[0]["w"]
+        stale = full
+        if w is not None:
+            stale = full.where(
+                ~((F.col("mod_bucket") == F.lit(w)) & (F.col("issue_id") % 2 == 1))
+            )
+        (
+            stale.write.option("compression", "snappy")
+            .partitionBy("mod_bucket")
+            .saveAsTable(name)
+        )
+
+    ensure_staged(spark, [name], stage)
     return name
 
 
@@ -463,31 +429,21 @@ def gcd_snapshot_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-invisible. The one-time bucketed staging write is the
     nightly-load cost a real deployment pays on ingest, not per
     query."""
-    import os as _os
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
     tables = gcd_tables_from_fixtures(spark, sf_dir)
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    spec = {
-        "gcd_issue": (f"bkt_gcd_issue_{tag}", "id"),
-        "gcd_story": (f"bkt_gcd_story_{tag}", "id"),
-        "gcd_story_credit": (f"bkt_gcd_story_credit_{tag}", "story_id"),
-    }
-    for tbl, (name, key) in spec.items():
-        if not spark.catalog.tableExists(name):
-            # a dir left by a previous session (in-memory catalog
-            # forgot the table) blocks saveAsTable — clear it first
-            _shutil.rmtree(
-                _os.path.join(warehouse, name.lower()), ignore_errors=True
-            )
+    keys = {"gcd_issue": "id", "gcd_story": "id", "gcd_story_credit": "story_id"}
+    names = {t: staged_name(f"bkt_{t}", sf_dir, *FIXTURE_TABLES) for t in keys}
+
+    def stage() -> None:
+        for t, key in keys.items():
             write_bucketed_table(
-                tables[tbl], name, [key], n_buckets=16, sort_cols=[key]
+                tables[t], names[t], [key], n_buckets=16, sort_cols=[key]
             )
-        tables[tbl] = spark.table(name)
+
+    ensure_staged(spark, names.values(), stage)
+    for t, name in names.items():
+        tables[t] = spark.table(name)
     return serialize_array_cols(build_snapshot(spark, tables, RUN_DATE))
 
 
@@ -512,14 +468,12 @@ def snapshot_table_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/sinks.register_snapshot_table), then counts rows per
     partition THROUGH the registered table, so partition values,
     discovery, and scan pruning all sit on the checked path."""
-    import os
-
     from pyspark.sql import functions as F
 
     from gcd_etl_spark.sources.sinks import register_snapshot_table, write_snapshot
 
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    path = os.path.join(_warehouse_dir(), f"gcd_snap_tbl_sf{tag}")
+    path = staged_dir(spark, staged_name("gcd_snap_tbl", sf_dir))
+    table = staged_name("gcd_issue_snapshot", sf_dir)
     # checkpoint: the pipeline executes ONCE; both partition writes
     # scan the materialized result instead of re-running the full
     # join/agg tree (round 7 — this query was paying 2 flagship
@@ -529,12 +483,12 @@ def snapshot_table_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_snapshot(
         full.where(F.col("issue_id") % INCR_MOD < INCR_CHANGED), path, 20240116
     )
-    register_snapshot_table(spark, f"gcd_issue_snapshot_sf{tag}", path)
+    register_snapshot_table(spark, table, path)
     return spark.sql(
         f"""
         SELECT CAST(snapshot AS BIGINT) AS snapshot,
                COUNT(*) AS n_rows
-        FROM gcd_issue_snapshot_sf{tag}
+        FROM {table}
         GROUP BY snapshot
         """
     )

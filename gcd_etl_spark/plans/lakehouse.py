@@ -28,13 +28,11 @@ full cross-engine value-hash oracle:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gcd_etl_spark.plans.registry import query
-from gcd_etl_spark.sources.catalog import read_table, read_table_spread
+from gcd_etl_spark.sources.catalog import read_table, read_table_spread, sf_tag
 
 # ----------------------------------------------------- table checksum
 #: Dual moduli: two independent residues make a 60-bit-ish digest
@@ -409,7 +407,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Integer cents keep stream/batch equality exact."""
     from gcd_etl_spark.streaming.jobs import run_streaming_static_enrich
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_stream_enrich_{tag}"
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -446,7 +444,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC scan the same way), which is what matters on a mixed-format
     lake. Doubles survive bit-exactly through the round trip (cents
     cast happens after re-read)."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_orc_orders_{tag}"
     read_table(spark, sf_dir, "orders").write.mode("overwrite").orc(staged)
     back = spark.read.orc(staged)
@@ -548,7 +546,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     own source is a mysqldump variant — sources/dump.py); this pins
     that the engine's CSV path is lossless for the relational core.
     """
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_csv_customer_{tag}"
     cust = read_table(spark, sf_dir, "customer")
     cust.write.mode("overwrite").option("header", True).csv(staged)
@@ -583,7 +581,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV and ORC round-trips this closes the S-surface triangle —
     text row formats, columnar formats, and the parquet core all
     proven lossless through one aggregate contract."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_json_part_{tag}"
     part = read_table(spark, sf_dir, "part")
     part.write.mode("overwrite").json(staged)
@@ -680,7 +678,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the new footer, old files are untouched, and the merged scan
     costs one extra footer pass (production pins the merged schema in
     the catalog instead of re-inferring per query)."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_evolve_orders_{tag}"
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -736,7 +734,7 @@ def source_json_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFram
     this is the difference between a nightly feed with 0.001% bad
     lines completing with a quarantine report and that feed either
     dying (FAILFAST) or lying (DROPMALFORMED)."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_json_corrupt_{tag}"
     orders = read_table(spark, sf_dir, "orders")
     line = F.when(

@@ -549,32 +549,26 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the co-location discipline that removes the flagship's two big
     exchanges at 100 TB. The oracle is the plain join: bucketing is
     layout, never semantics."""
-    import os as _os
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
-    tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    lt, ot = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-
-    def _ensure(name: str, table: str, cols: list[str], key: str) -> None:
-        if spark.catalog.tableExists(name):
-            return
-        # a dir left by a previous session (in-memory catalog forgot
-        # the table) blocks saveAsTable — clear it first
-        _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
-        write_bucketed_table(
-            read_table(spark, sf_dir, table).select(*cols),
-            name,
-            [key],
-            n_buckets=16,
-            sort_cols=[key],
+    def _ensure(table: str, cols: list[str], key: str) -> str:
+        name = staged_name(f"bkt_{table}", sf_dir, table)
+        ensure_staged(
+            spark,
+            [name],
+            lambda: write_bucketed_table(
+                read_table(spark, sf_dir, table).select(*cols),
+                name,
+                [key],
+                n_buckets=16,
+                sort_cols=[key],
+            ),
         )
+        return name
 
-    _ensure(lt, "lineitem", ["l_orderkey", "l_quantity"], "l_orderkey")
-    _ensure(ot, "orders", ["o_orderkey", "o_orderstatus"], "o_orderkey")
+    lt = _ensure("lineitem", ["l_orderkey", "l_quantity"], "l_orderkey")
+    ot = _ensure("orders", ["o_orderkey", "o_orderstatus"], "o_orderkey")
     li, orders = spark.table(lt), spark.table(ot)
     joined = li.hint("merge").join(orders, li.l_orderkey == orders.o_orderkey)
     return joined.groupBy(

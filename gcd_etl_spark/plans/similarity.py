@@ -451,7 +451,7 @@ def _resolve_staged_cells(spark: SparkSession, prefix: str, rule) -> int | None:
 
 
 def ensure_ivfsq8_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
-    """The persisted SQ8 ANN index, staged once per sf dir
+    """The persisted SQ8 ANN index, staged once per input fingerprint
     (ingest-side cost, idempotent) and read back on every query: a
     cell-bucketed table of int8-quantized corpus codes plus a 16-row
     Lloyd-TRAINED centroid table (train_coarse_centroids — round-10:
@@ -463,20 +463,12 @@ def ensure_ivfsq8_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
     raw corpus vectors.
 
     Returns (index_df, centroids_ndarray)."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
     import numpy as np
 
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
-    from gcd_etl_spark.sources.catalog import table_fingerprint
-
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    # data-file fingerprint in the name: stale-index guard (r10 ADVICE)
-    tag = f"{tag}_{table_fingerprint(sf_dir, 'embeddings')}"
+    idx_base = staged_name("ivfsq8_index", sf_dir, "embeddings")
     # width-rule the coarse quantizer at (re)staging (round-13 item 1)
     # and carry the config in the name so a differently-configured
     # index can never shadow this one. NAME RESOLUTION on the probe
@@ -485,20 +477,15 @@ def ensure_ivfsq8_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
     # plain scan — was a full-table job per query just to re-derive a
     # value the staged name already records. The count now runs only
     # when staging.
-    n_cells = _resolve_staged_cells(
-        spark, f"ivfsq8_index_{tag}_", S.suggest_ivf_cells
-    )
+    n_cells = _resolve_staged_cells(spark, f"{idx_base}_", S.suggest_ivf_cells)
     counted_rows = None
     if n_cells is None:
         counted_rows = read_table(spark, sf_dir, "embeddings").count()
         n_cells = S.suggest_ivf_cells(counted_rows)
-    tag = f"{tag}_c{n_cells}"
-    idx_name = f"ivfsq8_index_{tag}"
-    cent_name = f"ivfsq8_centroids_{tag}"
-    if not spark.catalog.tableExists(idx_name):
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for n in (idx_name, cent_name):
-            _shutil.rmtree(_os.path.join(warehouse, n.lower()), ignore_errors=True)
+    idx_name = f"{idx_base}_c{n_cells}"
+    cent_name = staged_name("ivfsq8_centroids", sf_dir, "embeddings") + f"_c{n_cells}"
+
+    def stage() -> None:
         trained = S.train_coarse_centroids(emb, n_cells=n_cells, dim=EMB_DIM)
         if trained.size == 0:
             # empty corpus: stage empty tables with the right schemas
@@ -552,6 +539,8 @@ def ensure_ivfsq8_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
                 n_buckets=suggest_bucket_count_for(sf_dir, "embeddings"),
                 sort_cols=["cell"],
             )
+
+    ensure_staged(spark, [idx_name, cent_name], stage)
     if counted_rows is not None:
         # counted this probe (fresh stage OR legacy unstamped table):
         # stamp so every later probe resolves from the catalog alone
@@ -672,47 +661,34 @@ def sim_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_ivfpq_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
-    """The persisted TRUE-PQ index, staged once per sf dir and read
-    back on every query: a cell-bucketed table of 8-byte PQ codes
-    plus the two trained artifacts (16-row centroid table, m x ks
+    """The persisted TRUE-PQ index, staged once per input fingerprint
+    and read back on every query: a cell-bucketed table of 8-byte PQ
+    codes plus the two trained artifacts (16-row centroid table, m x ks
     codebook table). Query path = collect the tiny artifacts, probe
     nprobe cell buckets, ADC-score the codes — raw corpus vectors are
     touched ONLY at build time.
 
     Returns (codes_df, centroids_ndarray, codebooks_ndarray)."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
     import numpy as np
 
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
-    from gcd_etl_spark.sources.catalog import table_fingerprint
-
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    # data-file fingerprint in the name: stale-index guard (r10 ADVICE)
-    tag = f"{tag}_{table_fingerprint(sf_dir, 'embeddings')}"
+    codes_base = staged_name("ivfpq_codes", sf_dir, "embeddings")
     # width-rule the coarse quantizer at (re)staging (round-13 item 1)
     # and carry the config in the name so a differently-configured
     # index can never shadow this one (probe-path name resolution from
     # the catalog, count only at staging — see _resolve_staged_cells)
-    n_cells = _resolve_staged_cells(
-        spark, f"ivfpq_codes_{tag}_", S.suggest_ivf_cells
-    )
+    n_cells = _resolve_staged_cells(spark, f"{codes_base}_", S.suggest_ivf_cells)
     counted_rows = None
     if n_cells is None:
         counted_rows = read_table(spark, sf_dir, "embeddings").count()
         n_cells = S.suggest_ivf_cells(counted_rows)
-    tag = f"{tag}_c{n_cells}"
-    codes_name = f"ivfpq_codes_{tag}"
-    cent_name = f"ivfpq_centroids_{tag}"
-    book_name = f"ivfpq_codebooks_{tag}"
-    if not spark.catalog.tableExists(codes_name):
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for n in (codes_name, cent_name, book_name):
-            _shutil.rmtree(_os.path.join(warehouse, n.lower()), ignore_errors=True)
+    codes_name = f"{codes_base}_c{n_cells}"
+    cent_name = staged_name("ivfpq_centroids", sf_dir, "embeddings") + f"_c{n_cells}"
+    book_name = staged_name("ivfpq_codebooks", sf_dir, "embeddings") + f"_c{n_cells}"
+
+    def stage() -> None:
         # one collect for Lloyd init + PQ sample (round 13, guide §1.2)
         sample = S.train_sample(emb, max(S.PQ_TRAIN_SAMPLE, n_cells))
         centroids = S.train_coarse_centroids(
@@ -751,6 +727,8 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
                 n_buckets=suggest_bucket_count_for(sf_dir, "embeddings"),
                 sort_cols=["cell"],
             )
+
+    ensure_staged(spark, [codes_name, cent_name, book_name], stage)
     if counted_rows is not None:
         _stamp_staged_rows(spark, codes_name, counted_rows)
     # tiny trained artifacts: ONE tagged-union collect for both tables
@@ -856,11 +834,7 @@ def sim_ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     append; staged-once serving is sim_ann_ivfpq_persisted's pin).
     Append preserves the bucket spec — co-location pinned in
     tests/test_round10.py."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
+    from gcd_etl_spark.sources.catalog import drop_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
     emb = read_table_spread(spark, sf_dir, "embeddings")
@@ -886,11 +860,8 @@ def sim_ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     codebooks = S.pq_train_codebooks(corpus, centroids, sample_rows=sample)
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    name = f"ivfpq_cycle_codes_{tag}_c{n_cells}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    _shutil.rmtree(_os.path.join(warehouse, name.lower()), ignore_errors=True)
+    name = staged_name("ivfpq_cycle_codes", sf_dir) + f"_c{n_cells}"
+    drop_staged(spark, name)
     from gcd_etl_spark.sources.sinks import suggest_bucket_count_for
 
     nb = suggest_bucket_count_for(sf_dir, "embeddings")
@@ -1434,22 +1405,16 @@ def ensure_bitext_target_index(spark: SparkSession, sf_dir: str, b: DataFrame):
 
     ``b`` is the _bitext_sides target frame (tgt_id, tgt_vec, qb,
     nb). Returns (index_df, centroids_ndarray)."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
-
     import numpy as np
 
     from gcd_etl_spark.operators.similarity import (
         ivf_cells_udf,
         train_coarse_centroids,
     )
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import ensure_staged, staged_name
     from gcd_etl_spark.sources.sinks import write_bucketed_table
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(sf_dir.rstrip("/")))
-    tag = f"{tag}_{table_fingerprint(sf_dir, 'embeddings')}"
+    idx_base = staged_name("bitext_tgt_idx", sf_dir, "embeddings")
     # width-rule the target-side quantizer at (re)staging (round-13
     # item 1) and carry the config in the name so a differently-
     # configured index can never shadow this one. Probe-path name
@@ -1457,7 +1422,7 @@ def ensure_bitext_target_index(spark: SparkSession, sf_dir: str, b: DataFrame):
     # optimization pass — see _resolve_staged_cells); only STAGING
     # counts, re-applying the target predicate (label odd —
     # _bitext_sides) on the PLAIN scan (round-13 review finding).
-    n_cells = _resolve_staged_cells(spark, f"bitext_tgt_idx_{tag}_", bitext_cells)
+    n_cells = _resolve_staged_cells(spark, f"{idx_base}_", bitext_cells)
     counted_rows = None
     if n_cells is None:
         counted_rows = (
@@ -1466,13 +1431,10 @@ def ensure_bitext_target_index(spark: SparkSession, sf_dir: str, b: DataFrame):
             .count()
         )
         n_cells = bitext_cells(counted_rows)
-    tag = f"{tag}_c{n_cells}"
-    idx_name = f"bitext_tgt_idx_{tag}"
-    cent_name = f"bitext_tgt_cent_{tag}"
-    if not spark.catalog.tableExists(idx_name):
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for n in (idx_name, cent_name):
-            _shutil.rmtree(_os.path.join(warehouse, n.lower()), ignore_errors=True)
+    idx_name = f"{idx_base}_c{n_cells}"
+    cent_name = staged_name("bitext_tgt_cent", sf_dir, "embeddings") + f"_c{n_cells}"
+
+    def stage() -> None:
         trained = train_coarse_centroids(
             b.select(F.col("tgt_id").alias("vec_id"), F.col("tgt_vec").alias("embedding")),
             n_cells=n_cells,
@@ -1509,6 +1471,8 @@ def ensure_bitext_target_index(spark: SparkSession, sf_dir: str, b: DataFrame):
                 n_buckets=suggest_bucket_count_for(sf_dir, "embeddings", floor=8),
                 sort_cols=["cell"],
             )
+
+    ensure_staged(spark, [idx_name, cent_name], stage)
     if counted_rows is not None:
         _stamp_staged_rows(spark, idx_name, counted_rows)
     # tiny trained artifact: collect unsorted, order driver-side on

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gcd_etl_spark.plans.registry import query
-from gcd_etl_spark.sources.catalog import read_table
+from gcd_etl_spark.sources.catalog import read_table, sf_tag
 from gcd_etl_spark.sources.dump import (
     format_insert_statements,
     parse_insert_lines,
@@ -102,7 +102,7 @@ def dump_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat_rows = [tuple(r) for r in read_table(spark, sf_dir, "nation").collect()]
     # uuid-suffixed scratch: two concurrent runs over the same sf dir
     # must not clobber each other's dump files.
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     dump_dir = f"/tmp/gcd_etl_dump_ds_{tag}_{uuid.uuid4().hex[:8]}"
     os.makedirs(dump_dir)
     with open(f"{dump_dir}/supplier.sql", "w", encoding="utf-8") as f:

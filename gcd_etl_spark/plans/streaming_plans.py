@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from gcd_etl_spark.plans.registry import query
-from gcd_etl_spark.sources.catalog import read_table
+from gcd_etl_spark.sources.catalog import read_table, sf_tag
 from gcd_etl_spark.streaming.jobs import run_streaming_tumbling
 from gcd_etl_spark.streaming.stateful import run_streaming_stateful_totals
 
@@ -49,7 +49,7 @@ def _empty_seed(spark: SparkSession, schema: str) -> DataFrame:
 def _stage_events(spark: SparkSession, sf_dir: str, prefix: str) -> tuple[str, str]:
     """Write the events table to a parquet dir usable as a file-source
     stream; returns (staged_dir, per-sf tag for sink names)."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_stream_{prefix}_{tag}"
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -221,7 +221,7 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gcd_etl_spark.streaming.jobs import run_streaming_late_drop
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_stream_late_{tag}"
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -454,7 +454,7 @@ def stream_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_streaming_sessions_timeout,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_stream_sesstw_{tag}"
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -624,9 +624,7 @@ def stream_dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the same sf dir (pytest-xdist, sweep + bench in parallel)
     # must not rmtree each other's staging mid-stream. Each build
     # gets private dirs; rmtree only ever touches this run's own.
-    tag = "{}_{}".format(
-        os.path.basename(sf_dir.rstrip("/")).replace(".", "_"), uuid.uuid4().hex[:8]
-    )
+    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
     staged = f"/tmp/gcd_etl_stream_deltadedup_{tag}"
     out_root = f"/tmp/gcd_etl_stream_deltadedup_out_{tag}"
     shutil.rmtree(staged, ignore_errors=True)
@@ -757,9 +755,7 @@ def stream_semantic_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_delta = F.col("vec_id") % DELTA_MOD == 0
     idx = ensure_srp_bucket_index(spark, sf_dir, emb.where(~is_delta))
 
-    tag = "{}_{}".format(
-        os.path.basename(sf_dir.rstrip("/")).replace(".", "_"), uuid.uuid4().hex[:8]
-    )
+    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
     staged = f"/tmp/gcd_etl_stream_semgate_{tag}"
     out_root = f"/tmp/gcd_etl_stream_semgate_out_{tag}"
     shutil.rmtree(staged, ignore_errors=True)
@@ -846,9 +842,7 @@ def stream_semantic_dedup_gate_capped(spark: SparkSession, sf_dir: str) -> DataF
         spark, sf_dir, emb.where(~is_delta), capped=True
     )
 
-    tag = "{}_{}".format(
-        os.path.basename(sf_dir.rstrip("/")).replace(".", "_"), uuid.uuid4().hex[:8]
-    )
+    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
     staged = f"/tmp/gcd_etl_stream_semgate_cap_{tag}"
     out_root = f"/tmp/gcd_etl_stream_semgate_cap_out_{tag}"
     shutil.rmtree(staged, ignore_errors=True)
@@ -926,9 +920,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_delta = F.col("doc_id") % DELTA_MOD == 0
     costs, ctx_all = ensure_bigram_lm_index(spark, sf_dir, docs.where(~is_delta))
 
-    tag = "{}_{}".format(
-        os.path.basename(sf_dir.rstrip("/")).replace(".", "_"), uuid.uuid4().hex[:8]
-    )
+    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
     staged = f"/tmp/gcd_etl_stream_qgate_{tag}"
     out_root = f"/tmp/gcd_etl_stream_qgate_out_{tag}"
     shutil.rmtree(staged, ignore_errors=True)
@@ -1012,9 +1004,7 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, docs.where(~is_delta), filter_tag=DSIR_STANDING_TAG
     )
 
-    tag = "{}_{}".format(
-        os.path.basename(sf_dir.rstrip("/")).replace(".", "_"), uuid.uuid4().hex[:8]
-    )
+    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
     staged = f"/tmp/gcd_etl_stream_dsirgate_{tag}"
     out_root = f"/tmp/gcd_etl_stream_dsirgate_out_{tag}"
     shutil.rmtree(staged, ignore_errors=True)

@@ -99,10 +99,7 @@ def get_spark(
         # it collapses back to core-count partitions (bench-neutral),
         # at amplified scale partitions stay memory-sized. 8x cores
         # keeps the pre-AQE task count trivial for the scheduler.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(8 * n)),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(8 * n))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

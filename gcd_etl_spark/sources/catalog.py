@@ -11,7 +11,12 @@ planning for free.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import shutil
+from collections.abc import Callable, Iterable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -128,17 +133,13 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     (relative path, size, mtime of every data file under
     ``<sf_dir>/<name>.parquet``) — no data scan.
 
-    Persisted-index staging (``ensure_corpus_band_index``,
-    ``ensure_ivfsq8_index``, ``ensure_ivfpq_index``, the gram-DF
-    index) keys its table names on this: reusing an index purely on
-    ``tableExists(<basename-tag>)`` silently served a STALE index when
-    the data under the same sf_dir changed within a session, or when
-    two different sf_dirs shared a basename (round-10 ADVICE). A
-    changed/new corpus now produces a different fingerprint, hence a
-    different staging table, hence a rebuild.
+    Every reused staged artifact keys its name on this through
+    ``staged_name``: reusing an artifact purely on a basename tag
+    silently served a STALE one when the data under the same sf_dir
+    changed within a session, or when two different sf_dirs shared a
+    basename. A changed/new input now produces a different
+    fingerprint, hence a different staging table, hence a rebuild.
     """
-    import hashlib
-
     path = os.path.join(sf_dir, f"{name}.parquet")
     entries: list[str] = []
     if os.path.isdir(path):
@@ -156,3 +157,57 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
         entries.append(f".:{st.st_size}:{st.st_mtime_ns}")
     digest = hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
     return digest[:8]
+
+
+# ---------------------------------------------------------- staging
+# Scratch artifacts derived from one sf_dir (bucketed indexes, prior
+# snapshots, cycle tables, /tmp round-trip dirs) are named, reused and
+# cleared here and nowhere else.
+
+
+def sf_tag(sf_dir: str) -> str:
+    """Identifier-safe tag of an sf_dir: its basename with every
+    non-identifier character replaced (``sf0.001`` -> ``sf0_001``)."""
+    return re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_dir.rstrip("/")))
+
+
+def staged_name(prefix: str, sf_dir: str, *inputs: str) -> str:
+    """``<prefix>_<tag>``, plus ``_<fp>`` when input tables are named:
+    ``fp`` is their ``table_fingerprint`` (combined into 8 hex chars
+    for several inputs), so changed input files, or another sf_dir
+    with the same basename, name a different artifact."""
+    name = f"{prefix}_{sf_tag(sf_dir)}"
+    if not inputs:
+        return name
+    fp = ",".join(table_fingerprint(sf_dir, t) for t in inputs)
+    if len(inputs) > 1:
+        fp = hashlib.md5(fp.encode()).hexdigest()[:8]
+    return f"{name}_{fp}"
+
+
+def staged_dir(spark: SparkSession, name: str) -> str:
+    """The directory of managed table ``name`` under the session's
+    warehouse root."""
+    root = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    return os.path.join(root, name.lower())
+
+
+def drop_staged(spark: SparkSession, *names: str) -> None:
+    """Drop each table and clear its directory: a directory left by a
+    previous session (whose in-memory catalog forgot the table)
+    blocks ``saveAsTable``."""
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(staged_dir(spark, name), ignore_errors=True)
+
+
+def ensure_staged(
+    spark: SparkSession, names: Iterable[str], stage: Callable[[], None]
+) -> None:
+    """Reuse gate: nothing to do when every name is already a catalog
+    table; otherwise drop and clear them all, then call ``stage()``,
+    which writes them."""
+    if all(spark.catalog.tableExists(n) for n in names):
+        return
+    drop_staged(spark, *names)
+    stage()

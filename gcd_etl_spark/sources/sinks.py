@@ -234,14 +234,10 @@ def compact_bucketed_table(
     transactionally — the swap is the caller's contract, the REWRITE
     is this operator's.
     """
-    dest = dest or f"{name}_compact"
-    import os
-    import shutil
-    from urllib.parse import urlparse
+    from gcd_etl_spark.sources.catalog import drop_staged
 
-    spark.sql(f"DROP TABLE IF EXISTS {dest}")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(os.path.join(warehouse, dest.lower()), ignore_errors=True)
+    dest = dest or f"{name}_compact"
+    drop_staged(spark, dest)
     auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     prev = spark.conf.get(auto_key, "true")
     spark.conf.set(auto_key, "false")
@@ -257,12 +253,9 @@ def compact_bucketed_table(
 def count_table_data_files(spark, name: str) -> int:
     """Data-file count of a managed parquet table's directory
     (excludes _SUCCESS and hidden files) — the compaction metric."""
-    import os
-    from urllib.parse import urlparse
+    from gcd_etl_spark.sources.catalog import staged_dir
 
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    root = os.path.join(warehouse, name.lower())
     n = 0
-    for _r, _d, files in os.walk(root):
+    for _r, _d, files in os.walk(staged_dir(spark, name)):
         n += sum(1 for f in files if not f.startswith(("_", ".")))
     return n

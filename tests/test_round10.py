@@ -118,12 +118,12 @@ def test_ivfpq_persisted_index_reuse_plan_shape(spark, sf_smoke):
     corpus is never re-encoded per query), the probe join broadcasts
     the query side, and a rebuild reuses the staged files."""
     import contextlib
+    import glob
     import io
     import os
-    import re
-    from urllib.parse import urlparse
 
     from gcd_etl_spark.plans import QUERIES
+    from gcd_etl_spark.sources.catalog import staged_dir, staged_name
 
     df = QUERIES["sim_ann_ivfpq_persisted"].build(spark, sf_smoke)
     buf = io.StringIO()
@@ -133,17 +133,10 @@ def test_ivfpq_persisted_index_reuse_plan_shape(spark, sf_smoke):
     assert "ivfpq_codes_" in plan, plan[:2000]
     assert plan.count("Bucketed: true") >= 1, plan[:2000]
     assert "BroadcastHashJoin" in plan
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    from gcd_etl_spark.sources.catalog import table_fingerprint
     # the width-ruled quantizer (r13) suffixes the staged name with
     # its cell count — resolve the concrete dir by glob
-    import glob as _glob
-    [idx_dir] = _glob.glob(
-        os.path.join(
-            warehouse,
-            f"ivfpq_codes_{tag}_{table_fingerprint(sf_smoke, 'embeddings')}_c*",
-        )
+    [idx_dir] = glob.glob(
+        staged_dir(spark, staged_name("ivfpq_codes", sf_smoke, "embeddings")) + "_c*"
     )
     files_before = sorted(os.listdir(idx_dir))
     QUERIES["sim_ann_ivfpq_persisted"].build(spark, sf_smoke)
@@ -266,10 +259,8 @@ def test_crossdoc_delta_reads_persisted_gram_index(spark, sf_smoke):
     import contextlib
     import io
     import os
-    import re
-    from urllib.parse import urlparse
 
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import staged_dir, staged_name
 
     df = QUERIES["dedup_crossdoc_delta"].build(spark, sf_smoke)
     buf = io.StringIO()
@@ -282,11 +273,7 @@ def test_crossdoc_delta_reads_persisted_gram_index(spark, sf_smoke):
     # corpus text is never re-tokenized
     assert plan.count("documents.parquet") == 0, plan[:2000]
     assert "BroadcastHashJoin" in plan
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    idx_dir = os.path.join(
-        warehouse, f"gram_df_idx_{tag}_{table_fingerprint(sf_smoke, 'documents')}"
-    )
+    idx_dir = staged_dir(spark, staged_name("gram_df_idx", sf_smoke, "documents"))
     files_before = sorted(os.listdir(idx_dir))
     QUERIES["dedup_crossdoc_delta"].build(spark, sf_smoke)
     files_after = sorted(os.listdir(idx_dir))
@@ -302,9 +289,7 @@ def test_index_compaction_one_file_per_bucket(spark, sf_smoke):
     one data file per bucket; the flags the registered query emits
     are all 1 (rows preserved, files reduced, co-location still
     zero-exchange)."""
-    import os
-    import re
-
+    from gcd_etl_spark.sources.catalog import staged_name
     from gcd_etl_spark.sources.sinks import count_table_data_files
 
     row = QUERIES["dedup_index_compaction"].build(spark, sf_smoke).collect()[0]
@@ -316,8 +301,7 @@ def test_index_compaction_one_file_per_bucket(spark, sf_smoke):
     from gcd_etl_spark.sources.sinks import suggest_bucket_count_for
 
     nb = suggest_bucket_count_for(sf_smoke, "documents")
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    name = f"corpus_band_idx_cmpct_{tag}"
+    name = staged_name("corpus_band_idx_cmpct", sf_smoke)
     assert count_table_data_files(spark, name) > nb  # fragmented
     assert count_table_data_files(spark, f"{name}_compact") == nb
 
@@ -382,14 +366,11 @@ def test_gram_merge_zero_exchange_and_one_file_per_bucket(spark, sf_smoke):
     """The merge's two scale claims, pinned: the generation-fold
     aggregation plans ZERO exchanges (gram-bucketed source), and the
     merged table lands as exactly one file per bucket."""
-    import os
-    import re
-
+    from gcd_etl_spark.sources.catalog import staged_name
     from gcd_etl_spark.sources.sinks import count_table_data_files
 
     QUERIES["dedup_gram_index_merge"].build(spark, sf_smoke).limit(1).collect()
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    name = f"gram_df_idx_merge_{tag}"
+    name = staged_name("gram_df_idx_merge", sf_smoke)
     agg = spark.table(name).groupBy("gram").agg({"df": "sum"})
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:1500]
@@ -400,27 +381,24 @@ def test_ann_index_append_colocation_and_flags(spark, sf_smoke):
     """The ANN append's claims, pinned: the appended code table still
     plans zero-exchange cell aggregations (bucket spec survived the
     append), and the registered query's gates read 1."""
-    import os
-    import re
-
     import pyspark.sql.functions as F
 
     from gcd_etl_spark.operators.similarity import suggest_ivf_cells
     from gcd_etl_spark.plans.similarity import EMB_DELTA_MOD
-    from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.sources.catalog import read_table_spread, staged_name
 
     rows = QUERIES["sim_ann_ivfpq_index_append"].build(spark, sf_smoke).collect()
     assert len(rows) == 5
     assert all(r["recall_floor_ok"] == 1 for r in rows)
     assert all(r["delta_reachable"] == 1 for r in rows)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
     # cycle table name carries the width-ruled cell config (round 13)
     n_corpus = (
         read_table_spread(spark, sf_smoke, "embeddings")
         .where(F.col("vec_id") % EMB_DELTA_MOD != 0)
         .count()
     )
-    t = spark.table(f"ivfpq_cycle_codes_{tag}_c{suggest_ivf_cells(n_corpus)}")
+    name = staged_name("ivfpq_cycle_codes", sf_smoke)
+    t = spark.table(f"{name}_c{suggest_ivf_cells(n_corpus)}")
     plan = (
         t.groupBy("cell").count()._jdf.queryExecution().executedPlan().toString()
     )
@@ -462,9 +440,8 @@ def test_semantic_delta_never_reprojects_corpus(spark, sf_smoke):
     import io
     import os
     import re
-    from urllib.parse import urlparse
 
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import staged_dir, staged_name
 
     df = QUERIES["dedup_semantic_delta_vs_corpus"].build(spark, sf_smoke)
     buf = io.StringIO()
@@ -479,12 +456,7 @@ def test_semantic_delta_never_reprojects_corpus(spark, sf_smoke):
     node_ids = set(re.findall(r"ArrowEvalPython \(\d+\)", plan))
     assert len(node_ids) <= 2, (node_ids, plan[:2000])
     assert "BroadcastHashJoin" in plan
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    idx_dir = os.path.join(
-        warehouse,
-        f"srp_bucket_idx_{tag}_{table_fingerprint(sf_smoke, 'embeddings')}",
-    )
+    idx_dir = staged_dir(spark, staged_name("srp_bucket_idx", sf_smoke, "embeddings"))
     files_before = sorted(os.listdir(idx_dir))
     QUERIES["dedup_semantic_delta_vs_corpus"].build(spark, sf_smoke)
     files_after = sorted(os.listdir(idx_dir))

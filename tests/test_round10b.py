@@ -202,10 +202,8 @@ def test_bigram_delta_probes_frozen_lm(spark, sf_smoke):
     import contextlib
     import io
     import os
-    import re
-    from urllib.parse import urlparse
 
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import staged_dir, staged_name
 
     df = QUERIES["quality_bigram_nll_delta"].build(spark, sf_smoke)
     buf = io.StringIO()
@@ -215,10 +213,7 @@ def test_bigram_delta_probes_frozen_lm(spark, sf_smoke):
     assert "bigram_lm_costs_" in plan, plan[:2000]
     assert "bigram_lm_ctx_" in plan, plan[:2000]
     assert plan.count("documents.parquet") == 1, plan[:2000]
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    fp = table_fingerprint(sf_smoke, "documents")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    idx_dir = os.path.join(warehouse, f"bigram_lm_costs_{tag}_{fp}")
+    idx_dir = staged_dir(spark, staged_name("bigram_lm_costs", sf_smoke, "documents"))
     files_before = sorted(os.listdir(idx_dir))
     QUERIES["quality_bigram_nll_delta"].build(spark, sf_smoke)
     files_after = sorted(os.listdir(idx_dir))
@@ -306,12 +301,11 @@ def test_bitext_persisted_index_reuse_and_scan(spark, sf_smoke):
     byte-for-byte — the target side is never re-trained or
     re-assigned."""
     import contextlib
+    import glob
     import io
     import os
-    import re
-    from urllib.parse import urlparse
 
-    from gcd_etl_spark.sources.catalog import table_fingerprint
+    from gcd_etl_spark.sources.catalog import staged_dir, staged_name
 
     df = QUERIES["sim_bitext_margin_persisted"].build(spark, sf_smoke)
     buf = io.StringIO()
@@ -319,14 +313,10 @@ def test_bitext_persisted_index_reuse_and_scan(spark, sf_smoke):
         df.explain("formatted")
     plan = buf.getvalue()
     assert "bitext_tgt_idx_" in plan, plan[:2000]
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    fp = table_fingerprint(sf_smoke, "embeddings")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     # the width-ruled quantizer (r13) suffixes the staged name with
     # its cell count — resolve the concrete dir by glob
-    import glob as _glob
-    [idx_dir] = _glob.glob(
-        os.path.join(warehouse, f"bitext_tgt_idx_{tag}_{fp}_c*")
+    [idx_dir] = glob.glob(
+        staged_dir(spark, staged_name("bitext_tgt_idx", sf_smoke, "embeddings")) + "_c*"
     )
     files_before = sorted(os.listdir(idx_dir))
     QUERIES["sim_bitext_margin_persisted"].build(spark, sf_smoke)

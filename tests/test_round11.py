@@ -348,7 +348,7 @@ def test_srp_capped_index_lifecycle_probe_both_keys(spark, sf_correct):
         ensure_srp_bucket_index,
         srp_capped_delta_pairs,
     )
-    from gcd_etl_spark.sources.catalog import read_table
+    from gcd_etl_spark.sources.catalog import read_table, staged_name
 
     base = 1 << SRP_BITS
     emb = read_table(spark, sf_correct, "embeddings")
@@ -357,12 +357,13 @@ def test_srp_capped_index_lifecycle_probe_both_keys(spark, sf_correct):
     idx = ensure_srp_bucket_index(
         spark, sf_correct, emb.where(~is_delta), capped=True
     )
-    capped_tables = [
-        t.name
-        for t in spark.catalog.listTables()
-        if "srp_bucket_idx" in t.name and f"_b{SRP_BITS}t{SRP_TABLES}c_" in t.name
-    ]
-    assert capped_tables, "capped index not staged under a config suffix"
+    capped_name = (
+        staged_name("srp_bucket_idx", sf_correct, "embeddings")
+        + f"_b{SRP_BITS}t{SRP_TABLES}c"
+    )
+    assert capped_name in {t.name for t in spark.catalog.listTables()}, (
+        "capped index not staged under a config suffix"
+    )
     assert idx.where(F.col("bk") >= base).count() > 0, "cap never fired"
 
     got = {

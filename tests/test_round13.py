@@ -74,7 +74,7 @@ def test_persisted_index_names_carry_cell_config(spark, sf_smoke):
         ensure_ivfpq_index,
         ensure_ivfsq8_index,
     )
-    from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.sources.catalog import read_table_spread, staged_name
 
     import re
 
@@ -94,8 +94,10 @@ def test_persisted_index_names_carry_cell_config(spark, sf_smoke):
     # corpus's width-rule output, so only this fixture's names are
     # pinned to nc
     assert all(re.search(r"_c\d+$", n) for n in staged), staged
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_smoke.rstrip("/").rsplit("/", 1)[-1])
-    mine = [n for n in staged if f"_{tag}_" in n]
+    mine_prefixes = tuple(
+        staged_name(p, sf_smoke, "embeddings") for p in ("ivfsq8_index", "ivfpq_codes")
+    )
+    mine = [n for n in staged if n.startswith(mine_prefixes)]
     assert mine, staged
     assert all(n.endswith(f"_c{nc}") for n in mine), (mine, nc)
     # probe config derives from the STAGED centroid count

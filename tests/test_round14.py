@@ -91,11 +91,12 @@ def test_ensure_ivfpq_index_restages_on_rule_drift(spark, monkeypatch):
     width rule must re-stage under the new name (not reuse stale)."""
     from gcd_etl_spark.operators import similarity as S
     from gcd_etl_spark.plans import similarity as P
-    from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.sources.catalog import read_table_spread, staged_name
 
     sf_dir = "/root/testdata/sf0.001"
     emb = read_table_spread(spark, sf_dir, "embeddings")
     _codes, cents, _books = P.ensure_ivfpq_index(spark, sf_dir, emb)
+    staged = f"SHOW TABLES LIKE '{staged_name('ivfpq_*', sf_dir, 'embeddings')}_c*'"
     base_cells = len(cents)
 
     bumped = 2 * base_cells
@@ -105,15 +106,13 @@ def test_ensure_ivfpq_index_restages_on_rule_drift(spark, monkeypatch):
         assert len(cents2) == bumped  # re-trained at the new width
         rows = [
             r["tableName"]
-            for r in spark.sql(
-                "SHOW TABLES LIKE 'ivfpq_*_sf0_001*'"
-            ).collect()
+            for r in spark.sql(staged).collect()
         ]
         assert any(n.endswith(f"_c{bumped}") for n in rows)
     finally:
         # drop the drift-staged tables: the shared warehouse's serving
         # pins expect one width per fixture fingerprint
-        for r in spark.sql("SHOW TABLES LIKE 'ivfpq_*_sf0_001*'").collect():
+        for r in spark.sql(staged).collect():
             if r["tableName"].endswith(f"_c{bumped}"):
                 spark.sql(f"DROP TABLE IF EXISTS {r['tableName']}")
 

@@ -59,7 +59,7 @@ def test_cdc_incremental_carries_and_rebuilds(spark, sf_smoke):
     from gcd_etl_spark.gcd.fixtures_adapter import gcd_tables_from_fixtures
     from gcd_etl_spark.plans.gcd import (
         _cdc_mod_bucket_from_ts,
-        _prior_cdc_snapshot_path,
+        _prior_cdc_snapshot_table,
     )
 
     issue = gcd_tables_from_fixtures(spark, sf_smoke)["gcd_issue"]
@@ -70,8 +70,8 @@ def test_cdc_incremental_carries_and_rebuilds(spark, sf_smoke):
         .collect()
     ]
     assert len(buckets) >= 2, "need >= 2 modified buckets for a real carry"
-    prior = _prior_cdc_snapshot_path(spark, sf_smoke)
-    carried = spark.read.parquet(prior).where(
+    prior = _prior_cdc_snapshot_table(spark, sf_smoke)
+    carried = spark.table(prior).where(
         F.col("mod_bucket") < F.lit(max(buckets))
     )
     assert carried.limit(1).count() == 1, "carried partition is empty"
@@ -142,10 +142,10 @@ def test_cdc_carry_is_partition_pruned(spark, sf_smoke):
     import contextlib
     import io
 
-    from gcd_etl_spark.plans.gcd import _prior_cdc_snapshot_path
+    from gcd_etl_spark.plans.gcd import _prior_cdc_snapshot_table
 
-    prior = _prior_cdc_snapshot_path(spark, sf_smoke)
-    df = spark.read.parquet(prior).where(F.col("mod_bucket") < F.lit(3))
+    prior = _prior_cdc_snapshot_table(spark, sf_smoke)
+    df = spark.table(prior).where(F.col("mod_bucket") < F.lit(3))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -311,8 +311,8 @@ def test_delta_vs_corpus_index_reuse_plan_shape(spark, sf_smoke):
     import contextlib
     import io
     import os
-    import re
-    from urllib.parse import urlparse
+
+    from gcd_etl_spark.sources.catalog import staged_dir, staged_name
 
     df = QUERIES["dedup_delta_vs_corpus"].build(spark, sf_smoke)
     buf = io.StringIO()
@@ -330,12 +330,7 @@ def test_delta_vs_corpus_index_reuse_plan_shape(spark, sf_smoke):
     # band join broadcasts the delta side
     assert "BroadcastHashJoin" in plan
     # idempotence: a rebuild reads the same staged table, not a rewrite
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    from gcd_etl_spark.sources.catalog import table_fingerprint
-    idx_dir = os.path.join(
-        warehouse, f"corpus_band_idx_{tag}_{table_fingerprint(sf_smoke, 'documents')}"
-    )
+    idx_dir = staged_dir(spark, staged_name("corpus_band_idx", sf_smoke, "documents"))
     files_before = sorted(os.listdir(idx_dir))
     QUERIES["dedup_delta_vs_corpus"].build(spark, sf_smoke)
     files_after = sorted(os.listdir(idx_dir))
@@ -350,10 +345,11 @@ def test_ivfsq8_persisted_index_reuse_plan_shape(spark, sf_smoke):
     on the index side) — the probe join broadcasts the query side,
     and a rebuild reuses the staged index byte-for-byte."""
     import contextlib
+    import glob
     import io
     import os
-    import re
-    from urllib.parse import urlparse
+
+    from gcd_etl_spark.sources.catalog import staged_dir, staged_name
 
     df = QUERIES["sim_ann_ivfsq8_persisted"].build(spark, sf_smoke)
     buf = io.StringIO()
@@ -366,17 +362,10 @@ def test_ivfsq8_persisted_index_reuse_plan_shape(spark, sf_smoke):
     # the quantization expressions live only in the staging write;
     # the query plan reconstructs (dequantizes) but never re-encodes
     assert "array_min" not in plan and "array_max" not in plan, plan[:2000]
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    from gcd_etl_spark.sources.catalog import table_fingerprint
     # the width-ruled quantizer (r13) suffixes the staged name with
     # its cell count — resolve the concrete dir by glob
-    import glob as _glob
-    [idx_dir] = _glob.glob(
-        os.path.join(
-            warehouse,
-            f"ivfsq8_index_{tag}_{table_fingerprint(sf_smoke, 'embeddings')}_c*",
-        )
+    [idx_dir] = glob.glob(
+        staged_dir(spark, staged_name("ivfsq8_index", sf_smoke, "embeddings")) + "_c*"
     )
     files_before = sorted(os.listdir(idx_dir))
     QUERIES["sim_ann_ivfsq8_persisted"].build(spark, sf_smoke)
@@ -428,12 +417,10 @@ def test_index_append_preserves_bucket_colocation(spark, sf_smoke):
     bucket-key aggregation plans ZERO exchanges (and an equi-join on
     band_hash stays co-located). If the append ever degrades to a
     plain (unbucketed) write, this plans a shuffle and fails."""
-    import os
-    import re
+    from gcd_etl_spark.sources.catalog import staged_name
 
     QUERIES["dedup_index_append_cycle"].build(spark, sf_smoke).collect()
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_smoke.rstrip("/")))
-    t = spark.table(f"corpus_band_idx_cycle_{tag}")
+    t = spark.table(staged_name("corpus_band_idx_cycle", sf_smoke))
     agg = t.groupBy("band_hash").count()
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:1500]

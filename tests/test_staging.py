@@ -1,0 +1,88 @@
+"""The one staging rule for per-input scratch tables
+(``sources/catalog.staged_name`` / ``ensure_staged`` / ``drop_staged``):
+a staged artifact is named from its sf_dir tag plus a fingerprint of
+the input files it was built from, is reused only while its catalog
+table exists, and lives under the session's warehouse root."""
+
+from __future__ import annotations
+
+import ast
+import os
+from pathlib import Path
+
+import duckdb
+
+import gcd_etl_spark
+from gcd_etl_spark.plans import QUERIES
+from gcd_etl_spark.sources.catalog import TABLES
+from tests.conftest import assert_matches_oracle
+
+
+def _link_fixture(src: str, dst: Path, skip: tuple[str, ...] = ()) -> str:
+    dst.mkdir(parents=True)
+    for t in TABLES:
+        if t not in skip:
+            os.symlink(f"{src}/{t}.parquet", dst / f"{t}.parquet")
+    return str(dst)
+
+
+def test_bucketed_join_restages_for_changed_input(spark, sf_smoke, tmp_path):
+    """Two sf dirs with the same basename but different ``lineitem``
+    data: the second run must stage its own bucketed table, not reuse
+    the first dir's (a basename-keyed reuse returned the first dir's
+    rows)."""
+    q = QUERIES["bucketed_colocated_join"]
+    a = _link_fixture(sf_smoke, tmp_path / "a" / "sf0.001")
+    b = _link_fixture(sf_smoke, tmp_path / "b" / "sf0.001", skip=("lineitem",))
+    duckdb.execute(
+        f"COPY (SELECT * FROM read_parquet('{sf_smoke}/lineitem.parquet') "
+        f"WHERE l_orderkey % 2 = 0) TO '{b}/lineitem.parquet' (FORMAT PARQUET)"
+    )
+    assert_matches_oracle(q.build(spark, a), q.oracle, a, name="bucketed a")
+    assert_matches_oracle(q.build(spark, b), q.oracle, b, name="bucketed b")
+
+
+def test_staged_gcd_queries_on_dir_without_sf(spark, sf_smoke, tmp_path):
+    """Staged names derive from an identifier-safe tag of ANY sf_dir,
+    including one whose path has no "sf" in it."""
+    d = _link_fixture(sf_smoke, tmp_path / "plain" / "corpus")
+    assert "sf" not in d, d
+    for name in ("gcd_snapshot_bucketed", "snapshot_table_partitions"):
+        q = QUERIES[name]
+        assert_matches_oracle(q.build(spark, d), q.oracle, d, name=name)
+
+
+def test_nightly_prior_restaged_after_drop(spark, sf_smoke):
+    """The reuse gate is the catalog itself: once the staged nightly
+    prior table is gone, the next run stages it again instead of
+    reading a table name remembered from before."""
+    from gcd_etl_spark.plans.gcd import _nightly_prior_table
+
+    q = QUERIES["gcd_snapshot_nightly_overwrite"]
+    spark.sql(f"DROP TABLE {_nightly_prior_table(spark, sf_smoke)}")
+    assert_matches_oracle(q.build(spark, sf_smoke), q.oracle, sf_smoke, name=q.name)
+
+
+def test_one_staging_rule_in_package():
+    """Only the staging helper reads the warehouse root, gates reuse on
+    ``catalog.tableExists`` or derives a tag from an sf_dir."""
+    root = Path(gcd_etl_spark.__file__).parent
+    helper = root / "sources" / "catalog.py"
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path == helper:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            where = f"{path.relative_to(root)}:{getattr(node, 'lineno', '?')}"
+            if isinstance(node, ast.Constant) and node.value == "spark.sql.warehouse.dir":
+                found.append(f"{where} reads the warehouse root")
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            attr, args = node.func.attr, node.args
+            if attr == "tableExists":
+                found.append(f"{where} gates on tableExists")
+            elif attr == "basename" and args and "sf_dir" in ast.unparse(args[0]):
+                found.append(f"{where} derives a tag from basename(sf_dir)")
+            elif attr == "rsplit" and args and ast.unparse(args[0]) == "'sf'":
+                found.append(f"{where} derives a tag from rsplit('sf')")
+    assert not found, "\n".join(found)
