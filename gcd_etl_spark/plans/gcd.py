@@ -349,8 +349,12 @@ def _nightly_prior_table(spark: SparkSession, sf_dir: str) -> str:
             stale = full.where(
                 ~((F.col("mod_bucket") == F.lit(w)) & (F.col("issue_id") % 2 == 1))
             )
+        # The table carries its overwrite mode as a storage option, so
+        # every INSERT OVERWRITE into it replaces only the partitions
+        # it writes, whatever the session's partitionOverwriteMode.
         (
             stale.write.option("compression", "snappy")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("mod_bucket")
             .saveAsTable(name)
         )
@@ -364,10 +368,12 @@ def gcd_snapshot_nightly_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
     """The nightly loop CLOSED end-to-end (round-7/8 verdict item):
     gcd_snapshot_incremental_cdc returns the watermark-rebuild UNION
     as a query result; this variant actually WRITES it — the CDC
-    watermark rebuild lands in the REGISTERED snapshot table via
-    ``spark.sql.sources.partitionOverwriteMode=dynamic``, and the
-    query's result is the TABLE READ BACK, held to the same
-    full-build oracle as gcd_snapshot.
+    watermark rebuild lands in the REGISTERED snapshot table by an
+    ``insertInto(overwrite=True)`` that is a dynamic partition
+    overwrite because the table was staged with the
+    ``partitionOverwriteMode=dynamic`` storage option (the session's
+    own mode is never changed), and the query's result is the TABLE
+    READ BACK, held to the same full-build oracle as gcd_snapshot.
 
     The demonstration is non-vacuous by construction: the prior
     table's watermark bucket is staged STALE (odd-issue rows absent
@@ -398,14 +404,7 @@ def gcd_snapshot_nightly_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
         delta = build_snapshot(spark, changed, RUN_DATE).withColumn(
             "mod_bucket", _cdc_mod_bucket_from_int(F.col("modified"))
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            delta.select(*spark.table(name).columns).write.insertInto(
-                name, overwrite=True
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        delta.select(*spark.table(name).columns).write.insertInto(name, overwrite=True)
     return serialize_array_cols(spark.table(name).drop("mod_bucket"))
 
 
@@ -479,7 +478,7 @@ def snapshot_table_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join/agg tree (round 7 — this query was paying 2 flagship
     # builds, r6 sf0.1 wall 9.0 s -> ~6 s)
     full = build_flagship(spark, sf_dir).localCheckpoint(eager=False)
-    write_snapshot(full, path, 20240115, mode="overwrite")
+    write_snapshot(full, path, 20240115)
     write_snapshot(
         full.where(F.col("issue_id") % INCR_MOD < INCR_CHANGED), path, 20240116
     )

@@ -68,10 +68,12 @@ def udtf_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import udtf
 
-    # Arrow-optimized UDTF execution: columnar transfer, not pickling.
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
-    @udtf(returnType="doc_id bigint, token string, run_start int, run_len int")
+    # Arrow-optimized UDTF execution (columnar transfer, not pickling),
+    # chosen per function rather than through session conf.
+    @udtf(
+        returnType="doc_id bigint, token string, run_start int, run_len int",
+        useArrow=True,
+    )
     class TokenRuns:
         def eval(self, doc_id, text):  # noqa: ANN001 - UDTF contract
             if text is None:

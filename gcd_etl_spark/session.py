@@ -1,5 +1,11 @@
 """SparkSession construction with engine-wide defaults.
 
+This is the one place the package sets session SQL conf: ``get_spark``
+sets it when it builds the session. No other package call changes the
+conf of the session it is given. A call that needs another value uses
+a per-operation setting (a write option, ``udtf(useArrow=True)``) or a
+child session of its own from ``spark.newSession()``.
+
 Design notes (100 TB posture):
 
 * AQE on — runtime coalescing, skew-join splitting, and join-strategy
@@ -116,6 +122,12 @@ def get_spark(
         # we honor the same output-file sizing contract declaratively.
         .config("spark.sql.files.maxRecordsPerFile", "2000000")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # Spark has no nanosecond timestamp type: without this a
+        # TIMESTAMP(NANOS) parquet column fails to read at all, and
+        # with it the column reads as a long of nanoseconds
+        # (``catalog.read_table`` dispatches on which one it got).
+        # Micro and milli encodings read as timestamps either way.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -51,13 +51,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The fixture dir is driver-owned and its physical types have
     changed between rounds (TIMESTAMP(NANOS) in r1-r3, timestamp[us]
     now), so assuming one encoding is a latent analysis-time crash:
-    branch on what the scan actually reads.
+    branch on what the scan actually reads. A TIMESTAMP(NANOS) file
+    reads at all only because ``session.get_spark`` builds the session
+    with ``spark.sql.legacy.parquet.nanosAsLong=true``.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # Harmless for micro/milli encodings; required to even READ a
-        # TIMESTAMP(NANOS) file (Spark has no nanos timestamp type).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
         from pyspark.sql import functions as F
         from pyspark.sql import types as T

@@ -15,11 +15,20 @@ converged streaming state must hash-match the batch GROUP BY — which
 is exactly what the registered ``stream_stateful_totals`` plan
 verifies against DuckDB.
 
-Scale notes: state lives in the executor-side state store (RocksDB in
-production, one entry per key), micro-batches shuffle on the group
-key only, and Arrow batches the per-key rows into pandas. For
-unbounded key spaces add a timeout (``GroupStateTimeout`` processing-
-or event-time) and emit-on-expiry; NoTimeout is correct for the
+Scale notes: state lives in the executor-side state store, one entry
+per key; micro-batches shuffle on the group key only, and Arrow
+batches the per-key rows into pandas. The runners use whatever
+provider the session has (Spark's default is the on-heap
+HDFS-backed store). At 100 TB pick RocksDB through Spark's own key,
+``spark.sql.streaming.stateStore.providerClass`` set to
+``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
+(``get_spark(extra_conf=...)`` or spark-submit): state then lives
+off-heap, so executor heap no longer bounds the keyspace. At sf0.01
+both providers gave identical results and indistinguishable wall
+time (BASELINE.md round 9).
+
+For unbounded key spaces add a timeout (``GroupStateTimeout``
+processing- or event-time) and emit-on-expiry; NoTimeout is correct for the
 totals operator because its parity contract needs every key's final
 state, and ``run_streaming_sessions_timeout`` below exercises the
 EventTimeTimeout emit-on-expiry path.
@@ -37,68 +46,12 @@ mechanical (state get/update/timeout map 1:1).
 
 from __future__ import annotations
 
-import os
-from contextlib import contextmanager
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from gcd_etl_spark.streaming.jobs import streaming_events
-
-#: State-store provider for the stateful runners (round-7 verdict
-#: item 6). "hdfs" (default) is the on-heap HDFSBackedStateStoreProvider;
-#: "rocksdb" flips to the bundled RocksDBStateStoreProvider — the
-#: 100 TB answer: state lives off-heap in a log-structured KV store
-#: with changelog checkpointing, so executor heap no longer bounds
-#: keyspace and GC pauses stop scaling with state size. Flip with
-#: GCD_STATE_STORE=rocksdb (read per run, so one process can measure
-#: both). Measured at sf0.01 (BASELINE.md round 9): identical results
-#: and indistinguishable wall (sessions 12.9 vs 12.4 s, totals 1.65
-#: vs 1.70 s warm min-of-2) — at fixture state sizes neither provider
-#: dominates; RocksDB pays off when state outgrows heap.
-_PROVIDER_CLASSES = {
-    "hdfs": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider"
-    ),
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-}
-
-
-def state_store_provider() -> str:
-    """Active provider key, validated against the known set."""
-    name = os.environ.get("GCD_STATE_STORE", "hdfs").lower()
-    if name not in _PROVIDER_CLASSES:
-        raise ValueError(
-            f"GCD_STATE_STORE={name!r}: expected one of "
-            f"{sorted(_PROVIDER_CLASSES)}"
-        )
-    return name
-
-
-@contextmanager
-def _state_store_conf(spark: SparkSession):
-    """Pin the configured provider class for the duration of one
-    streaming run, restoring the prior session value after (the
-    provider is bound per-query at stream start)."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:  # noqa: BLE001 — unset key raises in Spark 4
-        prev = None
-    spark.conf.set(key, _PROVIDER_CLASSES[state_store_provider()])
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 #: Emitted per touched key per micro-batch: the post-update state.
 OUTPUT_SCHEMA = "user_id long, n_events long, max_value double, last_event_sec long"
@@ -144,17 +97,16 @@ def run_streaming_stateful_totals(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    with _state_store_conf(spark):
-        q = (
-            updated.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    q = (
+        updated.writeStream.outputMode("update")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         spark.sql(f"SELECT * FROM {name}")
@@ -241,13 +193,10 @@ def run_streaming_sessions_timeout(
     """Drive the staged stream through the expiring sessionizer and
     return every emitted (closed) session, sentinel keys excluded.
 
-    The state store inherits its partition count from
-    spark.sql.shuffle.partitions at query start, and EVERY
-    micro-batch pays one state-store task per partition; at fixture
-    key cardinality 8 partitions cut that fixed cost 4x versus the
-    session default (measured 32 -> 21 s at sf0.01) without touching
-    semantics. Production sizes this to keys/cores, not fixtures."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    The state store takes its partition count from the session's
+    ``spark.sql.shuffle.partitions`` at query start, and every
+    micro-batch pays one state-store task per partition, so that
+    count sets this runner's fixed per-batch cost."""
     events = streaming_events(spark, staged_dir)
     sessions = (
         events.withWatermark("ts", "1 second")
@@ -260,19 +209,14 @@ def run_streaming_sessions_timeout(
             GroupStateTimeout.EventTimeTimeout,
         )
     )
+    q = (
+        sessions.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with _state_store_conf(spark):
-            q = (
-                sessions.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        q.processAllAvailable()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.stop()
     return spark.sql(f"SELECT * FROM {name}").where(F.col("user_id") >= 0)

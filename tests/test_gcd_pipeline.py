@@ -155,28 +155,19 @@ def test_partitioned_sink_and_table(spark, gcd_tables, tmp_path):
     assert "PartitionFilters" in plan
 
 
-def test_compact_snapshot_partition(spark, gcd_tables, tmp_path):
-    """Compaction rewrites a fragmented partition to target_files
-    without losing or changing a row."""
-    import glob
-    import os
-
-    from gcd_etl_spark.sources.sinks import compact_snapshot_partition
-
-    out = str(tmp_path / "snap_compact")
-    snap = build_snapshot(spark, gcd_tables, RUN_DATE)
-    # fragment the partition deliberately
+def test_write_snapshot_rerun_replaces_its_partition(spark, tmp_path):
+    """A nightly run twice leaves one copy of its night: the rerun
+    replaces its own ``snapshot=`` partition and keeps the rows of a
+    night written before it. The session's overwrite mode stays as it
+    was, because the mode is a write option."""
     from gcd_etl_spark.sources.sinks import write_snapshot
 
-    write_snapshot(snap.repartition(8), out, 20240115)
-    part = f"{out}/snapshot=20240115"
-    assert len(glob.glob(f"{part}/*.parquet")) >= 8
-    before = spark.read.parquet(part)
-    before_count = before.count()
-    before_hash = before.select(F.sum(F.xxhash64(*sorted(before.columns)).cast("decimal(38,0)"))).first()[0]
-    n = compact_snapshot_partition(spark, out, 20240115, target_files=1)
-    assert len(glob.glob(f"{part}/*.parquet")) == 1
-    after = spark.read.parquet(part)
-    assert after.count() == n == before_count
-    after_hash = after.select(F.sum(F.xxhash64(*sorted(after.columns)).cast("decimal(38,0)"))).first()[0]
-    assert after_hash == before_hash
+    out = str(tmp_path / "snap_rerun")
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(mode_key)
+    write_snapshot(spark.range(10), out, 20240114)
+    for _ in range(2):
+        write_snapshot(spark.range(1000), out, 20240115)
+    counts = dict(spark.read.parquet(out).groupBy("snapshot").count().collect())
+    assert counts == {20240114: 10, 20240115: 1000}
+    assert spark.conf.get(mode_key) == mode

@@ -246,39 +246,27 @@ def test_nightly_overwrite_repairs_stale_partition_only(spark, sf_smoke):
 # ---------------------- RocksDB state store (r7 verdict item 6)
 
 
-def test_rocksdb_state_store_provider_parity(spark, sf_smoke, monkeypatch):
+def test_rocksdb_state_store_provider_parity(spark, sf_smoke):
     """The stateful sessionizer must produce IDENTICAL sessions under
     the on-heap HDFS provider and the RocksDB provider — the state
     store is an executor-memory implementation detail, never a
     semantics knob. RocksDB is the 100 TB answer (state off-heap,
-    keyspace unbounded by executor heap). Runs the REGISTERED query
-    both ways so the staging (time-ordered batches + sentinel
-    watermark advancement) is exactly the production shape."""
-    from gcd_etl_spark.streaming.stateful import state_store_provider
-
-    monkeypatch.delenv("GCD_STATE_STORE", raising=False)
-    assert state_store_provider() == "hdfs"
+    keyspace unbounded by executor heap). The runner uses whatever
+    provider its session has, so RocksDB runs in a child session that
+    sets Spark's own provider key. Runs the REGISTERED query both ways
+    so the staging (time-ordered batches + sentinel watermark
+    advancement) is exactly the production shape."""
+    key = "spark.sql.streaming.stateStore.providerClass"
     q = QUERIES["stream_sessions_timeout"]
     base = sorted(tuple(r) for r in q.build(spark, sf_smoke).collect())
-    monkeypatch.setenv("GCD_STATE_STORE", "rocksdb")
-    assert state_store_provider() == "rocksdb"
-    rocks = sorted(tuple(r) for r in q.build(spark, sf_smoke).collect())
+    rocks_session = spark.newSession()
+    rocks_session.conf.set(
+        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+    rocks = sorted(tuple(r) for r in q.build(rocks_session, sf_smoke).collect())
     assert base == rocks
     assert len(base) > 0
-    # the conf restore must leave the session on the default provider
-    # (the key has a built-in default, so read it rather than expect
-    # an unset error)
-    assert "RocksDB" not in spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass"
-    )
-
-
-def test_state_store_provider_rejects_unknown(monkeypatch):
-    from gcd_etl_spark.streaming.stateful import state_store_provider
-
-    monkeypatch.setenv("GCD_STATE_STORE", "leveldb")
-    with pytest.raises(ValueError):
-        state_store_provider()
+    assert "RocksDB" not in spark.conf.get(key)
 
 
 # ------------------------------- empty-input robustness (r7 pin)

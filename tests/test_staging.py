@@ -86,3 +86,70 @@ def test_one_staging_rule_in_package():
             elif attr == "rsplit" and args and ast.unparse(args[0]) == "'sf'":
                 found.append(f"{where} derives a tag from rsplit('sf')")
     assert not found, "\n".join(found)
+
+
+def _conf_writes_outside_child_sessions(tree: ast.AST) -> list[ast.Call]:
+    """``<x>.conf.set``/``<x>.conf.unset`` calls in ``tree`` whose
+    ``<x>`` is not a name the enclosing function bound to a
+    ``newSession()`` result."""
+    found = []
+
+    def visit(node: ast.AST, children: frozenset[str]) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            children = frozenset(
+                t.id
+                for n in ast.walk(node)
+                if isinstance(n, ast.Assign)
+                and isinstance(n.value, ast.Call)
+                and isinstance(n.value.func, ast.Attribute)
+                and n.value.func.attr == "newSession"
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            )
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("set", "unset")
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"
+        ):
+            owner = node.func.value.value
+            if not (isinstance(owner, ast.Name) and owner.id in children):
+                found.append(node)
+        for child in ast.iter_child_nodes(node):
+            visit(child, children)
+
+    visit(tree, frozenset())
+    return found
+
+
+def test_no_call_changes_session_conf():
+    """Session SQL conf is set only in ``session.py``, when the session
+    is built. Anywhere else, a conf write must go to a child session
+    that the same function made with ``newSession()``."""
+    root = Path(gcd_etl_spark.__file__).parent
+    found = [
+        f"{path.relative_to(root)}:{node.lineno} {ast.unparse(node)}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "session.py"
+        for node in _conf_writes_outside_child_sessions(ast.parse(path.read_text()))
+    ]
+    assert not found, "\n".join(found)
+
+
+def test_conf_guard_flags_caller_session():
+    """The guard sees a write to the caller's session, and passes one
+    to a child session made in the same function."""
+    src = """
+def bad(spark):
+    spark.conf.set("k", "v")
+
+def good(spark):
+    child = spark.newSession()
+    child.conf.set("k", "v")
+
+def other(child):
+    child.conf.unset("k")
+"""
+    flagged = [n.lineno for n in _conf_writes_outside_child_sessions(ast.parse(src))]
+    assert flagged == [3, 10]
