@@ -405,14 +405,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     The static side is planned once and rebroadcast per micro-batch;
     join itself is stateless so the only streaming state is the
     aggregate. Integer cents keep stream/batch equality exact."""
-    from gcd_etl_spark.streaming.jobs import run_streaming_static_enrich
+    from gcd_etl_spark.streaming.jobs import _stage_events, run_streaming_static_enrich
 
-    tag = sf_tag(sf_dir)
-    staged = f"/tmp/gcd_etl_stream_enrich_{tag}"
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    events.write.mode("overwrite").parquet(staged)
+    staged, tag = _stage_events(spark, sf_dir, "enrich")
     cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )

@@ -2,15 +2,19 @@
 
 The streaming jobs (streaming/jobs.py) run the SAME algebra as the
 batch operators; these plans prove it under the driver's oracle:
-stage a table to a parquet directory, drive it through ``readStream``
-(one file per micro-batch) into a memory sink or foreachBatch
-partition writes, and hash-compare converged state against the batch
-restatement. Families (rounds 3-12): windowed aggregations (tumbling
-/ sliding / sessions / stateful totals), streaming dedup, and the
-INGEST GATES — each persisted-artifact lifecycle's foreachBatch twin
-probing the same staged index as its nightly delta query (MinHash
-bands, SRP buckets fixed-width anchor + occupancy-CAPPED production
-form, frozen bigram-LM costs, frozen DSIR model). A streaming
+stage a table to a parquet directory, replay it one file per
+micro-batch, and hash-compare converged state against the batch
+restatement. Every query here runs through the one harness in
+streaming/jobs.py — its file-source reader, its memory-sink runner,
+its ``availableNow`` drain and its ingest-gate runner
+(``run_ingest_gate``/``gate_sink``); this module holds only staging,
+per-batch scoring and oracles. Families (rounds 3-12): windowed
+aggregations (tumbling / sliding / sessions / stateful totals),
+streaming dedup, and the INGEST GATES — each persisted-artifact
+lifecycle's per-micro-batch twin probing the same staged index as its
+nightly delta query (MinHash bands, SRP buckets fixed-width anchor +
+occupancy-CAPPED production form, frozen bigram-LM costs, frozen DSIR
+model): index setup plus one ``run_ingest_gate`` call. A streaming
 pipeline whose converged answer equals the batch answer is the
 Spark-first statement of batch/stream unification.
 """
@@ -18,44 +22,28 @@ Spark-first statement of batch/stream unification.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from gcd_etl_spark.operators import dedup as D
+from gcd_etl_spark.plans.dedup import DELTA_MOD
 from gcd_etl_spark.plans.registry import query
-from gcd_etl_spark.sources.catalog import read_table, sf_tag
-from gcd_etl_spark.streaming.jobs import run_streaming_tumbling
+from gcd_etl_spark.sources.catalog import read_table, read_table_spread, sf_tag
+from gcd_etl_spark.streaming.jobs import (
+    _stage_events,
+    run_ingest_gate,
+    run_streaming_apply_cdc,
+    run_streaming_dedup,
+    run_streaming_interval_join,
+    run_streaming_late_drop,
+    run_streaming_sessions,
+    run_streaming_sliding,
+    run_streaming_to_parquet,
+    run_streaming_tumbling,
+)
 from gcd_etl_spark.streaming.stateful import run_streaming_stateful_totals
-
-
-def _empty_seed(spark: SparkSession, schema: str) -> DataFrame:
-    """Zero-row frame with ``schema``, built purely JVM-side
-    (``spark.range(0)`` + typed null literals). The gates seed their
-    verdict sinks with one empty partition dir per run; the previous
-    ``spark.createDataFrame([], schema)`` parallelizes even an empty
-    local list into defaultParallelism PICKLED PYTHON partitions, so
-    the seed write paid ~32 Python-worker task round-trips (measured
-    0.4-1.5 s per gate run at local[32]; the JVM form is ~0.1 s —
-    guide §4: eliminate the Python boundary). Read-back schema is
-    identical (parquet footer from the same DDL types)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    st = T.StructType.fromDDL(schema)
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
-    )
-
-
-def _stage_events(spark: SparkSession, sf_dir: str, prefix: str) -> tuple[str, str]:
-    """Write the events table to a parquet dir usable as a file-source
-    stream; returns (staged_dir, per-sf tag for sink names)."""
-    tag = sf_tag(sf_dir)
-    staged = f"/tmp/gcd_etl_stream_{prefix}_{tag}"
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    events.write.mode("overwrite").parquet(staged)
-    return staged, tag
 
 
 @query(
@@ -127,8 +115,6 @@ def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-ordered, so the watermark spans the whole event range —
     correct for the bounded-parity contract; a live deployment sets it
     to its real lateness bound."""
-    from gcd_etl_spark.streaming.jobs import run_streaming_sessions
-
     staged, tag = _stage_events(spark, sf_dir, "sessions")
     return run_streaming_sessions(
         spark, staged, watermark="100000 hours", name=f"stream_sessions_{tag}"
@@ -148,8 +134,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch), append sink. The converged set must equal the batch
     SELECT DISTINCT — dedup is the one operator whose stream/batch
     parity is set-equality, independent of arrival order."""
-    from gcd_etl_spark.streaming.jobs import run_streaming_dedup
-
     staged, tag = _stage_events(spark, sf_dir, "dedup")
     return run_streaming_dedup(spark, staged, name=f"stream_dedup_{tag}")
 
@@ -173,8 +157,6 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAMING ENGINE (one open aggregate per overlapping window in the
     state store), hash-matched against the batch window-expansion SQL
     — the same oracle the batch win_sliding plan uses."""
-    from gcd_etl_spark.streaming.jobs import run_streaming_sliding
-
     staged, tag = _stage_events(spark, sf_dir, "sliding")
     return run_streaming_sliding(
         spark, staged, watermark="100000 hours", name=f"stream_sliding_{tag}"
@@ -216,10 +198,6 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory, is pinned by construction."""
     import glob
     import time as _time
-
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.streaming.jobs import run_streaming_late_drop
 
     tag = sf_tag(sf_dir)
     staged = f"/tmp/gcd_etl_stream_late_{tag}"
@@ -279,8 +257,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag_us rides along so the match TIMING, not just the pair ids,
     is value-hashed."""
     staged, tag = _stage_events(spark, sf_dir, "ssjoin")
-    from gcd_etl_spark.streaming.jobs import run_streaming_interval_join
-
     return run_streaming_interval_join(spark, staged, name=f"stream_ssjoin_{tag}")
 
 
@@ -304,12 +280,6 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived correctly. Output dirs are wiped with their checkpoint
     per build (a stale checkpoint with fresh dirs would no-op the
     stream)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.streaming.jobs import run_streaming_to_parquet
-
     staged, tag = _stage_events(spark, sf_dir, "sink")
     out = f"/tmp/gcd_etl_stream_sink_out_{tag}"
     ckpt = f"/tmp/gcd_etl_stream_sink_ckpt_{tag}"
@@ -346,14 +316,12 @@ FROM r WHERE rn = 1
 )
 def stream_apply_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC upsert maintenance BY THE STREAMING ENGINE: micro-batches
-    fold into a versioned per-user state table through foreachBatch
-    (count adds, last-writer-wins struct max on the (ts, event_id)
-    total order), and the converged state must equal the batch
+    fold into a versioned per-user state table through a per-batch
+    writer (count adds, last-writer-wins struct max on the (ts,
+    event_id) total order), and the converged state must equal the batch
     last-per-key restatement — batch-boundary- and order-independent
     because the merge is a commutative monoid."""
     staged, tag = _stage_events(spark, sf_dir, "cdc")
-    from gcd_etl_spark.streaming.jobs import run_streaming_apply_cdc
-
     return run_streaming_apply_cdc(
         spark, staged, f"/tmp/gcd_etl_stream_cdc_state_{tag}", name=f"stream_cdc_{tag}"
     )
@@ -376,8 +344,6 @@ def _time_ordered_banded(events: DataFrame):
     events share the max timestamp; a degenerate all-one-timestamp
     corpus degrades to an empty first batch (no band-1 rows), whose
     0-row micro-batch cannot change the converged state."""
-    from pyspark.sql import functions as F
-
     hi, med = events.agg(
         F.max(F.unix_micros("ts")),
         F.percentile_approx(F.unix_micros("ts"), 0.5, 10000),
@@ -387,16 +353,6 @@ def _time_ordered_banded(events: DataFrame):
         "_rb", F.when(F.unix_micros("ts") <= F.lit(med), F.lit(1)).otherwise(F.lit(2))
     )
     return banded, hi
-
-
-def _time_ordered_halves(events: DataFrame):
-    """([first, second], max_ts_us) view of ``_time_ordered_banded``
-    (kept for the plan-audit and split-property pins; the staging
-    path writes the banded frame in one pass)."""
-    from pyspark.sql import functions as F
-
-    banded, hi = _time_ordered_banded(events)
-    return [banded.where(F.col("_rb") == i).drop("_rb") for i in (1, 2)], hi
 
 
 _SESS_TIMEOUT_ORACLE = """
@@ -447,8 +403,6 @@ def stream_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import time as _time
 
-    from pyspark.sql import functions as F
-
     from gcd_etl_spark.streaming.stateful import (
         SESSION_GAP_US,
         run_streaming_sessions_timeout,
@@ -495,8 +449,6 @@ def stream_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_banded.repartition(n_batches, "_rb").write.partitionBy("_rb").mode(
         "overwrite"
     ).parquet(staged)
-    import shutil as _shutil
-
     now = _time.time()
     for i in range(1, n_batches + 1):
         # Suffix j guards the (off-by-default) case of >1 file per
@@ -507,23 +459,20 @@ def stream_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             dst = f"{staged}/replay-{i}-{j}{os.path.splitext(p)[1]}"
             os.rename(p, dst)
             os.utime(dst, (now - 600 + i * 60, now - 600 + i * 60))
-        _shutil.rmtree(f"{staged}/_rb={i}", ignore_errors=True)
+        shutil.rmtree(f"{staged}/_rb={i}", ignore_errors=True)
     return run_streaming_sessions_timeout(
         spark, staged, name=f"stream_sess_timeout_{tag}"
     )
 
 
 # --------------------- streaming dedup against the persisted corpus
-def delta_dedup_batch_fn(docs: DataFrame, idx: DataFrame, out_root: str):
-    """The foreachBatch worker for the streaming ingest gate, shared
-    by the registered stream plan and the kill-and-restart test
+def delta_dedup_score(docs: DataFrame, idx: DataFrame):
+    """The streaming dedup gate's per-batch scorer, shared by the
+    registered stream plan and the kill-and-restart test
     (tests/test_round10.py) so the replay semantics under test are
     the production code path, not a re-implementation: band the batch
     (only the batch), broadcast its bands against the persisted
-    bucketed corpus index, exact-Jaccard verify, then OVERWRITE the
-    batch's own batch_id-keyed partition dir — idempotent under
-    at-least-once redelivery (a replayed batch lands on the same path
-    instead of appending duplicate verdict rows).
+    bucketed corpus index, exact-Jaccard verify.
 
     The verify's delta side shingles only the BATCH instead of the
     whole docs table (every id_a is a batch id). The corpus side is
@@ -535,11 +484,7 @@ def delta_dedup_batch_fn(docs: DataFrame, idx: DataFrame, out_root: str):
     O(corpus) feature compute, at every corpus size. Value-identical:
     the verify equi-join on id_b already discards every non-candidate
     corpus row; the semi join removes them earlier (guide §3.2)."""
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.operators import dedup as D
-
-    def dedup_batch(batch: DataFrame, batch_id: int) -> None:
+    def score(batch: DataFrame) -> DataFrame:
         bands = D.minhash_band_table(batch, portable=True).select(
             F.col("_id").alias("delta_id"), "band_idx", "band_hash"
         )
@@ -566,13 +511,13 @@ def delta_dedup_batch_fn(docs: DataFrame, idx: DataFrame, out_root: str):
             sets_a=D.shingle_sets(batch),
             sets_b=sets_b,
         )
-        verified.select(
+        return verified.select(
             F.col("id_a").alias("delta_id"),
             F.col("id_b").alias("corpus_id"),
             F.round("jaccard", 6).alias("jaccard"),
-        ).write.mode("overwrite").parquet(f"{out_root}/batch_id={batch_id}")
+        )
 
-    return dedup_batch
+    return score
 
 
 def _stream_delta_dedup_oracle() -> str:
@@ -586,73 +531,36 @@ def stream_dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING form of dedup_delta_vs_corpus: new documents
     arrive as file-source micro-batches and each batch is near-dedup
     checked against the PERSISTED corpus LSH band index inside
-    ``foreachBatch`` — band the batch (only the batch), broadcast its
+    each micro-batch — band the batch (only the batch), broadcast its
     band rows against the bucketed index table, exact-Jaccard verify
-    the candidates, land the verdicts in a batch_id-keyed partition
-    dir (idempotent under replay: a retried batch OVERWRITES its own
-    path instead of appending duplicate rows — the standard
-    foreachBatch exactly-once-effect pattern on plain parquet). This
-    is the ingest-gate a 100 TB corpus actually runs: per-arrival
-    cost is O(batch) + one index probe, the corpus is never
-    re-shingled, and state lives in the STORAGE LAYER (the band index
-    + per-batch verdict partitions), not the stream's state store —
-    so the gate restarts for free and batch boundaries cannot change
-    the answer (per-doc
-    verdicts are independent, so the union over any batching equals
-    the one-shot batch result; the oracle IS the batch query's
-    oracle, value-hash exact).
+    the candidates. This is the ingest-gate a 100 TB corpus actually
+    runs: per-arrival cost is O(batch) + one index probe and the
+    corpus is never re-shingled; the oracle IS the batch query's
+    oracle, value-hash exact.
 
     Delta-internal duplicates are out of scope exactly as in the
     nightly form (the self-join path handles those); the index is
     shared via ensure_corpus_band_index so stream and nightly can
     never index differently."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.operators import dedup as D
-    from gcd_etl_spark.plans.dedup import DELTA_MOD, ensure_corpus_band_index
-    from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.plans.dedup import ensure_corpus_band_index
 
     docs = read_table_spread(spark, sf_dir, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == 0
     idx = ensure_corpus_band_index(spark, sf_dir, docs.where(~is_delta))
-
-    import uuid
-
-    # uuid-suffixed scratch (round-10 ADVICE): two concurrent runs
-    # over the same sf dir (pytest-xdist, sweep + bench in parallel)
-    # must not rmtree each other's staging mid-stream. Each build
-    # gets private dirs; rmtree only ever touches this run's own.
-    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
-    staged = f"/tmp/gcd_etl_stream_deltadedup_{tag}"
-    out_root = f"/tmp/gcd_etl_stream_deltadedup_out_{tag}"
-    shutil.rmtree(staged, ignore_errors=True)
-    shutil.rmtree(out_root, ignore_errors=True)
-    delta = docs.where(is_delta)
-    # ~4 files -> ~4 micro-batches (maxFilesPerTrigger=1); per-doc
-    # independence makes the batch split immaterial to the answer
-    delta.repartition(4).write.parquet(staged)
-    # seed the sink with an empty frame so a zero-delta stream still
-    # yields a readable (empty) result (a batch_id=-1 partition dir,
-    # keeping the layout uniform for partition discovery)
-    empty = _empty_seed(spark, "delta_id long, corpus_id long, jaccard double")
-    empty.write.parquet(f"{out_root}/batch_id=-1")
-
-    dedup_batch = delta_dedup_batch_fn(docs, idx, out_root)
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    return run_ingest_gate(
+        spark,
+        sf_dir,
+        "deltadedup",
+        docs.where(is_delta),
+        delta_dedup_score(docs, idx),
+        "delta_id long, corpus_id long, jaccard double",
     )
-    q = stream.writeStream.foreachBatch(dedup_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.read.parquet(out_root).select("delta_id", "corpus_id", "jaccard")
 
 
 # ----------------- streaming SEMANTIC dedup gate (SemDeDup at ingest)
+_SEMANTIC_GATE_DDL = "delta_id long, corpus_id long, dot long, cos_ppm long"
+
+
 def _srp_pruned_corpus_quant(spark, sf_dir: str, cand: DataFrame):
     """(candidate-checkpointed cand, corpus quant frame pruned to the
     candidate ids) — the semantic gates' form of the round-14 semi-join
@@ -661,10 +569,7 @@ def _srp_pruned_corpus_quant(spark, sf_dir: str, cand: DataFrame):
     quantization (the per-batch Arrow matmul stops being O(corpus)).
     Value-identical: the verify equi-join on corpus_id already drops
     every non-candidate row."""
-    from pyspark.sql import functions as F
-
     from gcd_etl_spark.plans.dedup import _srp_quant_frame
-    from gcd_etl_spark.sources.catalog import read_table_spread
 
     cand = cand.localCheckpoint(eager=True)
     q_b = _srp_quant_frame(
@@ -679,20 +584,16 @@ def _srp_pruned_corpus_quant(spark, sf_dir: str, cand: DataFrame):
     return cand, q_b
 
 
-def semantic_gate_batch_fn(spark, sf_dir: str, idx: DataFrame, out_root: str):
-    """foreachBatch worker for the semantic ingest gate, shared with
+def semantic_gate_score(spark, sf_dir: str, idx: DataFrame):
+    """Per-batch scorer of the semantic ingest gate, shared with
     tests: SRP-bucket the batch's embeddings (one Arrow matmul over
     O(batch) rows), broadcast its (t, bk) rows against the persisted
-    corpus bucket index, exact-integer-dot verify, OVERWRITE the
-    batch's own batch_id-keyed partition dir (idempotent under
-    at-least-once redelivery — the dedup gate's sink pattern).
+    corpus bucket index, exact-integer-dot verify.
 
     The verify's delta side quantizes only the BATCH instead of the
     whole embeddings table (every delta_id is a batch id), and the
     corpus-side quant frame is semi-join pruned to the batch's
-    candidate ids (see delta_dedup_batch_fn / _srp_pruned_corpus_quant)."""
-    from pyspark.sql import functions as F
-
+    candidate ids (see delta_dedup_score / _srp_pruned_corpus_quant)."""
     from gcd_etl_spark.plans.dedup import (
         SRP_BITS,
         SRP_TABLES,
@@ -701,7 +602,7 @@ def semantic_gate_batch_fn(spark, sf_dir: str, idx: DataFrame, out_root: str):
         _srp_verify_delta,
     )
 
-    def gate_batch(batch: DataFrame, batch_id: int) -> None:
+    def score(batch: DataFrame) -> DataFrame:
         delta_tb = _srp_bucket_frame(batch, SRP_BITS, SRP_TABLES).select(
             F.col("vec_id").alias("delta_id"), F.posexplode("bks").alias("t", "bk")
         )
@@ -711,11 +612,11 @@ def semantic_gate_batch_fn(spark, sf_dir: str, idx: DataFrame, out_root: str):
             .dropDuplicates(["delta_id", "corpus_id"])
         )
         cand, q_b = _srp_pruned_corpus_quant(spark, sf_dir, cand)
-        _srp_verify_delta(
+        return _srp_verify_delta(
             spark, sf_dir, cand, q_a=_srp_quant_frame(batch), q_b=q_b
-        ).write.mode("overwrite").parquet(f"{out_root}/batch_id={batch_id}")
+        )
 
-    return gate_batch
+    return score
 
 
 def _semantic_gate_oracle() -> str:
@@ -730,80 +631,51 @@ def stream_semantic_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     as an ingest gate: newly-embedded documents arrive as file-source
     micro-batches and each batch is checked for semantic near-dups
     (cosine >= 0.40, portable SRP family) against the PERSISTED corpus
-    bucket index inside foreachBatch. Per-arrival cost is O(batch) +
+    bucket index per micro-batch. Per-arrival cost is O(batch) +
     one index probe; the corpus is never re-projected through the
-    hyperplanes; state lives in the storage layer (bucket index +
-    per-batch verdict partitions), so the gate restarts for free and
-    batch boundaries cannot change the answer (per-vector verdicts
-    are independent; the union over any batching equals the one-shot
-    nightly result — the oracle IS the nightly query's oracle,
-    value-hash exact including the rounded cos_ppm).
+    hyperplanes; the oracle IS the nightly query's oracle, value-hash
+    exact including the rounded cos_ppm.
 
     ANCHOR CONFIGURATION (round 12): fixed-width UNCAPPED index —
     kept as the value-oracled anchor, NOT the production gate (exp
     1.35 at 32x). Production + lifecycle bench:
     stream_semantic_dedup_gate_capped."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.plans.dedup import DELTA_MOD, ensure_srp_bucket_index
-    from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.plans.dedup import ensure_srp_bucket_index
 
     emb = read_table_spread(spark, sf_dir, "embeddings")
     is_delta = F.col("vec_id") % DELTA_MOD == 0
     idx = ensure_srp_bucket_index(spark, sf_dir, emb.where(~is_delta))
-
-    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
-    staged = f"/tmp/gcd_etl_stream_semgate_{tag}"
-    out_root = f"/tmp/gcd_etl_stream_semgate_out_{tag}"
-    shutil.rmtree(staged, ignore_errors=True)
-    shutil.rmtree(out_root, ignore_errors=True)
-    delta = emb.where(is_delta)
-    delta.repartition(4).write.parquet(staged)
-    _empty_seed(
-        spark, "delta_id long, corpus_id long, dot long, cos_ppm long"
-    ).write.parquet(f"{out_root}/batch_id=-1")
-
-    gate = semantic_gate_batch_fn(spark, sf_dir, idx, out_root)
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
-    q = stream.writeStream.foreachBatch(gate).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.read.parquet(out_root).select(
-        "delta_id", "corpus_id", "dot", "cos_ppm"
+    return run_ingest_gate(
+        spark,
+        sf_dir,
+        "semgate",
+        emb.where(is_delta),
+        semantic_gate_score(spark, sf_dir, idx),
+        _SEMANTIC_GATE_DDL,
     )
 
 
-def semantic_gate_batch_fn_capped(spark, sf_dir: str, idx: DataFrame, out_root: str):
-    """foreachBatch worker for the CAPPED semantic ingest gate: same
-    sink pattern as semantic_gate_batch_fn, but candidates come from
-    the probe-both-keys step shared with the nightly capped delta
-    query (dedup._srp_capped_probe_cands), so the gate and the
-    nightly boundary can never probe the capped index differently.
-
-    The verify's delta side quantizes only the batch and its corpus
-    side is pruned to the candidate ids, as in semantic_gate_batch_fn."""
+def semantic_gate_score_capped(spark, sf_dir: str, idx: DataFrame):
+    """Per-batch scorer of the CAPPED semantic ingest gate: as
+    semantic_gate_score, but candidates come from the probe-both-keys
+    step shared with the nightly capped delta query
+    (dedup._srp_capped_probe_cands), so the gate and the nightly
+    boundary can never probe the capped index differently."""
     from gcd_etl_spark.plans.dedup import (
         _srp_capped_probe_cands,
         _srp_quant_frame,
         _srp_verify_delta,
     )
 
-    def gate_batch(batch: DataFrame, batch_id: int) -> None:
+    def score(batch: DataFrame) -> DataFrame:
         cand, q_b = _srp_pruned_corpus_quant(
             spark, sf_dir, _srp_capped_probe_cands(idx, batch)
         )
-        _srp_verify_delta(
+        return _srp_verify_delta(
             spark, sf_dir, cand, q_a=_srp_quant_frame(batch), q_b=q_b
-        ).write.mode("overwrite").parquet(f"{out_root}/batch_id={batch_id}")
+        )
 
-    return gate_batch
+    return score
 
 
 def _semantic_gate_capped_oracle() -> str:
@@ -823,68 +695,26 @@ def stream_semantic_dedup_gate_capped(spark: SparkSession, sf_dir: str) -> DataF
     bucketed index probe per candidate key; heavy buckets contribute
     only the sub-bucket sharing all wide bits, so a sign-space
     cluster in the corpus cannot flood a batch's candidate set.
-    Per-vector verdicts are independent -> union over any batching
-    equals the one-shot nightly result; the oracle IS the capped
-    nightly query's oracle, value-hash exact. The fixed-width gate
-    (stream_semantic_dedup_gate) stays registered as the explicitly-
-    labeled anchor; this is the lifecycle-benched default."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.plans.dedup import DELTA_MOD, ensure_srp_bucket_index
-    from gcd_etl_spark.sources.catalog import read_table_spread
+    The oracle IS the capped nightly query's oracle, value-hash
+    exact. The fixed-width gate (stream_semantic_dedup_gate) stays
+    registered as the explicitly-labeled anchor; this is the
+    lifecycle-benched default."""
+    from gcd_etl_spark.plans.dedup import ensure_srp_bucket_index
 
     emb = read_table_spread(spark, sf_dir, "embeddings")
     is_delta = F.col("vec_id") % DELTA_MOD == 0
-    idx = ensure_srp_bucket_index(
-        spark, sf_dir, emb.where(~is_delta), capped=True
-    )
-
-    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
-    staged = f"/tmp/gcd_etl_stream_semgate_cap_{tag}"
-    out_root = f"/tmp/gcd_etl_stream_semgate_cap_out_{tag}"
-    shutil.rmtree(staged, ignore_errors=True)
-    shutil.rmtree(out_root, ignore_errors=True)
-    delta = emb.where(is_delta)
-    delta.repartition(4).write.parquet(staged)
-    _empty_seed(
-        spark, "delta_id long, corpus_id long, dot long, cos_ppm long"
-    ).write.parquet(f"{out_root}/batch_id=-1")
-
-    gate = semantic_gate_batch_fn_capped(spark, sf_dir, idx, out_root)
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
-    q = stream.writeStream.foreachBatch(gate).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.read.parquet(out_root).select(
-        "delta_id", "corpus_id", "dot", "cos_ppm"
+    idx = ensure_srp_bucket_index(spark, sf_dir, emb.where(~is_delta), capped=True)
+    return run_ingest_gate(
+        spark,
+        sf_dir,
+        "semgate_cap",
+        emb.where(is_delta),
+        semantic_gate_score_capped(spark, sf_dir, idx),
+        _SEMANTIC_GATE_DDL,
     )
 
 
 # ------------------- streaming QUALITY gate (frozen LM at ingest)
-def quality_gate_batch_fn(idx_costs: DataFrame, idx_ctx: DataFrame, out_root: str):
-    """foreachBatch worker for the quality ingest gate, shared with
-    tests: score the batch's documents against the FROZEN bigram-LM
-    artifact (corpus.score_docs_frozen_bigram_lm — the exact code the
-    nightly delta query runs) and OVERWRITE the batch's own
-    batch_id-keyed partition dir (idempotent under at-least-once
-    redelivery — the gate family's sink pattern)."""
-    from gcd_etl_spark.plans.corpus import score_docs_frozen_bigram_lm
-
-    def gate_batch(batch: DataFrame, batch_id: int) -> None:
-        score_docs_frozen_bigram_lm(batch, idx_costs, idx_ctx).write.mode(
-            "overwrite"
-        ).parquet(f"{out_root}/batch_id={batch_id}")
-
-    return gate_batch
-
-
 def _quality_gate_oracle() -> str:
     from gcd_etl_spark.plans.corpus import _bigram_delta_oracle
 
@@ -897,74 +727,34 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     perplexity filter as an ingest gate, completing the gate symmetry
     across the three lifecycle families (MinHash bands, SRP buckets,
     and now the LM cost tables each have a nightly delta query AND a
-    foreachBatch ingest gate probing the SAME persisted artifact).
+    streaming ingest gate probing the SAME persisted artifact).
     New documents arrive as file-source micro-batches; each batch is
-    tokenized and scored against the staged cost tables inside
-    foreachBatch — the corpus is never re-counted, per-arrival cost
-    is O(batch) + broadcast probes. Per-document scores are
-    independent, so the union over ANY batching equals the one-shot
-    nightly result — the oracle IS the nightly query's oracle,
-    value-hash exact including the integer NLL ladder. State lives in
-    storage (LM tables + batch_id-keyed verdict partitions): restart
-    is free and replayed batches overwrite their own partition."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.plans.corpus import ensure_bigram_lm_index
-    from gcd_etl_spark.plans.dedup import DELTA_MOD
-    from gcd_etl_spark.sources.catalog import read_table_spread
+    tokenized and scored against the staged cost tables by
+    corpus.score_docs_frozen_bigram_lm, the exact code the nightly
+    delta query runs — the corpus is never re-counted, per-arrival
+    cost is O(batch) + broadcast probes. The oracle IS the nightly
+    query's oracle, value-hash exact including the integer NLL
+    ladder."""
+    from gcd_etl_spark.plans.corpus import (
+        ensure_bigram_lm_index,
+        score_docs_frozen_bigram_lm,
+    )
 
     docs = read_table_spread(spark, sf_dir, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == 0
     costs, ctx_all = ensure_bigram_lm_index(spark, sf_dir, docs.where(~is_delta))
-
-    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
-    staged = f"/tmp/gcd_etl_stream_qgate_{tag}"
-    out_root = f"/tmp/gcd_etl_stream_qgate_out_{tag}"
-    shutil.rmtree(staged, ignore_errors=True)
-    shutil.rmtree(out_root, ignore_errors=True)
-    delta = docs.where(is_delta)
-    delta.repartition(4).write.parquet(staged)
-    _empty_seed(
+    return run_ingest_gate(
         spark,
+        sf_dir,
+        "qgate",
+        docs.where(is_delta),
+        lambda b: score_docs_frozen_bigram_lm(b, costs, ctx_all),
         "doc_id long, n_bigrams long, n_unseen long, "
         "nll_total_micro long, nll_mean_micro long",
-    ).write.parquet(f"{out_root}/batch_id=-1")
-
-    gate = quality_gate_batch_fn(costs, ctx_all, out_root)
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
-    q = stream.writeStream.foreachBatch(gate).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.read.parquet(out_root).select(
-        "doc_id", "n_bigrams", "n_unseen", "nll_total_micro", "nll_mean_micro"
     )
 
 
 # ------------------- streaming DSIR gate (frozen model at ingest)
-def dsir_gate_batch_fn(model: DataFrame, out_root: str):
-    """foreachBatch worker for the DSIR ingest gate, shared with
-    tests: weigh the batch's documents against the FROZEN persisted
-    target/raw model (corpus.score_docs_frozen_dsir — the exact code
-    the nightly delta query runs) and OVERWRITE the batch's own
-    batch_id-keyed partition dir (idempotent under at-least-once
-    redelivery — the gate family's sink pattern)."""
-    from gcd_etl_spark.plans.corpus import score_docs_frozen_dsir
-
-    def gate_batch(batch: DataFrame, batch_id: int) -> None:
-        score_docs_frozen_dsir(batch, model).write.mode("overwrite").parquet(
-            f"{out_root}/batch_id={batch_id}"
-        )
-
-    return gate_batch
-
-
 def _dsir_gate_oracle() -> str:
     from gcd_etl_spark.plans.corpus import _dsir_delta_oracle
 
@@ -977,60 +767,31 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighting as an ingest gate, extending the gate symmetry to the
     family's fourth lifecycle (MinHash bands, SRP buckets, LM cost
     tables, and now the DSIR bucket-LLR model each have a nightly
-    delta query AND a foreachBatch ingest gate probing the SAME
+    delta query AND a streaming ingest gate probing the SAME
     persisted artifact). New documents arrive as file-source
     micro-batches; each batch is hashed and weighed against the
-    frozen <= 513-row model inside foreachBatch — the corpus is never
+    frozen <= 513-row model by corpus.score_docs_frozen_dsir, the
+    exact code the nightly delta query runs — the corpus is never
     re-featurized, per-arrival cost is O(batch) + one broadcast
-    probe. Per-document weights are independent, so the union over
-    ANY batching equals the one-shot nightly result — the oracle IS
-    the nightly query's oracle, value-hash exact including the
-    default-row fallback and the integer micro-LLRs. State lives in
-    storage (model table + batch_id-keyed verdict partitions):
-    restart is free and replayed batches overwrite their own
-    partition."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from gcd_etl_spark.plans.corpus import DSIR_STANDING_TAG, ensure_dsir_model
-    from gcd_etl_spark.plans.dedup import DELTA_MOD
-    from gcd_etl_spark.sources.catalog import read_table_spread
+    probe. The oracle IS the nightly query's oracle, value-hash exact
+    including the default-row fallback and the integer micro-LLRs."""
+    from gcd_etl_spark.plans.corpus import (
+        DSIR_STANDING_TAG,
+        ensure_dsir_model,
+        score_docs_frozen_dsir,
+    )
 
     docs = read_table_spread(spark, sf_dir, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == 0
     model = ensure_dsir_model(
         spark, sf_dir, docs.where(~is_delta), filter_tag=DSIR_STANDING_TAG
     )
-
-    tag = f"{sf_tag(sf_dir)}_{uuid.uuid4().hex[:8]}"
-    staged = f"/tmp/gcd_etl_stream_dsirgate_{tag}"
-    out_root = f"/tmp/gcd_etl_stream_dsirgate_out_{tag}"
-    shutil.rmtree(staged, ignore_errors=True)
-    shutil.rmtree(out_root, ignore_errors=True)
-    delta = docs.where(is_delta)
-    delta.repartition(4).write.parquet(staged)
-    _empty_seed(
+    return run_ingest_gate(
         spark,
+        sf_dir,
+        "dsirgate",
+        docs.where(is_delta),
+        lambda b: score_docs_frozen_dsir(b, model),
         "doc_id long, n_feats long, n_unseen long, "
         "llr_total_micro long, llr_mean_micro long, selected boolean",
-    ).write.parquet(f"{out_root}/batch_id=-1")
-
-    gate = dsir_gate_batch_fn(model, out_root)
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
-    q = stream.writeStream.foreachBatch(gate).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.read.parquet(out_root).select(
-        "doc_id",
-        "n_feats",
-        "n_unseen",
-        "llr_total_micro",
-        "llr_mean_micro",
-        "selected",
     )

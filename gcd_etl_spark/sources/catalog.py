@@ -159,9 +159,12 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
 
 
 # ---------------------------------------------------------- staging
-# Scratch artifacts derived from one sf_dir (bucketed indexes, prior
-# snapshots, cycle tables, /tmp round-trip dirs) are named, reused and
-# cleared here and nowhere else.
+# Scratch tables derived from one sf_dir (bucketed indexes, prior
+# snapshots, cycle tables) are named, reused and cleared here and
+# nowhere else. The /tmp round-trip dirs take their tag from
+# ``sf_tag`` but their paths are still spelled at each site (in
+# plans/lakehouse.py, streaming_plans.py, staging.py and corpus.py,
+# and streaming/jobs.py for the events replay and the ingest gates).
 
 
 def sf_tag(sf_dir: str) -> str:

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from gcd_etl_spark.streaming.jobs import streaming_events
+from gcd_etl_spark.streaming.jobs import _run_to_memory, streaming_events
 
 #: Emitted per touched key per micro-batch: the post-update state.
 OUTPUT_SCHEMA = "user_id long, n_events long, max_value double, last_event_sec long"
@@ -97,19 +97,9 @@ def run_streaming_stateful_totals(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updated.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        _run_to_memory(updated, spark, name, "update")
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
@@ -209,14 +199,4 @@ def run_streaming_sessions_timeout(
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}").where(F.col("user_id") >= 0)
+    return _run_to_memory(sessions, spark, name, "append").where(F.col("user_id") >= 0)

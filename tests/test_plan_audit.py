@@ -225,13 +225,16 @@ def _data_sized_single_partition(plan: str) -> bool:
 
 
 def test_sessions_replay_staging_has_no_global_sort_funnel(spark, sf_smoke):
-    from gcd_etl_spark.plans.streaming_plans import _time_ordered_halves
+    import pyspark.sql.functions as F
+
+    from gcd_etl_spark.plans.streaming_plans import _time_ordered_banded
     from gcd_etl_spark.sources.catalog import read_table
 
     events = read_table(spark, sf_smoke, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    halves, _hi = _time_ordered_halves(events)
+    banded, _hi = _time_ordered_banded(events)
+    halves = [banded.where(F.col("_rb") == i) for i in (1, 2)]
     for half in halves:
         plan = _formatted_plan(half)
         assert "Window" not in plan, plan

@@ -149,7 +149,7 @@ def test_ivfpq_persisted_index_reuse_plan_shape(spark, sf_smoke):
 
 def test_stream_dedup_restart_and_replay(spark, sf_smoke, tmp_path):
     """Kill-and-restart semantics of the streaming ingest gate,
-    proven on the PRODUCTION batch worker (delta_dedup_batch_fn):
+    proven on the PRODUCTION batch worker (delta_dedup_score):
 
     1. a first query processes the initial delta files and stops
        (availableNow) — the 'killed' process;
@@ -164,8 +164,9 @@ def test_stream_dedup_restart_and_replay(spark, sf_smoke, tmp_path):
     import pyspark.sql.functions as F
 
     from gcd_etl_spark.plans.dedup import DELTA_MOD, ensure_corpus_band_index
-    from gcd_etl_spark.plans.streaming_plans import delta_dedup_batch_fn
+    from gcd_etl_spark.plans.streaming_plans import delta_dedup_score
     from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.streaming.jobs import gate_sink
 
     docs = read_table_spread(spark, sf_smoke, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == 0
@@ -181,7 +182,7 @@ def test_stream_dedup_restart_and_replay(spark, sf_smoke, tmp_path):
     spark.createDataFrame(
         [], "delta_id long, corpus_id long, jaccard double"
     ).write.parquet(f"{out_root}/batch_id=-1")
-    batch_fn = delta_dedup_batch_fn(docs, idx, out_root)
+    batch_fn = gate_sink(out_root, delta_dedup_score(docs, idx))
 
     def run_stream() -> None:
         stream = (

@@ -254,16 +254,19 @@ def test_quality_gate_batch_replay_idempotent(spark, sf_smoke, tmp_path):
     converged union is unchanged."""
     import pyspark.sql.functions as F
 
-    from gcd_etl_spark.plans.corpus import ensure_bigram_lm_index
+    from gcd_etl_spark.plans.corpus import (
+        ensure_bigram_lm_index,
+        score_docs_frozen_bigram_lm,
+    )
     from gcd_etl_spark.plans.dedup import DELTA_MOD
-    from gcd_etl_spark.plans.streaming_plans import quality_gate_batch_fn
     from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.streaming.jobs import gate_sink
 
     docs = read_table_spread(spark, sf_smoke, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == 0
     costs, ctx = ensure_bigram_lm_index(spark, sf_smoke, docs.where(~is_delta))
     out_root = str(tmp_path / "qgate_out")
-    gate = quality_gate_batch_fn(costs, ctx, out_root)
+    gate = gate_sink(out_root, lambda b: score_docs_frozen_bigram_lm(b, costs, ctx))
     delta = docs.where(is_delta)
     gate(delta, 0)
     first = sorted(map(tuple, spark.read.parquet(out_root).collect()))

@@ -691,10 +691,14 @@ def test_dsir_gate_batch_replay_idempotent(spark, sf_smoke, tmp_path):
     converged union is unchanged."""
     import pyspark.sql.functions as F
 
-    from gcd_etl_spark.plans.corpus import DSIR_STANDING_TAG, ensure_dsir_model
+    from gcd_etl_spark.plans.corpus import (
+        DSIR_STANDING_TAG,
+        ensure_dsir_model,
+        score_docs_frozen_dsir,
+    )
     from gcd_etl_spark.plans.dedup import DELTA_MOD
-    from gcd_etl_spark.plans.streaming_plans import dsir_gate_batch_fn
     from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.streaming.jobs import gate_sink
 
     docs = read_table_spread(spark, sf_smoke, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == 0
@@ -702,7 +706,7 @@ def test_dsir_gate_batch_replay_idempotent(spark, sf_smoke, tmp_path):
         spark, sf_smoke, docs.where(~is_delta), filter_tag=DSIR_STANDING_TAG
     )
     out_root = str(tmp_path / "dsirgate_out")
-    gate = dsir_gate_batch_fn(model, out_root)
+    gate = gate_sink(out_root, lambda b: score_docs_frozen_dsir(b, model))
     delta = docs.where(is_delta)
     gate(delta, 0)
     first = sorted(map(tuple, spark.read.parquet(out_root).collect()))

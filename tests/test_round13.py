@@ -223,13 +223,14 @@ def test_jpeg_fill_bytes_skipped():
 def test_time_ordered_halves_partition_and_order(spark, sf_smoke):
     import pyspark.sql.functions as F
 
-    from gcd_etl_spark.plans.streaming_plans import _time_ordered_halves
+    from gcd_etl_spark.plans.streaming_plans import _time_ordered_banded
     from gcd_etl_spark.sources.catalog import read_table
 
     events = read_table(spark, sf_smoke, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    halves, hi = _time_ordered_halves(events)
+    banded, hi = _time_ordered_banded(events)
+    halves = [banded.where(F.col("_rb") == i) for i in (1, 2)]
     n1, n2 = halves[0].count(), halves[1].count()
     assert n1 + n2 == events.count()
     assert n1 > 0 and n2 > 0

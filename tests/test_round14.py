@@ -166,8 +166,9 @@ def test_gate_prune_value_identical_and_plan_pruned(spark, sf_smoke, tmp_path):
 
     from gcd_etl_spark.plans import QUERIES
     from gcd_etl_spark.plans.dedup import DELTA_MOD, ensure_corpus_band_index
-    from gcd_etl_spark.plans.streaming_plans import delta_dedup_batch_fn
+    from gcd_etl_spark.plans.streaming_plans import delta_dedup_score
     from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.streaming.jobs import gate_sink
 
     docs = read_table_spread(spark, sf_smoke, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == 0
@@ -175,7 +176,7 @@ def test_gate_prune_value_identical_and_plan_pruned(spark, sf_smoke, tmp_path):
     batch = docs.where(is_delta)
 
     out = str(tmp_path / "gate")
-    delta_dedup_batch_fn(docs, idx, out)(batch, 0)
+    gate_sink(out, delta_dedup_score(docs, idx))(batch, 0)
     gate = sorted(map(tuple, spark.read.parquet(f"{out}/batch_id=0").collect()))
     nightly = QUERIES["dedup_delta_vs_corpus"].build(spark, sf_smoke)
     assert gate == sorted(map(tuple, nightly.collect()))
@@ -207,8 +208,9 @@ def test_semantic_gate_prune_value_identical(spark, sf_smoke, tmp_path):
 
     from gcd_etl_spark.plans import QUERIES
     from gcd_etl_spark.plans.dedup import DELTA_MOD, ensure_srp_bucket_index
-    from gcd_etl_spark.plans.streaming_plans import semantic_gate_batch_fn_capped
+    from gcd_etl_spark.plans.streaming_plans import semantic_gate_score_capped
     from gcd_etl_spark.sources.catalog import read_table_spread
+    from gcd_etl_spark.streaming.jobs import gate_sink
 
     emb = read_table_spread(spark, sf_smoke, "embeddings")
     is_delta = F.col("vec_id") % DELTA_MOD == 0
@@ -216,7 +218,7 @@ def test_semantic_gate_prune_value_identical(spark, sf_smoke, tmp_path):
     batch = emb.where(is_delta)
 
     out = str(tmp_path / "gate")
-    semantic_gate_batch_fn_capped(spark, sf_smoke, idx, out)(batch, 0)
+    gate_sink(out, semantic_gate_score_capped(spark, sf_smoke, idx))(batch, 0)
     gate = spark.read.parquet(f"{out}/batch_id=0")
     nightly = QUERIES["dedup_semantic_delta_vs_corpus_capped"].build(spark, sf_smoke)
     rows = lambda df: sorted(  # noqa: E731

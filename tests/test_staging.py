@@ -153,3 +153,27 @@ def other(child):
 """
     flagged = [n.lineno for n in _conf_writes_outside_child_sessions(ast.parse(src))]
     assert flagged == [3, 10]
+
+
+def test_ingest_gate_removes_its_replay_input(spark, sf_smoke):
+    """An ingest gate deletes the staged delta it replayed once the
+    stream has drained, and keeps the verdict dir its result reads."""
+    import re
+
+    from gcd_etl_spark.sources.catalog import sf_tag
+
+    tmp = Path("/tmp")
+    before = set(os.listdir(tmp))
+    rows = QUERIES["stream_quality_gate"].build(spark, sf_smoke).collect()
+    new = set(os.listdir(tmp)) - before
+    tag = re.escape(sf_tag(sf_smoke))
+    named = lambda kind: [  # noqa: E731
+        d for d in new if re.fullmatch(rf"gcd_etl_stream_{kind}_{tag}_[0-9a-f]{{8}}", d)
+    ]
+    replay, out = named("qgate"), named("qgate_out")
+    assert not replay, f"replay input left behind: {replay}"
+    assert len(out) == 1, new
+    cols = ["doc_id", "n_bigrams", "n_unseen", "nll_total_micro", "nll_mean_micro"]
+    read_back = spark.read.parquet(str(tmp / out[0])).select(*cols).collect()
+    assert rows, "fixture produced no delta scores — the check is vacuous"
+    assert sorted(map(tuple, read_back)) == sorted(map(tuple, rows))

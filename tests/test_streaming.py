@@ -117,3 +117,38 @@ def test_stream_late_drop_excludes_old_windows(spark, sf_smoke):
     rows = QUERIES["stream_late_drop"].build(spark, sf_smoke).collect()
     assert rows
     assert min(r["window_start"] for r in rows) >= LATE_SPLIT_US // 1_000_000
+
+
+def test_one_streaming_harness_in_package():
+    """Only ``streaming/jobs.py`` opens a stream source, runs a memory
+    sink or installs a foreachBatch writer: every other module goes
+    through its harness."""
+    import ast
+    from pathlib import Path
+
+    import gcd_etl_spark
+
+    root = Path(gcd_etl_spark.__file__).parent
+    harness = root / "streaming" / "jobs.py"
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path == harness:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            where = f"{path.relative_to(root)}:{getattr(node, 'lineno', '?')}"
+            if isinstance(node, ast.Attribute) and node.attr in (
+                "readStream",
+                "foreachBatch",
+                "processAllAvailable",
+            ):
+                found.append(f"{where} uses {node.attr}")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "format"
+                and any(
+                    isinstance(a, ast.Constant) and a.value == "memory" for a in node.args
+                )
+            ):
+                found.append(f"{where} runs a memory sink")
+    assert not found, "\n".join(found)
