@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gcd_etl_spark.session import drop_zip_importers
+from gcd_etl_spark.session import python_task
 
 #: Quantization applied to per-component contributions before the
 #: exact-decimal centroid sum (9 dp ~ float32's own precision).
@@ -47,6 +47,7 @@ def _assign_batches(centroids: np.ndarray, id_col: str, vec_col: str):
     c = np.ascontiguousarray(centroids, dtype=np.float64)  # k x dim
     c_sq = (c * c).sum(axis=1)  # k
 
+    @python_task
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -65,7 +66,6 @@ def _assign_batches(centroids: np.ndarray, id_col: str, vec_col: str):
                     "sqdist": d2[np.arange(len(pdf)), cluster],
                 }
             )
-        drop_zip_importers()
 
     return fn
 

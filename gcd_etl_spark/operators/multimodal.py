@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gcd_etl_spark.session import drop_zip_importers
+from gcd_etl_spark.session import python_task
 
 try:  # real codecs are not in this image; gate behind import-try
     import PIL.Image  # type: ignore  # noqa: F401
@@ -98,6 +98,7 @@ def decode_media_meta(df: DataFrame, payload_col: str = "payload", id_col: str =
             "implementation before building this plan"
         )
 
+    @python_task
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [
@@ -105,7 +106,6 @@ def decode_media_meta(df: DataFrame, payload_col: str = "payload", id_col: str =
                 for mid, payload in zip(pdf[id_col], pdf[payload_col])
             ]
             yield pd.DataFrame(rows)
-        drop_zip_importers()
 
     return df.mapInPandas(_decode, schema=MEDIA_META_SCHEMA)
 
@@ -507,6 +507,7 @@ def synthesize_media_files(
     rotation; synthesize_image_file: the PNG/JPEG rotation)."""
     synth = synth or synthesize_media_file
 
+    @python_task
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
@@ -515,7 +516,6 @@ def synthesize_media_files(
                     "payload": [synth(int(m)) for m in pdf[id_col]],
                 }
             )
-        drop_zip_importers()
 
     return df.mapInPandas(
         _synth, schema="media_id long, payload binary"
@@ -529,6 +529,7 @@ def parse_media_headers(
     One output row per input row; unknown formats degrade to null
     fields rather than failing the batch."""
 
+    @python_task
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -538,7 +539,6 @@ def parse_media_headers(
                 r["n_bytes"] = len(payload or b"")
                 rows.append(r)
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_PARSE_SCHEMA])
-        drop_zip_importers()
 
     return df.mapInPandas(_parse, schema=MEDIA_PARSE_SCHEMA)
 
@@ -558,6 +558,7 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10, payload_col: str = "payl
         ]
     )
 
+    @python_task
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[dict] = []
@@ -574,6 +575,5 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10, payload_col: str = "payl
                         }
                     )
             yield pd.DataFrame(out, columns=["media_id", "frame_idx", "frame_sha"])
-        drop_zip_importers()
 
     return df.mapInPandas(_sample, schema=out_schema)

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gcd_etl_spark.functions.vector import cosine, cosine_fixed, random_hyperplane_signs
-from gcd_etl_spark.session import drop_zip_importers
+from gcd_etl_spark.session import python_task
 
 
 def _cos(a: str, b: str, dim: int | None):
@@ -111,6 +111,7 @@ def srp_buckets_udf(planes: list[list[float]], n_tables: int):
     weights = 1 << np.arange(bits_per, dtype=np.int64)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
+    @python_task
     def _buckets(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:
             return pd.Series([], dtype=object)
@@ -244,6 +245,7 @@ def ivf_cells_udf(centroids: np.ndarray, n_keep: int):
     Cn = (C / norms[:, None]).T  # dim x n_cells
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    @python_task
     def _cells(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:
             return pd.Series([], dtype=object)
@@ -371,6 +373,7 @@ def neardup_pairs_blas(
         ]
     )
 
+    @python_task
     def score_blocks(batches):
         ids_sorted, Mn_sorted = bc.value
         for pdf in batches:
@@ -396,7 +399,6 @@ def neardup_pairs_blas(
                         "cosine": np.round(S[hit_r, hit_c], 6),
                     }
                 )
-        drop_zip_importers()
 
     return corpus.select(id_col, vec_col).mapInPandas(score_blocks, out_schema)
 
@@ -603,6 +605,7 @@ def pq_encode(
     CB = np.asarray(codebooks, dtype=np.float64)  # m x ks x dsub
     m, _, dsub = CB.shape
 
+    @python_task
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
@@ -627,7 +630,6 @@ def pq_encode(
                     "codes": list(codes),
                 }
             )
-        drop_zip_importers()
 
     return corpus.select(id_col, vec_col).mapInPandas(
         encode, schema="neighbor_id long, cell int, codes array<int>"
@@ -677,6 +679,7 @@ def pq_adc_topk(
         F.col("query_id") != F.col("neighbor_id")
     )
 
+    @python_task
     def score(batches):
         marange = np.arange(m)
         for pdf in batches:
@@ -715,7 +718,6 @@ def pq_adc_topk(
                     "cosine": np.round(cos, 6),
                 }
             )
-        drop_zip_importers()
 
     scored = cand.mapInPandas(
         score, schema="query_id long, neighbor_id long, cosine double"

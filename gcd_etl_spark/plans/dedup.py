@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from gcd_etl_spark.operators import dedup as D
 from gcd_etl_spark.plans.registry import query
+from gcd_etl_spark.session import python_task
 from gcd_etl_spark.sources.catalog import read_table, read_table_spread
 
 _DUCK_NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
@@ -2033,6 +2034,7 @@ def _srp_bucket_frame(emb: DataFrame, bits: int, n_tables: int) -> DataFrame:
     weights = 1 << np.arange(bits, dtype=np.int64)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
+    @python_task
     def _buckets(qv):
         if len(qv) == 0:
             return pd.Series([], dtype=object)

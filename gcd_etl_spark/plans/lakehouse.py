@@ -407,7 +407,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Integer cents keep stream/batch equality exact."""
     from gcd_etl_spark.streaming.jobs import _stage_events, run_streaming_static_enrich
 
-    staged, tag = _stage_events(spark, sf_dir, "enrich")
+    staged, tag = _stage_events(spark, sf_dir)
     cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )

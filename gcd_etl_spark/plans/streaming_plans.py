@@ -60,7 +60,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling counts computed BY THE STREAMING ENGINE
     (file-source micro-batches, watermarked state store, memory sink),
     hash-matched against the batch oracle."""
-    staged, tag = _stage_events(spark, sf_dir, "stage")
+    staged, tag = _stage_events(spark, sf_dir)
     return run_streaming_tumbling(spark, staged, name=f"stream_tumbling_{tag}")
 
 
@@ -82,7 +82,7 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches and hash-matched against the batch GROUP BY. The
     tracked stats (count, max, last-seen) are associative and
     FP-exact, so stream/batch equality is exact, not approximate."""
-    staged, tag = _stage_events(spark, sf_dir, "stateful")
+    staged, tag = _stage_events(spark, sf_dir)
     return run_streaming_stateful_totals(spark, staged, name=f"stream_stateful_{tag}")
 
 
@@ -115,7 +115,7 @@ def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-ordered, so the watermark spans the whole event range —
     correct for the bounded-parity contract; a live deployment sets it
     to its real lateness bound."""
-    staged, tag = _stage_events(spark, sf_dir, "sessions")
+    staged, tag = _stage_events(spark, sf_dir)
     return run_streaming_sessions(
         spark, staged, watermark="100000 hours", name=f"stream_sessions_{tag}"
     )
@@ -134,7 +134,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch), append sink. The converged set must equal the batch
     SELECT DISTINCT — dedup is the one operator whose stream/batch
     parity is set-equality, independent of arrival order."""
-    staged, tag = _stage_events(spark, sf_dir, "dedup")
+    staged, tag = _stage_events(spark, sf_dir)
     return run_streaming_dedup(spark, staged, name=f"stream_dedup_{tag}")
 
 
@@ -157,7 +157,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAMING ENGINE (one open aggregate per overlapping window in the
     state store), hash-matched against the batch window-expansion SQL
     — the same oracle the batch win_sliding plan uses."""
-    staged, tag = _stage_events(spark, sf_dir, "sliding")
+    staged, tag = _stage_events(spark, sf_dir)
     return run_streaming_sliding(
         spark, staged, watermark="100000 hours", name=f"stream_sliding_{tag}"
     )
@@ -256,7 +256,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch interval join — which is the oracle. Exact integer
     lag_us rides along so the match TIMING, not just the pair ids,
     is value-hashed."""
-    staged, tag = _stage_events(spark, sf_dir, "ssjoin")
+    staged, tag = _stage_events(spark, sf_dir)
     return run_streaming_interval_join(spark, staged, name=f"stream_ssjoin_{tag}")
 
 
@@ -280,7 +280,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived correctly. Output dirs are wiped with their checkpoint
     per build (a stale checkpoint with fresh dirs would no-op the
     stream)."""
-    staged, tag = _stage_events(spark, sf_dir, "sink")
+    staged, tag = _stage_events(spark, sf_dir)
     out = f"/tmp/gcd_etl_stream_sink_out_{tag}"
     ckpt = f"/tmp/gcd_etl_stream_sink_ckpt_{tag}"
     for d in (out, ckpt):
@@ -321,7 +321,7 @@ def stream_apply_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id) total order), and the converged state must equal the batch
     last-per-key restatement — batch-boundary- and order-independent
     because the merge is a commutative monoid."""
-    staged, tag = _stage_events(spark, sf_dir, "cdc")
+    staged, tag = _stage_events(spark, sf_dir)
     return run_streaming_apply_cdc(
         spark, staged, f"/tmp/gcd_etl_stream_cdc_state_{tag}", name=f"stream_cdc_{tag}"
     )

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcd_etl_spark.plans.registry import query
-from gcd_etl_spark.session import drop_zip_importers
+from gcd_etl_spark.session import python_task
 from gcd_etl_spark.sources.catalog import read_table, read_table_spread
 
 _TOKEN_RUNS_ORACLE = """
@@ -93,6 +93,12 @@ def udtf_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             if run_tok is not None:
                 yield (doc_id, run_tok, run_start, run_end - run_start + 1)
 
+        @python_task
+        def terminate(self):
+            """Runs once per task, after the last ``eval``: the task's
+            exit, where ``python_task`` drops the worker's zip importers.
+            Emits no rows."""
+
     spark.udtf.register("token_runs", TokenRuns)
     read_table_spread(spark, sf_dir, "documents").createOrReplaceTempView("udtf_docs")
     return spark.sql(
@@ -124,6 +130,7 @@ def arrow_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pyarrow as pa
 
+    @python_task
     def stats(batches):
         import numpy as np
 
@@ -147,7 +154,6 @@ def arrow_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
                 names=["vec_id", "argmax_pos", "n_positive", "dim"],
             )
-        drop_zip_importers()
 
     emb = read_table_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return emb.mapInArrow(
@@ -246,9 +252,9 @@ def cogroup_pandas_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
+    @python_task
     def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         key = left["key"].iloc[0] if len(left) else right["key"].iloc[0]
-        drop_zip_importers()
         return pd.DataFrame(
             {
                 "key": [int(key)],

@@ -25,13 +25,23 @@ Design notes (100 TB posture):
 * Shuffle partitions default to the local core count; on a real
   cluster this is overridden (AQE coalesces anyway).
 * Every engine Python task body (``mapInPandas``, ``mapInArrow``,
-  ``applyInPandas``) ends with ``drop_zip_importers()``; see there.
+  ``applyInPandas``, cogroup, ``applyInPandasWithState``, scalar
+  ``pandas_udf``, a UDTF's ``terminate``) is wrapped in
+  ``python_task``, which owns the task's exit; see there.
+* ``get_spark`` ships the package to the Python workers as one zip of
+  its ``.py`` files (``addPyFile``), so a worker imports it without
+  the driver's checkout on its path.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import inspect
 import os
 import sys
+import tempfile
+import zipfile
 import zipimport
 
 from pyspark.sql import SparkSession
@@ -41,24 +51,75 @@ from pyspark.sql import SparkSession
 _MAX_PARTITION_BYTES = str(128 * 1024 * 1024)
 
 
-def drop_zip_importers() -> None:
+def _drop_zip_importers() -> None:
     """Drop the ``zipimporter`` entries from ``sys.path_importer_cache``.
 
-    Called at the end of an engine Python task body, in the worker.
+    Runs when an engine Python task body exits, in the worker.
     PySpark's worker calls ``importlib.invalidate_caches()`` at the
     start of every task, and each cached ``zipimporter`` then re-reads
     its archive's whole directory: the workers' ``PYTHONPATH`` holds
     ``pyspark.zip``, the py4j zip and the spark-core jar, whose packages
-    leave 16 such entries behind. On Python 3.11 that costs about
-    220 ms of worker CPU per task, however small the task: a one-row
-    ``mapInPandas`` task took 270 ms of worker CPU with the entries and
-    50 ms without (``local[1]``, 4-vCPU host). The entries are only a
-    cache: the next import that needs one builds it again from
+    leave 16 such entries behind, and the shipped package zip adds its
+    own. On Python 3.11 that costs about 220 ms of worker CPU per task,
+    however small the task: a one-row ``mapInPandas`` task took 270 ms
+    of worker CPU with the entries and 50 ms without (``local[1]``,
+    4-vCPU host). The entries are only a cache: the next import that needs one builds it again from
     zipimport's own directory cache, without reading the archive.
     """
     cache = sys.path_importer_cache
     for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
         cache.pop(path, None)
+
+
+def python_task(fn):
+    """Wrap an engine Python task body so that every exit from it, a
+    raise included, drops the worker's zip importers.
+
+    A generator body (``mapInPandas``, ``mapInArrow``,
+    ``applyInPandasWithState``) drops when it is exhausted or closed;
+    any other body (``applyInPandas``, cogroup, scalar ``pandas_udf``,
+    a UDTF's ``terminate``) when it returns. The wrapper keeps ``fn``'s
+    name and signature: PySpark reads the argument count with
+    ``inspect.getfullargspec``, which does not follow ``__wrapped__``.
+    """
+    if inspect.isgeneratorfunction(fn):
+
+        @functools.wraps(fn)
+        def task(*args, **kwargs):
+            try:
+                yield from fn(*args, **kwargs)
+            finally:
+                _drop_zip_importers()
+
+    else:
+
+        @functools.wraps(fn)
+        def task(*args, **kwargs):
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                _drop_zip_importers()
+
+    task.__signature__ = inspect.signature(fn)
+    return task
+
+
+def _ship_package(sc) -> None:
+    """Ship this package to the Python workers, once per SparkContext:
+    its ``.py`` files go into one zip in a scratch directory that lives
+    as long as the context, and ``addPyFile`` puts the zip on every
+    worker's ``sys.path``. Without it a worker can import the package
+    only when its own path happens to hold the driver's checkout."""
+    if hasattr(sc, "_gcd_etl_package"):
+        return
+    scratch = tempfile.TemporaryDirectory(prefix="gcd_etl_spark_")
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    path = os.path.join(scratch.name, "gcd_etl_spark.zip")
+    with zipfile.ZipFile(path, "w") as zf:
+        for src in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+            zf.write(src, os.path.relpath(src, os.path.dirname(pkg)))
+    sc.addPyFile(path)
+    sc._gcd_etl_package = scratch
 
 
 def default_parallelism() -> int:
@@ -136,4 +197,5 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark.sparkContext)
     return spark

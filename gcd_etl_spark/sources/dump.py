@@ -27,12 +27,13 @@ tokenizing: the whole 13-table benchmark dump tokenizes in ~0.15 s of
 pure Python, while each ``stage_dump_table`` call pays a text scan, a
 Python task per split and a parquet write. So a call runs ONE Spark
 job (the read-back takes the declared schema instead of inferring it),
-builds its casts as one SQL-text projection, and its tokenizer tasks
-end with ``session.drop_zip_importers()``. Without that, each Python
-task in the worker would start by re-reading the directories of
-``pyspark.zip``, the py4j zip and the spark-core jar: ~220 ms of worker
-CPU per task, where a benchmark-scale tokenizer task's own work is a
-few tens of ms.
+builds its casts as one SQL-text projection, and its tokenizer body is
+wrapped in ``session.python_task``, which drops the worker's zip
+importers when the task exits. Without that, each Python task in the
+worker would start by re-reading the directories of ``pyspark.zip``,
+the py4j zip, the spark-core jar and the package zip ``get_spark``
+ships: ~220 ms of worker CPU per task, where a benchmark-scale
+tokenizer task's own work is a few tens of ms.
 
 ``mysqldump --tab`` TSV exports need none of this: read them with
 ``spark.read.csv(sep="\t", nullValue="\\N")`` (`stage_tsv_table`).
@@ -49,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gcd_etl_spark.session import drop_zip_importers
+from gcd_etl_spark.session import python_task
 
 # MySQL string-literal escapes (mysqldump output set).
 _UNESCAPE = {
@@ -261,6 +262,7 @@ def parse_insert_lines(
     head = F.upper(F.ltrim(F.col("value")))
     filtered = lines.where(head.startswith("INSERT INTO") & F.col("value").contains(table))
 
+    @python_task
     def _tok(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[list[str | None]] = []
@@ -281,7 +283,6 @@ def parse_insert_lines(
                         out.append(tup)
             if out:  # a batch may be all-skips; yield nothing then
                 yield pd.DataFrame({"fields": out})
-        drop_zip_importers()
 
     parsed = filtered.mapInPandas(_tok, schema="fields array<string>")
     # One SQL-text projection: Column-by-Column casts cost ~60 gateway

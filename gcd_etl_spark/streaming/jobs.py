@@ -11,7 +11,8 @@ memory sink and must equal the batch answer.
 The harness is the package's only streaming run code:
 
 * ``streaming_events`` — the one file-source reader (one file per
-  micro-batch), fed by ``_stage_events`` for the events-table queries;
+  micro-batch), fed by ``_stage_events`` (one staged events table per
+  input) for the events-table queries;
 * ``_run_to_memory`` — the one memory-sink runner (complete, append or
   update output mode);
 * ``_drain`` — the one ``availableNow`` drain (parquet sink, CDC fold,
@@ -38,7 +39,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-from gcd_etl_spark.sources.catalog import read_table, sf_tag
+from gcd_etl_spark.sources.catalog import (
+    ensure_staged,
+    read_table,
+    sf_tag,
+    staged_dir,
+    staged_name,
+)
 
 #: Schema of the staged events stream (ts already micro-truncated —
 #: produced by sources.catalog.read_table("events") written back out).
@@ -66,14 +73,18 @@ def streaming_events(
     )
 
 
-def _stage_events(spark: SparkSession, sf_dir: str, prefix: str) -> tuple[str, str]:
-    """Write the events table to a parquet dir usable as a file-source
-    stream; returns (staged_dir, per-sf tag for sink names)."""
-    tag = sf_tag(sf_dir)
-    staged = f"/tmp/gcd_etl_stream_{prefix}_{tag}"
-    events = read_table(spark, sf_dir, "events").select(*EVENTS_STREAM_SCHEMA.names)
-    events.write.mode("overwrite").parquet(staged)
-    return staged, tag
+def _stage_events(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Stage the events table once per input, as a catalog table whose
+    directory every events-table stream reads; returns (staged_dir,
+    per-sf tag for sink names)."""
+    name = staged_name("stream_events", sf_dir, "events")
+
+    def stage() -> None:
+        events = read_table(spark, sf_dir, "events")
+        events.select(*EVENTS_STREAM_SCHEMA.names).write.saveAsTable(name)
+
+    ensure_staged(spark, [name], stage)
+    return staged_dir(spark, name), sf_tag(sf_dir)
 
 
 def _run_to_memory(

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from gcd_etl_spark.session import python_task
 from gcd_etl_spark.streaming.jobs import _run_to_memory, streaming_events
 
 #: Emitted per touched key per micro-batch: the post-update state.
@@ -59,6 +60,7 @@ OUTPUT_SCHEMA = "user_id long, n_events long, max_value double, last_event_sec l
 STATE_SCHEMA = "n long, mx double, last long"
 
 
+@python_task
 def _update_user_totals(key, pdf_iter, state: GroupState):
     """Fold this micro-batch's rows for one user into running state."""
     (user_id,) = key
@@ -118,6 +120,7 @@ SESSION_OUTPUT_SCHEMA = (
 SESSION_STATE_SCHEMA = "start_us long, last_us long, n long"
 
 
+@python_task
 def _update_sessions(key, pdf_iter, state: GroupState):
     """Gap-sessionize one user's micro-batch; EMIT closed sessions.
 

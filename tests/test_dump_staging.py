@@ -10,13 +10,8 @@ negative/float bare tokens, parens and commas inside strings.
 from __future__ import annotations
 
 import datetime
-import json
-import os
-import subprocess
-import sys
 
 import pandas as pd
-import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import types as T
@@ -182,54 +177,6 @@ def test_staged_frame_schema_and_rows(spark, tmp_path):
     assert metrics["arity_mismatch_tuples"].value == 1
     assert metrics["truncated_tuples"].value == 1
     assert metrics["other_table_lines"].value == 1  # `t2` passes the prefilter
-
-
-_ZIP_PROBE = """
-import json, sys
-from pyspark.sql import types as T
-from gcd_etl_spark.session import get_spark
-from gcd_etl_spark.sources.dump import stage_dump_table
-
-spark = get_spark("zip-probe", master="local[1]")
-
-def zip_importers(batches):
-    import sys, zipimport
-    n = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
-    for b in batches:
-        yield b.assign(n=n)
-
-probe = spark.range(1).mapInPandas(zip_importers, "id long, n int")
-before = probe.first().n
-lines = spark.createDataFrame([("INSERT INTO `t` VALUES (1),(2);",)], "value string")
-schema = T.StructType([T.StructField("id", T.LongType())])
-staged = stage_dump_table(spark, lines, "t", schema).count()
-print(json.dumps([before, staged, probe.first().n]))
-spark.stop()
-"""
-
-
-def test_tokenizer_task_leaves_no_zip_importers():
-    """A tokenizer task ends with no ``zipimporter`` left in the worker's
-    ``sys.path_importer_cache``, so the next task in that worker does
-    not re-read any zip archive's directory when PySpark invalidates the
-    import caches. ``local[1]`` in a child process keeps every task on
-    one reused worker; the first probe shows the entries were there."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = {**os.environ, "PYTHONPATH": root, "SPARK_GRAFT_DRIVER_MEM": "1g"}
-    res = subprocess.run(
-        [sys.executable, "-c", _ZIP_PROBE],
-        cwd=root,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert res.returncode == 0, res.stderr[-3000:]
-    before, staged, after = json.loads(res.stdout.strip().splitlines()[-1])
-    if before == 0:
-        pytest.skip("no zip archive on the Python workers' path")
-    assert staged == 2
-    assert after == 0
 
 
 # ------------------------------------------------ truncated tuples

@@ -152,3 +152,22 @@ def test_one_streaming_harness_in_package():
             ):
                 found.append(f"{where} runs a memory sink")
     assert not found, "\n".join(found)
+
+
+def test_events_stream_input_staged_once_per_input(spark, sf_smoke):
+    """The events-table streaming queries share one staged events
+    table per input: the first build writes it, a second query reads
+    the same files instead of writing its own copy."""
+    import os
+
+    from gcd_etl_spark.plans import QUERIES
+    from gcd_etl_spark.sources.catalog import drop_staged, staged_dir, staged_name
+
+    name = staged_name("stream_events", sf_smoke, "events")
+    drop_staged(spark, name)
+    QUERIES["stream_tumbling"].build(spark, sf_smoke).collect()
+    assert spark.catalog.tableExists(name)
+    d = staged_dir(spark, name)
+    files = {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+    assert QUERIES["stream_dedup"].build(spark, sf_smoke).collect()
+    assert {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)} == files
